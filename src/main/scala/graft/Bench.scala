@@ -101,7 +101,8 @@ object Bench {
     }.min
   }
 
-  /** Per-query minimums from every baseline that matches the run's SF.
+  /** Per-query minimums from every baseline that matches the run's SF
+    * and core count.
     * TWO baselines are consulted when available (ADVICE r11 — each alone
     * has a blind spot):
     *
@@ -119,16 +120,17 @@ object Bench {
     * with the wrong SF, and the old pick-then-filter order turned that
     * into "prev":null — guard silently disarmed — even though a valid
     * same-SF BENCH_r*.json sat right behind it (ADVICE r11). Files too
-    * old to carry an "sf" stamp are accepted (sf.forall). Regex-parsed so
+    * old to carry an "sf" stamp are accepted (sf.forall). The "cpus"
+    * stamp is matched the same way (ADVICE r22): an 8-cpu BENCH_SELF
+    * must not silently become the baseline of a 32-cpu run, and files
+    * without the stamp are accepted. Regex-parsed so
     * the bench stays dependency-free (driver wrapper format: the inner
     * "parsed" object carries the bench line; the escaped copy in "tail"
     * cannot match the unescaped regexes). */
-  private def baselines(expectedSf: String, selfFile: String)
-      : Seq[(String, Map[String, Double])] = {
+  private def baselines(expectedSf: String, expectedCpus: String,
+      selfFile: String): Seq[(String, Map[String, Double])] = {
     def firstMatching(cands: Seq[java.io.File]) =
-      cands.iterator.filter(_.isFile).map(parseBench).collectFirst {
-        case Some((name, sf, qs)) if sf.forall(_ == expectedSf) => (name, qs)
-      }
+      firstMatchingBaseline(cands, expectedSf, expectedCpus)
     sys.env.get("SPARK_GRAFT_PREV_BENCH") match {
       case Some(f) =>
         val hit = firstMatching(Seq(new java.io.File(f)))
@@ -138,6 +140,7 @@ object Bench {
         if (hit.isEmpty) System.err.println(
           s"[bench] WARNING: SPARK_GRAFT_PREV_BENCH=$f is unreadable, " +
             s"unparseable or recorded at a different SF than $expectedSf " +
+            s"or a different cpus than $expectedCpus " +
             "— regression guard DISARMED")
         hit.toSeq
       case None =>
@@ -174,8 +177,8 @@ object Bench {
             newest.foreach { f =>
               if (hit.isEmpty) System.err.println(
                 s"[bench] NOTE: newest round artifact ${f.getName} is " +
-                  "unparseable or SF-mismatched (driver truncation?) — " +
-                  "round baseline disarmed; self baseline still armed")
+                  "unparseable or SF/cpus-mismatched (driver truncation?) " +
+                  "— round baseline disarmed; self baseline still armed")
             }
             hit
           }
@@ -183,20 +186,33 @@ object Bench {
     }
   }
 
+  /** The first candidate that parses and whose "sf" and "cpus" stamps,
+    * where present, equal the run's: (file name, per-query seconds). */
+  private[graft] def firstMatchingBaseline(cands: Seq[java.io.File],
+      expectedSf: String, expectedCpus: String)
+      : Option[(String, Map[String, Double])] =
+    cands.iterator.filter(_.isFile).map(parseBench).collectFirst {
+      case Some((name, sf, cpus, qs))
+          if sf.forall(_ == expectedSf) && cpus.forall(_ == expectedCpus) =>
+        (name, qs)
+    }
+
   private def parseBench(f: java.io.File)
-      : Option[(String, Option[String], Map[String, Double])] = {
+      : Option[(String, Option[String], Option[String],
+        Map[String, Double])] = {
     val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
     // \s* after every colon: the driver wrapper pretty-prints its copy
     // of the bench line ("sf": 0.1, one query per line) — a
     // space-intolerant pattern silently matches nothing and turns the
     // guard into a no-op
     val sf = """"sf":\s*"([^"]+)"""".r.findFirstMatchIn(text).map(_.group(1))
+    val cpus = """"cpus":\s*"?(\d+)""".r.findFirstMatchIn(text).map(_.group(1))
     val qBlock = """"queries":\s*\{([^}]*)\}""".r
     qBlock.findFirstMatchIn(text).map { m =>
       val pair = """"([A-Za-z0-9_]+)":\s*(-?[0-9.Ee+-]+)""".r
-      (f.getName, sf, pair.findAllMatchIn(m.group(1))
+      (f.getName, sf, cpus, pair.findAllMatchIn(m.group(1))
         .map(p => p.group(1) -> p.group(2).toDouble).toMap)
-    }.filter(_._3.nonEmpty)
+    }.filter(_._4.nonEmpty)
   }
 
   /** The durable copy of the emitted line. stdout is captured by the
@@ -361,9 +377,9 @@ object Bench {
     val calibRatio = math.max(calibPre, calibPost) / math.min(calibPre, calibPost)
     def f(v: Double): String = "%.6f".formatLocal(java.util.Locale.ROOT, v)
     def f4(v: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, v)
-    // cross-SF ratios are meaningless: baselines() already rejected any
-    // candidate recorded at a different SF dir
-    val prevs = baselines(sfDir, selfFile)
+    // cross-SF and cross-core ratios are meaningless: baselines() already
+    // rejected any candidate recorded at a different SF dir or cpus
+    val prevs = baselines(sfDir, cpus, selfFile)
     val regressions = timed.flatMap { case (n, v) =>
       val ratios = prevs.flatMap { case (_, p) =>
         p.get(n).filter(old => old > 0 && v > 0 && v / old > 1.5)
@@ -483,7 +499,8 @@ object Bench {
     // read >= 0.5896 on the same code, same day, both windows 5/5
     // steady by BOTH kernels — and capture 2's catalog-sweep q6 was
     // the FASTER of the two, so the fast mode existed in that window;
-    // the AbQ6 12-round trace shows the mode is JVM-state-sensitive,
+    // a 12-round q6 trace (SCALING.md round-20, "r20 captures, the q6
+    // statistic") shows the mode is JVM-state-sensitive,
     // samples drifting 0.61 -> 0.87 as heap accumulates). A min over 5
     // samples of that distribution straddles the 2x bar by luck; 9
     // samples is the cheap variance fix that changes NO graded metric

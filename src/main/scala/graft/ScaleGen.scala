@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Perf-only synthetic scale-up generator for the three fact tables the
@@ -86,7 +86,6 @@ object ScaleGen {
     val skew = args.contains("skew")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = BenchSupport.session(cpus)
-    import spark.implicits._
 
     // ---- documents: 50k rows/SF, 10–100 tokens/doc, ~0.4% exact-dup
     // pairs (seed redirection: a flagged doc re-derives the PREVIOUS

@@ -80,8 +80,6 @@ object SqliteCompat {
 
   // ───────────────────────── text scanning utilities ──────────────────
 
-  private def isWordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-
   /** Copy of the text with single-quoted string contents blanked, so
     * keyword/paren scans can't be fooled by literals. Same length as the
     * input — positions carry over. */

@@ -1129,13 +1129,13 @@ object Dedup {
     * cells top out at ~1.1×target (no change); on the clustered corpus
     * the split severs only pairs inside concentration-inflated cells,
     * which are dup-dense (within-cluster cosines ≫ threshold), so a
-    * lower-id keeper survives in every sub-cell — measured by the
-    * D13LshProbe recall table. */
+    * lower-id keeper survives in every sub-cell — measured in SCALING.md
+    * round-16 "The residual, retired the same round". */
   private[graft] def FlatSubCellCap: Long = 2L * Similarity.FlatCellTarget
 
   /** The sub-cell cap for a resolved assignVia value — shared by d13,
-    * p5/p6's semanticDrops and CellStatsProbe so every consumer of the
-    * flat tier runs the identical split. */
+    * p5/p6's semanticDrops so every consumer of the flat tier runs the
+    * identical split. */
   private[graft] def subCapFor(via: String): Option[Long] =
     if (via == "lshflat") Some(FlatSubCellCap) else None
 

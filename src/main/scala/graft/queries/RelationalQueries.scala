@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -116,7 +116,7 @@ object RelationalQueries {
     // at 1.502 s (min-of-5, i.e. persistent) in a JVM carrying the whole
     // catalog's heap state, while fresh-JVM captures read 0.53-0.70 s.
     // Interleaved A/B in one warm JVM, primed with the catalog's heavy
-    // pipelines (graft.AbQ4): window 0.611/0.647/0.812 min/med/max vs
+    // pipelines: window 0.611/0.647/0.812 min/med/max vs
     // this shape 0.561/0.606/0.753 — tied-to-better, and with no sort
     // there is no spill cliff for a loaded JVM to fall off.
     //
@@ -142,15 +142,16 @@ object RelationalQueries {
     // both sides (preferSortMergeJoin exists for unbounded build sides;
     // this build side is provably one narrow row per order).
     //
-    // IRREDUCIBILITY (r18, VERDICT r17 #1 — the AbQ6 treatment):
-    // graft.AbQ4 swept every remaining oracle-equivalent formulation
-    // INTERLEAVED in one warm JVM, each sample PAIRED with the Bench
-    // calibration kernel (min/median of 7, cpus=32, all parity-gated
+    // IRREDUCIBILITY (r18, VERDICT r17 #1 — the q6 treatment; summary in
+    // SCALING.md round-18 "The steady capture, and what two of them in a
+    // row measure"): one sweep ran every remaining oracle-equivalent
+    // formulation INTERLEAVED in one warm JVM, each sample PAIRED with
+    // the Bench calibration kernel (min/median of 7, cpus=32, all parity-gated
     // row-identical): this shape 0.717/0.817 raw, norm 0.420; the
     // window shape 0.694/0.784, norm 0.399 (a wash — within one
     // scheduling quantum); SQL-front-end text of this shape
     // 0.690/0.938, norm 0.447 (no DSL-vs-SQL plan gap); AQE off
-    // 0.849/0.941 (+18% — stage coalescing pays for itself, the AbQ6
+    // 0.849/0.941 (+18% — stage coalescing pays for itself, the q6
     // lesson again); unhinted SMJ 0.880/1.035 (+25%, the two sorts);
     // BROADCAST on the agg side 0.915/1.048 (+25% — the driver
     // collect + rebroadcast of the 1-row-per-order frame costs more
@@ -260,7 +261,8 @@ object RelationalQueries {
     //
     // IRREDUCIBILITY (r17, VERDICT r16 #4 — the remaining ~0.2 s
     // constant against the reference was profiled, not guessed):
-    // graft.AbQ6 measured every remaining oracle-equivalent
+    // one sweep (SCALING.md round-17 "q6 headroom: spent on measurement,
+    // pinned irreducible") measured every remaining oracle-equivalent
     // formulation interleaved in one warm JVM (min/median of 9,
     // cpus=32): this shape 0.572/0.687; distinct AFTER the dim join
     // (the r13-rejected order, re-measured) 0.568/0.720 — a wash;
@@ -282,7 +284,7 @@ object RelationalQueries {
     // 0.423/0.379 (flat), adjacent-kernel calib 0.041/0.040-0.056,
     // norm 0.616 vs 0.359 — a ±50 % normalized swing with a stable
     // raw. q4's r17 "2.59x normalized" reading was the same artifact
-    // (AbQ4's pool-min convention traced it). Bar verdicts for the
+    // (the q4 sweep's pool-min convention traced it). Bar verdicts for the
     // ladder-dominated queries (q4/q6) should read RAW alongside norm:
     // raw sits at 1.5x (q6 0.379-0.423 vs 0.2531) and 1.3-1.4x (q4
     // 0.39-0.42 vs 0.2968) across every r17/r18 capture.

@@ -70,8 +70,6 @@ object Similarity {
     val rnd = new scala.util.Random(7)
     Array.fill(n)(Array.fill(64)(if (rnd.nextBoolean()) 1f else -1f))
   }
-  private val planes: Array[Array[Float]] =
-    planesFor(NumTables * BitsPerTable)
 
   /** Flattened plane array per count, memoized so two `sign_buckets`
     * expressions at the same bit width share ONE float[] reference
@@ -96,8 +94,8 @@ object Similarity {
     pmod(id * lit(MixA) + lit(MixB), lit(MixM))
 
   /** [[idMix]] for composing families (d13's bounded sub-cell split keys
-    * on it, RefineProbe's depth sample strides by it), plus its SQL text
-    * for their oracles. */
+    * on it, the s11 differential's source sample strides by it), plus
+    * its SQL text for their oracles. */
   private[graft] def idMixOf(id: Column): Column = idMix(id)
   private[queries] def mixSql(c: String): String =
     s"(($c * $MixA + $MixB) % $MixM)"
@@ -437,10 +435,11 @@ object Similarity {
     *
     * Opt-in stays the rule: the default path must not silently acquire
     * the extra pass, and s17 remains the always-on gated entry that
-    * prices the exact refine against s2. Deltas measured by
-    * [[graft.D13LshProbe]] (flat drop recall, r18) and
-    * [[graft.RefineProbe]] `sqrt` mode (s7 recall@10 + d13-exact drop
-    * agreement, measurements/r19/). */
+    * prices the exact refine against s2. Deltas measured in SCALING.md
+    * round-18 "The d13-flat refine delta" (flat drop recall,
+    * measurements/r18/D13_REFINE.jsonl) and round-19 "The refine seam
+    * completes" (s7 recall@10 + d13-exact drop agreement,
+    * measurements/r19/REFINE_SQRT.jsonl). */
   private[graft] def codebookRefineIters: Int =
     sys.props.get("graft.codebook.refine")
       .orElse(sys.env.get("SPARK_GRAFT_CODEBOOK_REFINE"))
@@ -491,15 +490,6 @@ object Similarity {
     s2CoreWith(e, graft.Materialize(refineCentroids(centroids(e), e)))
   }
 
-  /** [[s10ProbeSweep]] over the refined codebook (probe-only, never
-    * gated): the full recall-vs-probe-budget curve under one Lloyd
-    * iteration, for [[graft.RefineProbe]]'s seed-vs-refined delta. */
-  private[graft] def s10ProbeSweepRefined(s: SparkSession,
-      dir: String): DataFrame = {
-    val e = embeddings(s, dir)
-    s10CoreWith(e, refineCentroids(centroids(e), e))
-  }
-
   /** s10 — the IVF probe-budget TUNING CURVE: recall@10 at EVERY probe
     * count 1..[[ProbeCells]] in one query — the measurement that picks
     * s2's operating point (each extra probed cell buys recall with a
@@ -511,13 +501,7 @@ object Similarity {
     * per query per budget. */
   def s10ProbeSweep(s: SparkSession, dir: String): DataFrame = {
     val e = embeddings(s, dir)
-    s10CoreWith(e, centroids(e))
-  }
-
-  /** The s10 probe-budget curve against an explicit codebook — the
-    * recall-vs-scan instrument [[graft.RefineProbe]] runs on both the
-    * seed and the refined codebooks. */
-  private[graft] def s10CoreWith(e: DataFrame, cent: DataFrame): DataFrame = {
+    val cent = centroids(e)
     val cells = cellAssignedAgainst(cent, e)
     val wProbe = Window.partitionBy(col("q_id"))
       .orderBy(col("c_cos").desc, col("c_id").asc)
@@ -565,22 +549,18 @@ object Similarity {
     * shortlist, whose top-k is drawn from already-high-cosine
     * candidates, so the margin's denominator is relatively larger and
     * the same numeric threshold under-accepts. The s16 depth sweep
-    * (S11Probe sweep, via=flat + production cap, sf30, both geometries
-    * — SCALING.md r18) measured the recovery: at 1.02 the blocked tier
-    * accepts 209/263 of exact's accepted sources on clustered geometry
+    * (via=flat + production cap, sf30, both geometries — SCALING.md
+    * round-18 "s16: the margin-threshold acceptance sweep",
+    * measurements/r18/S16_DEPTH_SWEEP.jsonl) measured the recovery:
+    * at 1.02 the blocked tier accepts 209/263 of exact's accepted
+    * sources on clustered geometry
     * (vs 68/263 at 1.05) and 415/550 on near-uniform (vs 133/550), the
     * blocked-accepted set is a strict SUBSET of the exact-accepted set
     * in every measured row (overlap_any == blocked_accepted — no
     * spurious acceptances at source granularity), and mean regret over
     * the accepted set stays bounded (0.066–0.068 vs 0.042–0.046). The
-    * exact tier keeps [[S11Threshold]] — its margins are unattenuated.
-    * Seam `graft.s11.blockedThreshold` for deployments; the gated
-    * entries and their oracles pin the default. */
-  private[graft] val S11BlockedThresholdDefault = 1.02
-  private[graft] def S11BlockedThreshold: Double =
-    sys.props.get("graft.s11.blockedThreshold")
-      .orElse(sys.env.get("SPARK_GRAFT_S11_BLOCKED_THRESHOLD"))
-      .map(_.toDouble).getOrElse(S11BlockedThresholdDefault)
+    * exact tier keeps [[S11Threshold]] — its margins are unattenuated. */
+  private[graft] val S11BlockedThreshold = 1.02
   private[graft] val S11SrcLang = "de"
   private[graft] val S11TgtLang = "en"
   /** Probed target cells per source vector in the blocked tier (s2's
@@ -604,8 +584,9 @@ object Similarity {
     * ~[[FlatCellTarget]] members, so — exactly the d13
     * `FlatSubCellCap` argument — a probed cell more than 2× over
     * target is sign-eviction CONCENTRATION (sign-identical cluster
-    * centroids collapsing into few survivors; the mechanism
-    * CellStatsProbe quantified in SCALING.md round-16), not geometry,
+    * centroids collapsing into few survivors; the mechanism quantified
+    * in SCALING.md round-16 "The residual, retired the same round"),
+    * not geometry,
     * and the candidate scan may be bounded absolutely. Unlike d13's
     * pair stage, both pair members here are NOT residents of the cell
     * (the source is an external prober), so a plain sub-cell split
@@ -792,40 +773,6 @@ object Similarity {
   private def s11ThresholdFor(via: String): Double =
     if (via == "exact") S11Threshold else S11BlockedThreshold
 
-  /** The fully-linearized candidate source (`via=lsh`): both N·C terms
-    * of [[s11IvfPairs]] go through the LSH-bucketed codebook — the
-    * target CELL assignment via [[lshCellAssignedAgainst]] (sentinel
-    * singleton cells are never probed, so their members are honestly
-    * unreachable) and the source PROBES via the same co-bucketed-
-    * centroids-only scoring (s9's rule: a source scores ~C·L/2^bits
-    * centroids instead of C). Work per side is N·(candidates), both
-    * bounded corpus-size-independently per row — the d13 `assignVia=lsh`
-    * move applied to the mining ladder. */
-  private def s11LshIvfPairs(src: DataFrame, tgt: DataFrame): DataFrame = {
-    val tgtE = tgt.select(col("t_id").as("vec_id"), col("t_emb").as("embedding"))
-    val cent = centroidsOf(tgtE)
-    val cells = lshCellAssignedAgainst(cent, tgtE)
-      .select(col("vec_id").as("t_id"), col("embedding").as("t_emb"),
-        col("cell"))
-      .filter(col("cell") >= 0)  // sentinel singletons are unreachable
-    val cb = cent.select(col("c_id"), col("c_emb"),
-      explode(tableBuckets(col("c_emb"))).as("bucket"))
-    val wP = Window.partitionBy(col("s_id"))
-      .orderBy(col("p_cos").desc, col("c_id").asc)
-    val probes = src
-      .select(col("s_id"), col("s_emb"),
-        explode(tableBuckets(col("s_emb"))).as("bucket"))
-      .join(broadcast(cb), Seq("bucket"))
-      .dropDuplicates("s_id", "c_id")
-      .withColumn("p_cos", round(cosine_sim(col("s_emb"), col("c_emb")), 4))
-      .withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= S11bProbe)
-      .select(col("s_id"), col("s_emb"), col("c_id").as("cell"))
-    // same shortlist as every blocked tier: the tiers differ only in
-    // HOW cells/probes are found, not in what the margin stage consumes
-    s11CellPairs(probes, cells)
-  }
-
   /** The two-level candidate source (`via=twolevel`, r15): both N·C
     * assignment terms of [[s11IvfPairs]] — the target-side cell build
     * AND the source-side probe scoring — go through the two-level
@@ -943,8 +890,7 @@ object Similarity {
     * (default — the oracle-gated brute matrix), `ivf` (the blocked
     * production path [[s11IvfPairs]], N^1.5 under the sqrt rule),
     * `twolevel` (ivf with the two-level codebook on both assignment
-    * terms — [[s11TwoLevelPairs]]), `lsh` (the LSH-bucketed
-    * [[s11LshIvfPairs]]), or `flat` (the fully linear
+    * terms — [[s11TwoLevelPairs]]), `flat` (the fully linear
     * [[s11FlatPairs]], late r15), or `auto` (r16, VERDICT r15 #4):
     * resolve per corpus off the SAME s12 statistic d13's seam uses —
     * [[resolveAutoTier]] over the TARGET slice (the side the codebook
@@ -971,21 +917,20 @@ object Similarity {
       case v         => v // twolevel | exact — shared tier names
     }
 
-  /** Tier-name dispatch. Unknown names FAIL LOUDLY (ADVICE r16): the
-    * old wildcard fell through to exact, so a typo'd
-    * SPARK_GRAFT_S11B_VIA made s11b compare exact against exact and
-    * emit a trivially-perfect agreement table that read as a real
-    * honesty result. `lshflat` is accepted as the d13-seam spelling of
-    * `flat` (the same mapping [[s11AutoVia]] applies). */
+  /** Tier-name dispatch. Unknown names FAIL LOUDLY (ADVICE r16): a
+    * wildcard falling through to exact would let a typo'd (or retired,
+    * e.g. `lsh`) tier name make the s11 differential compare exact
+    * against exact and emit a trivially-perfect agreement table that
+    * reads as a real honesty result. `lshflat` is accepted as the
+    * d13-seam spelling of `flat` (the same mapping [[s11AutoVia]] applies). */
   private def s11PairsFor(via: String, src: DataFrame,
       tgt: DataFrame): DataFrame = via match {
     case "ivf"              => s11IvfPairs(src, tgt)
     case "twolevel"         => s11TwoLevelPairs(src, tgt)
-    case "lsh"              => s11LshIvfPairs(src, tgt)
     case "flat" | "lshflat" => s11FlatPairs(src, tgt)
     case "exact"            => s11ExactPairs(src, tgt)
     case other => sys.error(
-      s"unknown s11 via tier '$other' (exact|ivf|twolevel|lsh|flat|auto)")
+      s"unknown s11 via tier '$other' (exact|ivf|twolevel|flat|auto)")
   }
 
   def s11BitextMargin(s: SparkSession, dir: String): DataFrame = {
@@ -1008,27 +953,15 @@ object Similarity {
     * miss every candidate keeps a −1 sentinel match and `accepted =
     * false` — a LOUD miss, never a silently absent row. The honest
     * numbers at sf0.01: agreement where the probe finds the true match,
-    * misses reported as such. */
-  /** s11b's BLOCKED side seam (r16): default `ivf` — the oracle-gated
-    * differential is unchanged — but at scale the agreement table can
-    * be re-measured under any tier (`flat`, `twolevel`, or `auto`,
-    * which resolves like s11's own seam), so the honesty numbers
-    * follow whatever tier the auto rule actually ships. */
-  private def s11bVia: String =
-    sys.props.get("graft.s11b.via").orElse(sys.env.get("SPARK_GRAFT_S11B_VIA"))
-      .getOrElse("ivf")
-
+    * misses reported as such. At depth the same agreement table is
+    * measured under other tiers by [[s11Differential]]. */
   def s11bBitextBlocked(s: SparkSession, dir: String): DataFrame = {
     val src = s11Side(s, dir, S11SrcLang, "s_id", "s_emb")
     val tgt = s11Side(s, dir, S11TgtLang, "t_id", "t_emb")
-    val via = s11bVia match {
-      case "auto" => s11AutoVia(dir, tgt)
-      case v      => v
-    }
     val exactBest = s11MarginCore(s11ExactPairs(src, tgt))
       .select(col("s_id"), col("match_id").as("exact_match"))
     val blocked =
-      s11MarginCore(s11PairsFor(via, src, tgt), s11ThresholdFor(via))
+      s11MarginCore(s11IvfPairs(src, tgt), S11BlockedThreshold)
     exactBest.join(blocked, Seq("s_id"), "left")
       .select(col("s_id"),
         coalesce(col("match_id"), lit(-1L)).as("match_id"),
@@ -1052,9 +985,9 @@ object Similarity {
     * blocked tier's candidate/codebook construction still runs over
     * the full target slice, which is what depth measures).
     * `sampleTarget <= 0` keeps every source — the verbatim s11b shape.
-    * Consumed by [[graft.S11Probe]]; the numbers land in SCALING.md's
-    * round-17 differential table (the pricing instrument for the flat
-    * tier's scan cap — [[S11FlatScanCap]]). */
+    * Its depth numbers are SCALING.md's round-17 differential table
+    * (the pricing instrument for the flat tier's scan cap —
+    * [[S11FlatScanCap]]). */
   private[graft] def s11Differential(s: SparkSession, dir: String,
       via: String, sampleTarget: Long): DataFrame = {
     val src0 = s11Side(s, dir, S11SrcLang, "s_id", "s_emb")
@@ -1104,115 +1037,10 @@ object Similarity {
         lit(resolved).as("via"))
   }
 
-  /** The s11 differential against sampled UNBLOCKED TRUTH (r20, VERDICT
-    * r19 #5 — the d13 lesson applied to the mining ladder): the r17
-    * instrument ([[s11Differential]]) grades blocked tiers against a
-    * WITHIN-SAMPLE exact reference, whose t-side neighborhood sums see
-    * only the sampled sources — a bias shared by both sides of that
-    * comparison, but a bias nonetheless, and d13's r19 probe showed the
-    * chained protocol can misstate a tier by ~0.05 recall. This
-    * instrument computes, for the same idMix-strided source sample, the
-    * TRUTH margin: the s-side statistic is already full-corpus-correct
-    * (top-[[S11MarginK]] over the FULL target slice — sampling sources
-    * never biases it), and the t-side statistic is recomputed for every
-    * picked target over the FULL source slice. The truth PICK equals
-    * the exact pick by construction (argmax cosine over the full target
-    * slice is neighborhood-free), so truth differs from the
-    * within-sample exact tier only in ACCEPTANCE — which is exactly the
-    * product (the accepted pair set).
-    *
-    * Cost shape (linear, the d13 sampled-truth rule): K·N_tgt for the
-    * pair matrix (shared with the within-sample side) plus
-    * |picked targets|·N_src for the truth t-side — never N_src·N_tgt.
-    *
-    * Returns one row per sampled source: the truth pick/margin/accept,
-    * the within-sample exact margin/accept (the chained instrument's
-    * reference, to price ITS bias), and the blocked tier's
-    * pick/margin/accept under `via`. Consumed by [[graft.S11Probe]]
-    * `truth`; rows land in measurements/r20/S11_TRUTH_PROBE.jsonl. */
-  private[graft] def s11TruthDifferential(s: SparkSession, dir: String,
-      via: String, sampleTarget: Long): DataFrame = {
-    val srcFull = s11Side(s, dir, S11SrcLang, "s_id", "s_emb")
-    val src =
-      if (sampleTarget <= 0L) srcFull
-      else {
-        val stride = math.max(1L, srcFull.count() / sampleTarget)
-        srcFull.filter(pmod(idMixOf(col("s_id")), lit(stride)) === 0)
-      }
-    val tgt = s11Side(s, dir, S11TgtLang, "t_id", "t_emb")
-    val resolved = via match {
-      case "auto" => s11AutoVia(dir, tgt)
-      case v      => v
-    }
-    // ONE materialized pair matrix feeds the within-sample exact
-    // margins AND the truth side's source statistic + pick
-    val pairs = graft.Materialize(s11ExactPairs(src, tgt))
-    val wS = Window.partitionBy(col("s_id"))
-      .orderBy(col("c4").desc, col("t_id").asc)
-    val rk = pairs.withColumn("rs", row_number().over(wS))
-    val aSrc = rk.filter(col("rs") <= S11MarginK).groupBy(col("s_id"))
-      .agg(sum(col("c4")).as("sa4"), count(lit(1)).as("na"))
-    val pick = rk.filter(col("rs") === 1)
-      .select(col("s_id"), col("t_id").as("pick_t"),
-        col("c4").as("pick_c4"))
-    val exact = s11MarginCore(pairs)
-      .select(col("s_id"), col("match_id").as("exact_match"),
-        col("margin").as("exact_margin"),
-        col("accepted").as("exact_accepted"))
-    val blocked = s11MarginCore(s11PairsFor(resolved, src, tgt),
-        s11ThresholdFor(resolved))
-      .select(col("s_id"), col("match_id"),
-        col("margin").as("blocked_margin"), col("accepted"))
-    // TRUTH t-side: each picked target's top-K cosine mass over the
-    // FULL source slice (≤ sample-many targets, broadcast; the join
-    // mass is |picked|·N_src — linear)
-    val tIds = pick.select(col("pick_t").as("t_id")).distinct()
-    val tgtSub = tgt.join(tIds, Seq("t_id"))
-    val tPairs = srcFull.join(broadcast(tgtSub), col("s_id") =!= col("t_id"))
-      .select(col("t_id"), col("s_id"),
-        round(cosine_sim(col("s_emb"), col("t_emb")) * 10000, 0)
-          .cast("long").as("c4"))
-    val wT = Window.partitionBy(col("t_id"))
-      .orderBy(col("c4").desc, col("s_id").asc)
-    val bT = tPairs.withColumn("rt", row_number().over(wT))
-      .filter(col("rt") <= S11MarginK)
-      .groupBy(col("t_id"))
-      .agg(sum(col("c4")).as("sb4t"), count(lit(1)).as("nbt"))
-    val denT = col("sa4") * col("nbt") + col("sb4t") * col("na")
-    pick
-      .join(aSrc, "s_id")
-      .join(bT.withColumnRenamed("t_id", "pick_t"), Seq("pick_t"))
-      .withColumn("truth_margin", when(denT > 0,
-        round((lit(2L) * col("pick_c4") * col("na") * col("nbt"))
-          .cast("double") / denT, 4)))
-      .withColumn("truth_accepted",
-        coalesce(col("truth_margin") >= S11Threshold, lit(false)))
-      .join(exact, Seq("s_id"))
-      .join(blocked, Seq("s_id"), "left")
-      .select(col("s_id"), col("pick_t").as("truth_match"),
-        col("truth_margin"), col("truth_accepted"),
-        col("exact_match"), col("exact_margin"), col("exact_accepted"),
-        coalesce(col("match_id"), lit(-1L)).as("match_id"),
-        col("blocked_margin"),
-        coalesce(col("accepted"), lit(false)).as("accepted"),
-        coalesce(col("match_id") === col("pick_t"), lit(false))
-          .as("agree_truth"),
-        lit(resolved).as("via"))
-  }
-
   /** s16's threshold grid — brackets the CCMatrix operating band around
     * [[S11Threshold]] (arXiv:1811.01136 mines at 1.05–1.06; lower
     * recovers acceptance, higher buys precision). */
   private[graft] val S16Thresholds = Seq(1.02, 1.05, 1.10, 1.15)
-
-  /** s16's blocked-tier seam — the s11b convention verbatim: default
-    * `ivf` so the DuckDB oracle replays the whole blocked chain from
-    * proven CTEs, while [[graft.S11Probe]]'s `sweep` mode re-runs the
-    * SAME aggregation under `flat` (+ the production scan cap) on the
-    * ScaleGen corpora, where the operating point is actually chosen. */
-  private def s16Via: String =
-    sys.props.get("graft.s16.via").orElse(sys.env.get("SPARK_GRAFT_S16_VIA"))
-      .getOrElse("ivf")
 
   /** s16 — the margin-threshold ACCEPTANCE sweep (r18, VERDICT r17 #2):
     * the s10 probe-sweep convention applied to s11's acceptance knob.
@@ -1231,21 +1059,20 @@ object Similarity {
     * sweep is one 4-way explode + one aggregation over the joined
     * differential, never a re-mine per threshold. Regret stays integer
     * (ten-thousandth units, BIGINT sums; one final double division), so
-    * the DuckDB oracle replays every cell bit-for-bit. */
+    * the DuckDB oracle replays every cell bit-for-bit. The blocked side
+    * is the `ivf` tier, so the oracle replays the whole blocked chain
+    * from proven CTEs; the depth sweep under `flat` that chose the
+    * operating point is SCALING.md round-18 "s16: the margin-threshold
+    * acceptance sweep" (measurements/r18/S16_DEPTH_SWEEP.jsonl). */
   def s16MarginSweep(s: SparkSession, dir: String): DataFrame = {
     val src = s11Side(s, dir, S11SrcLang, "s_id", "s_emb")
     val tgt = s11Side(s, dir, S11TgtLang, "t_id", "t_emb")
-    val via = s16Via match {
-      case "auto" => s11AutoVia(dir, tgt)
-      case v      => v
-    }
     s16SweepOver(
       s11MarginCore(s11ExactPairs(src, tgt)),
-      s11MarginCore(s11PairsFor(via, src, tgt)))
+      s11MarginCore(s11IvfPairs(src, tgt)))
   }
 
-  /** The sweep aggregation over any (exact, blocked) margin-core pair —
-    * shared by the gated entry and [[graft.S11Probe]]'s depth sweep.
+  /** The sweep aggregation over an (exact, blocked) margin-core pair.
     * Anchored on the exact side (every source row appears at every
     * threshold); a missed source joins null margins and counts as
     * not-accepted at every threshold — the s11b loud-miss convention
@@ -1284,31 +1111,6 @@ object Similarity {
           round(col("acc_regret4_sum").cast("double")
             / col("blocked_accepted") / 10000.0, 4)))
       .orderBy(col("thr"))
-  }
-
-  /** [[s16MarginSweep]] at DEPTH (probe-only, never gated): the
-    * [[s11Differential]] sampling convention — an idMix-strided source
-    * sample mined by both margin cores against the FULL target slice —
-    * applied to the sweep. Consumed by [[graft.S11Probe]] `sweep`;
-    * the numbers land in SCALING.md's operating-point decision row. */
-  private[graft] def s16SweepDifferential(s: SparkSession, dir: String,
-      via: String, sampleTarget: Long): DataFrame = {
-    val src0 = s11Side(s, dir, S11SrcLang, "s_id", "s_emb")
-    val src =
-      if (sampleTarget <= 0L) src0
-      else {
-        val stride = math.max(1L, src0.count() / sampleTarget)
-        src0.filter(pmod(idMixOf(col("s_id")), lit(stride)) === 0)
-      }
-    val tgt = s11Side(s, dir, S11TgtLang, "t_id", "t_emb")
-    val resolved = via match {
-      case "auto" => s11AutoVia(dir, tgt)
-      case v      => v
-    }
-    s16SweepOver(
-      s11MarginCore(s11ExactPairs(src, tgt)),
-      s11MarginCore(s11PairsFor(resolved, src, tgt)))
-      .withColumn("via", lit(resolved))
   }
 
   /** s3 — multi-table sign-random-projection LSH: each of the 6 tables
@@ -1481,8 +1283,8 @@ object Similarity {
     * fair-stride rule the centroid seeds and the margin probe use —
     * so the join output is bounded by N·L·B: the assignment term is
     * LINEAR in corpus size by construction, the first tier in the seam
-    * with that property. The price, measured not guessed (honesty kit
-    * `D13LshProbe <dir> lshcap`, results in SCALING.md): the true
+    * with that property. The price, measured not guessed (SCALING.md
+    * round-15 "The occupancy-capped tier"): the true
     * argmax survives the cap in a co-occupied bucket with probability
     * ≈ 1-(1-B/occ)^k (k = co-occupied tables), so agreement decays as
     * occupancy outgrows B — recall-for-linearity, the trade a 100 TB
@@ -1543,15 +1345,11 @@ object Similarity {
   private[graft] def lshCapCellAssigned(e: DataFrame): DataFrame =
     lshCapCellAssignedAgainst(refineFlat(centroids(e), e, BitsPerTable), e)
 
-  /** Target cell population of the `lshflat` tier's codebook
-    * (`graft.d13.flatCellTarget`, env fallback for forked ScaleBench
-    * JVMs). 512 keeps the within-cell pairwise block comfortably inside
-    * one task while leaving cells deep enough that near-duplicates
-    * co-assign (they share sign buckets, hence candidate sets). */
-  private[graft] def FlatCellTarget: Int =
-    sys.props.get("graft.d13.flatCellTarget")
-      .orElse(sys.env.get("GRAFT_D13_FLATCELLTARGET"))
-      .map(_.toInt).getOrElse(512)
+  /** Target cell population of the `lshflat` tier's codebook. 512
+    * keeps the within-cell pairwise block comfortably inside one task
+    * while leaving cells deep enough that near-duplicates co-assign
+    * (they share sign buckets, hence candidate sets). */
+  private[graft] val FlatCellTarget = 512
 
   /** Target mean bucket occupancy of the `lshflat` tier: its bit width
     * grows with the codebook (2^bits ≈ C / this) so occupancy — and
@@ -1599,7 +1397,7 @@ object Similarity {
     * be separated by any bit width, eviction re-concentrates the
     * cluster into few surviving cells, and the measured tail is 1.30
     * (still the best deep tier there on both axes; mechanism and
-    * CellStatsProbe numbers in SCALING.md round-16). Three pins, each
+    * cell-population numbers in SCALING.md round-16). Three pins, each
     * with its own invariant: (1) the flat codebook
     * C = N/target pins CELL population, so the within-cell pairwise
     * term is N·target — linear; (2) the bit width grows with the
@@ -1610,11 +1408,12 @@ object Similarity {
     * assignment at N·L·cap — linear, C-independent, with the cap now a
     * BACKSTOP against hot buckets rather than the steady-state evictor.
     * Every prior tier left one N^1.5 term standing; this path has
-    * none. Recall price measured by the same honesty kit
-    * (`D13LshProbe <dir> lshflat`) and recorded in SCALING.md; misses
-    * stay visible sentinels. At harness SFs the whole construction
-    * degenerates to the standard 16-centroid codebook at 5 bits with a
-    * non-binding cap — bit-for-bit the lsh tier (spec-pinned). */
+    * none. Recall price recorded in SCALING.md round-15 "The flat
+    * codebook" and round-19 "The production flat tier, read against
+    * the unblocked ideal"; misses stay visible sentinels. At harness
+    * SFs the whole construction degenerates to the standard 16-centroid
+    * codebook at 5 bits with a non-binding cap — bit-for-bit the lsh
+    * tier (spec-pinned). */
   private[graft] def lshFlatCellAssigned(e: DataFrame): DataFrame = {
     val k = flatCodebookSize(e)
     val bits = flatBits(k)
@@ -1682,8 +1481,8 @@ object Similarity {
     *
     * Approximate like lsh — the true argmax can live in an unprobed
     * super-cell — so it lives behind the same [[Dedup.D13AssignVia]]
-    * seam, is measured by the same honesty kit ([[graft.D13LshProbe]]
-    * takes `twolevel` as its via argument), and the driver-SF oracles
+    * seam, its recall is measured against exact (SCALING.md round-15
+    * "The two-level codebook"), and the driver-SF oracles
     * stay pinned to the exact default. Failure mode differs from lsh in
     * the right direction for dedup: a miss lands in the RUNNER-UP
     * super-cell's best centroid — geometrically adjacent, so cluster
@@ -1768,8 +1567,8 @@ object Similarity {
     * within-cluster band (≈0.9+) because most vectors sit on a dense
     * centroid, while the near-uniform synthetic corpus tops out near
     * the random-pair band (≈0.5). The decision rule calibrated on the
-    * measured corpora lives in SCALING.md; the probe main is
-    * [[graft.D13LshProbe]]'s `margin` mode. */
+    * measured corpora lives in SCALING.md round-15 "Measured seam
+    * selection". */
   /** [[s12AssignMargin]]'s sample-size knob: ~1 000 vectors keeps the
     * probe a constant-cost aggregate at any corpus size (the idMix
     * stride grows with N). */
@@ -1790,13 +1589,8 @@ object Similarity {
     * Below it the corpus is small enough that exact assignment is
     * cheap anyway (its N·C wall is a DEPTH phenomenon); above it the
     * exact default is the measured 12.7-minute N^1.5 path at 2 M
-    * vectors vs lshflat's linear 74 s at 0.91/0.985. Sys-prop
-    * `graft.d13.autoFlatMinVectors` (env fallback for forked ScaleBench
-    * JVMs, the assignVia convention). */
-  private[graft] def AutoFlatMinVectors: Long =
-    sys.props.get("graft.d13.autoFlatMinVectors")
-      .orElse(sys.env.get("GRAFT_D13_AUTOFLATMINVECTORS"))
-      .map(_.toLong).getOrElse(200000L)
+    * vectors vs lshflat's linear 74 s at 0.91/0.985. */
+  private[graft] val AutoFlatMinVectors = 200000L
 
   /** The pure auto-tier rule, unit-testable without a corpus (r16 —
     * extends the r15 geometry-only rule with the corpus-size axis the
@@ -1938,8 +1732,8 @@ object Similarity {
     * operator (r15, VERDICT r14 #3): the sampled statistic that PICKS
     * the `assignVia` tier per corpus (decision rule in SCALING.md
     * round-15 — mean_top1 ≥ 0.45 ⇒ clustered geometry ⇒ approximate
-    * assignment safe; calibrated against D13LshProbe's measured drop
-    * recall on the clustered and near-uniform corpora). One output row
+    * assignment safe; calibrated against the measured drop recall on
+    * the clustered and near-uniform corpora). One output row
     * of six statistics over ~[[MarginSampleTarget]] idMix-strided
     * vectors scoring the REAL codebook ([[centroids]] — the same table
     * d13 assigns against).
@@ -3467,7 +3261,7 @@ object Similarity {
          |SELECT e.s_id,
          |       coalesce(bl.match_id, -1) AS match_id,
          |       bl.cosine, bl.margin,
-         |       coalesce(bl.margin >= $S11BlockedThresholdDefault, false)
+         |       coalesce(bl.margin >= $S11BlockedThreshold, false)
          |         AS accepted,
          |       coalesce(bl.n_cand, 0) AS n_cand,
          |       coalesce(bl.match_id = e.exact_match, false) AS agree

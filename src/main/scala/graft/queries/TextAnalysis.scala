@@ -1330,8 +1330,8 @@ object TextAnalysis {
     *     The DuckDB oracle replays it as a recursive CTE carrying the
     *     selected set as a LIST accumulator, so the gate stays armed.
     *
-    * The gated catalog entry pins the default; [[graft.BpeScaleProbe]]
-    * measures both at production widths. */
+    * The gated catalog entry pins the default; both were measured at
+    * production widths in measurements/r20/T26_MERGE_SCALE.txt. */
   private[graft] def T26Select: String = {
     val v = sys.props.get("graft.t26.select")
       .orElse(sys.env.get("SPARK_GRAFT_T26_SELECT")).getOrElse("antijoin")
@@ -1420,11 +1420,11 @@ object TextAnalysis {
   /** The batched training loop behind [[t26BpeBatchMerges]], with the
     * (rounds, pool, batch) axes as parameters — the gated entry pins
     * the compile-time constants (the oracle's sub-step count follows
-    * them), while [[graft.BpeScaleProbe]] runs the SAME code at
-    * production widths (r20, VERDICT r19 #4: the 30k-merge posture was
-    * arithmetic on an 8-merge measurement; the probe measures ≥1k
-    * merges at width 16–64 so the rounds/width law is a measurement,
-    * not an extrapolation — measurements/r20/T26_MERGE_SCALE.txt). */
+    * them); the SAME code was run at production widths (r20, VERDICT
+    * r19 #4: the 30k-merge posture was arithmetic on an 8-merge
+    * measurement; ≥1k merges at width 16–64 make the rounds/width law
+    * a measurement, not an extrapolation —
+    * measurements/r20/T26_MERGE_SCALE.txt). */
   private[graft] def t26BatchLoop(s: SparkSession, dir: String,
       t26Rounds: Int, t26Pool: Int, t26Batch: Int,
       selectRule: String = T26Select): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{call_function, col, lit, unix_micros}
+import org.apache.spark.sql.functions.{call_function, lit, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Readers for the harness-generated TPC-H-ish parquet tables (see repo

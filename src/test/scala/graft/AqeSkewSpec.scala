@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
 /** SURVEY §4 names Zipfian keys (PostId/OwnerUserId-shaped data) as the

@@ -411,7 +411,6 @@ class DedupSpec extends SparkSpec {
 
   test("d9 quality-canonical: one keeper per d6 cluster, argmax by " +
        "(quality, -doc_id), policy_differs consistent with the id policy") {
-    import org.apache.spark.sql.functions._
     val clusters = Dedup.queries("d6_dup_clusters")(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id")))
     val quality = graft.queries.TextAnalysis.queries("t2_quality_score")(

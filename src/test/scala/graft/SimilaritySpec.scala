@@ -217,31 +217,6 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.s11BitextMargin(spark, dir).count() == 70L)
   }
 
-  test("s11 via=lsh (the fully-linearized tier): same schema, rows are a " +
-       "subset of the source docs, margins well-formed, matches only " +
-       "real (non-sentinel) target cells") {
-    val dir = "/root/testdata/sf0.01"
-    val exact = Similarity.s11BitextMargin(spark, dir)
-    val exactIds = exact.collect().map(_.getAs[Long]("s_id")).toSet
-    System.setProperty("graft.s11.via", "lsh")
-    try {
-      val lsh = Similarity.s11BitextMargin(spark, dir)
-      assert(lsh.schema == exact.schema, "lsh tier changed the schema")
-      val rows = lsh.collect()
-      assert(rows.nonEmpty, "lsh tier mined nothing on the harness corpus")
-      val ids = rows.map(_.getAs[Long]("s_id"))
-      assert(ids.distinct.length == ids.length, "duplicate source rows")
-      assert(ids.forall(exactIds.contains),
-        "lsh tier produced a source the exact tier does not know")
-      rows.foreach { r =>
-        assert(r.getAs[Long]("match_id") >= 0, "sentinel match leaked")
-        val m = r.getAs[Any]("margin")
-        if (m != null) assert(!m.asInstanceOf[Double].isNaN)
-      }
-      info(s"lsh tier: ${rows.length}/${exactIds.size} sources matched")
-    } finally System.clearProperty("graft.s11.via")
-  }
-
   test("s11 via=twolevel: same schema, sources subset of exact, margins " +
        "well-formed") {
     val dir = "/root/testdata/sf0.01"
@@ -427,21 +402,24 @@ class SimilaritySpec extends SparkSpec {
     val flat = try Similarity.s11BitextMargin(spark, dir).collect().toSeq
       finally System.clearProperty("graft.s11.via")
     assert(alias == flat, "lshflat alias diverged from flat")
-    System.setProperty("graft.s11.via", "nosuchtier")
-    try {
-      val err = intercept[RuntimeException] {
-        Similarity.s11BitextMargin(spark, dir).collect()
-      }
-      assert(err.getMessage.contains("unknown s11 via tier"),
-        s"wrong failure: ${err.getMessage}")
-    } finally System.clearProperty("graft.s11.via")
+    // `lsh` is a retired tier name: a stale setting must not silently
+    // run another tier
+    for (bad <- Seq("nosuchtier", "lsh")) {
+      System.setProperty("graft.s11.via", bad)
+      try {
+        val err = intercept[RuntimeException] {
+          Similarity.s11BitextMargin(spark, dir).collect()
+        }
+        assert(err.getMessage.contains("unknown s11 via tier"),
+          s"wrong failure for '$bad': ${err.getMessage}")
+      } finally System.clearProperty("graft.s11.via")
+    }
   }
 
   test("s17 codebook refine (r18): one Lloyd step moves an explicit " +
        "codebook to exact integer-quantized cell means (hand-computed), " +
        "preserves the c_id set, and the gated entry keeps s2's schema") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // planted corpus: two clean clusters on orthogonal axes, seeds are
     // deliberately OFF-CENTER members (the idMix-sample pathology the
     // refinement exists to correct)
@@ -511,7 +489,6 @@ class SimilaritySpec extends SparkSpec {
   test("sqrt-consumer refine seam (r19): refine=0 is the default path " +
        "bit-for-bit for d13-exact / s7 / s13; refine=1 runs all three " +
        "with schemas unchanged and every vector still assigned") {
-    import org.apache.spark.sql.functions.col
     def d13Drops = graft.queries.Dedup.d13SemanticDedup(spark, sfDir)
     def s7 = Similarity.queries("s7_ann_ivfpq")(spark, sfDir)
     def s13 = Similarity.queries("s13_lshcap_assign")(spark, sfDir)
@@ -605,7 +582,7 @@ class SimilaritySpec extends SparkSpec {
     // accepts at S11BlockedThreshold = the 1.02 row's blocked count;
     // s11 (exact) accepts at S11Threshold = the 1.05 row's exact count
     val at102 = rows.find(
-      _.getAs[Double]("thr") == Similarity.S11BlockedThresholdDefault).get
+      _.getAs[Double]("thr") == Similarity.S11BlockedThreshold).get
     val s11bAcc = Similarity.s11bBitextBlocked(spark, dir).collect()
       .count(_.getAs[Boolean]("accepted"))
     assert(at102.getAs[Long]("blocked_accepted") == s11bAcc,

@@ -93,7 +93,6 @@ class TextAnalysisSpec extends SparkSpec {
     // winnowing guarantee on shared substrings: two docs built from the
     // same text must produce the identical fingerprint summary
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("graft-winnow").toString
     val t = "the quick brown fox jumps over the lazy dog again and again"
     Seq((1L, t, "en", "s", t.length.toLong), (2L, t, "en", "s", t.length.toLong))
@@ -339,7 +338,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("t16 split leakage: endpoints respect the t6 split and every " +
        "reported doc has at least one train-side near-dup") {
-    import org.apache.spark.sql.functions._
     val out = TextAnalysis.t16SplitLeakage(spark, sfDir).collect()
     def isTrain(id: Long): Boolean = {
       val md = java.security.MessageDigest.getInstance("MD5")
