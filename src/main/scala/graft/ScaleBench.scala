@@ -16,7 +16,7 @@ package graft
   * truncates long stdout lines).
   *
   * Usage: runMain graft.ScaleBench <outFile> [q=pfx1,pfx2] <sf>=<dir> ...
-  *   e.g. runMain graft.ScaleBench SCALE_SELF.json \
+  *   e.g. runMain graft.ScaleBench measurements/scale/SCALE_SELF.json \
   *          0.1=scaledata/sf0.1 0.3=scaledata/sf0.3 1.0=scaledata/sf1
   *   the optional q= arg restricts to name prefixes (zipf-corpus runs
   *   time only t12*: the other queries' inputs are shape-identical there).

@@ -57,7 +57,7 @@ object SparkEntry {
       // column over that deliberately oversized codebook — N*(N/4)
       // cosines that exist only for the oracle differential. The
       // production flat tier's cost is the assignVia=lshflat ScaleBench
-      // rows (SCALE_1000X_D13FLAT)
+      // rows (measurements/scale/SCALE_1000X_D13FLAT.json)
       "s14_flat_assign")
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -1103,15 +1103,9 @@ object Dedup {
     * oracle replays assignment, threshold, and keeper choice
     * bit-for-bit. */
   def d13SemanticDedup(s: SparkSession, dir: String): DataFrame = {
-    val e = Similarity.embeddingsFor(s, dir)
     val via = resolveAssignVia(s, dir)
-    d13Core(via match {
-      case "lsh"      => Similarity.lshCellAssigned(e)
-      case "lshcap"   => Similarity.lshCapCellAssigned(e)
-      case "lshflat"  => Similarity.lshFlatCellAssigned(e)
-      case "twolevel" => Similarity.twoLevelCellAssigned(e)
-      case _          => Similarity.cellAssigned(e)
-    }, subCapFor(via))
+    d13Core(Similarity.d13CellAssigned(via, Similarity.embeddingsFor(s, dir)),
+      subCapFor(via))
   }
 
   /** The flat tier's ABSOLUTE sub-cell cap (r16): under `lshflat` the
@@ -1139,34 +1133,24 @@ object Dedup {
   private[graft] def subCapFor(via: String): Option[Long] =
     if (via == "lshflat") Some(FlatSubCellCap) else None
 
-  /** The d13 cell-ASSIGNMENT seam (r14, VERDICT r13 #3): `exact`
-    * (default) scores every vector against every centroid — N·C = N^1.5
-    * under the balanced sqrt codebook, the engine's one superlinear
-    * term, and the path every oracle pins bit-for-bit; `lsh` routes
-    * assignment through [[Similarity.lshCellAssignedAgainst]] (s9's
-    * measured hierarchical-IVF path) — ≈ N·C·L/2^bits, the 100 TB
-    * default for CLUSTERED (trained-embedding) corpora where s9's
-    * agreement is ~67% and a misassigned vector still lands with its
-    * cluster-mates whenever the cluster dominates both cells' bucket
-    * co-occupancy; `lshcap` (late r15) is lsh with every bucket capped
-    * at [[Similarity.LshBucketCap]] idMix-sampled residents — the ONLY
-    * tier whose assignment term is LINEAR by construction (N·L·B; every
-    * uncapped tier returns to a superlinear law at depth, SCALING.md
-    * round-15 decomposition), priced in agreement decay as occupancy
-    * outgrows the cap; `lshflat` (late r15) pairs that capped join with
-    * [[Similarity.centroidsFlat]]'s C = N/target codebook so BOTH of
-    * d13's N^1.5 terms go linear — assignment N·L·B (C-independent)
-    * and within-cell pairwise N·target — the first fully linear d13
-    * path, recall priced in SCALING.md; `twolevel` (r15, VERDICT r14 #4) routes through
-    * [[Similarity.twoLevelCellAssignedAgainst]] — N·3·sqrt(C) ≈ N^1.25,
-    * the geometry-preserving middle tier whose misses land in the
-    * runner-up super-cell instead of a sentinel. Selection between the
-    * tiers is MEASURED, not guessed: [[Similarity.assignMarginProbe]]'s
-    * sampled statistic + the decision rule in SCALING.md — and since
-    * r15 the rule itself is a seam value: `auto` resolves per corpus
-    * via [[resolveAssignVia]]. Same sys-prop convention as
-    * `graft.d3.maxBandBucket`; the env fallback reaches forked
-    * ScaleBench JVMs, where the SCALE_SKEW_LSH series is captured. */
+  /** The d13 cell-ASSIGNMENT seam (r14, VERDICT r13 #3), one tier per
+    * corpus geometry ([[Similarity.d13CellAssigned]] dispatches, and
+    * rejects any other name): `exact` (default) scores every vector
+    * against every centroid — N·C = N^1.5 under the balanced sqrt
+    * codebook, and the path every oracle pins bit-for-bit; `lshflat`
+    * (late r15) pairs the occupancy-capped sign-LSH join
+    * ([[Similarity.cappedCodebook]]) with [[Similarity.centroidsFlat]]'s
+    * C = N/target codebook so BOTH of d13's N^1.5 terms go linear —
+    * assignment N·L·B (C-independent) and within-cell pairwise
+    * N·target — recall priced in SCALING.md; `twolevel` (r15, VERDICT
+    * r14 #4) routes through [[Similarity.twoLevelCellAssignedAgainst]]
+    * — N·3·sqrt(C) ≈ N^1.25, the geometry-preserving middle tier whose
+    * misses land in the runner-up super-cell instead of a sentinel.
+    * Selection between the tiers is MEASURED, not guessed:
+    * [[Similarity.assignMarginProbe]]'s sampled statistic + the
+    * decision rule in SCALING.md — and since r15 the rule itself is a
+    * seam value: `auto` resolves per corpus via [[resolveAssignVia]].
+    * The env fallback reaches forked ScaleBench JVMs. */
   private[graft] def D13AssignVia: String =
     sys.props.get("graft.d13.assignVia")
       .orElse(sys.env.get("GRAFT_D13_ASSIGNVIA")).getOrElse("exact")

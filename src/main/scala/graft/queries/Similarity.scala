@@ -94,8 +94,8 @@ object Similarity {
     pmod(id * lit(MixA) + lit(MixB), lit(MixM))
 
   /** [[idMix]] for composing families (d13's bounded sub-cell split keys
-    * on it, the s11 differential's source sample strides by it), plus
-    * its SQL text for their oracles. */
+    * on it, s12's probe sample strides by it), plus its SQL text for
+    * their oracles. */
   private[graft] def idMixOf(id: Column): Column = idMix(id)
   private[queries] def mixSql(c: String): String =
     s"(($c * $MixA + $MixB) % $MixM)"
@@ -236,7 +236,7 @@ object Similarity {
     * bit-for-bit). Shared by s2/s7's IVF probe path and
     * [[Dedup.d13SemanticDedup]]'s cluster blocking. */
   private[graft] def cellAssigned(e: DataFrame): DataFrame =
-    cellAssignedAgainst(centroidsSeamed(e), e)
+    cellAssignedAgainst(centroids(e), e)
 
   /** [[cellAssigned]] against an explicit centroid table (d13b assigns an
     * augmented corpus to cells seeded from the organic one).
@@ -252,7 +252,7 @@ object Similarity {
     * (vec_id, embedding, cell) rows ever cross. `first(embedding)` is
     * deterministic here: every candidate row of a group carries the
     * same embedding. This is the exact-assignment twin of
-    * [[lshCellAssignedAgainst]]'s agg, pinned by PlanSpec. */
+    * [[lshAssignCore]]'s agg, pinned by PlanSpec. */
   private[queries] def cellAssignedAgainst(cent: DataFrame,
       e: DataFrame): DataFrame =
     e.join(broadcast(cent), lit(true))
@@ -278,39 +278,36 @@ object Similarity {
     * under Verify.
     *
     * Honors the `graft.d13.assignVia` seam (r14): the artifact feeds the
-    * SEMANTIC-DEDUP consumers (p5/p6 run d13's drop rule over it), so
-    * under `lsh` the index itself is built through
-    * [[lshCellAssignedAgainst]] — the assignment N·C term linearizes for
-    * the whole pipeline, not just the standalone d13 entry. The memo key
-    * carries the mode so a mid-session toggle can never serve a stale
-    * path's artifact. s2/s7's PROBE path stays on [[cellAssigned]]
-    * unconditionally: probe pruning needs geometric cells, and its
-    * oracles pin them. */
+    * SEMANTIC-DEDUP consumers (p5/p6 run d13's drop rule over it), so the
+    * index itself is built through [[d13CellAssigned]] — a linear tier
+    * linearizes the assignment for the whole pipeline, not just the
+    * standalone d13 entry. The memo key carries the tier so a
+    * mid-session toggle can never serve a stale path's artifact. s2/s7's
+    * PROBE path stays on [[cellAssigned]] unconditionally: probe pruning
+    * needs geometric cells, and its oracles pin them. */
   private[queries] def sharedCells(s: SparkSession, dir: String): DataFrame = {
     val via = Dedup.resolveAssignVia(s, dir)
-    // the refine seam changes the lshflat codebook, so it must be part
-    // of the memo key — a mid-session toggle must never serve the other
-    // path's artifact (the r17 probe-cache lesson)
-    val refineSuffix =
-      if (codebookRefineIters > 0) s"_refine$codebookRefineIters" else ""
-    val key = (via match {
-      case "lsh"      => "s2_cells_lsh"
-      case "lshcap"   => "s2_cells_lshcap"
-      case "lshflat"  => "s2_cells_lshflat"
-      case "twolevel" => "s2_cells_twolevel"
-      case _          => "s2_cells"
-    }) + refineSuffix
+    val key = if (via == "exact") "s2_cells" else s"s2_cells_$via"
     graft.SharedStage.getOrCompute(s, dir, key) {
-      val e = embeddings(s, dir)
-      via match {
-        case "lsh"      => lshCellAssigned(e)
-        case "lshcap"   => lshCapCellAssigned(e)
-        case "lshflat"  => lshFlatCellAssigned(e)
-        case "twolevel" => twoLevelCellAssigned(e)
-        case _          => cellAssigned(e)
-      }
+      d13CellAssigned(via, embeddings(s, dir))
     }
   }
+
+  /** d13's assignment tiers by RESOLVED `assignVia` name (`auto` is
+    * resolved first by [[Dedup.resolveAssignVia]]) — the one dispatch
+    * d13 and [[sharedCells]] (so p5/p6) share: `exact` (the oracle-pinned
+    * default), `lshflat` (the linear tier `auto` picks on deep corpora)
+    * and `twolevel` (its pick on small clustered ones). Unknown names
+    * FAIL LOUDLY: a typo'd or retired tier (`lsh`, `lshcap`) must not
+    * silently run exact. */
+  private[queries] def d13CellAssigned(via: String, e: DataFrame): DataFrame =
+    via match {
+      case "exact"    => cellAssigned(e)
+      case "lshflat"  => lshFlatCellAssigned(e)
+      case "twolevel" => twoLevelCellAssigned(e)
+      case other => sys.error(
+        s"unknown d13 assignVia tier '$other' (exact|lshflat|twolevel|auto)")
+    }
 
   /** s2 — IVF: [[NumCentroids]] deterministic sampled centroid seeds
     * (smallest id-mix values — an O(N) TakeOrdered scan, fixed-size
@@ -376,20 +373,18 @@ object Similarity {
     * cross); the mean is ONE groupBy(cell) carrying 64 map-side-combined
     * integer sums — no explode, the corpus never leaves its scan
     * partition — with a ≤C-row output. A second iteration is the same
-    * two stages again ([[codebookRefineIters]] iterates the flat tier);
-    * SCALING.md r18 records where even ONE pays (d13 drop recall +1.4
-    * to +1.5 points on both geometries, clustered probe search) and
-    * where it does not (deep near-uniform probe search, −0.02 — random
-    * near-orthogonal vectors have no cluster centers to find). */
+    * two stages again; SCALING.md r18 records where even ONE pays (d13
+    * drop recall +1.4 to +1.5 points on both geometries, clustered
+    * probe search) and where it does not (deep near-uniform probe
+    * search, −0.02 — random near-orthogonal vectors have no cluster
+    * centers to find). */
   private[graft] def refineCentroids(cent: DataFrame,
       e: DataFrame): DataFrame =
     refinedFrom(cent, cellAssignedAgainst(cent, e))
 
-  /** The mean-and-replace half of a Lloyd step, over ANY
-    * (vec_id, embedding, cell) assignment — shared by the exact-argmax
-    * refine ([[refineCentroids]]) and the flat tier's bucketed refine
-    * ([[lshFlatCellAssigned]] under the seam), which differ only in how
-    * the assignment was produced. */
+  /** The mean-and-replace half of a Lloyd step, over an assigned
+    * (vec_id, embedding, cell) frame ([[refineCentroids]]'s exact
+    * argmax). */
   private def refinedFrom(cent: DataFrame, cells: DataFrame): DataFrame = {
     // Loud dim guard (ADVICE r18): the per-dimension sum columns below
     // are generated from the STATIC [[EmbDim]], while the rest of the
@@ -417,61 +412,6 @@ object Similarity {
       .select(col("c_id"), coalesce(col("m_emb"), col("c_emb")).as("c_emb"))
   }
 
-  /** The codebook-refinement seam: 0 (default) = seed codebooks
-    * everywhere, every gated oracle pinned to the seed path; N ≥ 1 = N
-    * Lloyd iterations, resolving PER TIER (r19, VERDICT r18 #5 — one
-    * seam, every codebook consumer):
-    *
-    *   - flat / lsh / lshcap / twolevel: refined through the BUCKETED
-    *     assignment ([[refineFlat]] at the tier's bit width) — the
-    *     capped-bucket join, never the N·C argmax, so no linear tier
-    *     silently acquires a superlinear build step;
-    *   - exact sqrt consumers (the d13 `exact` tier via
-    *     [[cellAssigned]], s9/s13's shared codebook, s7's fixed
-    *     IVF-PQ codebook): refined through the EXACT argmax
-    *     ([[refineSeamed]]) — the same N·C pass those paths already
-    *     pay per assignment, Materialized so multi-branch consumers
-    *     pay it once.
-    *
-    * Opt-in stays the rule: the default path must not silently acquire
-    * the extra pass, and s17 remains the always-on gated entry that
-    * prices the exact refine against s2. Deltas measured in SCALING.md
-    * round-18 "The d13-flat refine delta" (flat drop recall,
-    * measurements/r18/D13_REFINE.jsonl) and round-19 "The refine seam
-    * completes" (s7 recall@10 + d13-exact drop agreement,
-    * measurements/r19/REFINE_SQRT.jsonl). */
-  private[graft] def codebookRefineIters: Int =
-    sys.props.get("graft.codebook.refine")
-      .orElse(sys.env.get("SPARK_GRAFT_CODEBOOK_REFINE"))
-      .map(_.toInt).getOrElse(0)
-
-  /** [[codebookRefineIters]] EXACT Lloyd steps over an explicit
-    * codebook (r19, VERDICT r18 #5 — the seam now resolves for the
-    * sqrt-codebook consumers too, not just the flat tier): a no-op at
-    * the default 0 iterations, so every gated oracle stays pinned to
-    * the seed path; at N ≥ 1 the refined ≤C-row table is Materialized
-    * so multi-branch consumers (s7's cells + probes + codes + LUT,
-    * s9/s13's approximate and exact sides) pay the N·C refine
-    * assignment once, not per branch. The refine pass here is the
-    * EXACT argmax (the s17 posture) — the right tool for consumers
-    * that already pay an exact N·C assignment (the d13 `exact` tier,
-    * s7's IVF build, s9/s13's reference sides); tiers whose point is
-    * to LINEARIZE assignment (lsh/lshcap/lshflat/twolevel) refine
-    * through the bucketed pass ([[refineFlat]]) instead, so no linear
-    * tier silently acquires a superlinear build step. Deltas measured
-    * in measurements/r19/ (s7 recall@10, d13-exact drop agreement). */
-  private[graft] def refineSeamed(cent0: DataFrame, e: DataFrame): DataFrame = {
-    val it = codebookRefineIters
-    if (it == 0) cent0
-    else graft.Materialize(
-      (1 to it).foldLeft(cent0)((c, _) => refineCentroids(c, e)))
-  }
-
-  /** [[centroids]] under the refine seam — the sqrt-codebook twin of
-    * the flat tier's seamed constructor. */
-  private[graft] def centroidsSeamed(e: DataFrame): DataFrame =
-    refineSeamed(centroids(e), e)
-
   /** s17 — s2's IVF search over a ONE-Lloyd-iteration refined codebook:
     * identical schema and probe budget, so the recall@10 delta vs s2 is
     * the measured value of the refinement (seed recall 0.54 mean at
@@ -480,7 +420,7 @@ object Similarity {
     * every existing oracle pin stays on the seed path. */
   def s17IvfRefined(s: SparkSession, dir: String): DataFrame = {
     val e = embeddings(s, dir)
-    // Materialized like [[refineSeamed]]'s codebooks (r22, guide §7.2):
+    // Materialized (r22, guide §7.2):
     // s2CoreWith embeds the codebook twice (cell assignment + probe
     // ranking) and recallVsBrute's consumers used to double that again —
     // un-materialized, the refine's N·C assignment + 64-sum aggregate
@@ -710,7 +650,7 @@ object Similarity {
   /** The shared candidate-scoring + shortlist tail of every blocked s11
     * tier: join probes to cell members, score c4, keep each
     * (source, probed cell)'s top-[[S11ShortlistK]]. On the CELL-KEYED
-    * tiers (ivf/lsh/twolevel — see [[s11IvfPairs]]) the shortlist's
+    * tiers (ivf/twolevel — see [[s11IvfPairs]]) the shortlist's
     * WindowGroupLimit needs no exchange below it: the cell join's
     * partitioning already clusters the (s_id, cell) group key. The
     * flat tier joins on (cell, sub) — its per-(source, cell) scan cap
@@ -779,8 +719,9 @@ object Similarity {
     * codebook ([[twoLevelCellAssignedAgainst]] /
     * [[twoLevelCodebook]]): a vector scores ~3·sqrt(C) centroids
     * instead of C, cutting the tier's one remaining superlinear stage
-    * (the r15 shortlist removed the pair-mass term; `SCALE_300X_S11SHORT`
-    * measured what was left at tail 1.23 — assignment). Source probes
+    * (the r15 shortlist removed the pair-mass term;
+    * `measurements/scale/SCALE_300X_S11SHORT.json` measured what was
+    * left at tail 1.23 — assignment). Source probes
     * rank the top-[[S11bProbe]] cells among the candidate centroids of
     * their top-[[TwoLevelProbe]] super-cells; same rounded-cosine /
     * lowest-id determinism as every other tier. */
@@ -826,11 +767,8 @@ object Similarity {
       col("t_emb").as("embedding"))
     val k = flatCodebookSize(tgtE)
     val bits = flatBits(k)
-    // the codebook honors the same refine seam as d13's lshflat path
-    // (r18): default 0 iterations = the pinned seed construction
-    val cb = cappedCodebookN(
-      refineFlat(centroidsFlatK(tgtE, k), tgtE, bits), LshBucketCap, bits)
-    val cells = lshAssignCoreN(cb, tgtE, bits)
+    val cb = cappedCodebookN(centroidsFlatK(tgtE, k), LshBucketCap, bits)
+    val cells = lshAssignCore(cb, tgtE, bits)
       .select(col("vec_id").as("t_id"), col("embedding").as("t_emb"),
         col("cell"))
       .filter(col("cell") >= 0) // sentinel singletons are unreachable
@@ -919,9 +857,8 @@ object Similarity {
 
   /** Tier-name dispatch. Unknown names FAIL LOUDLY (ADVICE r16): a
     * wildcard falling through to exact would let a typo'd (or retired,
-    * e.g. `lsh`) tier name make the s11 differential compare exact
-    * against exact and emit a trivially-perfect agreement table that
-    * reads as a real honesty result. `lshflat` is accepted as the
+    * e.g. `lsh`) tier name silently measure the exact tier under
+    * another tier's name. `lshflat` is accepted as the
     * d13-seam spelling of `flat` (the same mapping [[s11AutoVia]] applies). */
   private def s11PairsFor(via: String, src: DataFrame,
       tgt: DataFrame): DataFrame = via match {
@@ -953,8 +890,7 @@ object Similarity {
     * miss every candidate keeps a −1 sentinel match and `accepted =
     * false` — a LOUD miss, never a silently absent row. The honest
     * numbers at sf0.01: agreement where the probe finds the true match,
-    * misses reported as such. At depth the same agreement table is
-    * measured under other tiers by [[s11Differential]]. */
+    * misses reported as such. */
   def s11bBitextBlocked(s: SparkSession, dir: String): DataFrame = {
     val src = s11Side(s, dir, S11SrcLang, "s_id", "s_emb")
     val tgt = s11Side(s, dir, S11TgtLang, "t_id", "t_emb")
@@ -971,70 +907,6 @@ object Similarity {
         coalesce(col("match_id") === col("exact_match"), lit(false))
           .as("agree"))
       .orderBy(col("s_id"))
-  }
-
-  /** The s11b differential generalized to DEPTH (r17, VERDICT r16 #5):
-    * the full exact reference is quadratic in the slice sizes, so at
-    * sf30+ the honesty kit runs on an idMix-STRIDED source sample —
-    * BOTH sides (the exact reference and the blocked tier under `via`)
-    * mine the SAME sampled source set against the FULL target side, so
-    * per-source best-match agreement and the accepted-set overlap are
-    * apples-to-apples while the exact side costs K·N_tgt instead of
-    * N_src·N_tgt. Margins are within-sample (the t-side neighborhood
-    * sums see only sampled sources — on both sides equally; the
-    * blocked tier's candidate/codebook construction still runs over
-    * the full target slice, which is what depth measures).
-    * `sampleTarget <= 0` keeps every source — the verbatim s11b shape.
-    * Its depth numbers are SCALING.md's round-17 differential table
-    * (the pricing instrument for the flat tier's scan cap —
-    * [[S11FlatScanCap]]). */
-  private[graft] def s11Differential(s: SparkSession, dir: String,
-      via: String, sampleTarget: Long): DataFrame = {
-    val src0 = s11Side(s, dir, S11SrcLang, "s_id", "s_emb")
-    val src =
-      if (sampleTarget <= 0L) src0
-      else {
-        val stride = math.max(1L, src0.count() / sampleTarget)
-        src0.filter(pmod(idMixOf(col("s_id")), lit(stride)) === 0)
-      }
-    val tgt = s11Side(s, dir, S11TgtLang, "t_id", "t_emb")
-    val resolved = via match {
-      case "auto" => s11AutoVia(dir, tgt)
-      case v      => v
-    }
-    val exactBest = s11MarginCore(s11ExactPairs(src, tgt))
-      .select(col("s_id"), col("match_id").as("exact_match"),
-        col("cosine").as("exact_cosine"),
-        col("accepted").as("exact_accepted"))
-    val blocked =
-      s11MarginCore(s11PairsFor(resolved, src, tgt),
-        s11ThresholdFor(resolved))
-    // `regret` = exact best cosine − the blocked pick's cosine (both the
-    // quantized c4/10⁴ the margin stage ranks on): ≥ 0 by construction
-    // (the exact best is the global argmax over the same target slice),
-    // and the honest depth metric where match-IDENTITY agreement is
-    // tie-dominated — at 10⁵-scale target slices the top-1 by quantized
-    // cosine has many near-ties, so a blocked tier picking a different
-    // member of the same near-tie family is not a recall loss. A missed
-    // source (no candidates) takes the explicit missed-row form
-    // greatest(exact_cosine, 0): the full loss when the foregone best
-    // was a genuine (positive-cosine) match, zero when even the exact
-    // best was negative — missing a worse-than-nothing match is not a
-    // loss, and the earlier coalesce(cosine, 0) form let such rows go
-    // NEGATIVE, breaking the documented ≥0 invariant and deflating
-    // regret_mean (ADVICE r17).
-    exactBest.join(blocked, Seq("s_id"), "left")
-      .select(col("s_id"), col("exact_match"), col("exact_accepted"),
-        coalesce(col("match_id"), lit(-1L)).as("match_id"),
-        coalesce(col("accepted"), lit(false)).as("accepted"),
-        col("margin"),
-        round(when(col("match_id").isNull,
-            greatest(col("exact_cosine"), lit(0.0)))
-          .otherwise(col("exact_cosine") - col("cosine")), 4)
-          .as("regret"),
-        coalesce(col("match_id") === col("exact_match"), lit(false))
-          .as("agree"),
-        lit(resolved).as("via"))
   }
 
   /** s16's threshold grid — brackets the CCMatrix operating band around
@@ -1169,58 +1041,10 @@ object Similarity {
     recallVsBrute(e, approx, Seq(lit(NumTables).as("probed_tables")))
   }
 
-  /** s9 — LSH-assisted cell ASSIGNMENT: the hierarchical-IVF build path,
-    * i.e. the "ANN-assisted assignment" named as d13/s2's future
-    * linearization when the balanced sqrt codebook was landed. Instead
-    * of scoring every vector against every centroid (the N^1.5 term),
-    * the CODEBOOK is bucketed by the s3 sign-LSH tables and each vector
-    * scores only centroids sharing at least one bucket — assignment cost
-    * drops from N·C cosines to N·(expected bucket co-occupancy)
-    * ≈ N·C·L/2^bits, with the probe side never leaving its scan
-    * partition (the bucketed codebook is an O(C·L) broadcast). Reports
-    * per vector: the LSH-assigned cell, the exact cell, the candidate
-    * count, and the agreement flag — assignment recall is the honest
-    * quality metric, and a vector whose buckets hold no centroid
-    * reports cell −1 (the miss is visible, not papered over). The s2/
-    * d13 catalog entries deliberately stay on exact assignment (their
-    * oracles pin exact cells); s9 IS the measured migration path.
-    *
-    * Measured recall honesty (sign-LSH discriminates the argmax only
-    * when the argmax has margin): on the near-uniform synthetic corpus
-    * agreement is ~33–36% (sf0.01/sf1) at a 5.5× candidate cut —
-    * near-orthogonal vectors make every cell argmax fragile; on the
-    * CLUSTERED skew corpus (trained-embedding geometry) agreement
-    * doubles to ~64–67% at a ~3× cut, and misses drop 25→11 per 20k.
-    * For semantic dedup the failure mode is benign: a vector assigned
-    * to its runner-up cell still lands with its cluster-mates whenever
-    * the cluster dominates both cells' co-occupancy. */
-  /** s9's LSH-assisted assignment as a PRODUCTION path (r14, VERDICT r13
-    * #3): every vector scores only the centroids sharing at least one
-    * sign-LSH bucket — the engine's one superlinear term (N·C = N^1.5
-    * brute-force assignment under the balanced sqrt codebook) drops to
-    * N · (bucket co-occupancy) ≈ N·C·L/2^bits. Differences from s9 (the
-    * measurement query): no dropDuplicates — same-(vector, centroid)
-    * collisions across tables carry IDENTICAL (c_cos, c_id) sort keys,
-    * so the argmax is unchanged and the dedup exchange is pure cost; the
-    * argmax itself is a map-side-combinable max_by (struct lexicographic:
-    * max rounded cosine, then LOWEST c_id via the negated id — exactly
-    * [[cellAssignedAgainst]]'s row_number order), not a window, so the
-    * candidate mass partial-aggregates to one row per vector before the
-    * one exchange. A vector whose buckets hold no centroid falls back to
-    * a SENTINEL singleton cell (-vec_id - 1, disjoint from real c_ids):
-    * it simply isn't deduped — visible in the output as a never-dropped
-    * vector, never silently misclustered. Consumed by
-    * [[Dedup.d13SemanticDedup]] under the `graft.d13.assignVia=lsh`
-    * seam; recall cost is s9's measured agreement (~67% clustered /
-    * ~36% unclustered) and the honest delta is documented in SCALING.md. */
-  private[graft] def lshCellAssignedAgainst(cent: DataFrame,
-      e: DataFrame): DataFrame =
-    lshAssignCore(bucketedCodebook(cent), e)
-
   /** The sign-LSH codebook: every centroid exploded to its L bucket
     * ids — O(C·L) rows, always the broadcast side of the assignment
-    * join. Shared by the uncapped ([[lshCellAssignedAgainst]]) and
-    * occupancy-capped ([[lshCapCellAssignedAgainst]]) tiers. */
+    * join. s9/s13's uncapped side; [[cappedCodebook]] bounds it per
+    * bucket. */
   private[graft] def bucketedCodebook(cent: DataFrame): DataFrame =
     bucketedCodebookN(cent, BitsPerTable)
 
@@ -1228,14 +1052,22 @@ object Similarity {
     cent.select(col("c_id"), col("c_emb"),
       explode(tableBucketsN(col("c_emb"), bits)).as("bucket"))
 
-  /** The bucket join + map-side max_by argmax shared by every lsh tier:
-    * candidate mass partial-aggregates to one row per vector before the
-    * single exchange; bucketless vectors fall back to the sentinel
-    * singleton cell (-vec_id - 1). */
-  private def lshAssignCore(cb: DataFrame, e: DataFrame): DataFrame =
-    lshAssignCoreN(cb, e, BitsPerTable)
-
-  private def lshAssignCoreN(cb: DataFrame, e: DataFrame,
+  /** The bucket join + map-side max_by argmax of the linear tiers
+    * (d13 `lshflat`, s11 `flat`; the r14 production shape of s9's
+    * assignment): every vector scores only the centroids sharing at
+    * least one `bits`-wide sign bucket. Differences from s9 (the
+    * measurement query): no dropDuplicates — same-(vector, centroid)
+    * collisions across tables carry IDENTICAL (c_cos, c_id) sort keys,
+    * so the argmax is unchanged and the dedup exchange is pure cost; the
+    * argmax itself is a map-side-combinable max_by (struct lexicographic:
+    * max rounded cosine, then LOWEST c_id via the negated id — exactly
+    * [[cellAssignedAgainst]]'s order), not a window, so the candidate
+    * mass partial-aggregates to one row per vector before the single
+    * exchange. A vector whose buckets hold no centroid falls back to a
+    * SENTINEL singleton cell (-vec_id - 1, disjoint from real c_ids): it
+    * simply isn't deduped — visible in the output as a never-dropped
+    * vector, never silently misclustered. */
+  private def lshAssignCore(cb: DataFrame, e: DataFrame,
       bits: Int): DataFrame = {
     val assigned = e
       .select(col("vec_id"), col("embedding"),
@@ -1250,57 +1082,13 @@ object Similarity {
         coalesce(col("cell"), -col("vec_id") - 1).as("cell"))
   }
 
-  /** [[lshCellAssignedAgainst]] with self-seeded centroids — the drop-in
-    * alternative to [[cellAssigned]]. Under the refine seam the sqrt
-    * codebook is refined through the BUCKETED pass ([[refineFlat]] at
-    * this tier's bit width) — linear, so the tier's cost posture
-    * survives the seam. */
-  private[graft] def lshCellAssigned(e: DataFrame): DataFrame =
-    lshCellAssignedAgainst(refineFlat(centroids(e), e, BitsPerTable), e)
-
-  /** Residents kept per sign-LSH bucket in the `lshcap` tier
-    * (`graft.d13.lsh.bucketCap`, env fallback for forked ScaleBench
-    * JVMs like the assignVia seam itself). 8 = the mean main-series
-    * occupancy (C/2^bits, C = √(N/8)) at sf30 — the cap starts binding
-    * at exactly the depth where the uncapped tier's N^1.5 slope was
-    * measured, and is a no-op at driver/harness SFs (C = 16 over 192
-    * bucket slots), so the tier equals `lsh` there. On a CLUSTERED
-    * corpus sign buckets are hot-skewed and the cap binds much earlier
-    * — that is the case the honesty-kit numbers in SCALING.md price. */
-  private[graft] def LshBucketCap: Int =
-    sys.props.get("graft.d13.lsh.bucketCap")
-      .orElse(sys.env.get("GRAFT_D13_LSH_BUCKETCAP"))
-      .map(_.toInt).getOrElse(8)
-
-  /** Occupancy-CAPPED sign-LSH assignment (`assignVia=lshcap`, r15) —
-    * the structural fix for the lsh tier's measured return to the
-    * N^1.5 law at depth (SCALING.md round-15 decomposition: per-vector
-    * candidate count is bucket occupancy ≈ C/2^bits, and C ∝ √N, so
-    * the uncapped join output grows N·√N with a smaller constant than
-    * exact — p5-lsh measured 1.41 on sf30→100, ON d13-exact's 1.40).
-    * Here every bucket keeps at most [[LshBucketCap]] resident
-    * centroids — a DETERMINISTIC idMix-ranked sample, the same
-    * fair-stride rule the centroid seeds and the margin probe use —
-    * so the join output is bounded by N·L·B: the assignment term is
-    * LINEAR in corpus size by construction, the first tier in the seam
-    * with that property. The price, measured not guessed (SCALING.md
-    * round-15 "The occupancy-capped tier"): the true
-    * argmax survives the cap in a co-occupied bucket with probability
-    * ≈ 1-(1-B/occ)^k (k = co-occupied tables), so agreement decays as
-    * occupancy outgrows B — recall-for-linearity, the trade a 100 TB
-    * operator makes explicitly. Misses stay benign exactly as in the
-    * uncapped tier: an evicted argmax means the vector scores the
-    * surviving candidates and lands in a geometric runner-up cell (or
-    * the visible sentinel if its buckets are empty). The cap is
-    * enforced scan-side (groupBy + array_sort + slice over the O(C·L)
-    * codebook — no window, rows bounded by C·L before AND after), so
-    * the capped codebook is the same broadcast shape the uncapped tier
-    * ships. With cap ≥ C the tier is bit-identical to `lsh`
-    * (SimilaritySpec pins this equivalence both at assignment level
-    * and through the full d13 drop set). */
-  private[graft] def lshCapCellAssignedAgainst(cent: DataFrame,
-      e: DataFrame): DataFrame =
-    lshAssignCore(cappedCodebook(cent, LshBucketCap), e)
+  /** Residents kept per sign-LSH bucket by the linear tiers' capped
+    * codebook. With the flat tier's adaptive bit width pinning mean
+    * occupancy at [[FlatTargetOcc]] = 8, the cap is a BACKSTOP against
+    * hot buckets rather than the steady-state evictor; on a CLUSTERED
+    * corpus sign buckets are hot-skewed and it binds — the case the
+    * flat-tier recall numbers in SCALING.md price. */
+  private[graft] val LshBucketCap = 8
 
   /** The eviction rank key — idMix over (c_id XOR bucket·[[CapRankMixP]]):
     * PER-BUCKET decorrelated, deliberately NOT the global idMix(c_id).
@@ -1324,6 +1112,15 @@ object Similarity {
     * BIGINT for every corpus the oracle replays. */
   private val CapRankMixP = 100003L
 
+  /** The occupancy-CAPPED sign-LSH codebook (r15): every bucket keeps
+    * at most `cap` resident centroids — a DETERMINISTIC sample ranked by
+    * [[CapRankMixP]]'s per-bucket idMix — so the assignment join output
+    * is bounded by N·L·cap, linear in corpus size and C-independent.
+    * The cap is enforced scan-side (groupBy + array_sort + slice over
+    * the O(C·L) codebook — no window, rows bounded by C·L before AND
+    * after), so the capped codebook is the same broadcast shape as
+    * [[bucketedCodebook]]; with cap ≥ C it keeps every (bucket,
+    * centroid) pair (SimilaritySpec pins both ends). */
   private[graft] def cappedCodebook(cent: DataFrame, cap: Int): DataFrame =
     cappedCodebookN(cent, cap, BitsPerTable)
 
@@ -1340,11 +1137,6 @@ object Similarity {
       .select(col("bucket"), col("r.c_id").as("c_id"),
         col("r.c_emb").as("c_emb"))
 
-  /** [[lshCapCellAssignedAgainst]] with self-seeded centroids (bucketed
-    * refine under the seam — see [[lshCellAssigned]]). */
-  private[graft] def lshCapCellAssigned(e: DataFrame): DataFrame =
-    lshCapCellAssignedAgainst(refineFlat(centroids(e), e, BitsPerTable), e)
-
   /** Target cell population of the `lshflat` tier's codebook. 512
     * keeps the within-cell pairwise block comfortably inside one task
     * while leaving cells deep enough that near-duplicates co-assign
@@ -1360,7 +1152,7 @@ object Similarity {
     * codebook survives NOWHERE, the effective cell count stops growing
     * with N, and the pairwise term quietly reverts to quadratic — the
     * measured 1.50 slope of the fixed-width flat tier
-    * (`SCALE_1000X_D13FLAT5.json`). */
+    * (`measurements/scale/SCALE_1000X_D13FLAT5.json`). */
   private[graft] val FlatTargetOcc = 8
 
   /** The flat codebook size: C = ceil(N / [[FlatCellTarget]]) — linear
@@ -1412,33 +1204,14 @@ object Similarity {
     * codebook" and round-19 "The production flat tier, read against
     * the unblocked ideal"; misses stay visible sentinels. At harness
     * SFs the whole construction degenerates to the standard 16-centroid
-    * codebook at 5 bits with a non-binding cap — bit-for-bit the lsh
-    * tier (spec-pinned). */
+    * codebook at 5 bits with a non-binding cap — vector-for-vector s9's
+    * LSH assignment (spec-pinned). */
   private[graft] def lshFlatCellAssigned(e: DataFrame): DataFrame = {
     val k = flatCodebookSize(e)
     val bits = flatBits(k)
-    val cent = refineFlat(centroidsFlatK(e, k), e, bits)
-    lshAssignCoreN(cappedCodebookN(cent, LshBucketCap, bits), e, bits)
+    lshAssignCore(
+      cappedCodebookN(centroidsFlatK(e, k), LshBucketCap, bits), e, bits)
   }
-
-  /** [[codebookRefineIters]] Lloyd steps over a FLAT codebook (r18):
-    * each iteration re-assigns through the CAPPED BUCKETS (linear, the
-    * same join the final assignment pays) and replaces centroids with
-    * their cells' integer-quantized means; sentinel (miss) rows are
-    * excluded from the means, and the re-bucketing after each step
-    * re-derives sign buckets from the refined embeddings. A no-op at
-    * the default 0 iterations — shared by d13's lshflat assignment and
-    * s11's flat mining tier, so one seam refines both consumers.
-    * Measured (measurements/r18/D13_REFINE.jsonl): drop recall
-    * +1.5 pt / +1.4 pt (main30/skew30) at iteration 1, +0.7 pt more at
-    * iteration 2. */
-  private def refineFlat(cent0: DataFrame, e: DataFrame,
-      bits: Int): DataFrame =
-    (1 to codebookRefineIters).foldLeft(cent0) { (c, _) =>
-      refinedFrom(c,
-        lshAssignCoreN(cappedCodebookN(c, LshBucketCap, bits), e, bits)
-          .filter(col("cell") >= 0))
-    }
 
   /** Super-cells probed per vector in the two-level assignment: 2 keeps
     * the cost at ~3·sqrt(C) scored centroids per vector while covering
@@ -1475,21 +1248,21 @@ object Similarity {
     * argmax super-cell (C·S cosines — vanishing), and a vector scores
     * the S supers, probes its top-[[TwoLevelProbe]], and scores only
     * the centroids resident there: N·(S + P·E[C/S]) ≈ N·3·sqrt(C)
-    * cosines, i.e. N^1.25 under C ∝ sqrt(N) — against lsh's
+    * cosines, i.e. N^1.25 under C ∝ sqrt(N) — against uncapped sign-LSH's
     * N·C·L/2^bits. This is the classic two-level IVF / IMI build shape
     * (e.g. Babenko & Lempitsky's inverted multi-index, arXiv public).
     *
-    * Approximate like lsh — the true argmax can live in an unprobed
+    * Approximate like sign-LSH — the true argmax can live in an unprobed
     * super-cell — so it lives behind the same [[Dedup.D13AssignVia]]
     * seam, its recall is measured against exact (SCALING.md round-15
     * "The two-level codebook"), and the driver-SF oracles
-    * stay pinned to the exact default. Failure mode differs from lsh in
+    * stay pinned to the exact default. Failure mode differs from LSH in
     * the right direction for dedup: a miss lands in the RUNNER-UP
     * super-cell's best centroid — geometrically adjacent, so cluster
-    * mass stays together — where an lsh miss with no co-bucketed
+    * mass stays together — where an LSH miss with no co-bucketed
     * centroid is a sentinel singleton. Every super-cell holds ≥0
     * centroids (supers are seeds, assignment is by argmax); a vector
-    * whose probed supers are both empty of centroids keeps the lsh
+    * whose probed supers are both empty of centroids keeps the LSH
     * sentinel convention (−vec_id − 1, visibly undeduped), though with
     * P = 2 and argmax assignment this requires two adjacent empty
     * super-cells — not observed on any measured corpus.
@@ -1550,11 +1323,9 @@ object Similarity {
   }
 
   /** [[twoLevelCellAssignedAgainst]] with self-seeded centroids — the
-    * third drop-in behind the d13 assignment seam (bucketed refine
-    * under the seam, preserving the tier's N^1.25 posture — see
-    * [[lshCellAssigned]]). */
+    * `twolevel` arm of [[d13CellAssigned]]. */
   private[graft] def twoLevelCellAssigned(e: DataFrame): DataFrame =
-    twoLevelCellAssignedAgainst(refineFlat(centroids(e), e, BitsPerTable), e)
+    twoLevelCellAssignedAgainst(centroids(e), e)
 
   /** Sampled top1−top2 assignment-margin statistic (r15, VERDICT r14
     * #3 — make `assignVia` selection measured, not manual): one cheap
@@ -1751,13 +1522,13 @@ object Similarity {
     * deliberately TIGHT (1) so the eviction rule actually fires at
     * harness SF (the sf0.01 codebook has occupancy-3 buckets; the
     * production default [[LshBucketCap]] = 8 would be a no-op there and
-    * the gate would only re-test s9). The production tier reads its cap
-    * from the seam, not from this pin. */
+    * the gate would only re-test s9). The production flat tier ships
+    * [[LshBucketCap]], not this pin. */
   private[graft] val S13Cap = 1
 
   /** s13 — occupancy-capped LSH assignment as a first-class gated
-    * operator (late r15): the measurement companion to the
-    * `assignVia=lshcap` production tier exactly as s9 is to `lsh`.
+    * operator (late r15): the measurement of the occupancy cap the
+    * `assignVia=lshflat` production tier ships ([[cappedCodebook]]).
     * Every bucket of the sign-LSH codebook keeps only its [[S13Cap]]
     * smallest-idMix residents (the deterministic fair-stride rule), and
     * each vector is scored against BOTH codebooks — capped and
@@ -1774,7 +1545,7 @@ object Similarity {
     * scan-side by [[cappedCodebook]]'s bounded groupBy), the probe side
     * never leaves its scan partition, and both argmaxes are map-side
     * max_by partial-aggregates. The join output is bounded at N·L·cap
-    * rows — the linear-by-construction assignment the production seam
+    * rows — the linear-by-construction assignment the flat tier
     * ships — while s9's uncapped join grows with occupancy (C/2^bits,
     * C ∝ √N): at 100 TB this entry IS the plan shape of the only
     * assignment tier whose cost does not bend. The DuckDB oracle
@@ -1782,8 +1553,7 @@ object Similarity {
     * both picks and the exact argmax bit-for-bit. */
   def s13LshCapAssign(s: SparkSession, dir: String): DataFrame = {
     val e = embeddings(s, dir)
-    // seamed (r19): same shared-codebook rule as s9
-    val cent = centroidsSeamed(e)
+    val cent = centroids(e)
     def picked(cb: DataFrame, cell: String, n: String): DataFrame =
       e.select(col("vec_id"), col("embedding"),
           explode(tableBuckets(col("embedding"))).as("bucket"))
@@ -1819,23 +1589,23 @@ object Similarity {
     * VERDICT r15 #3): at production values the flat tier's two
     * distinctive mechanisms DEGENERATE at harness SF (N=500 /
     * target 512 → the 16-centroid floor at the fixed 5-bit width —
-    * bit-for-bit the lsh tier, so the gate would only re-test s9/s13).
+    * vector-for-vector s9's assignment, so the gate would only re-test
+    * s9/s13).
     * Cell target 4 forces the linear codebook rule to BIND
     * (k = ceil(500/4) = 125 ≫ the 16 floor) and occupancy target 1
     * forces the adaptive width to BIND (ceil(log2 125) = 7 > the 5-bit
     * floor), so both adaptive formulas are exercised — and
     * oracle-REPLAYED: the DuckDB side recomputes k and bits from
     * count(*) and compares them as output columns, so a drift in
-    * either formula hash-fails loudly. The production tier reads its
-    * knobs from the seams ([[FlatCellTarget]]/[[FlatTargetOcc]]), not
-    * from these pins. */
+    * either formula hash-fails loudly. The production tier ships
+    * [[FlatCellTarget]]/[[FlatTargetOcc]], not these pins. */
   private[graft] val S14CellTarget = 4
   private[graft] val S14TargetOcc = 1
   private[graft] val S14Cap = 8
 
   /** s14 — the `lshflat` construction as a first-class gated operator
     * (r16): the measurement companion to the `assignVia=lshflat`
-    * production tier exactly as s13 is to `lshcap` and s9 to `lsh`.
+    * production tier.
     * The FLAT codebook (k = ceil(N/[[S14CellTarget]]) idMix seeds —
     * linear in the corpus, against the standard √ rule) is bucketed at
     * the ADAPTIVE width (2^bits ≈ k/[[S14TargetOcc]], hyperplanes
@@ -1902,8 +1672,8 @@ object Similarity {
 
   /** s15 — the r17 per-(prober, cell) scan-cap construction as a
     * first-class gated operator (the measurement companion to
-    * [[S11FlatScanCap]], exactly as s14 is to `lshflat` and s13 to
-    * `lshcap`): over the harness embeddings, cells are assigned by the
+    * [[S11FlatScanCap]], exactly as s14 is to `lshflat` and s13 to its
+    * bucket cap): over the harness embeddings, cells are assigned by the
     * EXACT argmax (the d13 oracle path — the cap arithmetic is
     * tier-independent, so gating it over exact cells keeps the oracle
     * to proven CTEs), each cell's residents hash into
@@ -1951,13 +1721,37 @@ object Similarity {
       .orderBy(col("q_id"), col("cell"))
   }
 
+  /** s9 — LSH-assisted cell ASSIGNMENT: the hierarchical-IVF build path,
+    * i.e. the "ANN-assisted assignment" named as d13/s2's future
+    * linearization when the balanced sqrt codebook was landed. Instead
+    * of scoring every vector against every centroid (the N^1.5 term),
+    * the CODEBOOK is bucketed by the s3 sign-LSH tables and each vector
+    * scores only centroids sharing at least one bucket — assignment cost
+    * drops from N·C cosines to N·(expected bucket co-occupancy)
+    * ≈ N·C·L/2^bits, with the probe side never leaving its scan
+    * partition (the bucketed codebook is an O(C·L) broadcast). Reports
+    * per vector: the LSH-assigned cell, the exact cell, the candidate
+    * count, and the agreement flag — assignment recall is the honest
+    * quality metric, and a vector whose buckets hold no centroid
+    * reports cell −1 (the miss is visible, not papered over). The s2/
+    * d13 catalog entries deliberately stay on exact assignment (their
+    * oracles pin exact cells); s9 IS the measured migration path.
+    *
+    * Measured recall honesty (sign-LSH discriminates the argmax only
+    * when the argmax has margin): on the near-uniform synthetic corpus
+    * agreement is ~33–36% (sf0.01/sf1) at a 5.5× candidate cut —
+    * near-orthogonal vectors make every cell argmax fragile; on the
+    * CLUSTERED skew corpus (trained-embedding geometry) agreement
+    * doubles to ~64–67% at a ~3× cut, and misses drop 25→11 per 20k.
+    * For semantic dedup the failure mode is benign: a vector assigned
+    * to its runner-up cell still lands with its cluster-mates whenever
+    * the cluster dominates both cells' co-occupancy. */
   def s9LshAssign(s: SparkSession, dir: String): DataFrame = {
     val e = embeddings(s, dir)
-    // seamed (r19): both the LSH side and the exact reference side
-    // below assign against the SAME (possibly refined) codebook, so
-    // the agreement statistic stays a property of the assignment
-    // mechanism, never of codebook drift between the two sides
-    val cent = centroidsSeamed(e)
+    // both the LSH side and the exact reference side below assign
+    // against the SAME codebook, so the agreement statistic stays a
+    // property of the assignment mechanism
+    val cent = centroids(e)
     val cb = cent.select(col("c_id"), col("c_emb"),
       explode(tableBuckets(col("c_emb"))).as("bucket"))
     val vb = e.select(col("vec_id"), col("embedding"),
@@ -2187,18 +1981,12 @@ object Similarity {
     * replays the full pipeline. */
   def s7AnnIvfPq(s: SparkSession, dir: String): DataFrame = {
     val e = embeddings(s, dir)
-    // refineSeamed (r19, VERDICT r18 #5): the seam refines s7's fixed
-    // NumCentroids codebook, which serves BOTH halves — the IVF coarse
-    // quantizer (cells + probes) and, sliced per subspace, the PQ
-    // sub-centroid tables (full-dim Lloyd refines each 16-dim slice
-    // toward its cells' slice means — not per-subspace k-means, but a
-    // strict consistency: codes and cells quantize against the same
-    // table). Default 0 keeps the gated oracle's seed path bit-for-bit;
-    // the measured recall@10 delta lands in measurements/r19/.
-    val cent = refineSeamed(
-      e.orderBy(idMix(col("vec_id")), col("vec_id"))
-        .limit(NumCentroids)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_emb")), e)
+    // ONE fixed NumCentroids codebook serves BOTH halves — the IVF
+    // coarse quantizer (cells + probes) and, sliced per subspace, the
+    // PQ sub-centroid tables
+    val cent = e.orderBy(idMix(col("vec_id")), col("vec_id"))
+      .limit(NumCentroids)
+      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
     // IVF half: cell assignment + per-query probe list (s2's machinery;
     // the argmax is the map-side max_by shape of cellAssignedAgainst —
     // same (rounded cosine, -c_id) ordering, N rows across the exchange

@@ -1213,35 +1213,25 @@ object TextAnalysis {
     (rows, syms)
   }
 
-  /** t25's dictionary-join strategy seam (r19, VERDICT r18 #3):
-    * `graft.t25.dictJoin` (env SPARK_GRAFT_T25_DICTJOIN) ∈
-    * auto | broadcast | shuffle. The harness-SF dictionary is a few
-    * hundred distinct words and BROADCAST is plainly right — but the
-    * distinct-word table of an open-vocabulary 100 TB web corpus is
-    * ~10⁹ rows, beyond any broadcast budget (Spark hard-caps a
-    * broadcast relation at 8 GB / 512 M rows, and driver + every
-    * executor must hold it), so an unconditional `broadcast()` is an
-    * OOM at exactly the scale where tokenizer application is run over
-    * the FULL corpus. `auto` (default) counts the trained dictionary —
-    * one cheap action against the training loop's already-materialized
-    * word table — and broadcasts iff it holds ≤
-    * [[T25DictBroadcastMaxRows]] rows (`graft.t25.dictBroadcastMax`,
-    * default 4 M ≈ a few hundred MB hashed relation with generous
-    * margin under the caps); above it the join is hint-pinned
+  /** t25's dictionary-join size gate (r19, VERDICT r18 #3). The
+    * harness-SF dictionary is a few hundred distinct words and
+    * BROADCAST is plainly right — but the distinct-word table of an
+    * open-vocabulary 100 TB web corpus is ~10⁹ rows, beyond any
+    * broadcast budget (Spark hard-caps a broadcast relation at 8 GB /
+    * 512 M rows, and driver + every executor must hold it), so an
+    * unconditional `broadcast()` is an OOM at exactly the scale where
+    * tokenizer application is run over the FULL corpus. t25 counts the
+    * trained dictionary — one cheap action against the training loop's
+    * already-materialized word table — and broadcasts iff it holds ≤
+    * this many rows (4 M ≈ a few hundred MB hashed relation with
+    * generous margin under the caps); above it the join is hint-pinned
     * SHUFFLE_HASH on the word key — both sides exchange once on
     * `word`, the dictionary side builds the per-partition hash table,
     * and no sort of the exploded corpus is ever required (the
     * t12-zipf tail convention). The result is identical either way —
-    * the oracle gates the default path, and T25DictJoinSpec pins both
-    * physical shapes. */
-  private[graft] def T25DictJoinMode: String =
-    sys.props.get("graft.t25.dictJoin")
-      .orElse(sys.env.get("SPARK_GRAFT_T25_DICTJOIN")).getOrElse("auto")
-
-  private[graft] def T25DictBroadcastMaxRows: Long =
-    sys.props.get("graft.t25.dictBroadcastMax")
-      .orElse(sys.env.get("SPARK_GRAFT_T25_DICTBROADCASTMAX"))
-      .map(_.toLong).getOrElse(4000000L)
+    * the oracle gates the broadcast path, and TextAnalysisSpec/PlanSpec
+    * reach the shuffle branch through a 0-row cap. */
+  private[graft] val T25DictBroadcastMaxRows = 4000000L
 
   /** t25 — BPE tokenizer APPLICATION (the other half of the t24 loop,
     * and what a pipeline actually runs at corpus scale): encode every
@@ -1253,31 +1243,33 @@ object TextAnalysis {
     * Scale shape: the trained word → token-count table is VOCAB-BOUNDED
     * (distinct words with their final symbol-sequence LENGTH — the
     * symbols themselves never leave the training loop), joined onto
-    * one corpus scan under the size-gated [[T25DictJoinMode]] seam
+    * one corpus scan under the [[T25DictBroadcastMaxRows]] size gate
     * (broadcast at harness vocabularies, shuffle-hash at open-vocab
     * corpus scale where a ~10⁹-word dictionary cannot be broadcast);
     * per-doc counts are one map-side-combined aggregation. No
     * per-document re-merging: a word's encoding is a pure function of
     * the word, so tokenizing N documents costs one dictionary join,
     * not N fold evaluations. */
-  def t25BpeEncode(s: SparkSession, dir: String): DataFrame = {
+  def t25BpeEncode(s: SparkSession, dir: String): DataFrame =
+    t25BpeEncode(s, dir, T25DictBroadcastMaxRows)
+
+  /** [[t25BpeEncode]] under an explicit broadcast cap (a 0-row cap
+    * takes the shuffle branch). */
+  private[graft] def t25BpeEncode(s: SparkSession, dir: String,
+      broadcastMaxRows: Long): DataFrame = {
     val trained = bpeRounds(s, dir)._2
       .select(col("word"), size(col("syms")).cast("long").as("n_sym"),
         length(col("word")).cast("long").as("n_char"))
-    val useBroadcast = T25DictJoinMode match {
-      case "broadcast" => true
-      case "shuffle"   => false
-      // the count action runs against the training loop's checkpointed
-      // word table (one block-scan job), and is exactly the statistic
-      // the broadcast decision needs — never guess what you can measure.
-      // Known trade (ADVICE r19): this makes DataFrame CONSTRUCTION
-      // eager in auto mode — a plan-only caller (explain tooling) pays
-      // the training loop before any action. Accepted: the alternative
-      // (deciding at first action) would need a custom plan node, and
-      // the training loop is already eager through its per-round
-      // localCheckpoints — construction cost is the loop, not the count
-      case _           => trained.count() <= T25DictBroadcastMaxRows
-    }
+    // the count action runs against the training loop's checkpointed
+    // word table (one block-scan job), and is exactly the statistic the
+    // broadcast decision needs — never guess what you can measure.
+    // Known trade (ADVICE r19): this makes DataFrame CONSTRUCTION eager
+    // — a plan-only caller (explain tooling) pays the training loop
+    // before any action. Accepted: the alternative (deciding at first
+    // action) would need a custom plan node, and the training loop is
+    // already eager through its per-round localCheckpoints —
+    // construction cost is the loop, not the count
+    val useBroadcast = trained.count() <= broadcastMaxRows
     val dict = if (useBroadcast) broadcast(trained)
                else trained.hint("SHUFFLE_HASH")
     Tables.documents(s, dir)
@@ -1303,42 +1295,6 @@ object TextAnalysis {
   private[graft] val T26Rounds = 2
   private[graft] val T26Pool = 16
   private[graft] val T26Batch = 4
-
-  /** t26's batch-selection seam (r20, VERDICT r19 #4 — added because
-    * MEASURING the width law refuted it): `graft.t26.select` (env
-    * SPARK_GRAFT_T26_SELECT) ∈ antijoin | greedy.
-    *
-    *   - `antijoin` (default, the r19 rule): select candidates that
-    *     conflict with NO higher-ranked CANDIDATE. One bounded
-    *     self-join, order-independent — but measured on zipf10 it
-    *     SATURATES at ~2.2 selected/round regardless of batch width
-    *     (width 16 and width 64 both selected ~165 merges in 64
-    *     rounds; rate slightly DECLINES 2.58→2.03 over 256 rounds —
-    *     measurements/r20/T26_MERGE_SCALE.txt): top-ranked pairs chain
-    *     through shared symbols ((a,b),(b,c),(c,d)…), and the anti-join
-    *     excludes a candidate conflicting with an EXCLUDED higher one,
-    *     so a chain yields ~1-2 picks however wide the batch.
-    *   - `greedy` — the canonical fast-trainer rule: scan the ranked
-    *     pool once, select a candidate iff it conflicts with no
-    *     already-SELECTED pair (a maximal independent set in rank
-    *     order, capped at the batch width). Strictly ⊇ the anti-join's
-    *     set below the cap (anything conflict-free against ALL higher
-    *     candidates is conflict-free against the selected subset), and
-    *     the one that actually delivers the width: the selection is a
-    *     single Catalyst `aggregate` fold over the ≤pool-row collected
-    *     pool ON ONE ROW — no driver collect, no per-candidate join.
-    *     The DuckDB oracle replays it as a recursive CTE carrying the
-    *     selected set as a LIST accumulator, so the gate stays armed.
-    *
-    * The gated catalog entry pins the default; both were measured at
-    * production widths in measurements/r20/T26_MERGE_SCALE.txt. */
-  private[graft] def T26Select: String = {
-    val v = sys.props.get("graft.t26.select")
-      .orElse(sys.env.get("SPARK_GRAFT_T26_SELECT")).getOrElse("antijoin")
-    require(v == "antijoin" || v == "greedy",
-      s"unknown t26 select rule '$v' — expected antijoin or greedy")
-    v
-  }
 
   /** One left-to-right scan applying EVERY pair of a (rank-sorted,
     * mutually non-conflicting) merge batch: like [[bpeMergeFold]] but
@@ -1388,11 +1344,12 @@ object TextAnalysis {
     * regardless of batch width (width 16 and 64 both select ~165
     * merges in 64 rounds — top pairs chain through shared symbols and
     * the whole chain tail dies with its excluded head), so the r19
-    * "30k/B rounds" posture was wrong as arithmetic. The [[T26Select]]
-    * `greedy` seam is the production answer: measured 0.037–0.056
-    * s/merge at widths 16–64 (6.7–8.9x over sequential t24, rate
-    * RISING with vocab diversity, 1 718 merges measured in one run) —
-    * measurements/r20/T26_MERGE_SCALE.txt has the full table.
+    * "30k/B rounds" posture was wrong as arithmetic. The `greedy` rule
+    * (t26b, see [[t26BatchLoop]]) is the production answer: measured
+    * 0.037–0.056 s/merge at widths 16–64 (6.7–8.9x over sequential
+    * t24, rate RISING with vocab diversity, 1 718 merges measured in
+    * one run) — measurements/r20/T26_MERGE_SCALE.txt has the full
+    * table.
     *
     * Output: one row per selected pair — (round, batch_rank, lsym,
     * rsym, pair count at round start, vocab size after the round).
@@ -1406,12 +1363,12 @@ object TextAnalysis {
     * production widths is the table above, not a division. A round
     * with no pairs left raises loudly (the t24 convention). */
   def t26BpeBatchMerges(s: SparkSession, dir: String): DataFrame =
-    t26BatchLoop(s, dir, T26Rounds, T26Pool, T26Batch)
+    t26BatchLoop(s, dir, T26Rounds, T26Pool, T26Batch, "antijoin")
 
   /** t26b — the batched trainer under the GREEDY selection rule as its
     * own gated entry (r20): same rounds/pool/batch pins as t26, but the
     * selection is the maximal independent set in rank order (see
-    * [[T26Select]]) — the rule the width measurement chose for
+    * [[t26BatchLoop]]) — the rule the width measurement chose for
     * production — with its own recursive-CTE oracle, so the greedy
     * path is driver-gated every round rather than only spec-pinned. */
   def t26bBpeGreedyMerges(s: SparkSession, dir: String): DataFrame =
@@ -1424,10 +1381,34 @@ object TextAnalysis {
     * r19 #4: the 30k-merge posture was arithmetic on an 8-merge
     * measurement; ≥1k merges at width 16–64 make the rounds/width law
     * a measurement, not an extrapolation —
-    * measurements/r20/T26_MERGE_SCALE.txt). */
+    * measurements/r20/T26_MERGE_SCALE.txt). `selectRule` is one of the
+    * two batch-selection rules (r20, VERDICT r19 #4 — the second added
+    * because MEASURING the width law refuted the first):
+    *
+    *   - `antijoin` (t26, the r19 rule): select candidates that
+    *     conflict with NO higher-ranked CANDIDATE. One bounded
+    *     self-join, order-independent — but measured on zipf10 it
+    *     SATURATES at ~2.2 selected/round regardless of batch width
+    *     (width 16 and width 64 both selected ~165 merges in 64
+    *     rounds; rate slightly DECLINES 2.58→2.03 over 256 rounds —
+    *     measurements/r20/T26_MERGE_SCALE.txt): top-ranked pairs chain
+    *     through shared symbols ((a,b),(b,c),(c,d)…), and the anti-join
+    *     excludes a candidate conflicting with an EXCLUDED higher one,
+    *     so a chain yields ~1-2 picks however wide the batch.
+    *   - `greedy` — the canonical fast-trainer rule: scan the ranked
+    *     pool once, select a candidate iff it conflicts with no
+    *     already-SELECTED pair (a maximal independent set in rank
+    *     order, capped at the batch width). Strictly ⊇ the anti-join's
+    *     set below the cap (anything conflict-free against ALL higher
+    *     candidates is conflict-free against the selected subset), and
+    *     the one that actually delivers the width: the selection is a
+    *     single Catalyst `aggregate` fold over the ≤pool-row collected
+    *     pool ON ONE ROW — no driver collect, no per-candidate join.
+    *     The DuckDB oracle replays it as a recursive CTE carrying the
+    *     selected set as a LIST accumulator, so the gate stays armed. */
   private[graft] def t26BatchLoop(s: SparkSession, dir: String,
       t26Rounds: Int, t26Pool: Int, t26Batch: Int,
-      selectRule: String = T26Select): DataFrame = {
+      selectRule: String): DataFrame = {
     val wRank = Window.orderBy(col("pair_count").desc, col("lsym"), col("rsym"))
     var syms = bpeWords0(s, dir).localCheckpoint(false)
     val rows = (1 to t26Rounds).map { r =>
@@ -1477,7 +1458,7 @@ object TextAnalysis {
             .select((col("pos") + 1).cast("int").as("k"),
               col("col.lsym").as("lsym"), col("col.rsym").as("rsym"),
               col("col.pair_count").as("pair_count"))
-        case _ =>
+        case "antijoin" =>
           val h = cand.select(col("rn").as("h_rn"), col("lsym").as("h_l"),
             col("rsym").as("h_r"))
           val conflict = col("h_rn") < col("rn") && (
@@ -1673,11 +1654,11 @@ object TextAnalysis {
     * the oracle-side twin of the engine's per-round localCheckpoint. */
   private def t26RoundCte(r: Int, select: String): String = {
     val prev = if (r == 1) "syms0" else s"b${r - 1}_$T26Batch"
-    // the selection sub-CTE follows the [[T26Select]] seam: the
+    // the selection sub-CTE follows the engine's selection rule: the
     // anti-join rule is one EXISTS self-join; the greedy rule is a
     // recursive CTE walking the ranked pool once, carrying the
     // selected set as a LIST accumulator (the engine's aggregate-fold
-    // replayed exactly — t26OracleSql emits WITH RECURSIVE for it)
+    // replayed exactly — t26OracleSqlFor emits WITH RECURSIVE for it)
     val selCte = select match {
       case "greedy" =>
         s"""bgsel$r AS (
@@ -1712,7 +1693,7 @@ object TextAnalysis {
            |         gsel[k].pair_count AS pair_count, k
            |  FROM bselu$r
            |)""".stripMargin
-      case _ =>
+      case "antijoin" =>
         s"""bsel$r AS MATERIALIZED (
            |  SELECT lsym, rsym, pair_count,
            |         row_number() OVER (ORDER BY rn) AS k
@@ -1800,8 +1781,6 @@ object TextAnalysis {
        |)""".stripMargin
   }
 
-  private def t26OracleSql: String = t26OracleSqlFor(T26Select)
-
   private def t26OracleSqlFor(select: String): String = {
     val rounds = (1 to T26Rounds).map(t26RoundCte(_, select)).mkString(",\n")
     val out = (1 to T26Rounds).map { r =>
@@ -1837,16 +1816,7 @@ object TextAnalysis {
        |),
        |$rounds""".stripMargin
 
-  /** A `def`, not a `val` (ADVICE r20): t26's oracle embeds the
-    * [[T26Select]] seam value, and a val would snapshot it at
-    * object-initialization time while the ENGINE re-reads the property
-    * at each call — a harness that mutates `graft.t26.select` after this
-    * object initializes (as TextAnalysisSpec's greedy-seam test does)
-    * would silently desynchronize engine and oracle for the gated
-    * entry. Resolving at ACCESS time keeps both sides reading the same
-    * seam value; the map is built once per fetch, which Verify does
-    * once per run. */
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     "t1_token_count" ->
       """SELECT doc_id,
         |       len(string_split(text, ' ')) AS ws_tokens,
@@ -2384,7 +2354,7 @@ object TextAnalysis {
          |FROM scored, kth ORDER BY doc_id""".stripMargin,
     "t24_bpe_merges" -> t24OracleSql,
     "t25_bpe_encode" -> t25OracleSql,
-    "t26_bpe_batch_merges" -> t26OracleSql,
+    "t26_bpe_batch_merges" -> t26OracleSqlFor("antijoin"),
     "t26b_bpe_greedy_merges" -> t26OracleSqlFor("greedy"),
   )
 }

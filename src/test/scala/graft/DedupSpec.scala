@@ -629,11 +629,11 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.D13AssignVia == "exact")
     val exact = Dedup.d13SemanticDedup(spark, sfDir)
     val exactRows = exact.collect()
-    System.setProperty("graft.d13.assignVia", "lsh")
+    System.setProperty("graft.d13.assignVia", "twolevel")
     try {
-      val lsh = Dedup.d13SemanticDedup(spark, sfDir)
-      assert(lsh.schema == exact.schema, "seam changed the output schema")
-      val rows = lsh.collect().map(r => (r.getAs[Long]("vec_id"),
+      val tl = Dedup.d13SemanticDedup(spark, sfDir)
+      assert(tl.schema == exact.schema, "seam changed the output schema")
+      val rows = tl.collect().map(r => (r.getAs[Long]("vec_id"),
         r.getAs[Long]("cell"), r.getAs[Long]("kept_by"),
         r.getAs[Double]("cosine")))
       // the drop rule survives the assignment swap: keeper strictly
@@ -642,16 +642,32 @@ class DedupSpec extends SparkSpec {
       assert(rows.forall { case (vid, _, kb, _) => kb < vid })
       assert(rows.forall(_._4 >= Dedup.D13Threshold))
       assert(rows.forall(_._2 >= 0L), "a sentinel cell produced a pair")
-      // honest-recall bookkeeping, not a tight pin: on the NEAR-UNIFORM
-      // synthetic corpus s9 agreement is ~33-36%, so the lsh drop set
-      // may legitimately diverge from exact; the overlap is reported,
-      // and the clustered-corpus delta is measured in SCALING.md
+      // honest-recall bookkeeping, not a tight pin: the approximate
+      // tier may legitimately diverge from exact; the overlap is
+      // reported, and the clustered-corpus delta is measured in
+      // SCALING.md
       val exactBy = exactRows.map(r =>
         r.getAs[Long]("vec_id") -> r.getAs[Long]("kept_by")).toMap
       val common = rows.filter(r => exactBy.contains(r._1))
-      info(s"lsh drops: ${rows.length}, exact drops: ${exactRows.length}, " +
-        s"common vec_ids: ${common.length}")
+      info(s"twolevel drops: ${rows.length}, exact drops: " +
+        s"${exactRows.length}, common vec_ids: ${common.length}")
     } finally System.clearProperty("graft.d13.assignVia")
+    // retired (`lsh`, `lshcap`) and typo'd tier names fail loudly on
+    // both the standalone entry and the shared-cell path (p5/p6) —
+    // never a silent fall-through to exact
+    for (bad <- Seq("lsh", "lshcap", "nosuchtier")) {
+      System.setProperty("graft.d13.assignVia", bad)
+      try {
+        for ((path, run) <- Seq[(String, () => Any)](
+            "d13" -> (() => Dedup.d13SemanticDedup(spark, sfDir).collect()),
+            "p5" -> (() => graft.queries.Pipeline
+              .p5SemanticCuration(spark, sfDir).collect()))) {
+          val err = intercept[RuntimeException](run())
+          assert(err.getMessage.contains("unknown d13 assignVia tier"),
+            s"wrong failure for '$bad' on $path: ${err.getMessage}")
+        }
+      } finally System.clearProperty("graft.d13.assignVia")
+    }
   }
 
   test("r15 assignVia=auto: the pure rule splits on the calibrated " +

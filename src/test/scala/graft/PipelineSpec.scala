@@ -130,22 +130,22 @@ class PipelineSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.01"
     val exact = graft.queries.Pipeline.p5SemanticCuration(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    System.setProperty("graft.d13.assignVia", "lsh")
+    System.setProperty("graft.d13.assignVia", "twolevel")
     try {
-      val lsh = graft.queries.Pipeline.p5SemanticCuration(spark, dir)
+      val tl = graft.queries.Pipeline.p5SemanticCuration(spark, dir)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      assert(lsh.map(_._1).toSeq == exact.map(_._1).toSeq)
-      lsh.sliding(2).foreach { case Array(hi, lo) =>
+      assert(tl.map(_._1).toSeq == exact.map(_._1).toSeq)
+      tl.sliding(2).foreach { case Array(hi, lo) =>
         assert(lo._2 <= hi._2 && lo._3 <= hi._3, s"$lo exceeds $hi")
       }
       // stages a-d are semantic-stage-independent: identical either way
-      assert(lsh.take(4).toSeq == exact.take(4).toSeq,
-        "lsh assignment perturbed a pre-semantic stage")
-      // the lsh drop set differs from exact (assignment recall < 1 on
-      // the near-uniform corpus) but the stage must still do real work
-      assert(lsh.last._2 < lsh(3)._2, "lsh semantic stage dropped nothing")
+      assert(tl.take(4).toSeq == exact.take(4).toSeq,
+        "twolevel assignment perturbed a pre-semantic stage")
+      // the twolevel drop set may differ from exact (approximate
+      // assignment) but the stage must still do real work
+      assert(tl.last._2 < tl(3)._2, "twolevel semantic stage dropped nothing")
       info(s"e_semantic survivors — exact: ${exact.last._2}, " +
-        s"lsh: ${lsh.last._2}")
+        s"twolevel: ${tl.last._2}")
     } finally System.clearProperty("graft.d13.assignVia")
   }
 }

@@ -188,14 +188,12 @@ class PlanSpec extends SparkSpec {
     val p = plan(TextAnalysis.t25BpeEncode(spark, sfDir))
     assert(p.contains("BroadcastHashJoin"),
       s"harness dictionary not broadcast-joined in:\n$p")
-    System.setProperty("graft.t25.dictJoin", "shuffle")
-    try {
-      val ps = plan(TextAnalysis.t25BpeEncode(spark, sfDir))
-      assert(ps.contains("ShuffledHashJoin"),
-        s"shuffle mode lost its hash-join shape in:\n$ps")
-      assert(!ps.contains("SortMergeJoin"),
-        s"dictionary join degraded to sort-merge in:\n$ps")
-    } finally System.clearProperty("graft.t25.dictJoin")
+    // a 0-row broadcast cap takes the size gate's shuffle branch
+    val ps = plan(TextAnalysis.t25BpeEncode(spark, sfDir, 0L))
+    assert(ps.contains("ShuffledHashJoin"),
+      s"shuffle mode lost its hash-join shape in:\n$ps")
+    assert(!ps.contains("SortMergeJoin"),
+      s"dictionary join degraded to sort-merge in:\n$ps")
   }
 
   test("t15: the 20-row sampling plan reaches the scan by BROADCAST — " +
@@ -297,7 +295,7 @@ class PlanSpec extends SparkSpec {
     val e = graft.sources.Tables.embeddings(spark, sfDir)
       .select(org.apache.spark.sql.functions.col("vec_id"),
         org.apache.spark.sql.functions.col("embedding"))
-    val p = plan(Similarity.lshCellAssigned(e))
+    val p = plan(Similarity.lshFlatCellAssigned(e))
     assert(p.contains("BroadcastExchange"),
       s"codebook bucket table not broadcast in:\n$p")
     assert(!p.contains("Window"),

@@ -144,7 +144,10 @@ class SimilaritySpec extends SparkSpec {
     val e = graft.sources.Tables.embeddings(spark, sfDir)
       .select(org.apache.spark.sql.functions.col("vec_id"),
         org.apache.spark.sql.functions.col("embedding"))
-    val prod = Similarity.lshCellAssigned(e).collect()
+    // at harness SF the flat tier degenerates to s9's 16-centroid codebook
+    // at 5 bits with a non-binding cap, so it is s9's assignment
+    assert(Similarity.centroidsFlat(e).count() == 16L)
+    val prod = Similarity.lshFlatCellAssigned(e).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cell")).toMap
     val s9 = Similarity.s9LshAssign(spark, sfDir).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cell_lsh")).toMap
@@ -333,34 +336,6 @@ class SimilaritySpec extends SparkSpec {
       s"$bound/${rows.length} scans within 2x cap")
   }
 
-  test("s11 depth differential (r17): with sampling off and via=ivf, " +
-       "s11Differential reproduces s11b's per-source agreement columns " +
-       "exactly; a strided sample is a subset of the unsampled rows") {
-    val dir = "/root/testdata/sf0.01"
-    val s11b = Similarity.s11bBitextBlocked(spark, dir).collect()
-      .map(r => (r.getAs[Long]("s_id"), r.getAs[Long]("match_id"),
-        r.getAs[Boolean]("accepted"), r.getAs[Boolean]("agree"))).toSet
-    val full = Similarity.s11Differential(spark, dir, "ivf", 0L).collect()
-    assert(full.forall(_.getAs[String]("via") == "ivf"))
-    // regret is exact-best minus blocked-pick cosine: never negative
-    // (the exact side is the global argmax over the same targets), and
-    // exactly 0 wherever the ids agree
-    assert(full.forall(_.getAs[Double]("regret") >= 0.0))
-    assert(full.filter(_.getAs[Boolean]("agree"))
-      .forall(_.getAs[Double]("regret") == 0.0))
-    val fullKeys = full.map(r => (r.getAs[Long]("s_id"),
-      r.getAs[Long]("match_id"), r.getAs[Boolean]("accepted"),
-      r.getAs[Boolean]("agree"))).toSet
-    assert(fullKeys == s11b,
-      "unsampled differential diverged from the oracle-gated s11b")
-    val sampled = Similarity.s11Differential(spark, dir, "ivf", 10L)
-      .collect().map(_.getAs[Long]("s_id")).toSet
-    assert(sampled.nonEmpty && sampled.size < fullKeys.size,
-      "stride did not sample")
-    assert(sampled.subsetOf(fullKeys.map(_._1)),
-      "sampled sources are not a subset of the full source set")
-  }
-
   test("s11 flat scan cap survives scale-corpus ids (r17 regression): " +
        "cell ids are centroid vec_ids, so the probe-side sub mix must " +
        "stay inside idMix's ANSI-safe range for large ids — the naive " +
@@ -463,93 +438,6 @@ class SimilaritySpec extends SparkSpec {
     })
   }
 
-  test("lshflat refine seam (r18): refine=0 is the default path " +
-       "bit-for-bit; refine=1 still assigns every vector with misses " +
-       "visible, and changes no vector's EXISTENCE, only its cell") {
-    import org.apache.spark.sql.functions.col
-    val e = graft.sources.Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    val base = Similarity.lshFlatCellAssigned(e).collect()
-      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"))).toMap
-    System.setProperty("graft.codebook.refine", "0")
-    val zero = try Similarity.lshFlatCellAssigned(e).collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"))).toMap
-      finally System.clearProperty("graft.codebook.refine")
-    assert(zero == base, "refine=0 diverged from the unset default")
-    System.setProperty("graft.codebook.refine", "1")
-    val one = try Similarity.lshFlatCellAssigned(e).collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"))).toMap
-      finally System.clearProperty("graft.codebook.refine")
-    assert(one.keySet == base.keySet,
-      "refine changed which vectors exist in the assignment")
-    val moved = one.count { case (id, c) => base(id) != c }
-    info(s"lshflat refine=1: $moved/${base.size} vectors changed cell")
-  }
-
-  test("sqrt-consumer refine seam (r19): refine=0 is the default path " +
-       "bit-for-bit for d13-exact / s7 / s13; refine=1 runs all three " +
-       "with schemas unchanged and every vector still assigned") {
-    def d13Drops = graft.queries.Dedup.d13SemanticDedup(spark, sfDir)
-    def s7 = Similarity.queries("s7_ann_ivfpq")(spark, sfDir)
-    def s13 = Similarity.queries("s13_lshcap_assign")(spark, sfDir)
-    val baseDrops = d13Drops.collect().map(_.getAs[Long]("vec_id")).toSeq
-    val baseS7 = s7.collect().map(_.toSeq).toSeq
-    val baseS13 = s13.collect().map(_.toSeq).toSeq
-    System.setProperty("graft.codebook.refine", "0")
-    try {
-      assert(d13Drops.collect().map(_.getAs[Long]("vec_id")).toSeq
-        == baseDrops, "d13 refine=0 diverged from the unset default")
-      assert(s7.collect().map(_.toSeq).toSeq == baseS7,
-        "s7 refine=0 diverged from the unset default")
-      assert(s13.collect().map(_.toSeq).toSeq == baseS13,
-        "s13 refine=0 diverged from the unset default")
-    } finally System.clearProperty("graft.codebook.refine")
-    System.setProperty("graft.codebook.refine", "1")
-    try {
-      val drops1 = d13Drops
-      assert(drops1.schema == graft.queries.Dedup
-        .d13SemanticDedup(spark, sfDir).schema)
-      assert(drops1.collect().nonEmpty, "refined d13-exact dropped nothing")
-      val s7r = s7
-      val s7rows = s7r.collect()
-      assert(s7rows.length == baseS7.length,
-        "refined s7 changed the query-set cardinality")
-      assert(s7rows.forall(r => r.getAs[Double]("recall_at_10") >= 0.0))
-      val s13r = s13.collect()
-      assert(s13r.length == baseS13.length,
-        "refined s13 lost vectors from the assignment")
-      // the exact reference column must still assign every vector to a
-      // REAL cell (never the lsh sentinel) under the refined codebook
-      assert(s13r.forall(_.getAs[Long]("cell_exact") >= 0L))
-      info(s"refine=1: d13-exact drops ${drops1.collect().length} vs " +
-        s"seed ${baseDrops.length}")
-    } finally System.clearProperty("graft.codebook.refine")
-  }
-
-  test("s11 via=flat under the refine seam (r18): refine=1 still mines " +
-       "a deduped subset of exact sources with the schema unchanged — " +
-       "the mining tier's codebook honors the same seam as d13's") {
-    val dir = "/root/testdata/sf0.01"
-    val exact = Similarity.s11BitextMargin(spark, dir)
-    val exactIds = exact.collect().map(_.getAs[Long]("s_id")).toSet
-    System.setProperty("graft.s11.via", "flat")
-    System.setProperty("graft.codebook.refine", "1")
-    try {
-      val fl = Similarity.s11BitextMargin(spark, dir)
-      assert(fl.schema == exact.schema, "refined flat tier changed schema")
-      val rows = fl.collect()
-      assert(rows.nonEmpty, "refined flat tier mined nothing")
-      val ids = rows.map(_.getAs[Long]("s_id"))
-      assert(ids.distinct.length == ids.length, "duplicate source rows")
-      assert(ids.forall(exactIds.contains),
-        "refined flat tier produced a source the exact tier does not know")
-      info(s"flat+refine: ${rows.length}/${exactIds.size} sources matched")
-    } finally {
-      System.clearProperty("graft.codebook.refine")
-      System.clearProperty("graft.s11.via")
-    }
-  }
-
   test("s16 margin sweep (r18): one row per threshold, counts monotone " +
        "non-increasing in the threshold, overlaps bounded, and the " +
        "1.05 row consistent with s11/s11b's fixed-threshold accepted sets") {
@@ -601,61 +489,23 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val e = graft.sources.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
-    // 1. equivalence at a non-binding cap: same assignment map as lsh
-    System.setProperty("graft.d13.lsh.bucketCap", "1000000")
-    val loose =
-      try Similarity.lshCapCellAssigned(e).select("vec_id", "cell")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally System.clearProperty("graft.d13.lsh.bucketCap")
-    val lsh = Similarity.lshCellAssigned(e).select("vec_id", "cell")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(loose == lsh, "cap >= C must be bit-identical to the lsh tier")
-    // 2. the cap is enforced scan-side on the codebook itself
     val cent = Similarity.centroidsOf(e)
-    val full = Similarity.bucketedCodebook(cent)
-      .select("bucket", "c_id").collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toSet
-    val capped = Similarity.cappedCodebook(cent, 1)
-      .select("bucket", "c_id").collect()
-      .map(r => (r.getInt(0), r.getLong(1)))
+    def pairs(cb: org.apache.spark.sql.DataFrame): Seq[(Int, Long)] =
+      cb.select("bucket", "c_id").collect()
+        .map(r => (r.getInt(0), r.getLong(1))).toSeq
+    val full = pairs(Similarity.bucketedCodebook(cent))
+    // 1. a cap >= C binds nowhere: every (bucket, centroid) pair survives
+    val loose = pairs(Similarity.cappedCodebook(cent, cent.count().toInt))
+    assert(loose.sorted == full.sorted,
+      "cap >= C must keep the whole bucketed codebook")
+    // 2. the cap is enforced scan-side on the codebook itself
+    val capped = pairs(Similarity.cappedCodebook(cent, 1))
     assert(capped.groupBy(_._1).values.forall(_.length <= 1),
       "a bucket kept more residents than the cap")
-    assert(capped.toSet.subsetOf(full),
+    assert(capped.toSet.subsetOf(full.toSet),
       "capped codebook invented a (bucket, centroid) pair")
     assert(capped.toSet.size < full.size,
       "cap=1 on the harness codebook should actually bind somewhere")
-    // 3. under a binding cap every vector still lands in a cell
-    //    (real or the visible sentinel) exactly once
-    System.setProperty("graft.d13.lsh.bucketCap", "2")
-    try {
-      val cells = Similarity.lshCapCellAssigned(e)
-        .select("vec_id", "cell").collect()
-      assert(cells.length.toLong == e.count(), "a vector was lost")
-      assert(cells.map(_.getLong(0)).distinct.length == cells.length,
-        "a vector was assigned twice")
-    } finally System.clearProperty("graft.d13.lsh.bucketCap")
-  }
-
-  test("d13 assignVia=lshcap: drop rows keep the d13 contract (keeper < " +
-       "vec_id, cosine >= threshold, no sentinel pairs), and at harness " +
-       "scale — where the default cap exceeds every bucket occupancy — " +
-       "the tier is exactly the lsh drop set") {
-    val dir = "/root/testdata/sf0.01"
-    def drops(via: String): Seq[(Long, Long, Long, Double)] = {
-      System.setProperty("graft.d13.assignVia", via)
-      try graft.queries.Dedup.d13SemanticDedup(spark, dir).collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"),
-          r.getAs[Long]("kept_by"), r.getAs[Double]("cosine"))).toSeq
-      finally System.clearProperty("graft.d13.assignVia")
-    }
-    val rows = drops("lshcap")
-    assert(rows.forall { case (vid, _, kb, _) => kb < vid },
-      "keeper must be the lower id (greedy keep-first)")
-    assert(rows.forall(_._4 >= graft.queries.Dedup.D13Threshold))
-    assert(rows.forall(_._2 >= 0L), "a sentinel cell produced a pair")
-    assert(rows == drops("lsh"),
-      "non-binding cap must reproduce the lsh tier's drop set")
-    info(s"lshcap drops at sf0.01: ${rows.length}")
   }
 
   test("d13 assignVia=lshflat: at harness SF the flat codebook " +
@@ -669,14 +519,16 @@ class SimilaritySpec extends SparkSpec {
     // 500 vectors / target 512 -> ceil = 1 -> the 16-centroid floor:
     // identical codebook to the standard sqrt rule at this SF
     assert(Similarity.centroidsFlat(e).count() == 16L)
-    def drops(via: String): Seq[Long] = {
-      System.setProperty("graft.d13.assignVia", via)
-      try graft.queries.Dedup.d13SemanticDedup(spark, dir).collect()
-        .map(_.getAs[Long]("vec_id")).toSeq
+    System.setProperty("graft.d13.assignVia", "lshflat")
+    val rows = try graft.queries.Dedup.d13SemanticDedup(spark, dir).collect()
+        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"),
+          r.getAs[Long]("kept_by"), r.getAs[Double]("cosine"))).toSeq
       finally System.clearProperty("graft.d13.assignVia")
-    }
-    assert(drops("lshflat") == drops("lsh"),
-      "degenerate flat codebook must reproduce the lsh tier bit-for-bit")
+    assert(rows.nonEmpty, "lshflat d13 dropped nothing on the harness")
+    assert(rows.forall { case (vid, _, kb, _) => kb < vid },
+      "keeper must be the lower id (greedy keep-first)")
+    assert(rows.forall(_._4 >= graft.queries.Dedup.D13Threshold))
+    assert(rows.forall(_._2 >= 0L), "a sentinel cell produced a pair")
   }
 
   test("s14 flat-construction gate: the tight knobs BIND at harness SF " +

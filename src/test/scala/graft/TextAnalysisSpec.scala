@@ -741,46 +741,39 @@ class TextAnalysisSpec extends SparkSpec {
       .parquet(s"$dir/documents.parquet")
     val plantedWords = planted.flatMap(_._2.split(" "))
       .groupBy(identity).map { case (w, ws) => (w, ws.length.toLong) }
-    def engineRows(d: String) =
-      TextAnalysis.t26BpeBatchMerges(spark, d).collect().toSeq
+    // t26 runs the anti-join rule, t26b the greedy one
+    def engineRows(d: String, greedy: Boolean = false) =
+      (if (greedy) TextAnalysis.t26bBpeGreedyMerges(spark, d)
+       else TextAnalysis.t26BpeBatchMerges(spark, d)).collect().toSeq
         .map(r => (r.getAs[Int]("round"), r.getAs[Long]("batch_rank"),
           r.getAs[String]("lsym"), r.getAs[String]("rsym"),
           r.getAs[Long]("pair_count"), r.getAs[Long]("vocab_size")))
     val anti = engineRows(dir)
-    System.setProperty("graft.t26.select", "greedy")
-    try {
-      val greedy = engineRows(dir)
-      assert(greedy == refBatchBpe(plantedWords, TextAnalysis.T26Rounds,
-        TextAnalysis.T26Pool, TextAnalysis.T26Batch, greedy = true),
-        "greedy merge table diverged from the independent reference")
-      def pairsOf(rows: Seq[(Int, Long, String, String, Long, Long)],
-          round: Int) =
-        rows.filter(_._1 == round).map(t => (t._3, t._4)).toSet
-      // the planted chain: greedy round 1 must pick (c,d) on top of the
-      // anti-join's picks
-      assert(pairsOf(anti, 1).subsetOf(pairsOf(greedy, 1)),
-        s"anti-join round-1 picks not a subset: ${pairsOf(anti, 1)} vs " +
-          s"${pairsOf(greedy, 1)}")
-      assert(pairsOf(greedy, 1).size > pairsOf(anti, 1).size,
-        "greedy did not widen the chain-corpus selection")
-      assert(pairsOf(greedy, 1).contains(("c", "d")),
-        s"greedy round 1 missing the chain pick: ${pairsOf(greedy, 1)}")
-      // harness corpus: subset invariant holds below the batch cap.
-      // Clear the seam first (ADVICE r20): the property is still
-      // "greedy" from the chain-corpus half above, so without the clear
-      // antiH would ALSO run greedy and the subset/cap assertions below
-      // compare greedy against greedy — vacuous.
-      System.clearProperty("graft.t26.select")
-      val antiH = engineRows(sfDir)
-      System.setProperty("graft.t26.select", "greedy")
-      val greedyH = engineRows(sfDir)
-      val r1a = pairsOf(antiH, 1); val r1g = pairsOf(greedyH, 1)
-      assert(r1a.size < TextAnalysis.T26Batch || r1g.size == r1a.size,
-        "cap semantics changed")
-      if (r1a.size < TextAnalysis.T26Batch)
-        assert(r1a.subsetOf(r1g),
-          s"harness round-1 subset violated: $r1a vs $r1g")
-    } finally System.clearProperty("graft.t26.select")
+    val greedy = engineRows(dir, greedy = true)
+    assert(greedy == refBatchBpe(plantedWords, TextAnalysis.T26Rounds,
+      TextAnalysis.T26Pool, TextAnalysis.T26Batch, greedy = true),
+      "greedy merge table diverged from the independent reference")
+    def pairsOf(rows: Seq[(Int, Long, String, String, Long, Long)],
+        round: Int) =
+      rows.filter(_._1 == round).map(t => (t._3, t._4)).toSet
+    // the planted chain: greedy round 1 must pick (c,d) on top of the
+    // anti-join's picks
+    assert(pairsOf(anti, 1).subsetOf(pairsOf(greedy, 1)),
+      s"anti-join round-1 picks not a subset: ${pairsOf(anti, 1)} vs " +
+        s"${pairsOf(greedy, 1)}")
+    assert(pairsOf(greedy, 1).size > pairsOf(anti, 1).size,
+      "greedy did not widen the chain-corpus selection")
+    assert(pairsOf(greedy, 1).contains(("c", "d")),
+      s"greedy round 1 missing the chain pick: ${pairsOf(greedy, 1)}")
+    // harness corpus: subset invariant holds below the batch cap
+    val antiH = engineRows(sfDir)
+    val greedyH = engineRows(sfDir, greedy = true)
+    val r1a = pairsOf(antiH, 1); val r1g = pairsOf(greedyH, 1)
+    assert(r1a.size < TextAnalysis.T26Batch || r1g.size == r1a.size,
+      "cap semantics changed")
+    if (r1a.size < TextAnalysis.T26Batch)
+      assert(r1a.subsetOf(r1g),
+        s"harness round-1 subset violated: $r1a vs $r1g")
   }
 
   test("t26 loud empty round: a corpus of single-symbol words raises " +
@@ -808,17 +801,10 @@ class TextAnalysisSpec extends SparkSpec {
       df.collect().map(_.toSeq).toSeq
     val base = rows(TextAnalysis.t25BpeEncode(spark, sfDir))
     assert(base.nonEmpty)
-    System.setProperty("graft.t25.dictJoin", "shuffle")
-    try assert(rows(TextAnalysis.t25BpeEncode(spark, sfDir)) == base,
+    // a 0-row cap: the count-gated decision must take the shuffle
+    // branch, with the same rows as the broadcast default
+    assert(rows(TextAnalysis.t25BpeEncode(spark, sfDir, 0L)) == base,
       "shuffle-join path diverged from the broadcast path")
-    finally System.clearProperty("graft.t25.dictJoin")
-    // auto + a 1-row cap: the count-gated decision must take the
-    // shuffle branch (same rows again) — exercises the gate itself,
-    // not just the pinned modes
-    System.setProperty("graft.t25.dictBroadcastMax", "1")
-    try assert(rows(TextAnalysis.t25BpeEncode(spark, sfDir)) == base,
-      "auto-over-cap path diverged")
-    finally System.clearProperty("graft.t25.dictBroadcastMax")
   }
 
   test("bigram_poly_buckets == the transform+aggregate built-in fold, " +
