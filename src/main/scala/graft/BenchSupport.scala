@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared plumbing for the two benchmark mains (Bench, MicroBench) so the
-  * session config and the timing kernel cannot drift apart. */
+/** Shared plumbing for the mains: one session recipe for Verify, Bench,
+  * MicroBench, ScaleBench, ScaleGen, ProfileQuery and Explain, and the
+  * timing kernel of the benchmark mains, so neither can drift apart. */
 object BenchSupport {
 
   /** Shuffle partition count: defaults to the core count (the committed

@@ -42,8 +42,10 @@ import org.apache.spark.sql.DataFrame
   *   - `none`              — no materialization (every branch recomputes;
   *                           useful to measure what the reuse is worth)
   *
-  * DedupSpec pins that d3 under every non-default mode returns the same
-  * rows as under the default; MATBENCH.md records what each mode costs at
+  * Any other value fails loudly instead of silently running one of the
+  * three under another name. DedupSpec pins that d3 under every
+  * non-default mode returns the same rows as under the default, and that
+  * an unknown mode throws; MATBENCH.md records what each mode costs at
   * sf0.1.
   */
 object Materialize {
@@ -55,7 +57,9 @@ object Materialize {
 
   def apply(df: DataFrame): DataFrame = mode match {
     case "localCheckpoint" => df.localCheckpoint(false)
+    case "cache"           => df.cache()
     case "none"            => df
-    case _                 => df.cache()
+    case other => sys.error(
+      s"unknown $Prop mode '$other' (localCheckpoint|cache|none)")
   }
 }

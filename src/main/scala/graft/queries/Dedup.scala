@@ -73,19 +73,17 @@ object Dedup {
     * on the harness corpus") additionally pins that no bucket on the
     * harness corpus comes anywhere near the cap, so the cap is a provable
     * no-op at test scale and pure skew insurance at 100 TB; the planted
-    * degenerate-cluster test lowers the cap through the system-property
-    * seam to prove both cap engagement and collapse immunity. */
-  private[graft] def MaxBandBucket: Int =
-    sys.props.get("graft.d3.maxBandBucket").map(_.toInt).getOrElse(256)
+    * degenerate-cluster test lowers the cap through the [[d3MinhashLsh]]
+    * overload to prove both cap engagement and collapse immunity. */
+  private[graft] val MaxBandBucket = 256
 
-  /** d4's chunk-bucket cap — same role as [[MaxBandBucket]] (same test
-    * seam, `graft.d4.maxChunkBucket`). A candidate is only lost if all
-    * FOUR of its 16-bit chunk buckets exceed the cap (each >256 distinct
-    * texts sharing that chunk value); Hamming-0 pairs of identical texts
-    * are immune entirely — they are generated by the group re-expansion,
-    * not by bucketing. */
-  private[graft] def MaxChunkBucket: Int =
-    sys.props.get("graft.d4.maxChunkBucket").map(_.toInt).getOrElse(256)
+  /** d4's chunk-bucket cap — same role as [[MaxBandBucket]] (lowered in
+    * the same test through the [[d4SimhashExactDup]] overload). A
+    * candidate is only lost if all FOUR of its 16-bit chunk buckets
+    * exceed the cap (each >256 distinct texts sharing that chunk
+    * value); Hamming-0 pairs of identical texts are immune entirely —
+    * they are generated by the group re-expansion, not by bucketing. */
+  private[graft] val MaxChunkBucket = 256
 
   /** d5's hard block cap: a (label, sign-bucket) block larger than this
     * produces no pairs. Mirrored EXACTLY in the DuckDB oracle (a window
@@ -275,7 +273,12 @@ object Dedup {
     sig.select(col("rep_id"), posexplode(array(bandCols: _*)).as(Seq("band", "bh")))
   }
 
-  def d3MinhashLsh(s: SparkSession, dir: String): DataFrame = {
+  def d3MinhashLsh(s: SparkSession, dir: String): DataFrame =
+    d3MinhashLsh(s, dir, MaxBandBucket)
+
+  /** [[d3MinhashLsh]] under an explicit band-bucket cap. */
+  private[graft] def d3MinhashLsh(s: SparkSession, dir: String,
+      maxBandBucket: Int): DataFrame = {
     val docs = d3ShingledDocs(s, dir)
     val sig = d3Signatures(docs)
     val buckets = d3Buckets(sig)
@@ -285,7 +288,7 @@ object Dedup {
     // skewed bucket quadratically
     val cand = buckets.groupBy(col("band"), col("bh"))
       .agg(collect_list(struct(col("rep_id"))).as("ds"))
-      .filter(size(col("ds")).between(2, MaxBandBucket))
+      .filter(size(col("ds")).between(2, maxBandBucket))
       .select(explode(pairCombos(col("ds"))).as("p"))
       .select(col("p.x.rep_id").as("doc_a"), col("p.y.rep_id").as("doc_b"))
       .distinct()
@@ -347,12 +350,13 @@ object Dedup {
         shiftrightunsigned(col("fp"), 16 * j).bitwiseAND(0xFFFFL)): _*))
         .as(Seq("chunk_idx", "chunk")))
 
-  private def simhashCandidates(docs: DataFrame): DataFrame = {
+  private def simhashCandidates(docs: DataFrame,
+      maxChunkBucket: Int): DataFrame = {
     val sigs = d4Signatures(docs)
     val chunks = d4Chunks(sigs)
     val repCand = chunks.groupBy(col("chunk_idx"), col("chunk"))
       .agg(collect_list(struct(col("rep_id"), col("fp"))).as("ds"))
-      .filter(size(col("ds")).between(2, MaxChunkBucket))
+      .filter(size(col("ds")).between(2, maxChunkBucket))
       .select(explode(pairCombos(col("ds"))).as("p"))
       .select(col("p.x.rep_id").as("rep_a"), col("p.x.fp").as("fp_a"),
         col("p.y.rep_id").as("rep_b"), col("p.y.fp").as("fp_b"))
@@ -398,7 +402,7 @@ object Dedup {
     * (fingerprint bit votes, chunk keys, bucket cap, expansion, the
     * ranked limit) was already deterministic integer arithmetic. */
   def d4Simhash(s: SparkSession, dir: String): DataFrame =
-    simhashCandidates(Tables.documents(s, dir))
+    simhashCandidates(Tables.documents(s, dir), MaxChunkBucket)
       .filter(col("hamming") <= 8)
       .select(col("doc_a"), col("doc_b"), col("hamming"),
         hex(col("fp_a")).as("fp_a"), hex(col("fp_b")).as("fp_b"))
@@ -429,7 +433,12 @@ object Dedup {
     * non-identical pairs are xxhash64-dependent, and the corpus gives
     * SimHash no clean Jaccard threshold — measured at sf0.1, 91k
     * background pairs sit at Hamming <= 8 below Jaccard 0.5.) */
-  def d4SimhashExactDup(s: SparkSession, dir: String): DataFrame = {
+  def d4SimhashExactDup(s: SparkSession, dir: String): DataFrame =
+    d4SimhashExactDup(s, dir, MaxChunkBucket)
+
+  /** [[d4SimhashExactDup]] under an explicit chunk-bucket cap. */
+  private[graft] def d4SimhashExactDup(s: SparkSession, dir: String,
+      maxChunkBucket: Int): DataFrame = {
     val docs = d4bAugmented(Tables.documents(s, dir))
     val fps = docs
       .select(col("doc_id"), md5(col("text").cast("binary")).as("tfp"))
@@ -438,7 +447,8 @@ object Dedup {
         col("x.tfp") === col("y.tfp") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
     dupPairs
-      .join(simhashCandidates(docs).select(col("doc_a"), col("doc_b"), col("hamming")),
+      .join(simhashCandidates(docs, maxChunkBucket)
+          .select(col("doc_a"), col("doc_b"), col("hamming")),
         Seq("doc_a", "doc_b"), "left")
       .select(col("doc_a"), col("doc_b"),
         coalesce(col("hamming"), lit(-1)).as("hamming"))

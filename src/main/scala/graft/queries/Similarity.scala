@@ -542,12 +542,9 @@ object Similarity {
     * which is why main-geometry plans and harness-SF outputs are
     * unchanged (spec-pinned against an explicitly-unbounded run).
     * Recall price on concentration cells is measured by the s11b
-    * differential under `via=flat` (SCALING.md round-17). Sys-prop
-    * `graft.s11.flatScanCap`, env fallback for forked ScaleBench JVMs. */
-  private[graft] def S11FlatScanCap: Long =
-    sys.props.get("graft.s11.flatScanCap")
-      .orElse(sys.env.get("SPARK_GRAFT_S11_FLATSCANCAP"))
-      .map(_.toLong).getOrElse(2L * FlatCellTarget)
+    * differential under `via=flat` (SCALING.md round-17). Specs reach
+    * other caps through the [[s11BitextMargin]] overload. */
+  private[graft] val S11FlatScanCap = 2L * FlatCellTarget
 
   /** s11 — margin-based bitext mining (Artetxe & Schwenk 2019,
     * arXiv:1811.01136 §3; the CCMatrix/LASER parallel-corpus shape): for
@@ -762,7 +759,8 @@ object Similarity {
     * differential); a source whose probed cells are empty simply mines
     * nothing — visible by absence against the exact tier, the s11b
     * convention. */
-  private def s11FlatPairs(src: DataFrame, tgt: DataFrame): DataFrame = {
+  private def s11FlatPairs(src: DataFrame, tgt: DataFrame,
+      cap: Long): DataFrame = {
     val tgtE = tgt.select(col("t_id").as("vec_id"),
       col("t_emb").as("embedding"))
     val k = flatCodebookSize(tgtE)
@@ -790,7 +788,6 @@ object Similarity {
     // residents are never emitted. The counts frame is ≤C rows — the
     // flat codebook keeps that at N_tgt/target (a 512× reduction), the
     // same bounded broadcast d13's boundedSubCells ships.
-    val cap = S11FlatScanCap
     val scanK = cells.groupBy(col("cell"))
       .agg(count(lit(1)).as("c_n"))
       .withColumn("k_scan", expr(s"(c_n + $cap - 1) div $cap"))
@@ -861,23 +858,31 @@ object Similarity {
     * another tier's name. `lshflat` is accepted as the
     * d13-seam spelling of `flat` (the same mapping [[s11AutoVia]] applies). */
   private def s11PairsFor(via: String, src: DataFrame,
-      tgt: DataFrame): DataFrame = via match {
+      tgt: DataFrame, scanCap: Long): DataFrame = via match {
     case "ivf"              => s11IvfPairs(src, tgt)
     case "twolevel"         => s11TwoLevelPairs(src, tgt)
-    case "flat" | "lshflat" => s11FlatPairs(src, tgt)
+    case "flat" | "lshflat" => s11FlatPairs(src, tgt, scanCap)
     case "exact"            => s11ExactPairs(src, tgt)
     case other => sys.error(
       s"unknown s11 via tier '$other' (exact|ivf|twolevel|flat|auto)")
   }
 
   def s11BitextMargin(s: SparkSession, dir: String): DataFrame = {
-    val src = s11Side(s, dir, S11SrcLang, "s_id", "s_emb")
-    val tgt = s11Side(s, dir, S11TgtLang, "t_id", "t_emb")
     val via = s11Via match {
-      case "auto" => s11AutoVia(dir, tgt)
+      case "auto" =>
+        s11AutoVia(dir, s11Side(s, dir, S11TgtLang, "t_id", "t_emb"))
       case v      => v
     }
-    s11MarginCore(s11PairsFor(via, src, tgt), s11ThresholdFor(via))
+    s11BitextMargin(s, dir, via, S11FlatScanCap)
+  }
+
+  /** [[s11BitextMargin]] on a resolved tier under an explicit
+    * [[S11FlatScanCap]]. */
+  private[graft] def s11BitextMargin(s: SparkSession, dir: String,
+      via: String, scanCap: Long): DataFrame = {
+    val src = s11Side(s, dir, S11SrcLang, "s_id", "s_emb")
+    val tgt = s11Side(s, dir, S11TgtLang, "t_id", "t_emb")
+    s11MarginCore(s11PairsFor(via, src, tgt, scanCap), s11ThresholdFor(via))
       .drop("n_cand").orderBy(col("s_id"))
   }
 
@@ -1140,8 +1145,10 @@ object Similarity {
   /** Target cell population of the `lshflat` tier's codebook. 512
     * keeps the within-cell pairwise block comfortably inside one task
     * while leaving cells deep enough that near-duplicates co-assign
-    * (they share sign buckets, hence candidate sets). */
-  private[graft] val FlatCellTarget = 512
+    * (they share sign buckets, hence candidate sets). `final` makes it
+    * a compile-time constant, which [[S11FlatScanCap]], defined earlier
+    * in this object, needs to read it during initialization. */
+  private[graft] final val FlatCellTarget = 512
 
   /** Target mean bucket occupancy of the `lshflat` tier: its bit width
     * grows with the codebook (2^bits ≈ C / this) so occupancy — and

@@ -1060,61 +1060,21 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** t24's default merge-round count: four rounds is enough that later
-    * rounds merge symbols EARLIER rounds produced (the part of BPE
-    * training a single pair count cannot exercise). */
-  private[graft] val T24RoundsDefault = 4
-
-  /** The rounds-axis seam (r19, VERDICT r18 #4): `graft.t24.rounds`
-    * (env SPARK_GRAFT_T24_ROUNDS) overrides the merge-round count so
-    * the ROUNDS axis of the training loop can be measured — each round
-    * is one vocab-bounded pair aggregation + a 1-row winner broadcast +
-    * one fold pass, sequenced through the driver, so the loop's cost is
-    * linear-in-rounds with a per-round floor of Spark's job-scheduling
-    * constants (the corpus-size axis, measured at slope ≈ 0.2 in
-    * SCALING.md r18, does not price this). SCALING.md r19 records the
-    * measured slope and the stated posture for the 10⁴–10⁵-merge regime
-    * of a production tokenizer. The ORACLE follows the resolved value
-    * ([[t24OracleSql]] generates one CTE per round) and its multiply-
-    * referenced per-round CTEs are `AS MATERIALIZED` (r20, ADVICE r19 —
-    * the plain form inlined them once per reference and the replay went
-    * exponential in R, unarming the gate at exactly the elevated
-    * settings the seam exists for), so the gate stays armed at any
-    * setting; the gated entries pin the default.
+  /** t24's merge-round count: four rounds is enough that later rounds
+    * merge symbols EARLIER rounds produced (the part of BPE training a
+    * single pair count cannot exercise). The oracle generates one CTE
+    * per round ([[t24OracleSql]]), so the gated entries pin this
+    * constant; the rounds axis of the loop (SCALING.md r19) is reached
+    * through the [[t24BpeMerges]] overload.
     *
     * Early-stop divergence (ADVICE r19, documented not changed): when a
     * merge round finds NO adjacent pairs (every word already one
     * symbol), canonical BPE trainers (Sennrich et al.'s reference
     * implementation) stop early and return fewer merges; this engine
-    * instead raise_errors with an instruction to lower
-    * `graft.t24.rounds` — the repo's loud-miss convention, chosen so a
-    * mis-sized rounds setting can never silently ship a shorter merge
-    * table than the operator configured. */
-  private[graft] def T24Rounds: Int =
-    sys.props.get("graft.t24.rounds")
-      .orElse(sys.env.get("SPARK_GRAFT_T24_ROUNDS"))
-      .map(_.toInt).getOrElse(T24RoundsDefault)
-
-  /** One greedy BPE merge of the winning pair (l, r) applied to a symbol
-    * sequence — the canonical left-to-right rule (Sennrich et al. 2016,
-    * arXiv:1508.07909 §3.2): scan the sequence once; whenever the last
-    * emitted symbol is `l` and the current one is `r`, replace the pair
-    * with the merged token. A fold is exactly that scan, and it cannot
-    * over-merge: after a merge the last emitted symbol is `l || r`,
-    * which can never equal `l` again (r is non-empty), so overlapping
-    * occurrences — possible only for l = r runs — resolve to the
-    * canonical alternating pattern (aaaa → [aa, aa]). The lambda
-    * branches through nested `when`s (evaluated lazily in order) so
-    * `element_at(acc, -1)` is never touched on the empty accumulator —
-    * ANSI mode would throw on it. */
-  private def bpeMergeFold(syms: Column, l: Column, r: Column): Column =
-    aggregate(syms, array().cast("array<string>"),
-      (acc, t) =>
-        when(size(acc) === 0, concat(acc, array(t)))
-          .otherwise(when(element_at(acc, -1) === l && t === r,
-              concat(slice(acc, lit(1), size(acc) - 1),
-                array(concat(l, r))))
-            .otherwise(concat(acc, array(t)))))
+    * raise_errors instead — the repo's loud-miss convention, chosen so
+    * a mis-sized round count can never silently ship a shorter merge
+    * table than the caller asked for. */
+  private[graft] val T24Rounds = 4
 
   /** t24 — BPE tokenizer-training merge steps (the primitive under every
     * subword vocabulary): [[T24Rounds]] rounds of (adjacent-pair count →
@@ -1126,34 +1086,35 @@ object TextAnalysis {
     * winner is the max-count pair with a (left, right) lexicographic
     * tie-break so both engines pick identically.
     *
+    * This is [[bpeTrain]] at pool 1 and width 1: the batched loop
+    * selecting one pair per round IS single-merge BPE (Sennrich et al.
+    * 2016, arXiv:1508.07909 §3.2 — the fold's left-to-right scan
+    * resolves overlapping l = r runs to the canonical alternating
+    * pattern, aaaa → [aa, aa]).
+    *
     * Scale shape: ONE corpus scan builds the (word, freq) table — the
     * same vocab-bounded state t20/t21 ship (the pair explode, the merge
     * fold, and every subsequent round run over DISTINCT WORDS, so round
     * cost is corpus-size-INDEPENDENT); each round is one map-side-
     * combined pair aggregation, a 1-row TakeOrdered winner broadcast
     * back onto the vocab table, and a per-word fold (no explode of the
-    * corpus, no shuffle of text). The per-round tables are lazily
-    * `localCheckpoint`ed (the d6 iterative convention — see the note in
-    * [[bpeRounds]]): round k+1's counts consume round k's merge output
-    * without re-folding earlier rounds, and the lineage truncation
-    * keeps analysis cost linear in the round count rather than
-    * exponential. The DuckDB oracle replays the greedy rule positionally
-    * (occurrence runs → alternating keeps — the same sequences the fold
-    * produces), so all four merge rows gate bit-for-bit. */
+    * corpus, no shuffle of text), with per-round lineage truncation
+    * (see [[bpeTrain]]). The DuckDB oracle replays the greedy rule
+    * positionally (occurrence runs → alternating keeps — the same
+    * sequences the fold produces), so all four merge rows gate
+    * bit-for-bit. */
   def t24BpeMerges(s: SparkSession, dir: String): DataFrame =
-    bpeRounds(s, dir)._1.reduce(_ unionAll _).orderBy(col("round"))
+    t24BpeMerges(s, dir, T24Rounds)
 
-  /** The shared BPE training loop: [[T24Rounds]] count→win→merge rounds
-    * over the distinct-word table. Returns the per-round winner rows
-    * (t24's merge table) and the FINAL per-word symbol table (t25's
-    * tokenizer — a word's token count under the learned vocabulary is
-    * the length of its final symbol sequence). */
+  /** [[t24BpeMerges]] over an explicit round count (the rounds axis). */
+  private[graft] def t24BpeMerges(s: SparkSession, dir: String,
+      rounds: Int): DataFrame =
+    bpeTrain(s, dir, rounds, 1, 1, "greedy")._1.drop("batch_rank")
+
   /** The (word, freq, char-symbols) table every BPE entry trains on —
     * char symbols via 1-based substring, the exact arithmetic the
     * oracle's substr() replays (split(word, '') would append Java's
-    * trailing empty match as a phantom symbol). Shared by the
-    * single-merge loop ([[bpeRounds]]) and the batched one
-    * ([[t26BpeBatchMerges]]). */
+    * trailing empty match as a phantom symbol). */
   private def bpeWords0(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(explode(words(col("text"))).as("word"))
@@ -1161,57 +1122,6 @@ object TextAnalysis {
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .withColumn("syms", expr(
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-
-  private def bpeRounds(s: SparkSession,
-      dir: String): (Seq[DataFrame], DataFrame) = {
-    val words0 = bpeWords0(s, dir)
-    // Per-round LAZY localCheckpoint, not Materialize (r19, VERDICT r18
-    // #4): round r's word table references round r-1 TWICE — through
-    // the winner aggregate AND through the merge join — so without
-    // lineage truncation the logical tree doubles per round and
-    // analysis cost grows exponentially in the round count (the d6
-    // connected-components scaladoc names this exact failure mode;
-    // measured here: rounds=16 under cache-based materialization never
-    // finished planning, while checkpointed rounds time linearly —
-    // SCALING.md r19 has the rounds-axis table). Checkpoints stay
-    // un-released: every round's winner row is part of t24's OUTPUT,
-    // so earlier rounds' blocks must survive until the final union
-    // materializes (unlike d6, which only keeps the converged edges).
-    var syms = words0.localCheckpoint(false)
-    val rows = (1 to T24Rounds).map { r =>
-      val win = syms.filter(size(col("syms")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(0, size(syms) - 2)," +
-            " i -> struct(syms[i] AS lsym, syms[i+1] AS rsym))")).as("p"))
-        .groupBy(col("p.lsym").as("lsym"), col("p.rsym").as("rsym"))
-        .agg(sum(col("freq")).as("pair_count"))
-        .orderBy(col("pair_count").desc, col("lsym"), col("rsym"))
-        .limit(1)
-      // LEFT join on a constant key, not crossJoin (ADVICE r18): if a
-      // round's pair table is EMPTY (every word already reduced to one
-      // symbol before T24Rounds), a crossJoin against the 0-row winner
-      // would silently empty the whole word table — t24 would drop rows
-      // and t25 return zero rows, and the oracle (which replays the same
-      // shape) could never catch it. Under the left join an empty winner
-      // surfaces as a null lsym on every row, which raises loudly at
-      // first execution instead — the repo's loud-miss convention.
-      syms = syms.withColumn("_k", lit(1))
-        .join(broadcast(win.withColumn("_k", lit(1))), Seq("_k"), "left")
-        .select(col("word"), col("freq"),
-          when(col("lsym").isNull, raise_error(lit(
-            s"t24/t25: merge round $r found no adjacent pairs — corpus " +
-              "fully merged before T24Rounds; lower graft.t24.rounds")))
-            .otherwise(bpeMergeFold(col("syms"), col("lsym"), col("rsym")))
-            .as("syms"))
-        .localCheckpoint(false)
-      val vocab = syms.select(explode(col("syms")).as("sym"))
-        .agg(countDistinct(col("sym")).as("vocab_size"))
-      win.crossJoin(broadcast(vocab))
-        .select(lit(r).as("round"), col("lsym"), col("rsym"),
-          col("pair_count"), col("vocab_size"))
-    }
-    (rows, syms)
-  }
 
   /** t25's dictionary-join size gate (r19, VERDICT r18 #3). The
     * harness-SF dictionary is a few hundred distinct words and
@@ -1257,7 +1167,7 @@ object TextAnalysis {
     * takes the shuffle branch). */
   private[graft] def t25BpeEncode(s: SparkSession, dir: String,
       broadcastMaxRows: Long): DataFrame = {
-    val trained = bpeRounds(s, dir)._2
+    val trained = bpeTrain(s, dir, T24Rounds, 1, 1, "greedy")._2
       .select(col("word"), size(col("syms")).cast("long").as("n_sym"),
         length(col("word")).cast("long").as("n_char"))
     // the count action runs against the training loop's checkpointed
@@ -1286,8 +1196,8 @@ object TextAnalysis {
   }
 
   /** t26's knobs: 2 rounds exercises batching over symbols earlier
-    * BATCHES produced; pool 16 bounds the ranked candidate table the
-    * conflict anti-join runs on; batch 4 is wide enough that multiple
+    * BATCHES produced; pool 16 bounds the ranked candidate array the
+    * selection runs on; batch 4 is wide enough that multiple
     * non-conflicting pairs are selected per round on the harness
     * corpus (spec-asserted). The oracle generates [[T26Batch]]
     * positional sub-steps per round, so these are compile-time
@@ -1296,33 +1206,33 @@ object TextAnalysis {
   private[graft] val T26Pool = 16
   private[graft] val T26Batch = 4
 
-  /** One left-to-right scan applying EVERY pair of a (rank-sorted,
-    * mutually non-conflicting) merge batch: like [[bpeMergeFold]] but
-    * the merge test is membership in the batch array instead of one
-    * (l, r). Correct as a single pass exactly BECAUSE of the batch
-    * selection invariant: selected pairs share no symbol and no
-    * pair's concatenation equals another's component, so one pair's
-    * merge can neither create nor destroy another's occurrences
-    * (a merge replaces two adjacent symbols by one — it never makes
-    * two OTHER symbols newly adjacent), and the post-merge
-    * accumulator tail (l || r) can never match any batch lsym. A
-    * sequential per-pair application in any order — what the DuckDB
-    * oracle replays, one positional sub-step per batch rank — is
-    * therefore identical to this simultaneous scan. */
-  private def bpeBatchFold(syms: Column, batch: Column): Column =
+  /** One left-to-right scan applying EVERY pair of a mutually
+    * non-conflicting merge batch, given as its lsym → rsym map (well
+    * defined: selected pairs share no symbol). Whenever the last
+    * emitted symbol maps to the current one, the two are replaced by
+    * their concatenation. Correct as a single pass exactly BECAUSE of
+    * the batch selection invariant: selected pairs share no symbol and
+    * no pair's concatenation equals another's component, so one pair's
+    * merge can neither create nor destroy another's occurrences (a
+    * merge replaces two adjacent symbols by one — it never makes two
+    * OTHER symbols newly adjacent), and the post-merge accumulator tail
+    * (l || r) can never be a batch lsym. A sequential per-pair
+    * application in any order — what the DuckDB oracle replays, one
+    * positional sub-step per batch rank — is therefore identical to
+    * this simultaneous scan. For a one-pair batch this is the canonical
+    * greedy merge, and it cannot over-merge: overlapping occurrences —
+    * possible only for l = r runs — resolve to the alternating pattern
+    * (aaaa → [aa, aa]). The nested `when`s (evaluated lazily in order)
+    * never touch `element_at(acc, -1)` on the empty accumulator — ANSI
+    * mode would throw on it. */
+  private def bpeBatchFold(syms: Column, merges: Column): Column =
     aggregate(syms, array().cast("array<string>"),
       (acc, t) =>
         when(size(acc) === 0, concat(acc, array(t)))
-          .otherwise {
-            val hit = filter(batch, p =>
-              p.getField("lsym") === element_at(acc, -1) &&
-                p.getField("rsym") === t)
-            when(size(hit) > 0,
+          .otherwise(when(element_at(merges, element_at(acc, -1)) === t,
               concat(slice(acc, lit(1), size(acc) - 1),
-                array(concat(element_at(hit, 1).getField("lsym"),
-                  element_at(hit, 1).getField("rsym")))))
-              .otherwise(concat(acc, array(t)))
-          })
+                array(concat(element_at(acc, -1), t))))
+            .otherwise(concat(acc, array(t)))))
 
   /** t26 — BATCHED BPE merge rounds (r19, the production answer to the
     * 30k-merge posture in SCALING.md round-19): per round, rank all
@@ -1332,169 +1242,146 @@ object TextAnalysis {
     * batch in ONE per-word scan. Two pairs conflict when they share a
     * symbol or one pair's concatenation equals a component of the
     * other — the invariant that makes batch application
-    * order-independent (see [[bpeBatchFold]]). The selection rule is
-    * deliberately one-pass ("no conflict with any higher-ranked
-    * CANDIDATE", an anti-join) rather than greedy-over-selected: the
-    * greedy rule needs a sequential scan over the ranked list, while
-    * the anti-join is a bounded self-join DuckDB replays verbatim —
-    * and it is conservative only when a high-ranked candidate was
-    * itself excluded, costing batch width, never correctness.
-    * MEASURED COST of that conservatism (r20, VERDICT r19 #4): on
-    * zipf10 the anti-join rule saturates at ~2.2 selected/round
-    * regardless of batch width (width 16 and 64 both select ~165
-    * merges in 64 rounds — top pairs chain through shared symbols and
-    * the whole chain tail dies with its excluded head), so the r19
-    * "30k/B rounds" posture was wrong as arithmetic. The `greedy` rule
-    * (t26b, see [[t26BatchLoop]]) is the production answer: measured
+    * order-independent (see [[bpeBatchFold]]). This `antijoin` rule is
+    * conservative only when a high-ranked candidate was itself
+    * excluded, costing batch width, never correctness — but measured
+    * (r20, see [[bpeTrain]]) it saturates at ~2.2 selected/round
+    * whatever the width, so the r19 "30k/B rounds" posture was wrong as
+    * arithmetic. The `greedy` rule (t26b) is the production answer:
     * 0.037–0.056 s/merge at widths 16–64 (6.7–8.9x over sequential
-    * t24, rate RISING with vocab diversity, 1 718 merges measured in
-    * one run) — measurements/r20/T26_MERGE_SCALE.txt has the full
-    * table.
+    * t24, 1 718 merges in one run —
+    * measurements/r20/T26_MERGE_SCALE.txt).
     *
     * Output: one row per selected pair — (round, batch_rank, lsym,
     * rsym, pair count at round start, vocab size after the round).
     *
-    * Scale shape: identical per-round cost family to t24 (one
-    * map-side-combined pair aggregation over DISTINCT WORDS, a
-    * ≤[[T26Pool]]-row TakeOrdered, a ≤Pool²-row broadcast anti-join
-    * or a one-row greedy fold, one fold pass, per-round lineage
-    * truncation) — the vocabulary advances up to [[T26Batch]] merges
-    * per round against t24's one, and the measured per-merge cost at
-    * production widths is the table above, not a division. A round
-    * with no pairs left raises loudly (the t24 convention). */
+    * Scale shape: t24's per-round cost family (one map-side-combined
+    * pair aggregation over DISTINCT WORDS, a ≤[[T26Pool]]-row
+    * TakeOrdered collapsed to one array row, one selection expression
+    * over it, one fold pass, per-round lineage truncation) — the
+    * vocabulary advances up to [[T26Batch]] merges per round against
+    * t24's one, and the measured per-merge cost at production widths
+    * is the table above, not a division. A round with no pairs left
+    * raises loudly (the t24 convention). */
   def t26BpeBatchMerges(s: SparkSession, dir: String): DataFrame =
-    t26BatchLoop(s, dir, T26Rounds, T26Pool, T26Batch, "antijoin")
+    bpeTrain(s, dir, T26Rounds, T26Pool, T26Batch, "antijoin")._1
 
   /** t26b — the batched trainer under the GREEDY selection rule as its
     * own gated entry (r20): same rounds/pool/batch pins as t26, but the
     * selection is the maximal independent set in rank order (see
-    * [[t26BatchLoop]]) — the rule the width measurement chose for
+    * [[bpeTrain]]) — the rule the width measurement chose for
     * production — with its own recursive-CTE oracle, so the greedy
     * path is driver-gated every round rather than only spec-pinned. */
   def t26bBpeGreedyMerges(s: SparkSession, dir: String): DataFrame =
-    t26BatchLoop(s, dir, T26Rounds, T26Pool, T26Batch, "greedy")
+    bpeTrain(s, dir, T26Rounds, T26Pool, T26Batch, "greedy")._1
 
-  /** The batched training loop behind [[t26BpeBatchMerges]], with the
-    * (rounds, pool, batch) axes as parameters — the gated entry pins
-    * the compile-time constants (the oracle's sub-step count follows
-    * them); the SAME code was run at production widths (r20, VERDICT
-    * r19 #4: the 30k-merge posture was arithmetic on an 8-merge
-    * measurement; ≥1k merges at width 16–64 make the rounds/width law
-    * a measurement, not an extrapolation —
-    * measurements/r20/T26_MERGE_SCALE.txt). `selectRule` is one of the
-    * two batch-selection rules (r20, VERDICT r19 #4 — the second added
+  /** The one BPE training loop (t24, t25, t26, t26b): `rounds` rounds of
+    * (adjacent-pair count → top-`pool` candidates → up to `width`
+    * selected pairs → one merge scan) over the distinct-word table.
+    * Returns the per-round selection rows (round, batch_rank, lsym,
+    * rsym, pair count at round start, vocab size after the round) and
+    * the FINAL per-word symbol table (t25's tokenizer — a word's token
+    * count under the learned vocabulary is the length of its final
+    * symbol sequence). At pool 1 and width 1 either rule selects the
+    * top pair, so the loop is single-merge BPE (t24).
+    *
+    * Per round the ranked pool is ONE array row (`array_sort` on
+    * (-pair_count, lsym, rsym) puts it in rank order) and `rule` is one
+    * expression over it (r20, VERDICT r19 #4 — the second rule added
     * because MEASURING the width law refuted the first):
     *
-    *   - `antijoin` (t26, the r19 rule): select candidates that
-    *     conflict with NO higher-ranked CANDIDATE. One bounded
-    *     self-join, order-independent — but measured on zipf10 it
-    *     SATURATES at ~2.2 selected/round regardless of batch width
-    *     (width 16 and width 64 both selected ~165 merges in 64
-    *     rounds; rate slightly DECLINES 2.58→2.03 over 256 rounds —
-    *     measurements/r20/T26_MERGE_SCALE.txt): top-ranked pairs chain
-    *     through shared symbols ((a,b),(b,c),(c,d)…), and the anti-join
-    *     excludes a candidate conflicting with an EXCLUDED higher one,
-    *     so a chain yields ~1-2 picks however wide the batch.
-    *   - `greedy` — the canonical fast-trainer rule: scan the ranked
-    *     pool once, select a candidate iff it conflicts with no
-    *     already-SELECTED pair (a maximal independent set in rank
-    *     order, capped at the batch width). Strictly ⊇ the anti-join's
+    *   - `antijoin` (t26, the r19 rule): keep candidates that conflict
+    *     with NO higher-ranked CANDIDATE. Order-independent — but
+    *     measured on zipf10 it SATURATES at ~2.2 selected/round
+    *     regardless of width (width 16 and width 64 both selected ~165
+    *     merges in 64 rounds; rate slightly DECLINES 2.58→2.03 over 256
+    *     rounds — measurements/r20/T26_MERGE_SCALE.txt): top-ranked
+    *     pairs chain through shared symbols ((a,b),(b,c),(c,d)…), and
+    *     a candidate conflicting with an EXCLUDED higher one is
+    *     excluded too, so a chain yields ~1-2 picks however wide the
+    *     batch.
+    *   - `greedy` (t24, t26b) — the canonical fast-trainer rule: fold
+    *     the ranked pool once, selecting a candidate iff it conflicts
+    *     with no already-SELECTED pair (a maximal independent set in
+    *     rank order, capped at the width). Strictly ⊇ the anti-join's
     *     set below the cap (anything conflict-free against ALL higher
     *     candidates is conflict-free against the selected subset), and
-    *     the one that actually delivers the width: the selection is a
-    *     single Catalyst `aggregate` fold over the ≤pool-row collected
-    *     pool ON ONE ROW — no driver collect, no per-candidate join.
-    *     The DuckDB oracle replays it as a recursive CTE carrying the
-    *     selected set as a LIST accumulator, so the gate stays armed. */
-  private[graft] def t26BatchLoop(s: SparkSession, dir: String,
-      t26Rounds: Int, t26Pool: Int, t26Batch: Int,
-      selectRule: String): DataFrame = {
-    val wRank = Window.orderBy(col("pair_count").desc, col("lsym"), col("rsym"))
+    *     the one that actually delivers the width. The DuckDB oracle
+    *     replays it as a recursive CTE carrying the selected set as a
+    *     LIST accumulator, so the gate stays armed.
+    *
+    * Per-round LAZY localCheckpoint, not Materialize (r19, VERDICT r18
+    * #4): round r's word table references round r-1 TWICE — through the
+    * pair count AND through the merge — so without lineage truncation
+    * the logical tree doubles per round and analysis cost grows
+    * exponentially in the round count (the d6 connected-components
+    * scaladoc names this failure mode; measured: rounds=16 under
+    * cache-based materialization never finished planning, while
+    * checkpointed rounds time linearly — SCALING.md r19). Checkpoints
+    * stay un-released: every round's selection is part of the OUTPUT,
+    * so earlier rounds' blocks must survive until the final union
+    * materializes (unlike d6, which only keeps the converged edges). */
+  private def bpeTrain(s: SparkSession, dir: String, rounds: Int,
+      pool: Int, width: Int, rule: String): (DataFrame, DataFrame) = {
+    def conflict(h: Column, c: Column): Column = {
+      def g(x: Column, n: String) = x.getField(n)
+      def cat(x: Column) = concat(g(x, "lsym"), g(x, "rsym"))
+      g(h, "lsym") === g(c, "lsym") || g(h, "lsym") === g(c, "rsym") ||
+      g(h, "rsym") === g(c, "lsym") || g(h, "rsym") === g(c, "rsym") ||
+      cat(h) === g(c, "lsym") || cat(h) === g(c, "rsym") ||
+      cat(c) === g(h, "lsym") || cat(c) === g(h, "rsym")
+    }
+    val pick: Column => Column = rule match {
+      case "greedy" => p => aggregate(p, array().cast(
+          "array<struct<lsym:string,rsym:string,pair_count:bigint>>"),
+        (acc, c) => when(size(acc) < width &&
+            !exists(acc, h => conflict(h, c)), concat(acc, array(c)))
+          .otherwise(acc))
+      // filter's index is 0-based: slice(p, 1, i) is every candidate
+      // ranked above c
+      case "antijoin" => p => slice(filter(p, (c, i) =>
+        !exists(slice(p, lit(1), i), h => conflict(h, c))), 1, width)
+    }
     var syms = bpeWords0(s, dir).localCheckpoint(false)
-    val rows = (1 to t26Rounds).map { r =>
-      val cand = syms.filter(size(col("syms")) >= 2)
+    val rows = (1 to rounds).map { r =>
+      val batch = syms.filter(size(col("syms")) >= 2)
         .select(col("freq"), explode(expr(
           "transform(sequence(0, size(syms) - 2)," +
             " i -> struct(syms[i] AS lsym, syms[i+1] AS rsym))")).as("p"))
         .groupBy(col("p.lsym").as("lsym"), col("p.rsym").as("rsym"))
         .agg(sum(col("freq")).as("pair_count"))
         .orderBy(col("pair_count").desc, col("lsym"), col("rsym"))
-        .limit(t26Pool)
-        .withColumn("rn", row_number().over(wRank))
-      val sel = (selectRule match {
-        case "greedy" =>
-          // one Catalyst fold over the rank-sorted pool ON ONE ROW
-          // (≤pool structs): select iff no conflict with any already-
-          // SELECTED pair and the batch cap not reached — the maximal
-          // independent set in rank order. No driver collect: the pool
-          // is collapsed by collect_list the same way batchAgg below
-          // collapses the selection.
-          val conflictWith = (sc: Column, cc: Column) => {
-            def g(x: Column, n: String) = x.getField(n)
-            g(sc, "lsym") === g(cc, "lsym") ||
-            g(sc, "lsym") === g(cc, "rsym") ||
-            g(sc, "rsym") === g(cc, "lsym") ||
-            g(sc, "rsym") === g(cc, "rsym") ||
-            concat(g(sc, "lsym"), g(sc, "rsym")) === g(cc, "lsym") ||
-            concat(g(sc, "lsym"), g(sc, "rsym")) === g(cc, "rsym") ||
-            concat(g(cc, "lsym"), g(cc, "rsym")) === g(sc, "lsym") ||
-            concat(g(cc, "lsym"), g(cc, "rsym")) === g(sc, "rsym")
-          }
-          val zero = array().cast(
-            "array<struct<lsym:string,rsym:string,pair_count:bigint>>")
-          cand
-            .agg(array_sort(collect_list(struct(col("rn"), col("lsym"),
-              col("rsym"), col("pair_count")))).as("ks"))
-            .select(aggregate(
-              transform(col("ks"), p => struct(
-                p.getField("lsym").as("lsym"),
-                p.getField("rsym").as("rsym"),
-                p.getField("pair_count").as("pair_count"))),
-              zero,
-              (acc, c) => when(size(acc) < t26Batch &&
-                  !exists(acc, sc => conflictWith(sc, c)),
-                concat(acc, array(c))).otherwise(acc)).as("sel"))
-            .select(posexplode(col("sel")))
-            .select((col("pos") + 1).cast("int").as("k"),
-              col("col.lsym").as("lsym"), col("col.rsym").as("rsym"),
-              col("col.pair_count").as("pair_count"))
-        case "antijoin" =>
-          val h = cand.select(col("rn").as("h_rn"), col("lsym").as("h_l"),
-            col("rsym").as("h_r"))
-          val conflict = col("h_rn") < col("rn") && (
-            col("h_l") === col("lsym") || col("h_l") === col("rsym") ||
-            col("h_r") === col("lsym") || col("h_r") === col("rsym") ||
-            concat(col("h_l"), col("h_r")) === col("lsym") ||
-            concat(col("h_l"), col("h_r")) === col("rsym") ||
-            concat(col("lsym"), col("rsym")) === col("h_l") ||
-            concat(col("lsym"), col("rsym")) === col("h_r"))
-          cand.join(broadcast(h), conflict, "left_anti")
-            .orderBy(col("rn")).limit(t26Batch)
-            .withColumn("k", row_number().over(wRank))
-      }).localCheckpoint(false)
-      // rank-sorted batch as ONE array row: array_sort on (k, l, r)
-      // structs orders by k first, so the fold sees rank order
-      val batchAgg = sel
-        .agg(array_sort(collect_list(
-          struct(col("k"), col("lsym"), col("rsym")))).as("ks"))
-        .select(transform(col("ks"), p =>
-          struct(p.getField("lsym").as("lsym"),
-            p.getField("rsym").as("rsym"))).as("batch"))
-      syms = syms.crossJoin(broadcast(batchAgg))
+        .limit(pool)
+        .agg(array_sort(collect_list(struct(-col("pair_count"),
+          col("lsym"), col("rsym"), col("pair_count")))).as("ranked"))
+        .select(pick(transform(col("ranked"), p => struct(
+          p.getField("lsym").as("lsym"), p.getField("rsym").as("rsym"),
+          p.getField("pair_count").as("pair_count")))).as("batch"))
+        .withColumn("merges", map_from_entries(transform(col("batch"),
+          p => struct(p.getField("lsym"), p.getField("rsym")))))
+      // the batch is a global aggregate — exactly ONE row even when no
+      // pair is left — so the crossJoin can never silently empty the
+      // word table (ADVICE r18); an empty batch raises at first
+      // execution instead, the repo's loud-miss convention
+      syms = syms.crossJoin(broadcast(batch))
         .select(col("word"), col("freq"),
           when(size(col("batch")) === 0, raise_error(lit(
-            s"t26: batch round $r found no adjacent pairs — corpus " +
-              "fully merged before T26Rounds")))
-            .otherwise(bpeBatchFold(col("syms"), col("batch")))
+            s"BPE round $r found no adjacent pairs — corpus fully " +
+              "merged before the last requested round")))
+            .otherwise(bpeBatchFold(col("syms"), col("merges")))
             .as("syms"))
         .localCheckpoint(false)
       val vocab = syms.select(explode(col("syms")).as("sym"))
         .agg(countDistinct(col("sym")).as("vocab_size"))
-      sel.crossJoin(broadcast(vocab))
-        .select(lit(r).as("round"), col("k").cast("long").as("batch_rank"),
-          col("lsym"), col("rsym"), col("pair_count"), col("vocab_size"))
+      batch.select(posexplode(col("batch")))
+        .crossJoin(broadcast(vocab))
+        .select(lit(r).as("round"),
+          (col("pos") + 1).cast("long").as("batch_rank"),
+          col("col.lsym").as("lsym"), col("col.rsym").as("rsym"),
+          col("col.pair_count").as("pair_count"), col("vocab_size"))
     }
-    rows.reduce(_ unionAll _).orderBy(col("round"), col("batch_rank"))
+    (rows.reduce(_ unionAll _).orderBy(col("round"), col("batch_rank")),
+      syms)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1554,11 +1441,10 @@ object TextAnalysis {
     * consumers each while keep$r/syms$r feed two — so the plain form
     * expanded the corpus-scan subtree ~3^R-fold and the elevated-rounds
     * oracle replay hit the exact exponential failure t26's oracle
-    * documents (the engine-side twin is [[bpeRounds]]'s per-round
-    * localCheckpoint). With the materialization the rounds seam's
-    * "oracle stays armed at any setting" claim is actually true:
-    * replay cost is linear in R (measured at R=16 in the r20 self-
-    * check, where the plain form did not finish). */
+    * documents (the engine-side twin is [[bpeTrain]]'s per-round
+    * localCheckpoint). With the materialization replay cost is linear
+    * in R (measured at R=16 in the r20 self-check, where the plain
+    * form did not finish). */
   private def bpeRoundCte(r: Int): String = {
       val prev = s"syms${r - 1}"
       s"""pos$r AS (

@@ -218,34 +218,27 @@ class DedupSpec extends SparkSpec {
 
   test("d3/d4 lowered caps: oversized buckets are dropped (bounded work) " +
        "while exact-dup pairs survive via group expansion") {
-    sys.props("graft.d3.maxBandBucket") = "4"
-    sys.props("graft.d4.maxChunkBucket") = "4"
-    try {
-      val pairs = Dedup.d3MinhashLsh(spark, degenerateDir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      val within = pairs.filter { case (a, _, _) => a <= 5L }
-      val flood = pairs.filter { case (a, _, _) => a > 100L }
-      // collapse immunity: the identical cluster is ONE rep — its pairs
-      // come from group expansion, never from (capped) bucketing
-      assert(within.length == 10 && within.forall(_._3 == 1.0))
-      // cap engagement: the 20-rep flood overflows 4-slot buckets, so
-      // candidates are dropped — and every pair that IS emitted still
-      // carries the exact verified Jaccard (the cap loses rows, never
-      // corrupts them)
-      assert(flood.length < 190, "cap did not engage on the flood cluster")
-      assert(flood.forall(_._3 == 0.9333))
-      // d4's hamming-0 immunity, through the oracle-slice surface: every
-      // identical pair must surface at hamming 0 (-1 = lost). 11 pairs:
-      // C(5,2)=10 from the identical cluster plus doc 200's planted
-      // augmentation copy (200 % D4bEvery == 0).
-      val d4 = Dedup.d4SimhashExactDup(spark, degenerateDir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      assert(d4.length == 11 && d4.forall(_._3 == 0))
-      assert(d4.contains((200L, 200L + Dedup.D4bIdShift, 0)))
-    } finally {
-      sys.props.remove("graft.d3.maxBandBucket")
-      sys.props.remove("graft.d4.maxChunkBucket")
-    }
+    val pairs = Dedup.d3MinhashLsh(spark, degenerateDir, 4).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val within = pairs.filter { case (a, _, _) => a <= 5L }
+    val flood = pairs.filter { case (a, _, _) => a > 100L }
+    // collapse immunity: the identical cluster is ONE rep — its pairs
+    // come from group expansion, never from (capped) bucketing
+    assert(within.length == 10 && within.forall(_._3 == 1.0))
+    // cap engagement: the 20-rep flood overflows 4-slot buckets, so
+    // candidates are dropped — and every pair that IS emitted still
+    // carries the exact verified Jaccard (the cap loses rows, never
+    // corrupts them)
+    assert(flood.length < 190, "cap did not engage on the flood cluster")
+    assert(flood.forall(_._3 == 0.9333))
+    // d4's hamming-0 immunity, through the oracle-slice surface: every
+    // identical pair must surface at hamming 0 (-1 = lost). 11 pairs:
+    // C(5,2)=10 from the identical cluster plus doc 200's planted
+    // augmentation copy (200 % D4bEvery == 0).
+    val d4 = Dedup.d4SimhashExactDup(spark, degenerateDir, 4).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    assert(d4.length == 11 && d4.forall(_._3 == 0))
+    assert(d4.contains((200L, 200L + Dedup.D4bIdShift, 0)))
   }
 
   test("d7 cleaned corpus: both degenerate clusters collapse to one " +
@@ -295,10 +288,16 @@ class DedupSpec extends SparkSpec {
     }
     val base = run() // default: localCheckpoint since r22
     assert(base.nonEmpty)
-    for (mode <- Seq("cache", "localCheckpoint", "none")) {
+    for (mode <- Seq("cache", "localCheckpoint", "none", "chache")) {
       sys.props(Materialize.Prop) = mode
-      try assert(run() == base, s"materialize mode '$mode' diverged")
-      finally sys.props.remove(Materialize.Prop)
+      try {
+        if (mode == "chache") {
+          // a typo'd mode must fail, not run `cache` under another name
+          val ex = intercept[RuntimeException](run())
+          assert(ex.getMessage.contains(
+            "unknown graft.materialize mode 'chache'"), ex.getMessage)
+        } else assert(run() == base, s"materialize mode '$mode' diverged")
+      } finally sys.props.remove(Materialize.Prop)
     }
   }
 

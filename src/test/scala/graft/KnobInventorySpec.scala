@@ -15,12 +15,8 @@ class KnobInventorySpec extends AnyFunSuite {
   private val Expected = Set(
     // per-query seams
     "graft.d13.assignVia", "GRAFT_D13_ASSIGNVIA",
-    "graft.d3.maxBandBucket",
-    "graft.d4.maxChunkBucket",
     "graft.materialize", "SPARK_GRAFT_MATERIALIZE",
-    "graft.s11.flatScanCap", "SPARK_GRAFT_S11_FLATSCANCAP",
     "graft.s11.via", "SPARK_GRAFT_S11_VIA",
-    "graft.t24.rounds", "SPARK_GRAFT_T24_ROUNDS",
     "SPARK_GRAFT_X9_K",
     // session / harness
     "SPARK_GRAFT_CPUS",

@@ -290,19 +290,12 @@ class SimilaritySpec extends SparkSpec {
     val dir = "/root/testdata/sf0.01"
     val exact = Similarity.s11BitextMargin(spark, dir)
     val exactIds = exact.collect().map(_.getAs[Long]("s_id")).toSet
-    System.setProperty("graft.s11.via", "flat")
-    val (dflt, unbounded, tight) = try {
-      val d = Similarity.s11BitextMargin(spark, dir).collect().toSeq
-      System.setProperty("graft.s11.flatScanCap", "1000000000")
-      val u = Similarity.s11BitextMargin(spark, dir).collect().toSeq
-      System.setProperty("graft.s11.flatScanCap", "1")
-      val t = Similarity.s11BitextMargin(spark, dir)
-      assert(t.schema == exact.schema, "cap changed the schema")
-      (d, u, t.collect().toSeq)
-    } finally {
-      System.clearProperty("graft.s11.flatScanCap")
-      System.clearProperty("graft.s11.via")
-    }
+    def flat(cap: Long) = Similarity.s11BitextMargin(spark, dir, "flat", cap)
+    val dflt = flat(Similarity.S11FlatScanCap).collect().toSeq
+    val unbounded = flat(1000000000L).collect().toSeq
+    val t = flat(1L)
+    assert(t.schema == exact.schema, "cap changed the schema")
+    val tight = t.collect().toSeq
     assert(dflt == unbounded,
       "default cap bound a harness-SF cell — the no-op invariant broke")
     assert(tight.nonEmpty, "cap=1 mined nothing")
@@ -354,16 +347,10 @@ class SimilaritySpec extends SparkSpec {
       (id, "w x", if (i % 2 == 0) "de" else "en", "s0", 3L)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    System.setProperty("graft.s11.via", "flat")
-    System.setProperty("graft.s11.flatScanCap", "1") // force k_scan > 1
-    try {
-      val rows = Similarity.s11BitextMargin(spark, dir).collect()
-      assert(rows.forall(_.getAs[Long]("s_id") >= base))
-      info(s"large-id flat cap: ${rows.length} sources mined")
-    } finally {
-      System.clearProperty("graft.s11.flatScanCap")
-      System.clearProperty("graft.s11.via")
-    }
+    // cap 1 forces k_scan > 1
+    val rows = Similarity.s11BitextMargin(spark, dir, "flat", 1L).collect()
+    assert(rows.forall(_.getAs[Long]("s_id") >= base))
+    info(s"large-id flat cap: ${rows.length} sources mined")
   }
 
   test("s11 via seam hygiene (ADVICE r16): 'lshflat' aliases the flat " +

@@ -542,6 +542,14 @@ class TextAnalysisSpec extends SparkSpec {
       .groupBy(identity).map { case (w, ws) => (w, ws.length.toLong) }
     assert(engineRows(sfDir) == refBpe(words, TextAnalysis.T24Rounds),
       "harness merge table diverged from the canonical reference")
+    // the identity the engine relies on: batched BPE at pool 1, width 1
+    // is single-merge BPE under either selection rule
+    def batchedAtWidth1(ws: Map[String, Long], g: Boolean) =
+      refBatchBpe(ws, TextAnalysis.T24Rounds, 1, 1, greedy = g)
+        .map { case (_, _, l, r, c, v) => (l, r, c, v) }
+    for (g <- Seq(false, true))
+      assert(batchedAtWidth1(words, g) == refBpe(words, TextAnalysis.T24Rounds),
+        s"harness: width-1 batched reference (greedy=$g) != refBpe")
     // 2. planted corpus: 'aaaa' exercises run alternation (aaaa -> [aa,
     // aa], not [aa, a, a]); round 2+ merges tokens round 1 PRODUCED
     // (aa+aa), which the harness vocabulary never triggers
@@ -557,6 +565,9 @@ class TextAnalysisSpec extends SparkSpec {
     val exp = refBpe(plantedWords, TextAnalysis.T24Rounds)
     assert(engineRows(dir) == exp,
       s"planted merge table diverged: expected $exp")
+    for (g <- Seq(false, true))
+      assert(batchedAtWidth1(plantedWords, g) == exp,
+        s"planted: width-1 batched reference (greedy=$g) != refBpe")
     // the planted corpus must actually exercise a multi-char remerge
     assert(exp.exists { case (l, r, _, _) => l.length > 1 || r.length > 1 },
       "planted corpus failed to trigger a multi-char merge")
@@ -603,27 +614,23 @@ class TextAnalysisSpec extends SparkSpec {
       .parquet(s"$dir/documents.parquet")
     val plantedWords = planted.flatMap(_._2.split(" "))
       .groupBy(identity).map { case (w, ws) => (w, ws.length.toLong) }
-    System.setProperty("graft.t24.rounds", "6")
-    try {
-      val got = TextAnalysis.t24BpeMerges(spark, dir).collect().toSeq
-        .map(r => (r.getAs[String]("lsym"), r.getAs[String]("rsym"),
-          r.getAs[Long]("pair_count"), r.getAs[Long]("vocab_size")))
-      assert(got == refBpe(plantedWords, 6),
-        "6-round merge table diverged from the reference")
-      // round 7 on this corpus has exactly one degenerate state left
-      // after round 6 consumed the last pair family — requesting more
-      // rounds than the corpus can supply must raise, not drop rows
-      // (ADVICE r18: the old crossJoin shape silently emptied the table)
-      System.setProperty("graft.t24.rounds", "8")
-      val ex = intercept[Exception] {
-        TextAnalysis.t24BpeMerges(spark, dir).collect()
-      }
-      def messages(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(e =>
-          Option(e.getMessage).toSeq ++ messages(e.getCause))
-      assert(messages(ex).exists(_.contains("no adjacent pairs")),
-        s"expected the loud no-pairs error, got: $ex")
-    } finally System.clearProperty("graft.t24.rounds")
+    val got = TextAnalysis.t24BpeMerges(spark, dir, 6).collect().toSeq
+      .map(r => (r.getAs[String]("lsym"), r.getAs[String]("rsym"),
+        r.getAs[Long]("pair_count"), r.getAs[Long]("vocab_size")))
+    assert(got == refBpe(plantedWords, 6),
+      "6-round merge table diverged from the reference")
+    // round 7 on this corpus has exactly one degenerate state left
+    // after round 6 consumed the last pair family — requesting more
+    // rounds than the corpus can supply must raise, not drop rows
+    // (ADVICE r18: an empty winner must never empty the word table)
+    val ex = intercept[Exception] {
+      TextAnalysis.t24BpeMerges(spark, dir, 8).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e =>
+        Option(e.getMessage).toSeq ++ messages(e.getCause))
+    assert(messages(ex).exists(_.contains("no adjacent pairs")),
+      s"expected the loud no-pairs error, got: $ex")
   }
 
   // independent reference for the BATCHED variant: rank pairs, keep the
