@@ -36,27 +36,32 @@ import org.apache.spark.sql.functions._
   *     total > 1.15 stamps `"regime":"regime-shift"` and
   *     `"suspect":true`, catching uniform slowdowns that no per-query
   *     threshold or probe kernel can see.
-  *   - Regression guard: each query's min is compared against the most
-  *     recent committed BENCH_r*.json (or SPARK_GRAFT_PREV_BENCH); every
-  *     >1.5x jump is emitted under `"regressions"` with its ratio, so a
-  *     real regression — or a contaminated window — is visible in the
-  *     artifact itself instead of waiting for a human diff.
-  *   - Steady-regime gate + A/B rows (r15, VERDICT r14 #1): passes are
-  *     calibration-gated against a pinned reference level (0.060 s, the
-  *     r13-era steady kernel), committed stats prefer steady passes,
-  *     and the bar queries additionally ship interleaved
+  *   - Regression guard: each query's min is compared against the
+  *     run's own previous line at the same core count
+  *     (`BENCH_SELF_c<cpus>.json`) and the most recent committed
+  *     BENCH_r*.json ([[baselines]]); every >1.5x jump is emitted under
+  *     `"regressions"` with its ratio, so a real regression — or a
+  *     contaminated window — is visible in the artifact itself instead
+  *     of waiting for a human diff.
+  *   - Steady-regime gate + A/B rows (r15, VERDICT r14 #1): at 32 cpus,
+  *     passes are calibration-gated against a pinned reference level
+  *     (0.060 s, the r13-era steady kernel), committed stats prefer
+  *     steady passes, and the bar queries additionally ship interleaved
   *     (calibration, query) sample pairs under `"ab"` so raw numbers
   *     can be separated from host regime inside the artifact. See the
   *     inline docs in [[main]].
+  *
+  * Settings: SPARK_GRAFT_SF_DIR (the data directory),
+  * SPARK_GRAFT_BENCH_RUNS, SPARK_GRAFT_AB_ROUNDS, and the core count and
+  * shuffle partitions of [[BenchSupport]]. Everything else is pinned
+  * below.
   */
 object Bench {
 
   /** Envelope (seconds) for one calibration probe: measured 0.075–0.081 s
     * steady-state on the idle local[32] harness box, so 0.5 s is ~6x
-    * headroom — only genuine interference trips it. Override via
-    * SPARK_GRAFT_CALIB_ENVELOPE for other machines. */
-  private def calibEnvelope: Double =
-    sys.env.getOrElse("SPARK_GRAFT_CALIB_ENVELOPE", "0.5").toDouble
+    * headroom — only genuine interference trips it. */
+  private val CalibEnvelope = 0.5
 
   /** Fixed CPU-bound calibration kernel: hash-reduce 2^26 sequence ids.
     * No file IO, one stage, deterministic work — its runtime moves only
@@ -101,118 +106,108 @@ object Bench {
     }.min
   }
 
-  /** Per-query minimums from every baseline that matches the run's SF
-    * and core count.
+  /** Per-query minimums from every baseline that matches the run.
     * TWO baselines are consulted when available (ADVICE r11 — each alone
     * has a blind spot):
     *
-    *   - `BENCH_SELF.json`, the bench's own durable artifact: always a
-    *     complete line, but rewritten by every run — consecutive runs of
-    *     already-regressed code would self-baseline each other green, so
-    *     a <1.5x-per-run ratchet could creep in unflagged;
+    *   - `selfFile`, the bench's own durable artifact: always a complete
+    *     line, but rewritten by every run at its core count — consecutive
+    *     runs of already-regressed code would self-baseline each other
+    *     green, so a <1.5x-per-run ratchet could creep in unflagged;
     *   - the newest parseable driver-committed `BENCH_r*.json`: stable
     *     for a whole round (catches the ratchet), but can be truncated
     *     (r10) or absent.
     *
-    * A query is flagged when EITHER baseline shows the jump. SF-mismatch
-    * is rejected INSIDE the candidate scan, not after committing to the
-    * first parseable file: a single sf0.01 debug run rewrites BENCH_SELF
-    * with the wrong SF, and the old pick-then-filter order turned that
-    * into "prev":null — guard silently disarmed — even though a valid
-    * same-SF BENCH_r*.json sat right behind it (ADVICE r11). Files too
-    * old to carry an "sf" stamp are accepted (sf.forall). The "cpus"
-    * stamp is matched the same way (ADVICE r22): an 8-cpu BENCH_SELF
-    * must not silently become the baseline of a 32-cpu run, and files
-    * without the stamp are accepted. Regex-parsed so
-    * the bench stays dependency-free (driver wrapper format: the inner
-    * "parsed" object carries the bench line; the escaped copy in "tail"
-    * cannot match the unescaped regexes). */
-  private def baselines(expectedSf: String, expectedCpus: String,
-      selfFile: String): Seq[(String, Map[String, Double])] = {
+    * A query is flagged when EITHER baseline shows the jump. Mismatches
+    * are rejected INSIDE the candidate scan ([[firstMatchingBaseline]]),
+    * not after committing to the first parseable file: a single sf0.01
+    * debug run rewrites the self file with the wrong SF, and the old
+    * pick-then-filter order turned that into "prev":null — guard silently
+    * disarmed — even though a valid same-SF BENCH_r*.json sat right behind
+    * it (ADVICE r11). Both are read from the working directory only (sbt's
+    * forked `run` starts in the project base), so a run from a second
+    * checkout neither reads nor rewrites another checkout's files. */
+  private def baselines(expectedSf: String, selfFile: String)
+      : Seq[(String, Map[String, Double])] = {
     def firstMatching(cands: Seq[java.io.File]) =
-      firstMatchingBaseline(cands, expectedSf, expectedCpus)
-    sys.env.get("SPARK_GRAFT_PREV_BENCH") match {
-      case Some(f) =>
-        val hit = firstMatching(Seq(new java.io.File(f)))
-        // an explicitly pinned baseline that doesn't apply must be LOUD:
-        // the operator believes the guard is armed (the silent-disarm
-        // failure mode, ADVICE r11 — same rule as the discovery path)
-        if (hit.isEmpty) System.err.println(
-          s"[bench] WARNING: SPARK_GRAFT_PREV_BENCH=$f is unreadable, " +
-            s"unparseable or recorded at a different SF than $expectedSf " +
-            s"or a different cpus than $expectedCpus " +
-            "— regression guard DISARMED")
-        hit.toSeq
-      case None =>
-        val dirs = Seq(new java.io.File("."), new java.io.File("/root/repo"))
-        val files = dirs
-          .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty[java.io.File]))
-          .distinctBy(_.getCanonicalPath)
-        val self = firstMatching(files.filter(_.getName == selfFile))
-        // numeric round order: lexical sort reads r9 > r11. Driver-round
-        // artifacts are 32-cpu bench-profile captures, so a driver-profile
-        // run (4 cpus) must NOT ratio against them — its only comparable
-        // baseline is its own prior BENCH_DRIVERPROFILE.json.
-        //
-        // NEWEST ROUND ONLY (r18, VERDICT r17 #4): the guard's intent is
-        // "ratio against the PREVIOUS round". When the newest BENCH_r*
-        // exists but is truncated ("parsed": null — the driver bug,
-        // eighth round running), falling back to ever-older rounds
-        // ratios current code against a different code era: the r17
-        // t11_repetition flag (1.51×) was exactly this — r10–r17 all
-        // unparseable, so the "round baseline" silently became ROUND 9
-        // (t11 = 0.469 s, nine rounds and two t-family rewrites ago)
-        // while both real baselines (self r16 0.757, r17 0.711) read
-        // t11 flat. Only the HIGHEST-numbered round artifact is eligible
-        // now; if it doesn't parse, the round baseline disarms LOUDLY
-        // and BENCH_SELF (always complete) remains armed.
-        val round =
-          if (selfFile != "BENCH_SELF.json") None
-          else {
-            val newest = files
-              .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-              .sortBy(f => "\\d+".r.findFirstIn(f.getName).get.toInt)
-              .lastOption
-            val hit = newest.flatMap(f => firstMatching(Seq(f)))
-            newest.foreach { f =>
-              if (hit.isEmpty) System.err.println(
-                s"[bench] NOTE: newest round artifact ${f.getName} is " +
-                  "unparseable or SF/cpus-mismatched (driver truncation?) " +
-                  "— round baseline disarmed; self baseline still armed")
-            }
-            hit
-          }
-        (self ++ round).toSeq
+      firstMatchingBaseline(cands, expectedSf, BenchSupport.cpus,
+        BenchSupport.shufflePartitions)
+    val files = Option(new java.io.File(".").listFiles())
+      .getOrElse(Array.empty[java.io.File]).toSeq
+    val self = firstMatching(files.filter(_.getName == selfFile))
+    // numeric round order: lexical sort reads r9 > r11.
+    //
+    // NEWEST ROUND ONLY (r18, VERDICT r17 #4): the guard's intent is
+    // "ratio against the PREVIOUS round". When the newest BENCH_r*
+    // exists but is truncated ("parsed": null — the wrapper bug,
+    // eighth round running), falling back to ever-older rounds
+    // ratios current code against a different code era: the r17
+    // t11_repetition flag (1.51×) was exactly this — r10–r17 all
+    // unparseable, so the "round baseline" silently became ROUND 9
+    // (t11 = 0.469 s, nine rounds and two t-family rewrites ago)
+    // while both real baselines (self r16 0.757, r17 0.711) read
+    // t11 flat. Only the HIGHEST-numbered round artifact is eligible
+    // now; if it doesn't apply, the round baseline disarms LOUDLY and
+    // the self file (always complete) remains armed.
+    val newest = files
+      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
+      .sortBy(f => "\\d+".r.findFirstIn(f.getName).get.toInt)
+      .lastOption
+    val round = newest.flatMap(f => firstMatching(Seq(f)))
+    newest.foreach { f =>
+      if (round.isEmpty) System.err.println(
+        s"[bench] NOTE: newest round artifact ${f.getName} is " +
+          "unparseable, suspect, or recorded at another SF, cpus or " +
+          "shuffle partitions — round baseline disarmed; self baseline " +
+          "still armed")
+    }
+    (self ++ round).toSeq
+  }
+
+  /** The first candidate that parses and whose stamps, where present,
+    * equal the run's: "sf", "cpus" (ADVICE r22: an 8-cpu capture must not
+    * become the baseline of a 32-cpu run), "shuffle_partitions" (which
+    * SPARK_GRAFT_SHUFFLE_PARTITIONS decouples from cpus), and "suspect"
+    * false — a suspect capture's numbers carry host regime, not code
+    * (ADVICE r22: the round-22 capture is a `regime-shift`). Files too old
+    * to carry a stamp are accepted. Returns (file name, per-query
+    * seconds). */
+  private[graft] def firstMatchingBaseline(cands: Seq[java.io.File],
+      expectedSf: String, expectedCpus: String, expectedPartitions: String)
+      : Option[(String, Map[String, Double])] = {
+    val expected = Map("sf" -> expectedSf, "cpus" -> expectedCpus,
+      "shuffle_partitions" -> expectedPartitions, "suspect" -> "false")
+    cands.iterator.filter(_.isFile).flatMap(parseBench).collectFirst {
+      case (name, stamps, qs)
+          if expected.forall { case (k, v) => stamps.get(k).forall(_ == v) } =>
+        (name, qs)
     }
   }
 
-  /** The first candidate that parses and whose "sf" and "cpus" stamps,
-    * where present, equal the run's: (file name, per-query seconds). */
-  private[graft] def firstMatchingBaseline(cands: Seq[java.io.File],
-      expectedSf: String, expectedCpus: String)
-      : Option[(String, Map[String, Double])] =
-    cands.iterator.filter(_.isFile).map(parseBench).collectFirst {
-      case Some((name, sf, cpus, qs))
-          if sf.forall(_ == expectedSf) && cpus.forall(_ == expectedCpus) =>
-        (name, qs)
-    }
-
+  /** (file name, stamps, per-query seconds). Regex-parsed so the bench
+    * stays dependency-free (round-file wrapper format: the inner "parsed"
+    * object carries the bench line; the escaped copy in "tail" cannot
+    * match the unescaped regexes). */
   private def parseBench(f: java.io.File)
-      : Option[(String, Option[String], Option[String],
-        Map[String, Double])] = {
+      : Option[(String, Map[String, String], Map[String, Double])] = {
     val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
     // \s* after every colon: the driver wrapper pretty-prints its copy
     // of the bench line ("sf": 0.1, one query per line) — a
     // space-intolerant pattern silently matches nothing and turns the
     // guard into a no-op
-    val sf = """"sf":\s*"([^"]+)"""".r.findFirstMatchIn(text).map(_.group(1))
-    val cpus = """"cpus":\s*"?(\d+)""".r.findFirstMatchIn(text).map(_.group(1))
+    val stamps = Seq(
+      "sf" -> """"sf":\s*"([^"]+)"""",
+      "cpus" -> """"cpus":\s*"?(\d+)""",
+      "shuffle_partitions" -> """"shuffle_partitions":\s*"?(\d+)""",
+      "suspect" -> """"suspect":\s*(true|false)""")
+      .flatMap { case (k, re) =>
+        re.r.findFirstMatchIn(text).map(k -> _.group(1)) }.toMap
     val qBlock = """"queries":\s*\{([^}]*)\}""".r
     qBlock.findFirstMatchIn(text).map { m =>
       val pair = """"([A-Za-z0-9_]+)":\s*(-?[0-9.Ee+-]+)""".r
-      (f.getName, sf, cpus, pair.findAllMatchIn(m.group(1))
+      (f.getName, stamps, pair.findAllMatchIn(m.group(1))
         .map(p => p.group(1) -> p.group(2).toDouble).toMap)
-    }.filter(_._4.nonEmpty)
+    }.filter(_._3.nonEmpty)
   }
 
   /** The durable copy of the emitted line. stdout is captured by the
@@ -220,12 +215,9 @@ object Bench {
     * 13 queries' numbers from committed history — the bench now owns its
     * artifact: the full line goes to a committed file that the next run's
     * [[baselines]] reads first. */
-  private def writeSelf(json: String, file: String): Unit = {
-    val repo = new java.io.File("/root/repo")
-    val dir = if (repo.isDirectory) repo else new java.io.File(".")
+  private def writeSelf(json: String, file: String): Unit =
     java.nio.file.Files.write(
-      new java.io.File(dir, file).toPath, (json + "\n").getBytes("UTF-8"))
-  }
+      new java.io.File(file).toPath, (json + "\n").getBytes("UTF-8"))
 
   /** Bar queries (graded against BASELINE.md's Ex1–Ex6 analogues) go LAST
     * in every emitted map: the driver wrapper keeps only a 2000-char tail
@@ -239,26 +231,23 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // `--profile driver` (VERDICT r13 #7): same catalog, but under the
-    // driver/Verify config (4 cpus, 4 shuffle partitions, default AQE) so
-    // config-sensitive plans (window sorts, AQE coalescing) are measured
-    // in the context that grades correctness; writes
-    // BENCH_DRIVERPROFILE.json and baselines only against its own kind.
-    val driverProfile = args.contains("--profile") &&
-      args.sliding(2).exists(w => w.toSeq == Seq("--profile", "driver"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus =
-      if (driverProfile) "4" else sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = BenchSupport.cpus
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    val selfFile =
-      if (driverProfile) "BENCH_DRIVERPROFILE.json" else "BENCH_SELF.json"
-    val spark = BenchSupport.session(cpus)
+    // one self file per core count: a quick pass at 8 cpus must not
+    // overwrite the baseline a 32-cpu graded capture ratios against. At
+    // the default 4 cpus this is the Verify config (4 shuffle
+    // partitions, default AQE), so config-sensitive plans (window sorts,
+    // AQE coalescing) are measured in the context that grades
+    // correctness (VERDICT r13 #7).
+    val selfFile = s"BENCH_SELF_c$cpus.json"
+    val spark = BenchSupport.session()
 
     // STEADY-REGIME GATE (r15, VERDICT r14 #1): the q4/q6 raw bar spent
     // two rounds hostage to host steal — captures ran at calibration
     // levels ~1.8x the r13-era 0.060 s reference and every per-query
     // number carried machine, not code. The reference level is pinned
-    // here (env-overridable); a pass is STEADY when its pre-pass
+    // here; a pass is STEADY when its pre-pass
     // calibration is <= 1.15x that level. Before each pass the bench
     // polls the kernel and, while drifting, sleeps and re-polls (bounded
     // retries) — and if the planned passes all landed drifting it
@@ -267,13 +256,11 @@ object Bench {
     // exists; the full per-pass calibration trace is emitted so the
     // artifact itself shows which regime produced each number. The
     // pinned 0.060 s reference is the 32-CPU kernel level, so the gate
-    // arms only under a 32-cpu bench-profile run unless
-    // SPARK_GRAFT_CALIB_REF is set explicitly — at the 4-cpu default the
-    // kernel can NEVER meet 0.060*1.15, and an armed gate would burn
-    // 2x15 s of retry sleep per calibration (~11 min per capture) before
-    // labeling an idle box "drifting".
-    val calibRef = sys.env.get("SPARK_GRAFT_CALIB_REF").map(_.toDouble)
-      .getOrElse(if (!driverProfile && cpus == "32") 0.060 else Double.NaN)
+    // arms only under a 32-cpu run — at the 4-cpu default the kernel can
+    // NEVER meet 0.060*1.15, and an armed gate would burn 2x15 s of
+    // retry sleep per calibration (~11 min per capture) before labeling
+    // an idle box "drifting".
+    val calibRef = if (cpus == "32") 0.060 else Double.NaN
     val gated = !calibRef.isNaN
     val steadyLevel = calibRef * 1.15
 
@@ -290,30 +277,27 @@ object Bench {
     // kernel's 1.15) because an exchange round-trips the page cache
     // and shuffle files, whose idle-box jitter is wider than pure
     // compute's (that same trace spans 1.43x within one steady
-    // window, where the CPU kernel spans 1.23x). Env-overridable like
-    // the CPU pin.
-    val xCalibRef = sys.env.get("SPARK_GRAFT_XCALIB_REF").map(_.toDouble)
-      .getOrElse(if (gated) 0.42 else Double.NaN)
-    val xGated = gated && !xCalibRef.isNaN
-    val xSteadyLevel = xCalibRef *
-      sys.env.getOrElse("SPARK_GRAFT_XCALIB_FACTOR", "1.5").toDouble
-    val maxRetries = sys.env.getOrElse("SPARK_GRAFT_CALIB_RETRIES", "2").toInt
-    val retrySleepMs =
-      sys.env.getOrElse("SPARK_GRAFT_CALIB_SLEEP_MS", "15000").toInt
-    val extraPasses = sys.env.getOrElse("SPARK_GRAFT_EXTRA_PASSES", "2").toInt
+    // window, where the CPU kernel spans 1.23x).
+    val xCalibRef = 0.42
+    val xSteadyLevel = xCalibRef * 1.5
+    // a drifting probe is retried twice, 15 s apart, and a capture whose
+    // planned passes all drifted gets at most two extra passes
+    val maxRetries = 2
+    val retrySleepMs = 15000L
+    val extraPasses = 2
 
     // returns (cpuKernel, exchangeKernel); the exchange sample is NaN
-    // when the gate is unarmed (4-cpu / driver-profile runs — the
-    // kernel has no pinned reference there and would cost ~10 s/call)
+    // when the gate is unarmed (below 32 cpus the kernel has no pinned
+    // reference and would cost ~10 s/call)
     def probe(): (Double, Double) =
-      (calibrate(spark), if (xGated) xCalibrate(spark) else Double.NaN)
+      (calibrate(spark), if (gated) xCalibrate(spark) else Double.NaN)
     def isDrifting(p: (Double, Double)): Boolean =
-      (gated && p._1 > steadyLevel) || (xGated && p._2 > xSteadyLevel)
+      gated && (p._1 > steadyLevel || p._2 > xSteadyLevel)
     def gatedCalibrate(): (Double, Double) = {
       var c = probe()
       var r = 0
       while (isDrifting(c) && r < maxRetries) {
-        Thread.sleep(retrySleepMs.toLong)
+        Thread.sleep(retrySleepMs)
         c = probe()
         r += 1
       }
@@ -379,7 +363,7 @@ object Bench {
     def f4(v: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, v)
     // cross-SF and cross-core ratios are meaningless: baselines() already
     // rejected any candidate recorded at a different SF dir or cpus
-    val prevs = baselines(sfDir, cpus, selfFile)
+    val prevs = baselines(sfDir, selfFile)
     val regressions = timed.flatMap { case (n, v) =>
       val ratios = prevs.flatMap { case (_, p) =>
         p.get(n).filter(old => old > 0 && v > 0 && v / old > 1.5)
@@ -449,7 +433,7 @@ object Bench {
     // suspect stamp on the same artifact). The envelope's
     // catastrophic-slowness check stays unconditional.
     val suspect = shift ||
-      math.max(calibPre, calibPost) > calibEnvelope ||
+      math.max(calibPre, calibPost) > CalibEnvelope ||
       (calibRatio > 2.0 && !(gated && steadyIdx.nonEmpty))
     // regime names the regime of the COMMITTED passes: under the gate,
     // "steady" means every committed pass calibrated within BOTH
@@ -488,11 +472,10 @@ object Bench {
     // VERDICT r16 #3: q2's only evidence was a sweep number that moves
     // ±30% with host regime, so no bar verdict should ever lean on a
     // sweep number again).
-    val abNames = sys.env.getOrElse("SPARK_GRAFT_AB",
-        "q1_argmax_per_year,q2_top10_multiagg," +
-          "q3_join_groupcount,q4_derived_diff_filter," +
-          "q5_composite_key_join,q6_semijoin_having_distinct")
-      .split(",").map(_.trim).filter(names.contains).toSeq
+    val abNames = Seq("q1_argmax_per_year", "q2_top10_multiagg",
+        "q3_join_groupcount", "q4_derived_diff_filter",
+        "q5_composite_key_join", "q6_semijoin_having_distinct")
+      .filter(names.contains)
     // 9 pairs under the gate, 5 ungated (r20): the bar statistic is a
     // MIN, and q6's per-sample distribution in a steady window is wide
     // (capture-1 pairs reached 0.4525 while capture-2's five pairs all
@@ -624,7 +607,7 @@ object Bench {
         val steady =
           if (gated) (!isDrifting((c, x))).toString else "null"
         val nSteady = if (gated) steadyPairs.size.toString else "null"
-        val xc = if (xGated) s""","xcalib":${f(x)}""" else ""
+        val xc = if (gated) s""","xcalib":${f(x)}""" else ""
         "\"" + n + s"""":{"raw":${f4(t)},"calib":${f(c)}$xc$norm$bar,"steady":$steady,"n_steady":$nSteady,"n_pairs":${pairs.size}}"""
       }
     }.mkString("{", ",", "}")
@@ -657,15 +640,14 @@ object Bench {
     // distinguishable from an unarmed run
     def fx(v: Double): String = if (v.isNaN) "null" else f(v)
     val xJson =
-      if (xGated)
+      if (gated)
         s""","xref":${f(xCalibRef)},"xpost":${fx(xCalibPost)},"pass_xcalib":${passXCalib.map(fx).mkString("[", ",", "]")}"""
       else ""","xref":null"""
     val calibJson =
-      s"""{"pre":${f(calibPre)},"post":${f(calibPost)},"ratio":${f(calibRatio)},"envelope":${f(calibEnvelope)},"ref":$refJson$xJson,"pass_calib":$passCalibJson,"steady_passes":${steadyIdx.size},"committed_passes":${useIdx.size}}"""
+      s"""{"pre":${f(calibPre)},"post":${f(calibPost)},"ratio":${f(calibRatio)},"envelope":${f(CalibEnvelope)},"ref":$refJson$xJson,"pass_calib":$passCalibJson,"steady_passes":${steadyIdx.size},"committed_passes":${useIdx.size}}"""
     val prevJson =
       if (prevs.isEmpty) "null"
       else "\"" + prevs.map(_._1).mkString(",") + "\""
-    val profileJson = if (driverProfile) "driver" else "bench"
     // field order matters for the truncated-tail failure mode: the big
     // spread map goes FIRST and the bar-query tail of `queries` plus the
     // small verdict-bearing fields (ab, calibration, regime, suspect,
@@ -673,7 +655,7 @@ object Bench {
     // cpus + partitions stamped INSIDE the line (VERDICT r21 #2: the
     // driver's scaling probe flagged suspect_cpus_ignored because the
     // artifact itself didn't say what core count produced it)
-    val json = s"""{"metric":"total","value":${f4(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"shuffle_partitions":${BenchSupport.shufflePartitions(cpus)},"runs":${passCalib.size},"profile":"$profileJson","spread":$spreadJson,"queries":$qs,"ab":$abJson,"bar_over":$barOverJson,"calibration":$calibJson,"regime":"$regime","suspect":$suspect,"failures":$failJson,"prev":$prevJson,"regressions":$regJson,"total_guard":$guardJson}"""
+    val json = s"""{"metric":"total","value":${f4(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"shuffle_partitions":${BenchSupport.shufflePartitions},"runs":${passCalib.size},"spread":$spreadJson,"queries":$qs,"ab":$abJson,"bar_over":$barOverJson,"calibration":$calibJson,"regime":"$regime","suspect":$suspect,"failures":$failJson,"prev":$prevJson,"regressions":$regJson,"total_guard":$guardJson}"""
     println(json)
     writeSelf(json, selfFile)
     spark.stop()

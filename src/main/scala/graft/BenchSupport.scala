@@ -3,9 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for the mains: one session recipe for Verify, Bench,
-  * MicroBench, ScaleBench, ScaleGen, ProfileQuery and Explain, and the
-  * timing kernel of the benchmark mains, so neither can drift apart. */
+  * MicroBench, ScaleBench, ScaleGen, ProfileQuery and Explain, the one
+  * reader of their core count, and the timing kernel of the benchmark
+  * mains, so none of them can drift apart. */
 object BenchSupport {
+
+  /** Core count of every main's `local[n]` session: env SPARK_GRAFT_CPUS,
+    * default 4 — the core count of the graded Verify run and of
+    * perfbench. A graded Bench capture sets 32. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
   /** Shuffle partition count: defaults to the core count (the committed
     * local-mode convention every BENCH_r* was captured under), overridable
@@ -14,13 +20,13 @@ object BenchSupport {
     * partitions == cpus, lowering cores also lowers partition count and
     * the 8-vs-32-core ratio measures scheduling, not compute scaling —
     * the probe was confounded by design). */
-  def shufflePartitions(cpus: String): String =
+  val shufflePartitions: String =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
 
-  def session(cpus: String): SparkSession = {
+  def session(): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions(cpus))
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet is TIMESTAMP(NANOS); read the raw nanos as Long

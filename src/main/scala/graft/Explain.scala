@@ -12,7 +12,7 @@ object Explain {
       sys.error("usage: Explain <queryName> [sfDir] [mode]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val mode = args.lift(2).getOrElse("formatted")
-    val spark = BenchSupport.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = BenchSupport.session()
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain(mode)
     // min-of-3 with Bench's own kernel, so numbers line up with BENCH_r*

@@ -19,18 +19,11 @@ import graft.functions.{AHashChunks, BigramPolyBuckets, CosineSim, MinHashSig, R
   * .register]] (used by the test harness, whose session is shared).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftExtensions.cosineSimDescriptor)
-    e.injectFunction(GraftExtensions.rollingHashDescriptor)
-    e.injectFunction(GraftExtensions.slidingMinDescriptor)
-    e.injectFunction(GraftExtensions.wordShingleHashesDescriptor)
-    e.injectFunction(GraftExtensions.bigramPolyBucketsDescriptor)
-    e.injectFunction(GraftExtensions.minhashSigDescriptor)
-    e.injectFunction(GraftExtensions.simhash64Descriptor)
-    e.injectFunction(GraftExtensions.ahashChunksDescriptor)
-    e.injectFunction(GraftExtensions.thumbHexDescriptor)
-    e.injectFunction(GraftExtensions.strftimeDescriptor)
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.Functions.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getCanonicalName, name), build))
+    }
 }
 
 object GraftExtensions {
@@ -232,68 +225,26 @@ object GraftExtensions {
     out.toString
   }
 
-  private val cosineSimDescriptor = (
-    FunctionIdentifier("cosine_sim"),
-    new ExpressionInfo(classOf[CosineSim].getCanonicalName, "cosine_sim"),
-    buildCosineSim _)
-
-  private val rollingHashDescriptor = (
-    FunctionIdentifier("rolling_hash"),
-    new ExpressionInfo(classOf[RollingHash].getCanonicalName, "rolling_hash"),
-    buildRollingHash _)
-
-  private val slidingMinDescriptor = (
-    FunctionIdentifier("sliding_min"),
-    new ExpressionInfo(classOf[SlidingMin].getCanonicalName, "sliding_min"),
-    buildSlidingMin _)
-
-  private val wordShingleHashesDescriptor = (
-    FunctionIdentifier("word_shingle_hashes"),
-    new ExpressionInfo(classOf[WordShingleHashes].getCanonicalName, "word_shingle_hashes"),
-    buildWordShingleHashes _)
-
-  private val bigramPolyBucketsDescriptor = (
-    FunctionIdentifier("bigram_poly_buckets"),
-    new ExpressionInfo(classOf[BigramPolyBuckets].getCanonicalName, "bigram_poly_buckets"),
-    buildBigramPolyBuckets _)
-
-  private val minhashSigDescriptor = (
-    FunctionIdentifier("minhash_sig"),
-    new ExpressionInfo(classOf[MinHashSig].getCanonicalName, "minhash_sig"),
-    buildMinhashSig _)
-
-  private val simhash64Descriptor = (
-    FunctionIdentifier("simhash64"),
-    new ExpressionInfo(classOf[SimHash64].getCanonicalName, "simhash64"),
-    buildSimhash64 _)
-
-  private val ahashChunksDescriptor = (
-    FunctionIdentifier("ahash_chunks"),
-    new ExpressionInfo(classOf[AHashChunks].getCanonicalName, "ahash_chunks"),
-    buildAhashChunks _)
-
-  private val thumbHexDescriptor = (
-    FunctionIdentifier("thumb_hex"),
-    new ExpressionInfo(classOf[ThumbHex].getCanonicalName, "thumb_hex"),
-    buildThumbHex _)
-
-  private val strftimeDescriptor = (
-    FunctionIdentifier("strftime"),
-    new ExpressionInfo(classOf[DateFormatClass].getCanonicalName, "strftime"),
-    buildStrftime _)
+  /** Every SQL function graft registers: (name, expression class the
+    * function info names, builder). [[GraftExtensions.apply]] and
+    * [[register]] both walk this one table. */
+  private val Functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", classOf[CosineSim], buildCosineSim),
+    ("rolling_hash", classOf[RollingHash], buildRollingHash),
+    ("sliding_min", classOf[SlidingMin], buildSlidingMin),
+    ("word_shingle_hashes", classOf[WordShingleHashes], buildWordShingleHashes),
+    ("bigram_poly_buckets", classOf[BigramPolyBuckets], buildBigramPolyBuckets),
+    ("minhash_sig", classOf[MinHashSig], buildMinhashSig),
+    ("simhash64", classOf[SimHash64], buildSimhash64),
+    ("ahash_chunks", classOf[AHashChunks], buildAhashChunks),
+    ("thumb_hex", classOf[ThumbHex], buildThumbHex),
+    ("strftime", classOf[DateFormatClass], buildStrftime))
 
   /** Register on an already-built session (temp-function registry). */
   def register(s: org.apache.spark.sql.SparkSession): Unit = {
     val reg = s.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim", buildCosineSim, "scala_udf")
-    reg.createOrReplaceTempFunction("rolling_hash", buildRollingHash, "scala_udf")
-    reg.createOrReplaceTempFunction("sliding_min", buildSlidingMin, "scala_udf")
-    reg.createOrReplaceTempFunction("word_shingle_hashes", buildWordShingleHashes, "scala_udf")
-    reg.createOrReplaceTempFunction("bigram_poly_buckets", buildBigramPolyBuckets, "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig", buildMinhashSig, "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64", buildSimhash64, "scala_udf")
-    reg.createOrReplaceTempFunction("ahash_chunks", buildAhashChunks, "scala_udf")
-    reg.createOrReplaceTempFunction("thumb_hex", buildThumbHex, "scala_udf")
-    reg.createOrReplaceTempFunction("strftime", buildStrftime, "scala_udf")
+    Functions.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 }

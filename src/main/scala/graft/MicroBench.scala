@@ -17,8 +17,7 @@ object MicroBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val times = args.lift(1).map(_.toInt).getOrElse(5)
     val prefixes = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = BenchSupport.session(cpus)
+    val spark = BenchSupport.session()
 
     // quartile by linear interpolation (type-7, R's default — what
     // microbenchmark's summary prints)

@@ -14,7 +14,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * wall-clock, per-stage task-time sum, shuffle read/write bytes, task
   * count. Output: one aligned table per run plus a one-line summary —
   * jobs, stages, Σjob wall, Σtask time, Σshuffle bytes — so the ladder
-  * share (wall − task/cores) is readable at a glance.
+  * share (wall − task/cores) is readable at a glance; the last run also
+  * prints its Catalyst rule time and the top 25 lines of the rule-time
+  * dump. Cores: [[BenchSupport.cpus]].
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
@@ -23,7 +25,7 @@ object ProfileQuery {
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = BenchSupport.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = BenchSupport.session()
     names.foreach(profileOne(spark, _, sfDir, runs))
     spark.stop()
   }
@@ -73,15 +75,14 @@ object ProfileQuery {
       if (r == runs) {
         // total Catalyst rule time for THIS run (analysis+optimize+AQE
         // replanning) — the driver-side planning share of the wall gap
-        val ruleNs = org.apache.spark.sql.catalyst.rules.RuleExecutor
-          .dumpTimeSpent().linesIterator
+        val rules =
+          org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent()
+        val ruleNs = rules.linesIterator
           .collectFirst { case l if l.contains("Total time:") =>
             "[0-9.E]+".r.findFirstIn(l.split(":").last).map(_.toDouble) }
           .flatten.getOrElse(-1.0)
         println(f"  catalyst rule time (last run): $ruleNs%.3f s")
-        if (sys.env.contains("SPARK_GRAFT_PROFILE_RULES"))
-          println(org.apache.spark.sql.catalyst.rules.RuleExecutor
-            .dumpTimeSpent().linesIterator.take(25).mkString("\n"))
+        println(rules.linesIterator.take(25).mkString("\n"))
         jobs.sortBy(-_._2).take(12).foreach { case (id, ms, _) =>
           println(f"  job $id%4d  ${ms / 1e3}%8.3f s")
         }

@@ -12,14 +12,15 @@ package graft
   *
   * Results land in SCALING.md (hand-curated from this output) — the
   * committed artifact — and the raw JSON goes to `outFile` for the same
-  * durability reason Bench writes BENCH_SELF.json (the driver wrapper
-  * truncates long stdout lines).
+  * durability reason Bench writes BENCH_SELF_c<cpus>.json (a wrapper
+  * that keeps only a stdout tail truncates long lines).
   *
   * Usage: runMain graft.ScaleBench <outFile> [q=pfx1,pfx2] <sf>=<dir> ...
   *   e.g. runMain graft.ScaleBench measurements/scale/SCALE_SELF.json \
   *          0.1=scaledata/sf0.1 0.3=scaledata/sf0.3 1.0=scaledata/sf1
   *   the optional q= arg restricts to name prefixes (zipf-corpus runs
   *   time only t12*: the other queries' inputs are shape-identical there).
+  *   Cores: [[BenchSupport.cpus]], stamped into the JSON.
   *
   * Timing kernel is [[BenchSupport.once]] (noop sink, blocking cache
   * release) — same numbers Bench would print. min-of-3 after one warmup
@@ -98,8 +99,7 @@ object ScaleBench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(Default.contains)
       .filter(n => prefixes.forall(_.exists(n.startsWith)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = BenchSupport.session(cpus)
+    val spark = BenchSupport.session()
 
     // warmup: one pass of every query at the smallest SF
     names.foreach(BenchSupport.once(spark, _, series.head._2))
@@ -167,7 +167,7 @@ object ScaleBench {
       s""""$name":{"sec":{$ptsJson},"slope":${num(b)},"tail_slope":${num(bt)}}"""
     }
     val json =
-      s"""{"metric":"scale_slopes","cpus":$cpus,"series":[${series.map(_._1).mkString(",")}],"queries":{${rows.mkString(",")}}}"""
+      s"""{"metric":"scale_slopes","cpus":${BenchSupport.cpus},"series":[${series.map(_._1).mkString(",")}],"queries":{${rows.mkString(",")}}}"""
     println(json)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(outFile),

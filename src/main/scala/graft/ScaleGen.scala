@@ -84,8 +84,7 @@ object ScaleGen {
     val sf = args(1).toDouble
     val zipf = args.contains("zipf")
     val skew = args.contains("skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = BenchSupport.session(cpus)
+    val spark = BenchSupport.session()
 
     // ---- documents: 50k rows/SF, 10–100 tokens/doc, ~0.4% exact-dup
     // pairs (seed redirection: a flagged doc re-derives the PREVIOUS

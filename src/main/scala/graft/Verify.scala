@@ -13,8 +13,7 @@ object Verify {
     val only: Option[Set[String]] =
       args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val spark =
-      BenchSupport.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = BenchSupport.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name))
