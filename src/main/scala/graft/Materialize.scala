@@ -1,13 +1,17 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialization strategy for multi-branch reuse (a DataFrame that feeds
   * several downstream branches of one query, e.g. the shingled corpus in
   * `Dedup.d3MinhashLsh`).
   *
-  * Default is `localCheckpoint` (r22; was `cache` through r21). The flip
-  * is a measured single-compute fix, not a taste change: under AQE, a
+  * Default is `localCheckpoint` under a `local`/`local[...]` master
+  * (r22; was `cache` through r21) and `cache` under any other master
+  * ([[defaultFor]]): block-manager blocks of a local checkpoint die with
+  * their executor, and only the cache keeps the lineage to recompute
+  * them on a cluster. The local flip is a measured single-compute fix,
+  * not a taste change: under AQE, a
   * `.cache()`d multi-branch intermediate does NOT reliably single-compute
   * — concurrent query-stage materializations and per-branch column
   * pruning leave canonically-diverged copies of the guarded subtree in
@@ -27,15 +31,12 @@ import org.apache.spark.sql.DataFrame
   * `graft.materialize` system property (or the `SPARK_GRAFT_MATERIALIZE`
   * env var) switches the strategy WITHOUT touching query code:
   *
-  *   - `localCheckpoint` (default) — truncate lineage and persist the
+  *   - `localCheckpoint` (local default) — truncate lineage and persist the
   *                           computed blocks via the block manager; blocks
   *                           are released when the plan is garbage-
   *                           collected (no session-lifetime CacheManager
-  *                           entry). Single-node caveat does not apply
-  *                           here; on a multi-executor cluster prefer
-  *                           `cache` (lineage survives executor loss) or
-  *                           a real storage materialization.
-  *   - `cache`             — lazy in-memory/disk cache via the
+  *                           entry).
+  *   - `cache` (cluster default) — lazy in-memory/disk cache via the
   *                           CacheManager; keeps lineage, spills, survives
   *                           executor loss — but see the duplication
   *                           measurement above.
@@ -51,9 +52,19 @@ import org.apache.spark.sql.DataFrame
 object Materialize {
   val Prop = "graft.materialize"
 
+  /** `graft.materialize` if set, else [[defaultFor]] the active (or
+    * default) session's master; `localCheckpoint` with no session. */
   def mode: String =
     sys.props.get(Prop).orElse(sys.env.get("SPARK_GRAFT_MATERIALIZE"))
-      .getOrElse("localCheckpoint")
+      .getOrElse(defaultFor(SparkSession.getActiveSession
+        .orElse(SparkSession.getDefaultSession)
+        .fold("local")(_.sparkContext.master)))
+
+  /** `localCheckpoint` for `local` and `local[...]`; `cache` for any other
+    * master (`local-cluster[...]`, `spark://`, `yarn`, `k8s://`). */
+  def defaultFor(master: String): String =
+    if (master == "local" || master.startsWith("local[")) "localCheckpoint"
+    else "cache"
 
   def apply(df: DataFrame): DataFrame = mode match {
     case "localCheckpoint" => df.localCheckpoint(false)

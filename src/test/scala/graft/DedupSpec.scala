@@ -286,8 +286,15 @@ class DedupSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       finally dropMaterializedState()
     }
-    val base = run() // default: localCheckpoint since r22
+    val base = run() // default under local[4]: localCheckpoint since r22
     assert(base.nonEmpty)
+    // the default follows the master: local checkpoints only where a lost
+    // executor cannot lose the blocks
+    assert(Materialize.mode == "localCheckpoint")
+    for (m <- Seq("local", "local[4]", "local[*]", "local[4,2]"))
+      assert(Materialize.defaultFor(m) == "localCheckpoint", m)
+    for (m <- Seq("local-cluster[2,1,1024]", "spark://h:7077", "yarn", "k8s://h:443"))
+      assert(Materialize.defaultFor(m) == "cache", m)
     for (mode <- Seq("cache", "localCheckpoint", "none", "chache")) {
       sys.props(Materialize.Prop) = mode
       try {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.frontend.SqliteCompat
@@ -221,78 +221,126 @@ class VerbatimSqlSpec extends SparkSpec {
     }
   }
 
+  /** Small views for the rewrite specs: `sc_posts` has a unique max and
+    * min Score per ParentId except group 3, whose only Score is NULL. */
+  private def registerRewriteViews(): Unit = {
+    import spark.implicits._
+    Seq((1, 1, "a1", Option(5)), (2, 1, "a2", Option(9)), (3, 1, "a3", Option(1)),
+      (4, 2, "b1", Option(7)), (5, 2, "b2", Option(3)), (6, 3, "c1", None))
+      .toDF("Id", "ParentId", "Title", "Score").createOrReplaceTempView("sc_posts")
+    Seq((1, 100, 10), (2, 60, 5), (3, 20, 1)).toDF("id", "x", "y")
+      .createOrReplaceTempView("sc_a")
+    Seq((1, 30), (2, 2), (3, 0)).toDF("id", "y").createOrReplaceTempView("sc_b")
+    Seq((1, 1), (2, 3)).toDF("u", "v").createOrReplaceTempView("sc_c")
+    Seq((1, 1), (2, 7), (3, 1)).toDF("k", "Diff").createOrReplaceTempView("sc_d")
+  }
+
+  /** `SqliteCompat` runs the SQLite text `in` to the rows Spark gives for
+    * the hand-rewritten text. */
+  private def assertRewrites(in: String, rewritten: String): Unit = {
+    val got = SqliteCompat.sql(spark, in)
+    val want = spark.sql(rewritten)
+    assert(!want.isEmpty, s"vacuous input: $in")
+    assert(got.columns.toSeq == want.columns.toSeq, s"columns of $in")
+    assert(Comparator.equalUnordered(got, want), s"rows of $in")
+  }
+
+  /** `SqliteCompat` rejects `in` with the analyzer error Spark raises. */
+  private def assertSameError(in: String): AnalysisException = {
+    val want = intercept[AnalysisException](spark.sql(in))
+    val got = intercept[AnalysisException](SqliteCompat.sql(spark, in))
+    assert(got.getCondition == want.getCondition, s"${got.getMessage} for $in")
+    got
+  }
+
   test("bare-column rewrite: only non-grouped bare items wrapped, " +
        "subquery blocks handled independently") {
-    val in =
-      """SELECT a.Title, a.Year, MAX(a.Cnt) AS Cnt
-        |FROM a WHERE a.k=1 GROUP BY Year""".stripMargin
-    val out = SqliteCompat.rewriteBareAggColumns(in)
-    assert(out.contains("COALESCE(MAX_BY(a.Title, a.Cnt), ANY_VALUE(a.Title)) AS Title"))
-    assert(out.contains("a.Year")) // grouped: untouched
-    assert(out.contains("MAX(a.Cnt) AS Cnt")) // aggregate: untouched
-    // a MIN aggregate drives MIN_BY
-    val minOut = SqliteCompat.rewriteBareAggColumns(
-      "SELECT t.name, MIN(t.v) AS v FROM t GROUP BY t.g")
-    assert(minOut.contains("MIN_BY(t.name, t.v)"))
-    // no GROUP BY → untouched
-    val plain = "SELECT x, MAX(y) AS y FROM t"
-    assert(SqliteCompat.rewriteBareAggColumns(plain) == plain)
+    registerRewriteViews()
+    // grouped (qualified item vs bare key), aggregate and bare items
+    assertRewrites(
+      """SELECT p.Title, p.ParentId, MAX(p.Score) AS Score
+        |FROM sc_posts p WHERE p.Id > 0 GROUP BY ParentId""".stripMargin,
+      """SELECT COALESCE(MAX_BY(p.Title, p.Score), ANY_VALUE(p.Title)) AS Title,
+        |p.ParentId, MAX(p.Score) AS Score
+        |FROM sc_posts p WHERE p.Id > 0 GROUP BY ParentId""".stripMargin)
+    // a MIN aggregate drives MIN_BY; an item grouped by its alias stays
+    assertRewrites(
+      """SELECT p.ParentId AS Parent, p.Title AS t, MIN(p.Score) AS Score
+        |FROM sc_posts p GROUP BY Parent""".stripMargin,
+      """SELECT p.ParentId AS Parent,
+        |COALESCE(MIN_BY(p.Title, p.Score), ANY_VALUE(p.Title)) AS t,
+        |MIN(p.Score) AS Score FROM sc_posts p GROUP BY Parent""".stripMargin)
+    val argMax = "COALESCE(MAX_BY(Title, Score), ANY_VALUE(Title)) AS Title"
+    // a paren inside a comment or a quoted name is not SQL structure
+    assertRewrites(
+      """SELECT Title, MAX(Score) AS Best -- best (answer
+        |FROM sc_posts GROUP BY ParentId""".stripMargin,
+      s"SELECT $argMax, MAX(Score) AS Best FROM sc_posts GROUP BY ParentId")
+    assertRewrites(
+      "SELECT Title, MAX(Score) AS `best (score` FROM sc_posts GROUP BY ParentId",
+      s"SELECT $argMax, MAX(Score) AS `best (score` FROM sc_posts GROUP BY ParentId")
+    // a CTE body and an IN-subquery body are blocks of their own
+    assertRewrites(
+      """WITH best AS (SELECT ParentId, Title, MAX(Score) AS Best
+        |FROM sc_posts GROUP BY ParentId) SELECT Title, Best FROM best""".stripMargin,
+      s"""WITH best AS (SELECT ParentId, $argMax, MAX(Score) AS Best
+        |FROM sc_posts GROUP BY ParentId) SELECT Title, Best FROM best""".stripMargin)
+    assertRewrites(
+      """SELECT Id FROM sc_posts WHERE (Title, Score) IN
+        |(SELECT Title, MAX(Score) FROM sc_posts GROUP BY ParentId)""".stripMargin,
+      s"""SELECT Id FROM sc_posts WHERE (Title, Score) IN
+        |(SELECT $argMax, MAX(Score) FROM sc_posts GROUP BY ParentId)""".stripMargin)
+    // no GROUP BY: not SQLite's arg-max form, Spark's error stands
+    assertSameError("SELECT Title, MAX(Score) AS Score FROM sc_posts")
   }
 
   test("alias-in-WHERE rewrite: inlines the definition, leaves ORDER BY " +
        "and qualified names alone") {
-    val in =
-      """SELECT a.x - b.y AS Diff FROM a JOIN b ON a.id=b.id
-        |WHERE Diff > 50 ORDER BY Diff DESC""".stripMargin
-    val out = SqliteCompat.rewriteAliasInWhere(in, "Diff")
-    assert(out.contains("WHERE (a.x - b.y) > 50"))
-    assert(out.contains("ORDER BY Diff DESC")) // alias is legal there
-    assert(out.contains("AS Diff"))            // definition untouched
+    registerRewriteViews()
+    assertRewrites(
+      """SELECT a.x - b.y AS Diff FROM sc_a a JOIN sc_b b ON a.id=b.id
+        |WHERE Diff > 50 ORDER BY Diff DESC""".stripMargin,
+      """SELECT a.x - b.y AS Diff FROM sc_a a JOIN sc_b b ON a.id=b.id
+        |WHERE (a.x - b.y) > 50 ORDER BY Diff DESC""".stripMargin)
+    // a qualified name is a column reference, never a select alias
+    assertSameError(
+      """SELECT a.x - b.y AS Diff FROM sc_a a JOIN sc_b b ON a.id=b.id
+        |WHERE a.Diff > 50""".stripMargin)
   }
 
   test("alias-in-WHERE rewrite: confined to the defining select scope — " +
        "a sibling subquery's WHERE with the same name as a real column " +
        "is untouched (ADVICE r3)") {
-    val in =
-      """SELECT * FROM
-        |(SELECT a.x - a.y AS Diff FROM a WHERE Diff > 50) t
-        |JOIN (SELECT * FROM b WHERE Diff = 1 GROUP BY k) u ON t.id = u.id""".stripMargin
-    val out = SqliteCompat.rewriteAliasInWhere(in, "Diff")
-    assert(out.contains("WHERE (a.x - a.y) > 50"),
-      s"defining scope not rewritten: $out")
-    assert(out.contains("WHERE Diff = 1"),
-      s"sibling scope's real column was rewritten: $out")
+    registerRewriteViews()
+    assertRewrites(
+      """SELECT t.id, t.Diff, u.k FROM
+        |(SELECT a.id, a.x - a.y AS Diff FROM sc_a a WHERE Diff > 50) t
+        |JOIN (SELECT k, Diff FROM sc_d WHERE Diff = 1) u ON t.id = u.k""".stripMargin,
+      """SELECT t.id, t.Diff, u.k FROM
+        |(SELECT a.id, a.x - a.y AS Diff FROM sc_a a WHERE (a.x - a.y) > 50) t
+        |JOIN (SELECT k, Diff FROM sc_d WHERE Diff = 1) u ON t.id = u.k""".stripMargin)
   }
 
   test("alias-in-WHERE rewrite: clamped at set operators — a sibling " +
        "UNION branch's definition never crosses into this branch's " +
        "WHERE (ADVICE r6)") {
-    // branch 2's WHERE must NOT receive branch 1's definition of Diff:
-    // SQLite resolves aliases per branch and rejects this query, so the
-    // rewrite must leave the text unchanged (→ caller rethrows)
-    val crossBranch =
-      """SELECT a.x - a.y AS Diff FROM a
+    registerRewriteViews()
+    // SQLite resolves aliases per branch and rejects this query: the
+    // analyzer's own error surfaces instead of a borrowed definition
+    val err = assertSameError(
+      """SELECT a.x - a.y AS Diff FROM sc_a a
         |UNION
-        |SELECT b.x FROM b WHERE Diff > 5""".stripMargin
-    assert(SqliteCompat.rewriteAliasInWhere(crossBranch, "Diff") == crossBranch)
+        |SELECT c.u FROM sc_c c WHERE Diff > 5""".stripMargin)
+    assert(err.getCondition.startsWith("UNRESOLVED_COLUMN"), err.getMessage)
+    assert(err.getMessage.contains("Diff"), err.getMessage)
     // when several branches define the same alias, each WHERE takes its
-    // OWN branch's definition, not the first branch's
-    val perBranch =
-      """SELECT a.x - a.y AS Diff FROM a WHERE Diff > 1
+    // OWN branch's definition
+    assertRewrites(
+      """SELECT a.x - a.y AS Diff FROM sc_a a WHERE Diff > 1
         |UNION ALL
-        |SELECT b.u + b.v AS Diff FROM b WHERE Diff > 2""".stripMargin
-    val out = SqliteCompat.rewriteAliasInWhere(perBranch, "Diff")
-    assert(out.contains("WHERE (a.x - a.y) > 1"), s"branch 1 wrong: $out")
-    assert(out.contains("WHERE (b.u + b.v) > 2"), s"branch 2 wrong: $out")
-    // end-to-end: the cross-branch alias reference surfaces the original
-    // analyzer error instead of silently borrowing the sibling definition
-    graft.sources.Tables.registerAll(spark, sfDir)
-    val err = intercept[org.apache.spark.sql.AnalysisException] {
-      SqliteCompat.sql(spark,
-        """SELECT n_nationkey - n_regionkey AS Diff FROM nation
-          |UNION
-          |SELECT r_regionkey FROM region WHERE Diff > 1""".stripMargin).collect()
-    }
-    assert(err.getMessage.contains("Diff"))
+        |SELECT c.u + c.v AS Diff FROM sc_c c WHERE Diff > 2""".stripMargin,
+      """SELECT a.x - a.y AS Diff FROM sc_a a WHERE (a.x - a.y) > 1
+        |UNION ALL
+        |SELECT c.u + c.v AS Diff FROM sc_c c WHERE (c.u + c.v) > 2""".stripMargin)
   }
 }
