@@ -2,7 +2,9 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Session-scoped registry of eagerly-materialized PIPELINE-STAGE
   * artifacts shared by downstream catalog queries — e.g. the converged
@@ -70,9 +72,7 @@ object SharedStage {
         // The served plan reads nothing but the checkpoint, so the
         // checkpoint id is the correct liveness proxy; fall back to the
         // diff if the plan isn't the expected LogicalRDD shape.
-        val ckptIds: Set[Int] = pinned.queryExecution.logical.collect {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-        }.toSet match {
+        val ckptIds: Set[Int] = checkpointRdds(pinned).map(_.id).toSet match {
           case s0 if s0.nonEmpty => s0
           case _ =>
             (s.sparkContext.getPersistentRDDs.keySet -- before).toSet
@@ -82,6 +82,13 @@ object SharedStage {
         pinned
     }
   }
+
+  /** The RDDs behind a checkpointed DataFrame's `LogicalRDD` leaves —
+    * what holds its blocks. `Dataset.unpersist` does not release a
+    * `localCheckpoint`: the blocks belong to this RDD, not to the cache
+    * manager. */
+  private[graft] def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.logical.collect { case lr: LogicalRDD => lr.rdd }
 
   /** Release every pinned artifact of session `s` (end of a bench phase;
     * a long-lived session calls this when a pipeline's stages are done). */

@@ -39,11 +39,14 @@ import graft.GraftExtensions
   *   3. Alias references in `WHERE` (`WHERE Difference > 50`, Rmd:411 —
   *      a SQLite extension Spark rejects): on `UNRESOLVED_COLUMN`, the
   *      named alias's defining expression replaces its unqualified uses
-  *      in the `Filter` directly below the `Project` or `Aggregate` that
-  *      defines it. Each SELECT block and each set-operator branch is
-  *      its own node, so a definition never leaks into a sibling
-  *      subquery or another `UNION` branch (SQLite rejects a
-  *      cross-branch reference too).
+  *      in the one `Filter` that holds the reported reference (matched
+  *      by the error's query-context start index), directly below the
+  *      `Project` or `Aggregate` that defines it. Each SELECT block and
+  *      each set-operator branch is its own node, so a definition never
+  *      leaks into a sibling subquery or another `UNION` branch (SQLite
+  *      rejects a cross-branch reference too), and a block whose
+  *      `WHERE` name is a real column keeps it, as SQLite resolves
+  *      column-first.
   *
   * The text is parsed once by Spark's own parser, so comments, quoting
   * and nesting never confuse the rewrites; they act on the unresolved
@@ -86,7 +89,8 @@ object SqliteCompat {
       Option(e.getCondition).getOrElse("") match {
         case "MISSING_AGGREGATION" => { case a: Aggregate => argMaxBareColumns(a) }
         case c if c.startsWith("UNRESOLVED_COLUMN") => inlineAlias(
-          e.getMessageParameters.get("objectName").stripPrefix("`").stripSuffix("`"))
+          e.getMessageParameters.get("objectName").stripPrefix("`").stripSuffix("`"),
+          e.getQueryContext.headOption.map(_.startIndex))
         case _ => PartialFunction.empty
       }
     def everywhere(p: LogicalPlan): LogicalPlan = p.transformUpWithSubqueries(rule.orElse {
@@ -125,12 +129,24 @@ object SqliteCompat {
     }
   }
 
-  /** In every block whose select list defines alias `name`, replace the
-    * alias's unqualified uses in the block's WHERE by its definition. */
-  private def inlineAlias(name: String): PartialFunction[LogicalPlan, LogicalPlan] = {
-    case p @ Project(list, f: Filter) => p.copy(child = inlineAlias(name, list, f))
-    case a @ Aggregate(_, list, f: Filter, _) => a.copy(child = inlineAlias(name, list, f))
+  /** In the one block whose WHERE holds the reference the analyzer
+    * reported (the attribute whose origin starts at `at`, the error's
+    * query-context start index), replace the alias's unqualified uses in
+    * that WHERE by the block's definition of `name`. Another block's
+    * `WHERE name` resolved natively (a real column) and stays as it is. */
+  private def inlineAlias(name: String,
+      at: Option[Int]): PartialFunction[LogicalPlan, LogicalPlan] = {
+    case p @ Project(list, f: Filter) if holds(f, at) =>
+      p.copy(child = inlineAlias(name, list, f))
+    case a @ Aggregate(_, list, f: Filter, _) if holds(f, at) =>
+      a.copy(child = inlineAlias(name, list, f))
   }
+
+  private def holds(f: Filter, at: Option[Int]): Boolean =
+    at.isDefined && f.condition.exists {
+      case u: UnresolvedAttribute => u.origin.startIndex == at
+      case _ => false
+    }
 
   private def inlineAlias(name: String, list: Seq[NamedExpression], f: Filter): Filter =
     list.collectFirst { case a: Alias if a.name.equalsIgnoreCase(name) => a.child }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Materialize
+import graft.{Materialize, SharedStage}
 import graft.functions.SketchFunctions.{minhash_sig, simhash64}
 import graft.functions.TextHashFunctions.word_shingle_hashes
 import graft.functions.VectorFunctions.cosine_sim
@@ -518,11 +518,11 @@ object Dedup {
     * aggregate-then-join shape already co-located in one sort-merge-join
     * task, while paying ~6 exchanges per round to this one's 4).
     *
-    * Every SECOND iteration `localCheckpoint`s the output and unpersists
-    * the previous one: without lineage truncation the plan tree doubles
-    * per round and analysis cost grows exponentially (the standard
-    * failure mode of iterative DataFrame algorithms; GraphX's Pregel
-    * does the same). Convergence = edge multiset unchanged across the
+    * Every SECOND iteration `localCheckpoint`s the output and releases
+    * the previous checkpoint's RDD: without lineage truncation the plan
+    * tree doubles per round and analysis cost grows exponentially (the
+    * standard failure mode of iterative DataFrame algorithms; GraphX's
+    * Pregel does the same). Convergence = edge multiset unchanged across the
     * two-round batch, checked by a single-row (count, bit_xor of
     * row-hash) aggregate — no row data ever reaching the driver, and
     * half the actions of a per-round check (r22, guide §2's stage-ladder
@@ -623,7 +623,9 @@ object Dedup {
         // the per-round check produced.
         val next = round(round(edges)).localCheckpoint(false)
         val nextSig = signature(next)
-        edges.unpersist()
+        // the signature materialized `next`; the superseded batch's blocks
+        // belong to its checkpoint RDD, which Dataset.unpersist never sees
+        SharedStage.checkpointRdds(edges).foreach(_.unpersist(blocking = false))
         edges = next
         converged = nextSig == sig
         sig = nextSig
@@ -1115,7 +1117,7 @@ object Dedup {
   def d13SemanticDedup(s: SparkSession, dir: String): DataFrame = {
     val via = resolveAssignVia(s, dir)
     d13Core(Similarity.d13CellAssigned(via, Similarity.embeddingsFor(s, dir)),
-      subCapFor(via))
+      subCapFor(via)).orderBy(col("vec_id"))
   }
 
   /** The flat tier's ABSOLUTE sub-cell cap (r16): under `lshflat` the
@@ -1192,10 +1194,17 @@ object Dedup {
       case v      => v
     }
 
-  /** The within-cell threshold + smallest-keeper argmin over an assigned
-    * `cells(vec_id, embedding, cell)` frame — shared by d13 and the d13b
-    * skew companion so the two run the identical expression tree. */
-  private def d13Core(cells0: DataFrame,
+  /** The d13 pair stage, the one copy: over an assigned
+    * `cells(vec_id, embedding, cell)` frame, the bounded sub-cells
+    * ([[boundedSubCells]]) repartitioned on (cell, sub) at the session's
+    * shuffle width, the self-join on `kept_by < vec_id` within a
+    * (cell, sub), the rounded cosine ≥ [[D13Threshold]], and the
+    * smallest-keeper argmin: one unordered row per dropped vector
+    * (vec_id, cell, kept_by, cosine). d13, the d13b skew companion and
+    * p5/p6's semantic stage (`Pipeline.semanticDrops`, the vec_ids only)
+    * all run it. The d13 oracles replay it as their `qual` CTE over
+    * [[Similarity.boundedSubCtes]] plus the `rn = 1` keeper pick. */
+  private[queries] def d13Core(cells0: DataFrame,
       subCap: Option[Long] = None): DataFrame = {
     // The pair join is DELIBERATELY pinned to the documented (cell, sub)
     // distribution at the session's configured shuffle width (r21, guide
@@ -1238,7 +1247,6 @@ object Dedup {
         col("kept_by")).as("k"))
       .select(col("vec_id"), col("k.cell").as("cell"),
         col("k.kept_by").as("kept_by"), col("k.cosine").as("cosine"))
-      .orderBy(col("vec_id"))
   }
 
   /** The bounded sub-cell split for the within-cell PAIR stages (see
@@ -1311,7 +1319,7 @@ object Dedup {
     * cannot perturb an organic keeper), and every plant drops with an
     * in-cell keeper below the shift. */
   def d13bSemanticDedupSkew(s: SparkSession, dir: String): DataFrame =
-    d13Core(d13bCells(s, dir))
+    d13Core(d13bCells(s, dir)).orderBy(col("vec_id"))
 
   /** The d13b assigned-cells frame (exposed for DedupSpec's dominance
     * pin). */

@@ -333,31 +333,16 @@ object Pipeline {
       .orderBy(col("stage"))
   }
 
-  /** The semantic-drop set among stage-d survivors — d13's rule over the
-    * shared s2 cell artifact with the bounded sub-cell split, as a
-    * (doc_id, sd=1) marker frame. Shared by p5 and p6. */
+  /** The semantic-drop set among stage-d survivors — d13's pair stage
+    * ([[Dedup.d13Core]]) over the shared s2 cell artifact restricted to
+    * survivors, with the tier's sub-cell cap, as a (doc_id, sd=1) marker
+    * frame: the dropped vec_ids, one row each. Shared by p5 and p6. */
   private def semanticDrops(s: SparkSession, dir: String,
       staged: DataFrame): DataFrame = {
     val surv = staged.filter(col("d_pass")).select(col("doc_id").as("vec_id"))
-    // same (cell, sub) repartition pin as d13Core (r21): the survivor
-    // pair stage is the identical quadratic-per-key join, and AQE's
-    // byte-based coalescing serializes it the same way
-    val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val scells = Dedup.boundedSubCells(
-      Similarity.sharedCells(s, dir).join(surv, "vec_id"),
-      Dedup.subCapFor(Dedup.resolveAssignVia(s, dir)))
-      .repartition(n, col("cell"), col("sub"))
-    val a = scells.select(col("cell"), col("sub"), col("vec_id").as("kept_by"),
-      col("embedding").as("emb_a"))
-    val b = scells.select(col("cell").as("b_cell"), col("sub").as("b_sub"),
-      col("vec_id"), col("embedding").as("emb_b"))
-    a.join(b,
-        col("cell") === col("b_cell") && col("sub") === col("b_sub")
-          && col("kept_by") < col("vec_id"))
-      .filter(round(graft.functions.VectorFunctions.cosine_sim(
-        col("emb_a"), col("emb_b")), 4) >= Dedup.D13Threshold)
-      .select(col("vec_id").as("doc_id")).distinct()
-      .withColumn("sd", lit(1))
+    Dedup.d13Core(Similarity.sharedCells(s, dir).join(surv, "vec_id"),
+        Dedup.subCapFor(Dedup.resolveAssignVia(s, dir)))
+      .select(col("vec_id").as("doc_id"), lit(1).as("sd"))
   }
 
   /** p6 — the FULL pretraining-data pipeline as one query, the capstone

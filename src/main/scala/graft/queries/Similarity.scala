@@ -217,12 +217,20 @@ object Similarity {
   private def centroids(e: DataFrame): DataFrame = {
     // one metadata-cheap count action sizes the codebook (see the
     // balanced sqrt rule above); the seed scan stays a lazy TakeOrdered
-    val k = math.max(NumCentroids,
-      math.ceil(math.sqrt(e.count() / CentroidDivisor.toDouble)).toInt)
+    seedCodebook(e, math.max(NumCentroids,
+      math.ceil(math.sqrt(e.count() / CentroidDivisor.toDouble)).toInt))
+  }
+
+  /** The idMix seed rule: the `k` vectors with the smallest (idMix,
+    * vec_id), as `(c_id, c_emb)` — an O(N) TakeOrdered scan. Every
+    * codebook is this rule at its own size: s2's √ rule
+    * ([[centroids]]), the flat rule ([[centroidsFlat]]) and s4/s7's
+    * fixed [[NumCentroids]]. The oracles replay it as the `cent` CTE
+    * ([[centOracleCte]]). */
+  private def seedCodebook(e: DataFrame, k: Int): DataFrame =
     e.orderBy(idMix(col("vec_id")), col("vec_id"))
       .limit(k)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-  }
 
   /** [[centroids]] for composing families (d13b seeds its cells from the
     * ORGANIC corpus while assigning an augmented one — the stored-index
@@ -255,14 +263,49 @@ object Similarity {
     * [[lshAssignCore]]'s agg, pinned by PlanSpec. */
   private[queries] def cellAssignedAgainst(cent: DataFrame,
       e: DataFrame): DataFrame =
-    e.join(broadcast(cent), lit(true))
-      .withColumn("c_cos", round(cosine_sim(col("embedding"), col("c_emb")), 4))
+    scored(e.join(broadcast(cent), lit(true)))
       .groupBy(col("vec_id"))
-      .agg(
-        first(col("embedding")).as("embedding"),
-        max_by(col("c_id"), struct(col("c_cos"), (-col("c_id")).as("nid")))
-          .as("cell"))
+      .agg(first(col("embedding")).as("embedding"), cellArgmax.as("cell"))
       .select(col("vec_id"), col("embedding"), col("cell"))
+
+  /** Scores per-(vector, centroid) candidate rows `(vec_id, embedding,
+    * c_id, c_emb, …)`: adds `c_cos`, the cosine rounded to 4 decimals
+    * BEFORE any ranking, so both engines rank identical values. */
+  private def scored(cand: DataFrame): DataFrame =
+    cand.withColumn("c_cos", round(cosine_sim(col("embedding"), col("c_emb")), 4))
+
+  /** The cell argmax rule, over [[scored]] rows grouped by vector: the
+    * centroid with the highest rounded cosine, the LOWEST `c_id` on ties
+    * (struct order on (c_cos, −c_id)). A map-side-combinable aggregate,
+    * so each vector's candidates collapse to one row before the exchange.
+    * Every assignment tier and gate fixture argmaxes through it; the
+    * oracles replay it as `row_number() OVER (PARTITION BY vec_id ORDER
+    * BY cos DESC, c_id) = 1` (the `cells` CTE of [[cellsOracleCtes]]). */
+  private def cellArgmax: Column =
+    max_by(col("c_id"), struct(col("c_cos"), (-col("c_id")).as("nid")))
+
+  /** Top-P probe ranking: each prober `id` ranks its candidate centroids
+    * `cand(id, emb, c_id, c_emb, …)` by the 4-dp rounded cosine (column
+    * `cos`) descending, then `c_id` ascending, and keeps the first `p`.
+    * Returns `(id, emb, cell, rank)`, the 1-based probe rank in column
+    * `rank`. A `row_number() <= p` window, so Spark plans a partial
+    * WindowGroupLimit below the exchange. The oracles replay it as the
+    * `probes` CTE (`row_number() OVER (PARTITION BY q_id ORDER BY cos
+    * DESC, c_id) <= P`). */
+  private def topProbes(cand: DataFrame, id: String, emb: String, p: Int,
+      cos: String, rank: String): DataFrame = {
+    val w = Window.partitionBy(col(id)).orderBy(col(cos).desc, col("c_id").asc)
+    cand.withColumn(cos, round(cosine_sim(col(emb), col("c_emb")), 4))
+      .withColumn(rank, row_number().over(w))
+      .filter(col(rank) <= p)
+      .select(col(id), col(emb), col("c_id").as("cell"), col(rank))
+  }
+
+  /** The s2 query set's [[ProbeCells]] probes against codebook `cent`. */
+  private def queryProbes(e: DataFrame, cent: DataFrame, cos: String,
+      rank: String): DataFrame =
+    topProbes(querySet(e).join(broadcast(cent), lit(true)), "q_id", "q_emb",
+      ProbeCells, cos, rank)
 
   /** The embeddings table for other catalog families composing on the
     * cell machinery (e.g. d13). */
@@ -328,14 +371,7 @@ object Similarity {
     * attributable to codebook quality alone. */
   private def s2CoreWith(e: DataFrame, cent: DataFrame): DataFrame = {
     val cells = cellAssignedAgainst(cent, e)
-    // probe list: nearest cells per query
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_cos").desc, col("c_id").asc)
-    val probes = querySet(e).join(broadcast(cent), lit(true))
-      .withColumn("c_cos", round(cosine_sim(col("q_emb"), col("c_emb")), 4))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= ProbeCells)
-      .select(col("q_id"), col("q_emb"), col("c_id").as("cell"))
+    val probes = queryProbes(e, cent, "c_cos", "rn").drop("rn")
     // search only the probed cells
     val wTop = Window.partitionBy(col("q_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
@@ -443,13 +479,7 @@ object Similarity {
     val e = embeddings(s, dir)
     val cent = centroids(e)
     val cells = cellAssignedAgainst(cent, e)
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_cos").desc, col("c_id").asc)
-    val probes = querySet(e).join(broadcast(cent), lit(true))
-      .withColumn("c_cos", round(cosine_sim(col("q_emb"), col("c_emb")), 4))
-      .withColumn("crank", row_number().over(wProbe))
-      .filter(col("crank") <= ProbeCells)
-      .select(col("q_id"), col("q_emb"), col("c_id").as("cell"), col("crank"))
+    val probes = queryProbes(e, cent, "c_cos", "crank")
     val wTop = Window.partitionBy(col("q_id"), col("p"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     val approx = broadcast(probes).join(cells, Seq("cell"))
@@ -526,21 +556,18 @@ object Similarity {
     * target is sign-eviction CONCENTRATION (sign-identical cluster
     * centroids collapsing into few survivors; the mechanism quantified
     * in SCALING.md round-16 "The residual, retired the same round"),
-    * not geometry,
-    * and the candidate scan may be bounded absolutely. Unlike d13's
-    * pair stage, both pair members here are NOT residents of the cell
-    * (the source is an external prober), so a plain sub-cell split
-    * would sever every source from the residents outside "its" sub —
-    * instead each (source, probed cell) scans ONE idMix-fair sub-cell
-    * of ≤ ~cap residents, chosen by the source's own mix (XOR'd with
-    * the cell id so co-probing sources decorrelate — idMix is affine,
-    * addition would not reorder): every resident stays reachable (by
-    * the 1/k_scan slice of sources whose mix picks its sub), candidate
-    * mass is pinned at N_src·probe·cap — linear on ANY geometry — and
-    * the whole construction is integer arithmetic end to end. Cells at
-    * ≤ cap get k_scan = 1 ⇒ sub = 0 on both sides: a no-op join key,
-    * which is why main-geometry plans and harness-SF outputs are
-    * unchanged (spec-pinned against an explicitly-unbounded run).
+    * not geometry, and the candidate scan may be bounded absolutely.
+    * Unlike d13's pair stage, both pair members here are NOT residents
+    * of the cell (the source is an external prober), so a plain
+    * sub-cell split would sever every source from the residents outside
+    * "its" sub — instead each (source, probed cell) scans ONE idMix-fair
+    * sub-cell of ≤ ~cap residents ([[scanCapped]]): every resident stays
+    * reachable (by the 1/k_scan slice of sources whose mix picks its
+    * sub), candidate mass is pinned at N_src·probe·cap — linear on ANY
+    * geometry — and the whole construction is integer arithmetic end to
+    * end. Cells at ≤ cap get k_scan = 1 ⇒ sub = 0 on both sides: a no-op
+    * join key, which is why main-geometry plans and harness-SF outputs
+    * are unchanged (spec-pinned against an explicitly-unbounded run).
     * Recall price on concentration cells is measured by the s11b
     * differential under `via=flat` (SCALING.md round-17). Specs reach
     * other caps through the [[s11BitextMargin]] overload. */
@@ -634,15 +661,13 @@ object Similarity {
     val cells = cellAssignedAgainst(cent, tgtE)
       .select(col("vec_id").as("t_id"), col("embedding").as("t_emb"),
         col("cell"))
-    val wP = Window.partitionBy(col("s_id"))
-      .orderBy(col("p_cos").desc, col("c_id").asc)
-    val probes = src.join(broadcast(cent), lit(true))
-      .withColumn("p_cos", round(cosine_sim(col("s_emb"), col("c_emb")), 4))
-      .withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= S11bProbe)
-      .select(col("s_id"), col("s_emb"), col("c_id").as("cell"))
-    s11CellPairs(probes, cells)
+    s11CellPairs(s11Probes(src.join(broadcast(cent), lit(true))), cells)
   }
+
+  /** Each source's top-[[S11bProbe]] cells among its candidate centroids
+    * `cand(s_id, s_emb, c_id, c_emb)` ([[topProbes]]). */
+  private def s11Probes(cand: DataFrame): DataFrame =
+    topProbes(cand, "s_id", "s_emb", S11bProbe, "p_cos", "rn").drop("rn")
 
   /** The shared candidate-scoring + shortlist tail of every blocked s11
     * tier: join probes to cell members, score c4, keep each
@@ -735,14 +760,8 @@ object Similarity {
         col("cell"))
       .filter(col("cell") >= 0) // sentinel singletons are unreachable
     val sProbes = twoLevelProbes(supers, src, "s_id", "s_emb")
-    val wP = Window.partitionBy(col("s_id"))
-      .orderBy(col("p_cos").desc, col("c_id").asc)
-    val probes = sProbes.join(broadcast(centGroups), Seq("grp"))
-      .withColumn("p_cos", round(cosine_sim(col("s_emb"), col("c_emb")), 4))
-      .withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= S11bProbe)
-      .select(col("s_id"), col("s_emb"), col("c_id").as("cell"))
-    s11CellPairs(probes, cells)
+    s11CellPairs(
+      s11Probes(sProbes.join(broadcast(centGroups), Seq("grp"))), cells)
   }
 
   /** The flat candidate source (`via=flat`, late r15) — s11 with NO
@@ -763,54 +782,19 @@ object Similarity {
       cap: Long): DataFrame = {
     val tgtE = tgt.select(col("t_id").as("vec_id"),
       col("t_emb").as("embedding"))
-    val k = flatCodebookSize(tgtE)
-    val bits = flatBits(k)
-    val cb = cappedCodebookN(centroidsFlatK(tgtE, k), LshBucketCap, bits)
+    val k = flatCodebookSize(tgtE, FlatCellTarget)
+    val bits = flatBits(k, FlatTargetOcc)
+    val cb = cappedCodebookN(seedCodebook(tgtE, k), LshBucketCap, bits)
     val cells = lshAssignCore(cb, tgtE, bits)
       .select(col("vec_id").as("t_id"), col("embedding").as("t_emb"),
         col("cell"))
       .filter(col("cell") >= 0) // sentinel singletons are unreachable
-    val wP = Window.partitionBy(col("s_id"))
-      .orderBy(col("p_cos").desc, col("c_id").asc)
-    val probes = src
+    val probes = s11Probes(src
       .select(col("s_id"), col("s_emb"),
         explode(tableBucketsN(col("s_emb"), bits)).as("bucket"))
       .join(broadcast(cb), Seq("bucket"))
-      .dropDuplicates("s_id", "c_id")
-      .withColumn("p_cos", round(cosine_sim(col("s_emb"), col("c_emb")), 4))
-      .withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= S11bProbe)
-      .select(col("s_id"), col("s_emb"), col("c_id").as("cell"))
-    // the per-(source, probed-cell) scan cap (see [[S11FlatScanCap]]):
-    // residents hash into k_scan = ceil(|cell| / cap) sub-cells by their
-    // own idMix; each probe picks ONE sub by the source's mix XOR'd with
-    // the cell id, and the sub rides the JOIN KEY so capped-away
-    // residents are never emitted. The counts frame is ≤C rows — the
-    // flat codebook keeps that at N_tgt/target (a 512× reduction), the
-    // same bounded broadcast d13's boundedSubCells ships.
-    val scanK = cells.groupBy(col("cell"))
-      .agg(count(lit(1)).as("c_n"))
-      .withColumn("k_scan", expr(s"(c_n + $cap - 1) div $cap"))
-      .select(col("cell"), col("k_scan"))
-    val cellsSub = cells.join(broadcast(scanK), Seq("cell"))
-      .withColumn("sub", pmod(idMix(col("t_id")), col("k_scan")))
-      .drop("k_scan")
-    // the cell id is PRE-MIXED into [0, 2^31) before the XOR: flat cells
-    // are keyed by centroid vec_ids, so the cappedCodebook-style
-    // `cell * prime` operand overflows idMix's ANSI-safe ±8e9 contract
-    // at scale-corpus ids (measured: every via=flat run at sf30+ threw
-    // ARITHMETIC_OVERFLOW). BOTH operands are pre-mixed into [0, 2³¹)
-    // before the XOR (r18, ADVICE r17): XOR with an unmixed s_id can
-    // raise the outer operand by up to 2³¹−1, silently narrowing the
-    // documented ±8e9 id contract to ~6.2e9 — pre-mixing keeps the
-    // outer idMix input below 2³¹ for ANY source id. XOR (not
-    // addition) decorrelates co-probing sources nonlinearly — adding
-    // a constant would shift, never reorder (the affine-mix pitfall).
-    val probesSub = probes.join(broadcast(scanK), Seq("cell"))
-      .withColumn("sub", pmod(
-        idMix(idMix(col("s_id")).bitwiseXOR(idMix(col("cell")))),
-        col("k_scan")))
-      .drop("k_scan")
+      .dropDuplicates("s_id", "c_id"))
+    val (cellsSub, probesSub) = scanCapped(cells, "t_id", probes, "s_id", cap)
     // Measured and REVERTED (r17): a shuffle_hash hint on the probe
     // side (the q5 lesson — the pair SMJ's (cell, sub) sorts feed a
     // window that re-sorts by (s_id, cell) anyway) read 38.0 s
@@ -819,6 +803,36 @@ object Similarity {
     // more than the two sorts it saves on this pair distribution, and
     // the SMJ shape is what the 0.83-tail depth rows were measured on.
     s11CellPairs(probesSub, cellsSub, Seq("cell", "sub"))
+  }
+
+  /** The per-(prober, cell) scan cap (see [[S11FlatScanCap]]): the
+    * residents `cells(resId, …, cell)` of a cell hash into
+    * k_scan = ⌈c_n / cap⌉ sub-cells by their own idMix, and each probe
+    * `probes(probeId, …, cell)` picks ONE sub by
+    * idMix(idMix(probeId) XOR idMix(cell)); the sub rides the JOIN KEY,
+    * so capped-away residents are never emitted. Returns the residents as
+    * `(cell, sub, …)` and the probes with `(c_n, k_scan, sub)` added; the
+    * ≤C-row counts frame is broadcast. s11's `flat` tier and its gate s15
+    * run this; the s15 oracle replays it (`counts`, `subs`, `psub`).
+    *
+    * BOTH XOR operands are pre-mixed into [0, 2³¹): a raw centroid-id
+    * operand overflows idMix's ANSI-safe ±8e9 contract at scale-corpus
+    * ids (every via=flat run at sf30+ threw ARITHMETIC_OVERFLOW), and an
+    * unmixed prober id narrows it to ~6.2e9 (r18). XOR, not addition:
+    * idMix is affine, so adding a constant would shift, never reorder. */
+  private def scanCapped(cells: DataFrame, resId: String, probes: DataFrame,
+      probeId: String, cap: Long): (DataFrame, DataFrame) = {
+    val counts = cells.groupBy(col("cell")).agg(count(lit(1)).as("c_n"))
+      .withColumn("k_scan", expr(s"(c_n + $cap - 1) div $cap"))
+    val cellsSub = cells.join(broadcast(counts), Seq("cell"))
+      .withColumn("sub", pmod(idMix(col(resId)), col("k_scan")))
+      .select((Seq("cell", "sub") ++ cells.columns.filter(_ != "cell"))
+        .map(col): _*)
+    val probesSub = probes.join(broadcast(counts), Seq("cell"))
+      .withColumn("sub", pmod(
+        idMix(idMix(col(probeId)).bitwiseXOR(idMix(col("cell")))),
+        col("k_scan")))
+    (cellsSub, probesSub)
   }
 
   /** s11's pair-source seam (the d13 `assignVia` convention): `exact`
@@ -1057,35 +1071,54 @@ object Similarity {
     cent.select(col("c_id"), col("c_emb"),
       explode(tableBucketsN(col("c_emb"), bits)).as("bucket"))
 
-  /** The bucket join + map-side max_by argmax of the linear tiers
-    * (d13 `lshflat`, s11 `flat`; the r14 production shape of s9's
-    * assignment): every vector scores only the centroids sharing at
-    * least one `bits`-wide sign bucket. Differences from s9 (the
-    * measurement query): no dropDuplicates — same-(vector, centroid)
-    * collisions across tables carry IDENTICAL (c_cos, c_id) sort keys,
-    * so the argmax is unchanged and the dedup exchange is pure cost; the
-    * argmax itself is a map-side-combinable max_by (struct lexicographic:
-    * max rounded cosine, then LOWEST c_id via the negated id — exactly
-    * [[cellAssignedAgainst]]'s order), not a window, so the candidate
-    * mass partial-aggregates to one row per vector before the single
-    * exchange. A vector whose buckets hold no centroid falls back to a
-    * SENTINEL singleton cell (-vec_id - 1, disjoint from real c_ids): it
-    * simply isn't deduped — visible in the output as a never-dropped
-    * vector, never silently misclustered. */
+  /** The bucket join + map-side argmax of the linear tiers (d13
+    * `lshflat`, s11 `flat`): every vector scores only the centroids
+    * sharing at least one `bits`-wide sign bucket ([[bucketJoin]]) and
+    * takes their [[cellArgmax]]. The one difference from [[lshPick]]
+    * (the s9/s13/s14 measurement): no dropDuplicates — same-(vector,
+    * centroid) collisions across tables carry IDENTICAL (c_cos, c_id)
+    * sort keys, so the argmax is unchanged and the dedup exchange is pure
+    * cost. A vector whose buckets hold no centroid gets the sentinel
+    * singleton cell of [[argmaxOrSentinel]]: it simply isn't deduped —
+    * visible in the output as a never-dropped vector, never silently
+    * misclustered. */
   private def lshAssignCore(cb: DataFrame, e: DataFrame,
-      bits: Int): DataFrame = {
-    val assigned = e
-      .select(col("vec_id"), col("embedding"),
+      bits: Int): DataFrame =
+    argmaxOrSentinel(e, bucketJoin(e, cb, bits))
+
+  /** Every vector's `bits`-wide sign buckets joined to the bucketed
+    * codebook `cb(bucket, c_id, c_emb)`: one row per (vector, bucket,
+    * co-bucketed centroid), the probe side never leaving its scan
+    * partition. */
+  private def bucketJoin(e: DataFrame, cb: DataFrame, bits: Int): DataFrame =
+    e.select(col("vec_id"), col("embedding"),
         explode(tableBucketsN(col("embedding"), bits)).as("bucket"))
       .join(broadcast(cb), Seq("bucket"))
-      .withColumn("c_cos", round(cosine_sim(col("embedding"), col("c_emb")), 4))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("c_id"), struct(col("c_cos"), (-col("c_id")).as("nid")))
-        .as("cell"))
+
+  /** `e(vec_id, embedding)` with each vector's [[cellArgmax]] over its
+    * candidate rows `cand(vec_id, embedding, c_id, c_emb, …)` as `cell`;
+    * a vector with no candidate falls back to the SENTINEL singleton cell
+    * −vec_id − 1 (disjoint from real c_ids), a visible miss. */
+  private def argmaxOrSentinel(e: DataFrame, cand: DataFrame): DataFrame = {
+    val assigned = scored(cand).groupBy(col("vec_id"))
+      .agg(cellArgmax.as("cell"))
     e.join(assigned, Seq("vec_id"), "left")
       .select(col("vec_id"), col("embedding"),
         coalesce(col("cell"), -col("vec_id") - 1).as("cell"))
   }
+
+  /** The LSH bucket pick with its candidate count, the measured form of
+    * [[lshAssignCore]] that the gate fixtures s9, s13 and s14 report:
+    * [[bucketJoin]], then ONE row per (vector, centroid) — a pair that
+    * co-buckets in several tables counts once — then the [[cellArgmax]]
+    * as column `cell` and the candidate count as column `n`. A vector
+    * with no co-bucketed centroid has no row. The s9/s13/s14 oracles
+    * replay it as their distinct candidate CTE plus the rank-1 pick. */
+  private def lshPick(e: DataFrame, cb: DataFrame, bits: Int, cell: String,
+      n: String): DataFrame =
+    scored(bucketJoin(e, cb, bits).dropDuplicates("vec_id", "c_id"))
+      .groupBy(col("vec_id"))
+      .agg(cellArgmax.as(cell), count(lit(1)).as(n))
 
   /** Residents kept per sign-LSH bucket by the linear tiers' capped
     * codebook. With the flat tier's adaptive bit width pinning mean
@@ -1162,31 +1195,28 @@ object Similarity {
     * (`measurements/scale/SCALE_1000X_D13FLAT5.json`). */
   private[graft] val FlatTargetOcc = 8
 
-  /** The flat codebook size: C = ceil(N / [[FlatCellTarget]]) — linear
-    * in the corpus, against the standard rule's √. At harness SFs
-    * (N ≤ target) this degenerates to the [[NumCentroids]] floor, i.e.
-    * the standard codebook. */
-  private def flatCodebookSize(e: DataFrame): Int =
-    math.max(NumCentroids,
-      math.ceil(e.count().toDouble / FlatCellTarget).toInt)
+  /** The flat codebook size: C = max([[NumCentroids]], ⌈N / target⌉) —
+    * linear in the corpus, against the standard rule's √. At the
+    * production [[FlatCellTarget]] and harness SFs (N ≤ target) this
+    * degenerates to the floor, i.e. the standard codebook. The s14 gate
+    * passes its tight [[S14CellTarget]]; its oracle replays the rule as
+    * the `kv` CTE. */
+  private def flatCodebookSize(e: DataFrame, target: Int): Int =
+    math.max(NumCentroids, math.ceil(e.count().toDouble / target).toInt)
 
-  /** The FLAT codebook at a given size, by the same idMix TakeOrdered
-    * seed rule as [[centroids]]. */
-  private def centroidsFlatK(e: DataFrame, k: Int): DataFrame =
-    e.orderBy(idMix(col("vec_id")), col("vec_id"))
-      .limit(k)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-
-  /** [[centroidsFlatK]] at the [[flatCodebookSize]] — the spec hook. */
+  /** [[seedCodebook]] at the production [[flatCodebookSize]] — the
+    * spec hook. */
   private[graft] def centroidsFlat(e: DataFrame): DataFrame =
-    centroidsFlatK(e, flatCodebookSize(e))
+    seedCodebook(e, flatCodebookSize(e, FlatCellTarget))
 
-  /** The adaptive bit width: 2^bits ≈ k / [[FlatTargetOcc]], floored at
-    * the fixed [[BitsPerTable]] so small codebooks stay on the oracle's
-    * 5-bit prefix. */
-  private def flatBits(k: Int): Int =
+  /** The adaptive bit width: bits = max([[BitsPerTable]],
+    * ⌈log2(k / occ)⌉), so mean bucket occupancy stays near `occ` as the
+    * codebook grows; the floor keeps small codebooks on the oracle's
+    * 5-bit prefix. Production passes [[FlatTargetOcc]], the s14 gate its
+    * tight [[S14TargetOcc]] (replayed as its oracle's `bitsv` CTE). */
+  private def flatBits(k: Int, occ: Int): Int =
     math.max(BitsPerTable,
-      math.ceil(math.log(k.toDouble / FlatTargetOcc) / math.log(2)).toInt)
+      math.ceil(math.log(k.toDouble / occ) / math.log(2)).toInt)
 
   /** The `lshflat` assignment tier (late r15) — the first d13 path
     * with no N^1.5 term BY CONSTRUCTION, closing the "honest boundary"
@@ -1214,10 +1244,10 @@ object Similarity {
     * codebook at 5 bits with a non-binding cap — vector-for-vector s9's
     * LSH assignment (spec-pinned). */
   private[graft] def lshFlatCellAssigned(e: DataFrame): DataFrame = {
-    val k = flatCodebookSize(e)
-    val bits = flatBits(k)
+    val k = flatCodebookSize(e, FlatCellTarget)
+    val bits = flatBits(k, FlatTargetOcc)
     lshAssignCore(
-      cappedCodebookN(centroidsFlatK(e, k), LshBucketCap, bits), e, bits)
+      cappedCodebookN(seedCodebook(e, k), LshBucketCap, bits), e, bits)
   }
 
   /** Super-cells probed per vector in the two-level assignment: 2 keeps
@@ -1299,14 +1329,7 @@ object Similarity {
       centGroups: DataFrame, e: DataFrame): DataFrame = {
     val probes =
       twoLevelProbes(supers, e, "vec_id", "embedding")
-    val assigned = probes.join(broadcast(centGroups), Seq("grp"))
-      .withColumn("c_cos", round(cosine_sim(col("embedding"), col("c_emb")), 4))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("c_id"), struct(col("c_cos"), (-col("c_id")).as("nid")))
-        .as("cell"))
-    e.join(assigned, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("embedding"),
-        coalesce(col("cell"), -col("vec_id") - 1).as("cell"))
+    argmaxOrSentinel(e, probes.join(broadcast(centGroups), Seq("grp")))
   }
 
   /** Scan-side top-[[TwoLevelProbe]] super-cells for each row of `e`:
@@ -1557,28 +1580,23 @@ object Similarity {
     * C ∝ √N): at 100 TB this entry IS the plan shape of the only
     * assignment tier whose cost does not bend. The DuckDB oracle
     * replays plane literals, bucket ids, the per-bucket idMix rank cap,
-    * both picks and the exact argmax bit-for-bit. */
+    * both picks and the exact argmax bit-for-bit.
+    *
+    * Gates the production code it measures: both picks are [[lshPick]]
+    * (the bucket join and [[cellArgmax]] of [[lshAssignCore]]), the
+    * capped side over [[cappedCodebook]], the exact side
+    * [[cellAssignedAgainst]]. */
   def s13LshCapAssign(s: SparkSession, dir: String): DataFrame = {
     val e = embeddings(s, dir)
     val cent = centroids(e)
-    def picked(cb: DataFrame, cell: String, n: String): DataFrame =
-      e.select(col("vec_id"), col("embedding"),
-          explode(tableBuckets(col("embedding"))).as("bucket"))
-        .join(broadcast(cb), Seq("bucket"))
-        .dropDuplicates("vec_id", "c_id")
-        .withColumn("c_cos",
-          round(cosine_sim(col("embedding"), col("c_emb")), 4))
-        .groupBy(col("vec_id"))
-        .agg(
-          max_by(col("c_id"), struct(col("c_cos"), (-col("c_id")).as("nid")))
-            .as(cell),
-          count(lit(1)).as(n))
-    val capPick = picked(cappedCodebook(cent, S13Cap), "cell_cap", "n_cand_cap")
-    val lshPick = picked(bucketedCodebook(cent), "cell_lsh", "n_cand_lsh")
+    val capPick = lshPick(e, cappedCodebook(cent, S13Cap), BitsPerTable,
+      "cell_cap", "n_cand_cap")
+    val uncapped = lshPick(e, bucketedCodebook(cent), BitsPerTable,
+      "cell_lsh", "n_cand_lsh")
     cellAssignedAgainst(cent, e)
       .select(col("vec_id"), col("cell").as("cell_exact"))
       .join(capPick, Seq("vec_id"), "left")
-      .join(lshPick, Seq("vec_id"), "left")
+      .join(uncapped, Seq("vec_id"), "left")
       .select(col("vec_id"),
         coalesce(col("cell_cap"), lit(-1L)).as("cell_cap"),
         coalesce(col("cell_lsh"), lit(-1L)).as("cell_lsh"),
@@ -1634,27 +1652,20 @@ object Similarity {
     * honesty reference (harness N·k only), not part of the production
     * plan. The DuckDB oracle replays the 42 plane literals, the flat
     * seed rank, the per-bucket idMix cap, both picks, and the adaptive
-    * k/bits arithmetic bit-for-bit. */
+    * k/bits arithmetic bit-for-bit.
+    *
+    * Gates the production code it measures: k and bits come from
+    * [[flatCodebookSize]] and [[flatBits]], the seeds from
+    * [[seedCodebook]], the cap from `cappedCodebookN`, and the pick is
+    * [[lshPick]] — [[lshFlatCellAssigned]]'s construction at the tight
+    * pins. */
   def s14FlatAssign(s: SparkSession, dir: String): DataFrame = {
     val e = embeddings(s, dir)
-    val n = e.count()
-    val k = math.max(NumCentroids,
-      math.ceil(n.toDouble / S14CellTarget).toInt)
-    val bits = math.max(BitsPerTable,
-      math.ceil(math.log(k.toDouble / S14TargetOcc) / math.log(2)).toInt)
-    val cent = centroidsFlatK(e, k)
-    val cb = cappedCodebookN(cent, S14Cap, bits)
-    val pick = e.select(col("vec_id"), col("embedding"),
-        explode(tableBucketsN(col("embedding"), bits)).as("bucket"))
-      .join(broadcast(cb), Seq("bucket"))
-      .dropDuplicates("vec_id", "c_id")
-      .withColumn("c_cos",
-        round(cosine_sim(col("embedding"), col("c_emb")), 4))
-      .groupBy(col("vec_id"))
-      .agg(
-        max_by(col("c_id"), struct(col("c_cos"), (-col("c_id")).as("nid")))
-          .as("cell_flat"),
-        count(lit(1)).as("n_cand"))
+    val k = flatCodebookSize(e, S14CellTarget)
+    val bits = flatBits(k, S14TargetOcc)
+    val cent = seedCodebook(e, k)
+    val pick = lshPick(e, cappedCodebookN(cent, S14Cap, bits), bits,
+      "cell_flat", "n_cand")
     cellAssignedAgainst(cent, e)
       .select(col("vec_id"), col("cell").as("cell_exact"))
       .join(pick, Seq("vec_id"), "left")
@@ -1683,18 +1694,14 @@ object Similarity {
     * bucket cap): over the harness embeddings, cells are assigned by the
     * EXACT argmax (the d13 oracle path — the cap arithmetic is
     * tier-independent, so gating it over exact cells keeps the oracle
-    * to proven CTEs), each cell's residents hash into
-    * k_scan = ceil(|cell| / [[S15Cap]]) sub-cells by their own idMix,
-    * and each of the s2 query set's [[ProbeCells]] probed cells gets
-    * the prober's OWN sub choice — idMix(idMix(q_id) XOR idMix(cell)),
-    * BOTH operands pre-mixed into [0, 2³¹) so the outer affine mix
-    * never leaves its ANSI-safe range for any id (the r17 overflow
-    * lesson, tightened r18: an unmixed q_id XOR'd with a mixed cell
-    * narrows the id bound to ~6.2e9 — now oracle-replayed bit for bit
-    * including both inner mixes). One row per (q_id, probed cell):
-    * the cell population, k_scan, the chosen sub, and the number of
-    * residents actually scanned — an empty chosen sub is a visible
-    * n_scanned = 0 row, never an absent one.
+    * to proven CTEs), and the s2 query set's [[ProbeCells]] probes are
+    * capped at the tight [[S15Cap]]. It gates the production code it
+    * measures: the sub split and each prober's pick are [[scanCapped]],
+    * the helper s11's `flat` tier runs, and the probes are
+    * [[topProbes]]. One row per (q_id, probed cell): the cell
+    * population, k_scan, the chosen sub, and the number of residents
+    * actually scanned — an empty chosen sub is a visible n_scanned = 0
+    * row, never an absent one.
     *
     * Scale shape: identical to the production cap — the counts frame
     * is ≤C rows (broadcast), the sub rides the JOIN KEY so capped-away
@@ -1705,23 +1712,10 @@ object Similarity {
     val cent = centroids(e)
     val cells = cellAssignedAgainst(cent, e)
       .select(col("vec_id"), col("cell"))
-    val counts = cells.groupBy(col("cell")).agg(count(lit(1)).as("c_n"))
-      .withColumn("k_scan", expr(s"(c_n + $S15Cap - 1) div $S15Cap"))
-    val cellsSub = cells.join(broadcast(counts), Seq("cell"))
-      .withColumn("sub", pmod(idMix(col("vec_id")), col("k_scan")))
-      .select(col("cell"), col("sub"), col("vec_id"))
-    val wP = Window.partitionBy(col("q_id"))
-      .orderBy(col("p_cos").desc, col("c_id").asc)
-    val probes = querySet(e).join(broadcast(cent), lit(true))
-      .withColumn("p_cos", round(cosine_sim(col("q_emb"), col("c_emb")), 4))
-      .withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= ProbeCells)
-      .select(col("q_id"), col("c_id").as("cell"))
-    probes.join(broadcast(counts), Seq("cell"))
-      .withColumn("sub", pmod(
-        idMix(idMix(col("q_id")).bitwiseXOR(idMix(col("cell")))),
-        col("k_scan")))
-      .join(cellsSub, Seq("cell", "sub"), "left")
+    val probes = queryProbes(e, cent, "p_cos", "rn")
+      .select(col("q_id"), col("cell"))
+    val (cellsSub, probesSub) = scanCapped(cells, "vec_id", probes, "q_id", S15Cap)
+    probesSub.join(cellsSub, Seq("cell", "sub"), "left")
       .groupBy(col("q_id"), col("cell"), col("c_n"), col("k_scan"),
         col("sub"))
       .agg(count(col("vec_id")).as("n_scanned"))
@@ -1752,26 +1746,19 @@ object Similarity {
     * doubles to ~64–67% at a ~3× cut, and misses drop 25→11 per 20k.
     * For semantic dedup the failure mode is benign: a vector assigned
     * to its runner-up cell still lands with its cluster-mates whenever
-    * the cluster dominates both cells' co-occupancy. */
+    * the cluster dominates both cells' co-occupancy.
+    *
+    * Gates the production code it measures: the LSH side is [[lshPick]]
+    * over [[bucketedCodebook]] (the bucket join and [[cellArgmax]] that
+    * [[lshAssignCore]] runs), the exact side [[cellAssignedAgainst]]. */
   def s9LshAssign(s: SparkSession, dir: String): DataFrame = {
     val e = embeddings(s, dir)
     // both the LSH side and the exact reference side below assign
     // against the SAME codebook, so the agreement statistic stays a
     // property of the assignment mechanism
     val cent = centroids(e)
-    val cb = cent.select(col("c_id"), col("c_emb"),
-      explode(tableBuckets(col("c_emb"))).as("bucket"))
-    val vb = e.select(col("vec_id"), col("embedding"),
-      explode(tableBuckets(col("embedding"))).as("bucket"))
-    val wA = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_cos").desc, col("c_id").asc)
-    val approx = vb.join(broadcast(cb), Seq("bucket"))
-      .dropDuplicates("vec_id", "c_id") // co-bucket in several tables
-      .withColumn("c_cos", round(cosine_sim(col("embedding"), col("c_emb")), 4))
-      .withColumn("n_cand", count(lit(1)).over(Window.partitionBy(col("vec_id"))))
-      .withColumn("rn", row_number().over(wA))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("c_id").as("cell_lsh"), col("n_cand"))
+    val approx = lshPick(e, bucketedCodebook(cent), BitsPerTable,
+      "cell_lsh", "n_cand")
     cellAssignedAgainst(cent, e)
       .select(col("vec_id"), col("cell").as("cell_exact"))
       .join(approx, Seq("vec_id"), "left")
@@ -1841,9 +1828,7 @@ object Similarity {
     * DuckDB oracle. */
   def s4AnnPq(s: SparkSession, dir: String): DataFrame = {
     val e = embeddings(s, dir)
-    val seeds = e.orderBy(idMix(col("vec_id")), col("vec_id"))
-      .limit(NumCentroids)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
+    val seeds = seedCodebook(e, NumCentroids)
     val joined = e.join(broadcast(seeds), lit(true))
     val codeAggs = (0 until PqM).map { m =>
       val csq = dot_product(pqSub(col("c_emb"), m), pqSub(col("c_emb"), m))
@@ -1991,25 +1976,11 @@ object Similarity {
     // ONE fixed NumCentroids codebook serves BOTH halves — the IVF
     // coarse quantizer (cells + probes) and, sliced per subspace, the
     // PQ sub-centroid tables
-    val cent = e.orderBy(idMix(col("vec_id")), col("vec_id"))
-      .limit(NumCentroids)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    // IVF half: cell assignment + per-query probe list (s2's machinery;
-    // the argmax is the map-side max_by shape of cellAssignedAgainst —
-    // same (rounded cosine, -c_id) ordering, N rows across the exchange
-    // instead of N·C)
-    val cells = e.join(broadcast(cent), lit(true))
-      .withColumn("c_cos", round(cosine_sim(col("embedding"), col("c_emb")), 4))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("c_id"), struct(col("c_cos"), (-col("c_id")).as("nid")))
-        .as("cell"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_cos").desc, col("c_id").asc)
-    val probes = querySet(e).join(broadcast(cent), lit(true))
-      .withColumn("c_cos", round(cosine_sim(col("q_emb"), col("c_emb")), 4))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= ProbeCells)
-      .select(col("q_id"), col("c_id").as("cell"))
+    val cent = seedCodebook(e, NumCentroids)
+    // IVF half: s2's cell assignment + per-query probe list
+    val cells = cellAssignedAgainst(cent, e).select(col("vec_id"), col("cell"))
+    val probes = queryProbes(e, cent, "c_cos", "rn")
+      .select(col("q_id"), col("cell"))
     // PQ half: whole-corpus encoding (index build — s4's codes)
     val joined = e.join(broadcast(cent), lit(true))
     val codeAggs = (0 until PqM).map { m =>

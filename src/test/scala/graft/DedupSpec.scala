@@ -326,6 +326,17 @@ class DedupSpec extends SparkSpec {
     val stars2 = Dedup.connectedComponents(messy)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(stars2 == expect)
+    // a 300-node path runs several two-round batches; each superseded
+    // batch's checkpoint RDD is released, so once the result is
+    // materialized only its own checkpoint is still persistent
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet.toSet
+    val long = Dedup.connectedComponents((1L to 299L).map(i => (i, i + 1)).toDF("u", "v"))
+    assert(long.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      (2L to 300L).map((1L, _)).toSet)
+    val held = SharedStage.checkpointRdds(long).map(_.id).toSet
+    assert(held.size == 1)
+    assert(sc.getPersistentRDDs.keySet.toSet -- persisted == held)
   }
 
   test("d6 dup clusters: pairs transitively closed, min-id canonical, sizes consistent") {

@@ -450,32 +450,52 @@ class StreamingSpec extends SparkSpec {
        "and restarted on the same source, it admits what an " +
        "uninterrupted run does") {
     import spark.implicits._
+    import org.apache.spark.sql.{Dataset, Encoder}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamingOps.{IngestAdmitted, IngestArrival}
-    val batches = Seq(
+    import graft.streaming.StreamingOps.{Ev, IngestArrival, SessionOut}
+    // the query over `batches` run once straight through, then stopped
+    // after batch 2 and restarted from its checkpoint on the same source
+    def straightAndRestarted[A: Encoder, B: Encoder](batches: Seq[Seq[A]])(
+        query: Dataset[A] => Dataset[B]): (Seq[B], Seq[B]) = {
+      // each element of `lives` is one query lifetime over one checkpoint
+      def run(lives: Seq[Seq[Seq[A]]]): Seq[B] = {
+        val dir = Files.createTempDirectory("graft-st-restart").toString
+        val in = MemoryStream[A](spark)
+        val out = query(in.toDS())
+        lives.foreach { life =>
+          val q = out.writeStream.format("parquet")
+            .option("checkpointLocation", s"$dir/ckpt").option("path", s"$dir/out")
+            .outputMode("append").start()
+          try life.foreach { b => in.addData(b); q.processAllAvailable() }
+          finally q.stop()
+        }
+        spark.read.parquet(s"$dir/out").as[B].collect().toSeq
+      }
+      (run(Seq(batches)), run(Seq(batches.take(2), batches.drop(2))))
+    }
+    val (straight, restarted) = straightAndRestarted(Seq(
       Seq(IngestArrival(1L, "sA", "a", 10L, 1L), IngestArrival(2L, "sB", "b", 60L, 2L)),
       Seq(IngestArrival(3L, "sA", "c", 10L, 3L), IngestArrival(4L, "sB", "d", 50L, 4L)),
       Seq(IngestArrival(5L, "sA", "e", 10L, 5L), IngestArrival(6L, "sB", "f", 1L, 6L)),
       Seq(IngestArrival(7L, "sA", "g", 1L, 7L), IngestArrival(8L, "sB", "h", 1L, 8L)))
-    // each element of `lives` is one query lifetime over one checkpoint
-    def run(lives: Seq[Seq[Seq[IngestArrival]]]): Seq[IngestAdmitted] = {
-      val dir = Files.createTempDirectory("graft-st-restart").toString
-      val in = MemoryStream[IngestArrival](spark)
-      val admitted = StreamingOps.ingestAdmit(in.toDS(), quota = 3, budget = 100L)
-      lives.foreach { life =>
-        val q = admitted.writeStream.format("parquet")
-          .option("checkpointLocation", s"$dir/ckpt").option("path", s"$dir/out")
-          .outputMode("append").start()
-        try life.foreach { b => in.addData(b); q.processAllAvailable() }
-        finally q.stop()
-      }
-      spark.read.parquet(s"$dir/out").as[IngestAdmitted].collect().sortBy(_.doc_id).toSeq
-    }
-    val straight = run(Seq(batches))
+    )(StreamingOps.ingestAdmit(_, quota = 3, budget = 100L))
     // sA's count cap (3) closes on doc 5; sB's budget (100) on doc 4
-    assert(straight.map(d => (d.doc_id, d.admit_idx, d.budget_used)) ==
+    assert(straight.sortBy(_.doc_id).map(d => (d.doc_id, d.admit_idx, d.budget_used)) ==
       Seq((1L, 1, 10L), (2L, 1, 60L), (3L, 2, 20L), (4L, 2, 110L), (5L, 3, 30L)))
-    assert(run(Seq(batches.take(2), batches.drop(2))) == straight)
+    assert(restarted.sortBy(_.doc_id) == straight.sortBy(_.doc_id))
+    // the sessionizer's open sessions live in keyed state: user 1's
+    // second session and user 2's first both span the restart
+    def ev(id: Long, user: Long, ts: Long) = Ev(id, user, ts, "view", 0.0)
+    val (sStraight, sRestarted) = straightAndRestarted(Seq(
+      Seq(ev(1L, 1L, 0L), ev(2L, 1L, 5L), ev(3L, 2L, 0L)),
+      Seq(ev(4L, 1L, 30L), ev(5L, 2L, 8L)),
+      Seq(ev(6L, 1L, 35L), ev(7L, 2L, 50L)),
+      Seq(ev(8L, 1L, 100L), ev(9L, 2L, 55L)))
+    )(StreamingOps.sessionize(_, gapUs = 10L))
+    val bySession = Ordering.by((o: SessionOut) => (o.user_id, o.start_us))
+    assert(sStraight.sorted(bySession) == Seq(SessionOut(1L, 0L, 5L, 2),
+      SessionOut(1L, 30L, 35L, 2), SessionOut(2L, 0L, 8L, 2)))
+    assert(sRestarted.sorted(bySession) == sStraight.sorted(bySession))
   }
 
   // ---- bounded-memory pins for the admission handlers (VERDICT r11:

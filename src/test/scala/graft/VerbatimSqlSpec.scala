@@ -319,6 +319,18 @@ class VerbatimSqlSpec extends SparkSpec {
       """SELECT t.id, t.Diff, u.k FROM
         |(SELECT a.id, a.x - a.y AS Diff FROM sc_a a WHERE (a.x - a.y) > 50) t
         |JOIN (SELECT k, Diff FROM sc_d WHERE Diff = 1) u ON t.id = u.k""".stripMargin)
+    // the sibling block defines Diff too, but its WHERE Diff is sc_d's
+    // real column (SQLite resolves it column-first): only the block the
+    // analyzer rejected is rewritten
+    assertRewrites(
+      """SELECT t.id, u.k FROM
+        |(SELECT a.id, a.x - a.y AS Diff FROM sc_a a WHERE Diff > 50) t
+        |JOIN (SELECT k, Diff * 10 AS Diff FROM sc_d WHERE Diff = 1) u
+        |ON t.id = u.k""".stripMargin,
+      """SELECT t.id, u.k FROM
+        |(SELECT a.id, a.x - a.y AS Diff FROM sc_a a WHERE (a.x - a.y) > 50) t
+        |JOIN (SELECT k, Diff * 10 AS Diff FROM sc_d WHERE Diff = 1) u
+        |ON t.id = u.k""".stripMargin)
   }
 
   test("alias-in-WHERE rewrite: clamped at set operators — a sibling " +
