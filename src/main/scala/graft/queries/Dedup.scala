@@ -1482,21 +1482,26 @@ object Dedup {
     s"list_sum(list_transform(generate_series(1, len($emb)), i -> CAST($emb[i] AS DOUBLE) * ($lit)[i]))"
   }
 
-  /** The brute-force all-pairs-Jaccard oracle core shared by d3 and d6
-    * (and, package-wide, by st2's streaming-banding check and p2's funnel
-    * near-dup stage): a `sh` shingle CTE and a `pairs(doc_a, doc_b,
-    * jaccard)` CTE holding every pair at Jaccard >= 0.5 (doc_a < doc_b). */
-  private[graft] val d3PairsSqlCtes: String =
-    """sh AS (
-      |  SELECT doc_id, len(shs) AS n_sh, unnest(shs) AS sh FROM (
-      |    SELECT doc_id,
-      |           CASE WHEN len(string_split(text, ' ')) >= 3 THEN
+  /** Each document's distinct word 3-shingles as the list `shs` (empty
+    * under three words), the shingle rule of the d2 and d3 oracles. */
+  private val shingleListSql: String =
+    """CASE WHEN len(string_split(text, ' ')) >= 3 THEN
       |             list_distinct(list_transform(
       |               generate_series(1, len(string_split(text, ' ')) - 2),
       |               i -> string_split(text, ' ')[i] || ' ' ||
       |                    string_split(text, ' ')[i+1] || ' ' ||
       |                    string_split(text, ' ')[i+2]))
-      |           ELSE CAST([] AS VARCHAR[]) END AS shs
+      |           ELSE CAST([] AS VARCHAR[]) END AS shs""".stripMargin
+
+  /** The brute-force all-pairs-Jaccard oracle core shared by d3 and d6
+    * (and, package-wide, by st2's streaming-banding check and p2's funnel
+    * near-dup stage): a `sh` shingle CTE and a `pairs(doc_a, doc_b,
+    * jaccard)` CTE holding every pair at Jaccard >= 0.5 (doc_a < doc_b). */
+  private[graft] val d3PairsSqlCtes: String =
+    s"""sh AS (
+      |  SELECT doc_id, len(shs) AS n_sh, unnest(shs) AS sh FROM (
+      |    SELECT doc_id,
+      |           $shingleListSql
       |    FROM documents)
       |),
       |pairs AS (
@@ -1570,6 +1575,61 @@ object Dedup {
       |  FROM merged GROUP BY doc_id
       |)""".stripMargin
 
+  /** Connected components over `pairs(doc_a, doc_b)` as a recursive
+    * closure (the query needs `WITH RECURSIVE`): `edges` makes the pairs
+    * symmetric, `reach(node, lab)` closes (node, label) over them (UNION
+    * dedup bounds it), and `comp(doc_id, cluster_id)` takes the minimum
+    * reachable label — exactly the engine's star root. Used by d6, d7,
+    * d9, d14, p2 (over its survivor pairs) and p4. */
+  private[queries] def componentCtes(pairs: String): String =
+    s"""edges AS (
+       |  SELECT doc_a AS u, doc_b AS v FROM $pairs
+       |  UNION SELECT doc_b, doc_a FROM $pairs
+       |),
+       |reach(node, lab) AS (
+       |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
+       |  UNION
+       |  SELECT e.v, r.lab FROM reach r JOIN edges e ON e.u = r.node
+       |),
+       |comp AS (
+       |  SELECT node AS doc_id, min(lab) AS cluster_id
+       |  FROM reach GROUP BY node
+       |)""".stripMargin
+
+  /** The rounded cosine of the pair `a`, `b` over normed columns. Used
+    * by d13, d13b, p5 and p6 (through [[d13PairsSql]]) and st10. */
+  private[queries] val pairCosineSql: String =
+    Similarity.cosineSql("a.embedding", "a.nrm", "b.embedding", "b.nrm")
+
+  /** d13's pair rule as a FROM … WHERE tail: the pairs `a`, `b` of
+    * `cells(vec_id, embedding, nrm, cell, sub)` in one (cell, sub) with
+    * `a.vec_id < b.vec_id` and [[pairCosineSql]] ≥ [[D13Threshold]].
+    * Used by d13, d13b, p5 and p6. */
+  private[queries] def d13PairsSql(cells: String): String =
+    s"""FROM $cells a JOIN $cells b
+       |    ON a.cell = b.cell AND a.sub = b.sub AND a.vec_id < b.vec_id
+       |  WHERE $pairCosineSql >= $D13Threshold""".stripMargin
+
+  /** The greedy keep-first rule over `qual(vec_id, cell, kept_by,
+    * cosine)`: each vector keeps its smallest qualifying `kept_by`. Used
+    * by d13, d13b and st10. */
+  private[queries] val keeperSelectSql: String =
+    """SELECT vec_id, cell, kept_by, cosine FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY vec_id
+      |             ORDER BY kept_by ASC) AS rn
+      |  FROM qual
+      |) WHERE rn = 1 ORDER BY vec_id""".stripMargin
+
+  /** d13's answer over the sub-split cells `cells`: the [[d13PairsSql]]
+    * pairs as `qual`, then [[keeperSelectSql]]. Used by d13 and d13b. */
+  private def d13KeeperSql(cells: String): String =
+    s"""qual AS (
+       |  SELECT b.vec_id, b.cell, a.vec_id AS kept_by,
+       |         $pairCosineSql AS cosine
+       |  ${d13PairsSql(cells)}
+       |)
+       |$keeperSelectSql""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
     "d1_dedup_exact" ->
       """WITH g AS (
@@ -1580,22 +1640,16 @@ object Dedup {
         |       doc_id = min(doc_id) OVER (PARTITION BY fp) AS is_keeper
         |FROM g ORDER BY doc_id""".stripMargin,
     "d2_ngram_jaccard" ->
-      """WITH sh0 AS (
+      s"""WITH sh0 AS (
         |  SELECT source, doc_id, len(shs) AS n_sh, unnest(shs) AS sh FROM (
         |    SELECT source, doc_id,
-        |           CASE WHEN len(string_split(text, ' ')) >= 3 THEN
-        |             list_distinct(list_transform(
-        |               generate_series(1, len(string_split(text, ' ')) - 2),
-        |               i -> string_split(text, ' ')[i] || ' ' ||
-        |                    string_split(text, ' ')[i+1] || ' ' ||
-        |                    string_split(text, ' ')[i+2]))
-        |           ELSE CAST([] AS VARCHAR[]) END AS shs
+        |           $shingleListSql
         |    FROM documents)
         |),
         |sh AS (  -- doc-frequency cap, mirroring the engine's stop-shingle filter
         |  SELECT * FROM (
         |    SELECT *, count(*) OVER (PARTITION BY source, sh) AS df FROM sh0
-        |  ) WHERE df <= 50
+        |  ) WHERE df <= $MaxShingleDocFreq
         |)
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter,
         |       round(CAST(count(*) AS DOUBLE)
@@ -1694,19 +1748,7 @@ object Dedup {
     // doc's own id, cluster sizes, and the fixed-point effective mass
     "d14_soft_dedup_weights" ->
       s"""WITH RECURSIVE $d3PairsSqlCtes,
-         |edges AS (
-         |  SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs
-         |),
-         |reach(node, lab) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.v, r.lab FROM reach r JOIN edges e ON e.u = r.node
-         |),
-         |comp AS (
-         |  SELECT node AS doc_id, min(lab) AS cluster_id
-         |  FROM reach GROUP BY node
-         |),
+         |${componentCtes("pairs")},
          |tokd AS (
          |  SELECT doc_id,
          |         CAST(len(string_split(text, ' ')) AS BIGINT) AS tok
@@ -1726,24 +1768,10 @@ object Dedup {
          |FROM cl c JOIN sz s USING (cluster_id)
          |ORDER BY c.doc_id""".stripMargin,
     "d6_dup_clusters" ->
-      // Connected components over the same brute-force pair set, as a
-      // recursive CTE: `reach` closes (node, label) over the symmetric
-      // edge relation (UNION dedup bounds it), and the component id is
-      // the minimum reachable label — exactly the engine's star root.
+      // Connected components over the same brute-force pair set
+      // ([[componentCtes]]), with each component's size.
       s"""WITH RECURSIVE $d3PairsSqlCtes,
-         |edges AS (
-         |  SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs
-         |),
-         |reach(node, lab) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.v, r.lab FROM reach r JOIN edges e ON e.u = r.node
-         |),
-         |comp AS (
-         |  SELECT node AS doc_id, min(lab) AS cluster_id
-         |  FROM reach GROUP BY node
-         |),
+         |${componentCtes("pairs")},
          |sz AS (
          |  SELECT cluster_id, count(*) AS cluster_size
          |  FROM comp GROUP BY cluster_id
@@ -1757,35 +1785,16 @@ object Dedup {
       // (identical IEEE ops, rounded to 4 before the argmax rank, so the
       // winner choice replays bit-for-bit)
       s"""WITH RECURSIVE $d3PairsSqlCtes,
-         |edges AS (
-         |  SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs
-         |),
-         |reach(node, lab) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.v, r.lab FROM reach r JOIN edges e ON e.u = r.node
-         |),
-         |comp AS (
-         |  SELECT node AS doc_id, min(lab) AS cluster_id
-         |  FROM reach GROUP BY node
-         |),
+         |${componentCtes("pairs")},
          |qd AS (
          |  SELECT doc_id,
-         |         CAST(len(string_split(text, ' ')) AS DOUBLE) AS n_words,
-         |         CAST(len(list_filter(string_split(text, ' '),
-         |              w -> w IN ('the','a','of','to','in','and'))) AS DOUBLE)
-         |           AS stop_hits,
-         |         CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
-         |           / CAST(n_chars AS DOUBLE) AS punct_ratio
+         |         ${TextAnalysis.qualityInputsSql}
          |  FROM documents
          |  WHERE doc_id IN (SELECT doc_id FROM comp)
          |),
          |q AS (
          |  SELECT doc_id,
-         |         round(0.5 * least(n_words / 50.0, 1.0)
-         |           + 0.3 * (1.0 - punct_ratio)
-         |           + 0.2 * least((stop_hits / n_words) * 5.0, 1.0), 4)
+         |         round(${TextAnalysis.qualitySql}, 4)
          |           AS quality
          |  FROM qd
          |),
@@ -1806,19 +1815,7 @@ object Dedup {
       // same component closure; survivors = docs that are not a
       // non-root member of any component
       s"""WITH RECURSIVE $d3PairsSqlCtes,
-         |edges AS (
-         |  SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs
-         |),
-         |reach(node, lab) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.v, r.lab FROM reach r JOIN edges e ON e.u = r.node
-         |),
-         |comp AS (
-         |  SELECT node AS doc_id, min(lab) AS cluster_id
-         |  FROM reach GROUP BY node
-         |),
+         |${componentCtes("pairs")},
          |drops AS (SELECT doc_id FROM comp WHERE doc_id <> cluster_id)
          |SELECT d.source, count(*) AS n_docs,
          |       count(*) - count(x.doc_id) AS n_kept,
@@ -1835,8 +1832,7 @@ object Dedup {
       s"""WITH sg AS (
          |  SELECT vec_id, label, embedding,
          |         $bits AS bkt,
-         |         sqrt(list_sum(list_transform(embedding,
-         |              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+         |         ${Similarity.normSql("embedding")} AS nrm
          |  FROM embeddings
          |),
          |capped AS (  -- block cap, mirroring the engine's D5MaxBlock filter
@@ -1963,20 +1959,7 @@ object Dedup {
       s"""WITH ${Similarity.sharedOracleCtes},
          |${Similarity.cellsOracleCtes},
          |${Similarity.boundedSubCtes("cells", "bcells")},
-         |qual AS (
-         |  SELECT b.vec_id, b.cell, a.vec_id AS kept_by,
-         |         ${Similarity.cosineSql("a.embedding", "a.nrm",
-                      "b.embedding", "b.nrm")} AS cosine
-         |  FROM bcells a JOIN bcells b
-         |    ON a.cell = b.cell AND a.sub = b.sub AND a.vec_id < b.vec_id
-         |  WHERE ${Similarity.cosineSql("a.embedding", "a.nrm",
-                      "b.embedding", "b.nrm")} >= $D13Threshold
-         |)
-         |SELECT vec_id, cell, kept_by, cosine FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY vec_id
-         |             ORDER BY kept_by ASC) AS rn
-         |  FROM qual
-         |) WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+         |${d13KeeperSql("bcells")}""".stripMargin,
     // d13b: the same cent seeds (ORGANIC en), the planted augmentation
     // replayed with exact float adds, assignment + threshold + argmin
     // over the augmented normed corpus
@@ -1996,37 +1979,11 @@ object Dedup {
          |                ELSE b.embedding[CAST(i AS INT)] END)
          |  FROM embeddings e CROSS JOIN base b
          |),
-         |aug_en AS (
-         |  SELECT vec_id, embedding,
-         |         sqrt(list_sum(list_transform(embedding,
-         |              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-         |  FROM aug
-         |),
-         |acells AS (
-         |  SELECT vec_id, embedding, nrm, cell FROM (
-         |    SELECT a.vec_id, a.embedding, a.nrm, c.c_id AS cell,
-         |           row_number() OVER (PARTITION BY a.vec_id
-         |             ORDER BY ${Similarity.cosineSql("a.embedding", "a.nrm",
-                          "c.c_emb", "c.c_nrm")} DESC,
-         |                      c.c_id ASC) AS rn
-         |    FROM aug_en a CROSS JOIN cent c
-         |  ) WHERE rn = 1
-         |),
+         |${Similarity.normedCte("aug_en", "aug")},
+         |${Similarity.rankedCellsCte("acells", "aug_en a", "cent c",
+              Similarity.EnRow, "= 1")},
          |${Similarity.boundedSubCtes("acells", "bacells")},
-         |qual AS (
-         |  SELECT b.vec_id, b.cell, a.vec_id AS kept_by,
-         |         ${Similarity.cosineSql("a.embedding", "a.nrm",
-                      "b.embedding", "b.nrm")} AS cosine
-         |  FROM bacells a JOIN bacells b
-         |    ON a.cell = b.cell AND a.sub = b.sub AND a.vec_id < b.vec_id
-         |  WHERE ${Similarity.cosineSql("a.embedding", "a.nrm",
-                      "b.embedding", "b.nrm")} >= $D13Threshold
-         |)
-         |SELECT vec_id, cell, kept_by, cosine FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY vec_id
-         |             ORDER BY kept_by ASC) AS rn
-         |  FROM qual
-         |) WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+         |${d13KeeperSql("bacells")}""".stripMargin,
   )
 
 }

@@ -434,6 +434,61 @@ object EventQueries {
     "e13_hourly_anomaly" -> e13HourlyAnomaly _,
   )
 
+  /** e3's session derivation as oracle CTEs: `e` flags each event that
+    * opens a session (first of its user, or more than 30 min after the
+    * previous one), and `s` numbers each event's session by the running
+    * count of flags. Used by e3 and st5. */
+  private[queries] val sessionCtes: String =
+    """e AS (
+      |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+      |         CASE WHEN lag(epoch_us(ts)) OVER w IS NULL THEN 1
+      |              WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w
+      |                   > 30 * 60 * 1000000 THEN 1
+      |              ELSE 0 END AS is_new
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+      |), s AS (
+      |  SELECT user_id, ts_us,
+      |         sum(is_new) OVER (PARTITION BY user_id
+      |           ORDER BY ts_us, event_id
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
+      |  FROM e
+      |)""".stripMargin
+
+  /** e8's independent funnel formulation over the events of `events` (a
+    * table with an optional WHERE): three chained min-after-previous-stage
+    * aggregations over a (ts, event_id) sort key, and each user's
+    * deepest stage reached. Used by e8 and, cut at the snapshot instant,
+    * st6. */
+  private[queries] def funnelOracleSql(events: String): String =
+    s"""WITH e AS (
+       |  SELECT user_id, event_type,
+       |         lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
+       |           || lpad(CAST(event_id AS VARCHAR), 10, '0') AS k
+       |  FROM $events
+       |), u AS (
+       |  SELECT DISTINCT user_id FROM e
+       |), v AS (
+       |  SELECT user_id, min(k) AS kv FROM e
+       |  WHERE event_type = 'view' GROUP BY 1
+       |), c AS (
+       |  SELECT e.user_id, min(k) AS kc FROM e JOIN v USING (user_id)
+       |  WHERE event_type = 'click' AND k > kv GROUP BY e.user_id
+       |), p AS (
+       |  SELECT e.user_id, min(k) AS kp FROM e JOIN c USING (user_id)
+       |  WHERE event_type = 'purchase' AND k > kc GROUP BY e.user_id
+       |)
+       |SELECT u.user_id,
+       |       CASE WHEN p.user_id IS NOT NULL THEN 3
+       |            WHEN c.user_id IS NOT NULL THEN 2
+       |            WHEN v.user_id IS NOT NULL THEN 1
+       |            ELSE 0 END AS reached
+       |FROM u
+       |LEFT JOIN v USING (user_id)
+       |LEFT JOIN c USING (user_id)
+       |LEFT JOIN p USING (user_id)
+       |ORDER BY u.user_id""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
     "e1_user_journey" ->
       """WITH e AS (
@@ -464,21 +519,7 @@ object EventQueries {
         |         / 100.0 AS rolling_sum
         |FROM e ORDER BY user_id, ts_us, event_id""".stripMargin,
     "e3_sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |         CASE WHEN lag(epoch_us(ts)) OVER w IS NULL THEN 1
-        |              WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w
-        |                   > 30 * 60 * 1000000 THEN 1
-        |              ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-        |), s AS (
-        |  SELECT user_id, ts_us,
-        |         sum(is_new) OVER (PARTITION BY user_id
-        |           ORDER BY ts_us, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-        |  FROM e
-        |)
+      s"""WITH $sessionCtes
         |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
         |       count(*) AS n_events,
         |       min(ts_us) AS start_us, max(ts_us) AS end_us,
@@ -537,34 +578,7 @@ object EventQueries {
          |GROUP BY 1, 2, 3 ORDER BY w.start_us""".stripMargin,
     // independent formulation: three chained min-after-previous-stage
     // aggregations instead of the engine's sorted-sequence state machine
-    "e8_funnel" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type,
-        |         lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-        |           || lpad(CAST(event_id AS VARCHAR), 10, '0') AS k
-        |  FROM events
-        |), u AS (
-        |  SELECT DISTINCT user_id FROM e
-        |), v AS (
-        |  SELECT user_id, min(k) AS kv FROM e
-        |  WHERE event_type = 'view' GROUP BY 1
-        |), c AS (
-        |  SELECT e.user_id, min(k) AS kc FROM e JOIN v USING (user_id)
-        |  WHERE event_type = 'click' AND k > kv GROUP BY e.user_id
-        |), p AS (
-        |  SELECT e.user_id, min(k) AS kp FROM e JOIN c USING (user_id)
-        |  WHERE event_type = 'purchase' AND k > kc GROUP BY e.user_id
-        |)
-        |SELECT u.user_id,
-        |       CASE WHEN p.user_id IS NOT NULL THEN 3
-        |            WHEN c.user_id IS NOT NULL THEN 2
-        |            WHEN v.user_id IS NOT NULL THEN 1
-        |            ELSE 0 END AS reached
-        |FROM u
-        |LEFT JOIN v USING (user_id)
-        |LEFT JOIN c USING (user_id)
-        |LEFT JOIN p USING (user_id)
-        |ORDER BY u.user_id""".stripMargin,
+    "e8_funnel" -> funnelOracleSql("events"),
     "e9_cohort_retention" ->
       """WITH b AS (
         |  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day

@@ -433,41 +433,23 @@ object Pipeline {
   )
 
   /** The per-doc staged-flag CTE chain (d → f → g → h) shared by the p1
-    * and p2 oracles: identical quality/langid expression trees (lifted
-    * from the t2/t3 oracles) and the same running-count dedup window. */
+    * and p2 oracles: the t2/t3 quality and langid expressions
+    * ([[TextAnalysis.qualitySql]], [[TextAnalysis.langHitsSql]],
+    * [[TextAnalysis.langPredictSql]]) and the same running-count dedup
+    * window. */
   private val funnelCtes: String =
-      """d AS (
+      s"""d AS (
         |  SELECT doc_id,
         |         CAST(len(string_split(text, ' ')) AS BIGINT) AS tok,
-        |         CAST(len(string_split(text, ' ')) AS DOUBLE) AS n_words,
-        |         CAST(len(list_filter(string_split(text, ' '),
-        |              w -> w IN ('the','a','of','to','in','and'))) AS DOUBLE)
-        |           AS stop_hits,
-        |         CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
-        |           / CAST(n_chars AS DOUBLE) AS punct_ratio,
-        |         len(list_filter(string_split(text, ' '),
-        |             w -> w IN ('the','a','of','to','in','and'))) AS he,
-        |         len(list_filter(string_split(text, ' '),
-        |             w -> w IN ('der','die','und','das','ein','von'))) AS hd,
-        |         len(list_filter(string_split(text, ' '),
-        |             w -> w IN ('le','la','les','et','un','des'))) AS hf,
-        |         len(list_filter(string_split(text, ' '),
-        |             w -> w IN ('el','los','las','una','que','es'))) AS hs,
-        |         len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS cjk,
+        |         ${TextAnalysis.qualityInputsSql},
+        |         ${TextAnalysis.langHitsSql},
         |         md5(text) AS fp
         |  FROM documents
         |), f AS (
         |  SELECT doc_id, tok, fp,
-        |         0.5 * least(n_words / 50.0, 1.0)
-        |           + 0.3 * (1.0 - punct_ratio)
-        |           + 0.2 * least((stop_hits / n_words) * 5.0, 1.0) >= 0.5
+        |         ${TextAnalysis.qualitySql} >= 0.5
         |           AS q_pass,
-        |         CASE WHEN cjk > 0 THEN 'zh'
-        |              WHEN greatest(he, hd, hf, hs) = 0 THEN 'und'
-        |              WHEN he >= greatest(hd, hf, hs) THEN 'en'
-        |              WHEN hd >= greatest(hf, hs) THEN 'de'
-        |              WHEN hf >= hs THEN 'fr'
-        |              ELSE 'es' END AS predicted
+        |         ${TextAnalysis.langPredictSql}
         |  FROM d
         |), g AS (
         |  SELECT doc_id, tok, fp, q_pass,
@@ -483,6 +465,29 @@ object Pipeline {
         |  FROM g
         |)""".stripMargin
 
+  /** The b–d stages of [[funnelCtes]]: (stage, pass flag, token column). */
+  private val funnelStages: Seq[(String, String, String)] = Seq(
+    ("b_quality", "q_pass", "tok"), ("c_langid", "l_pass", "tok"),
+    ("d_dedup", "d_pass", "tok"))
+
+  /** A funnel's report over the per-doc flag rows of `from`: the
+    * 'a_ingest' row counts every doc and sums `tok`, each (stage, flag,
+    * tok) row counts the docs passing `flag` and sums their `tok`
+    * column, and `extra` rows follow verbatim; ordered by stage. Used by
+    * p1, p2, p3, p5 and p6. */
+  private def stageRowsSql(from: String, stages: Seq[(String, String, String)],
+      extra: String*): String = {
+    val ingest =
+      s"""SELECT 'a_ingest' AS stage, count(*) AS n_docs,
+         |         CAST(sum(tok) AS BIGINT) AS n_tokens FROM $from""".stripMargin
+    val rows = stages.map { case (stage, flag, tok) =>
+      s"""SELECT '$stage', count(*) FILTER ($flag),
+         |         CAST(coalesce(sum($tok) FILTER ($flag), 0) AS BIGINT) FROM $from""".stripMargin
+    }
+    ((ingest +: rows) ++ extra)
+      .mkString("SELECT * FROM (\n  ", "\n  UNION ALL\n  ", "\n) ORDER BY stage")
+  }
+
   /** The funnels replayed in DuckDB: [[funnelCtes]] for the staged flags,
     * a UNION ALL in place of stack; p2 adds the brute-force near-dup
     * pair set ([[Dedup.d3PairsSqlCtes]]) restricted to stage-d
@@ -497,19 +502,7 @@ object Pipeline {
     // the same corpus token total.
     "p4_policy_savings" ->
       s"""WITH RECURSIVE ${Dedup.d3PairsSqlCtes},
-         |edges AS (
-         |  SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs
-         |),
-         |reach(node, lab) AS (
-         |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-         |  UNION
-         |  SELECT e.v, r.lab FROM reach r JOIN edges e ON e.u = r.node
-         |),
-         |comp AS (
-         |  SELECT node AS doc_id, min(lab) AS cluster_id
-         |  FROM reach GROUP BY node
-         |),
+         |${Dedup.componentCtes("pairs")},
          |drops AS (SELECT doc_id FROM comp WHERE doc_id <> cluster_id),
          |${Dedup.d10SpansSqlCtes},
          |${Dedup.d11MergeSqlCtes}, tokd AS (
@@ -546,10 +539,7 @@ object Pipeline {
         |${Similarity.boundedSubCtes("sc", "bsc")},
         |sdrop AS (
         |  SELECT DISTINCT b.vec_id AS doc_id
-        |  FROM bsc a JOIN bsc b
-        |    ON a.cell = b.cell AND a.sub = b.sub AND a.vec_id < b.vec_id
-        |  WHERE ${Similarity.cosineSql("a.embedding", "a.nrm",
-                     "b.embedding", "b.nrm")} >= ${Dedup.D13Threshold}
+        |  ${Dedup.d13PairsSql("bsc")}
         |),
         |${Dedup.d10SpansSqlCtes},
         |${Dedup.d11MergeSqlCtes},
@@ -593,28 +583,9 @@ object Pipeline {
         |         b.f_pass AND (m.th = 65536 OR b.u4 < m.th_hex) AS g_pass
         |  FROM base b LEFT JOIN mplan3 m USING (source)
         |)
-        |SELECT * FROM (
-        |  SELECT 'a_ingest' AS stage, count(*) AS n_docs,
-        |         CAST(sum(tok) AS BIGINT) AS n_tokens FROM scored
-        |  UNION ALL
-        |  SELECT 'b_quality', count(*) FILTER (q_pass),
-        |         CAST(coalesce(sum(tok) FILTER (q_pass), 0) AS BIGINT) FROM scored
-        |  UNION ALL
-        |  SELECT 'c_langid', count(*) FILTER (l_pass),
-        |         CAST(coalesce(sum(tok) FILTER (l_pass), 0) AS BIGINT) FROM scored
-        |  UNION ALL
-        |  SELECT 'd_dedup', count(*) FILTER (d_pass),
-        |         CAST(coalesce(sum(tok) FILTER (d_pass), 0) AS BIGINT) FROM scored
-        |  UNION ALL
-        |  SELECT 'e_semantic', count(*) FILTER (f_pass),
-        |         CAST(coalesce(sum(tok) FILTER (f_pass), 0) AS BIGINT) FROM scored
-        |  UNION ALL
-        |  SELECT 'f_excise', count(*) FILTER (f_pass),
-        |         CAST(coalesce(sum(tok2) FILTER (f_pass), 0) AS BIGINT) FROM scored
-        |  UNION ALL
-        |  SELECT 'g_mixture', count(*) FILTER (g_pass),
-        |         CAST(coalesce(sum(tok2) FILTER (g_pass), 0) AS BIGINT) FROM scored
-        |) ORDER BY stage""".stripMargin
+        |${stageRowsSql("scored", funnelStages ++ Seq(
+              ("e_semantic", "f_pass", "tok"), ("f_excise", "f_pass", "tok2"),
+              ("g_mixture", "g_pass", "tok2")))}""".stripMargin
     },
     // p5: the staged-flag chain + the s2 cell CTEs (organic corpus),
     // survivor-restricted within-cell threshold pairs as the drop set,
@@ -630,46 +601,16 @@ object Pipeline {
         |${Similarity.boundedSubCtes("sc", "bsc")},
         |sdrop AS (  -- any qualifying lower-id surviving neighbor => drop
         |  SELECT DISTINCT b.vec_id AS doc_id
-        |  FROM bsc a JOIN bsc b
-        |    ON a.cell = b.cell AND a.sub = b.sub AND a.vec_id < b.vec_id
-        |  WHERE ${Similarity.cosineSql("a.embedding", "a.nrm",
-                     "b.embedding", "b.nrm")} >= ${Dedup.D13Threshold}
+        |  ${Dedup.d13PairsSql("bsc")}
         |),
         |h3 AS (
         |  SELECT h.*, h.d_pass AND sdrop.doc_id IS NULL AS f_pass
         |  FROM h LEFT JOIN sdrop USING (doc_id)
         |)
-        |SELECT * FROM (
-        |  SELECT 'a_ingest' AS stage, count(*) AS n_docs,
-        |         CAST(sum(tok) AS BIGINT) AS n_tokens FROM h3
-        |  UNION ALL
-        |  SELECT 'b_quality', count(*) FILTER (q_pass),
-        |         CAST(coalesce(sum(tok) FILTER (q_pass), 0) AS BIGINT) FROM h3
-        |  UNION ALL
-        |  SELECT 'c_langid', count(*) FILTER (l_pass),
-        |         CAST(coalesce(sum(tok) FILTER (l_pass), 0) AS BIGINT) FROM h3
-        |  UNION ALL
-        |  SELECT 'd_dedup', count(*) FILTER (d_pass),
-        |         CAST(coalesce(sum(tok) FILTER (d_pass), 0) AS BIGINT) FROM h3
-        |  UNION ALL
-        |  SELECT 'e_semantic', count(*) FILTER (f_pass),
-        |         CAST(coalesce(sum(tok) FILTER (f_pass), 0) AS BIGINT) FROM h3
-        |) ORDER BY stage""".stripMargin,
+        |${stageRowsSql("h3", funnelStages :+ (("e_semantic", "f_pass", "tok")))}""".stripMargin,
     "p1_curation_funnel" ->
       s"""WITH $funnelCtes
-        |SELECT * FROM (
-        |  SELECT 'a_ingest' AS stage, count(*) AS n_docs,
-        |         CAST(sum(tok) AS BIGINT) AS n_tokens FROM h
-        |  UNION ALL
-        |  SELECT 'b_quality', count(*) FILTER (q_pass),
-        |         CAST(coalesce(sum(tok) FILTER (q_pass), 0) AS BIGINT) FROM h
-        |  UNION ALL
-        |  SELECT 'c_langid', count(*) FILTER (l_pass),
-        |         CAST(coalesce(sum(tok) FILTER (l_pass), 0) AS BIGINT) FROM h
-        |  UNION ALL
-        |  SELECT 'd_dedup', count(*) FILTER (d_pass),
-        |         CAST(coalesce(sum(tok) FILTER (d_pass), 0) AS BIGINT) FROM h
-        |) ORDER BY stage""".stripMargin,
+        |${stageRowsSql("h", funnelStages)}""".stripMargin,
     "p2_funnel_neardup" ->
       s"""WITH RECURSIVE ${Dedup.d3PairsSqlCtes},
         |$funnelCtes,
@@ -678,44 +619,22 @@ object Pipeline {
         |  JOIN h a ON a.doc_id = p.doc_a AND a.d_pass
         |  JOIN h b ON b.doc_id = p.doc_b AND b.d_pass
         |),
-        |edges AS (
-        |  SELECT doc_a AS u, doc_b AS v FROM sp
-        |  UNION SELECT doc_b, doc_a FROM sp
-        |),
-        |reach(node, lab) AS (
-        |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-        |  UNION
-        |  SELECT e.v, r.lab FROM reach r JOIN edges e ON e.u = r.node
-        |),
-        |comp AS (
-        |  SELECT node AS doc_id, min(lab) AS cluster_id
-        |  FROM reach GROUP BY node
-        |),
+        |${Dedup.componentCtes("sp")},
         |nd AS (SELECT doc_id FROM comp WHERE doc_id <> cluster_id),
         |h2 AS (
         |  SELECT h.*, h.d_pass AND nd.doc_id IS NULL AS e_pass
         |  FROM h LEFT JOIN nd USING (doc_id)
         |)
-        |SELECT * FROM (
-        |  SELECT 'a_ingest' AS stage, count(*) AS n_docs,
-        |         CAST(sum(tok) AS BIGINT) AS n_tokens FROM h2
-        |  UNION ALL
-        |  SELECT 'b_quality', count(*) FILTER (q_pass),
-        |         CAST(coalesce(sum(tok) FILTER (q_pass), 0) AS BIGINT) FROM h2
-        |  UNION ALL
-        |  SELECT 'c_langid', count(*) FILTER (l_pass),
-        |         CAST(coalesce(sum(tok) FILTER (l_pass), 0) AS BIGINT) FROM h2
-        |  UNION ALL
-        |  SELECT 'd_dedup', count(*) FILTER (d_pass),
-        |         CAST(coalesce(sum(tok) FILTER (d_pass), 0) AS BIGINT) FROM h2
-        |  UNION ALL
-        |  SELECT 'e_neardup', count(*) FILTER (e_pass),
-        |         CAST(coalesce(sum(tok) FILTER (e_pass), 0) AS BIGINT) FROM h2
-        |) ORDER BY stage""".stripMargin,
+        |${stageRowsSql("h2", funnelStages :+ (("e_neardup", "e_pass", "tok")))}""".stripMargin,
     // funnel v2 end-to-end: t2 quality tree, t12 surprisal replay, t13
     // quota as the same prior-survivor running-count window, d8 segment
     // dedup among survivors
-    "p3_curation_v2" ->
+    "p3_curation_v2" -> {
+      // the segment stage counts the docs that keep a segment
+      val segRow =
+        """SELECT 'e_segdedup', count(*) FILTER (u_pass AND tok_kept > 0),
+          |         CAST(coalesce(sum(tok_kept) FILTER (u_pass), 0) AS BIGINT)
+          |         FROM w""".stripMargin
       s"""WITH q AS (
          |  SELECT doc_id, source,
          |         CAST(len(string_split(text, ' ')) AS BIGINT) AS tok,
@@ -782,22 +701,9 @@ object Pipeline {
          |  SELECT u.*, coalesce(k.tok_kept, 0) AS tok_kept
          |  FROM u LEFT JOIN kept k USING (doc_id)
          |)
-         |SELECT * FROM (
-         |  SELECT 'a_ingest' AS stage, count(*) AS n_docs,
-         |         CAST(sum(tok) AS BIGINT) AS n_tokens FROM w
-         |  UNION ALL
-         |  SELECT 'b_quality', count(*) FILTER (q_pass),
-         |         CAST(coalesce(sum(tok) FILTER (q_pass), 0) AS BIGINT) FROM w
-         |  UNION ALL
-         |  SELECT 'c_surprisal', count(*) FILTER (s_pass),
-         |         CAST(coalesce(sum(tok) FILTER (s_pass), 0) AS BIGINT) FROM w
-         |  UNION ALL
-         |  SELECT 'd_quota', count(*) FILTER (u_pass),
-         |         CAST(coalesce(sum(tok) FILTER (u_pass), 0) AS BIGINT) FROM w
-         |  UNION ALL
-         |  SELECT 'e_segdedup', count(*) FILTER (u_pass AND tok_kept > 0),
-         |         CAST(coalesce(sum(tok_kept) FILTER (u_pass), 0) AS BIGINT)
-         |         FROM w
-         |) ORDER BY stage""".stripMargin,
+         |${stageRowsSql("w", Seq(("b_quality", "q_pass", "tok"),
+              ("c_surprisal", "s_pass", "tok"), ("d_quota", "u_pass", "tok")),
+              segRow)}""".stripMargin
+    },
   )
 }

@@ -2092,15 +2092,28 @@ object Similarity {
   private def cosSql(a: String, an: String, b: String, bn: String): String =
     s"round(${dotSql(a, b)} / ($an * $bn), 4)"
 
+  /** The Euclidean norm of a list column as oracle SQL: the DOUBLE sum of
+    * squares, then `sqrt` (the norm half of the CosineSim contract). Used
+    * by [[normedCte]], s5's prefix norm, s6's labelled corpus, s17's
+    * refined codebook and d5's signed corpus. */
+  private[queries] def normSql(list: String): String =
+    s"""sqrt(list_sum(list_transform($list,
+       |              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))""".stripMargin
+
+  /** `name(vec_id, embedding, nrm)`: the rows of `from` with their
+    * [[normSql]] norm — the `en` corpus of [[commonCtes]] and d13b's
+    * augmented `aug_en`. */
+  private[queries] def normedCte(name: String, from: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, embedding,
+       |         ${normSql("embedding")} AS nrm
+       |  FROM $from
+       |)""".stripMargin
+
   /** Shared oracle CTEs: normed corpus `en`, normed queries `qn`, and the
     * exact brute-force top-10 `brute` (the same text as the s1 oracle). */
   private def commonCtes: String =
-    s"""en AS (
-       |  SELECT vec_id, embedding,
-       |         sqrt(list_sum(list_transform(embedding,
-       |              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       |  FROM embeddings
-       |),
+    s"""${normedCte("en", "embeddings")},
        |qn AS (
        |  SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm
        |  FROM en WHERE vec_id < $NumQueries
@@ -2146,17 +2159,42 @@ object Similarity {
        |                     / $CentroidDivisor)) AS BIGINT))
        |)""".stripMargin
 
+  /** The (id, embedding, norm) columns of the normed corpus `en` and of
+    * the query set `qn`. */
+  private[queries] val EnRow = Seq("vec_id", "embedding", "nrm")
+  private val QnRow = Seq("q_id", "q_emb", "q_nrm")
+
+  /** Each row of `from` ranked against the centroids of `cent` by rounded
+    * cosine desc, then `c_id` asc — the order of the engine's
+    * [[cellArgmax]] and [[topProbes]] — keeping the ranks that pass
+    * `keep` (`= 1` assigns the row its cell, `<= P` keeps P probes).
+    * `from` and `cent` are a table with an optional alias (`"tgt t"`,
+    * `"cent c"`); `row` names the row's (id, embedding, norm) columns,
+    * all carried out unless `carry` is false (then the id alone). The
+    * rank column `rank` is carried out too unless it is `rn`. Used by
+    * [[cellsOracleCtes]], s2, s7, s9, s10, s13, s14, s15, s17, the s11
+    * blocked tier ([[s11BlockedCtes]]) and d13b. */
+  private[queries] def rankedCellsCte(name: String, from: String,
+      cent: String, row: Seq[String], keep: String, carry: Boolean = true,
+      rank: String = "rn"): String = {
+    val a = from.split(' ').last
+    val c = cent.split(' ').last
+    val cols = if (carry) row else row.take(1)
+    val out = cols ++ Seq("cell") ++ (if (rank == "rn") Nil else Seq(rank))
+    s"""$name AS (
+       |  SELECT ${out.mkString(", ")} FROM (
+       |    SELECT ${cols.map(x => s"$a.$x").mkString(", ")}, $c.c_id AS cell,
+       |           row_number() OVER (PARTITION BY $a.${row(0)}
+       |             ORDER BY ${cosSql(s"$a.${row(1)}", s"$a.${row(2)}", s"$c.c_emb", s"$c.c_nrm")} DESC,
+       |                      $c.c_id ASC) AS $rank
+       |    FROM $from CROSS JOIN $cent
+       |  ) WHERE $rank $keep
+       |)""".stripMargin
+  }
+
   private[queries] def cellsOracleCtes: String =
     s"""$centOracleCte,
-       |cells AS (
-       |  SELECT vec_id, embedding, nrm, cell FROM (
-       |    SELECT en.vec_id, en.embedding, en.nrm, c.c_id AS cell,
-       |           row_number() OVER (PARTITION BY en.vec_id
-       |             ORDER BY ${cosSql("en.embedding", "en.nrm", "c.c_emb", "c.c_nrm")} DESC,
-       |                      c.c_id ASC) AS rn
-       |    FROM en CROSS JOIN cent c
-       |  ) WHERE rn = 1
-       |)""".stripMargin
+       |${rankedCellsCte("cells", "en", "cent c", EnRow, "= 1")}""".stripMargin
 
   /** The shared norm/query/brute CTE text for composing oracles outside
     * this object (d13 reuses en + the cell CTEs; unreferenced CTEs cost
@@ -2168,27 +2206,25 @@ object Similarity {
   private[queries] def cosineSql(a: String, an: String, b: String,
       bn: String): String = cosSql(a, an, b, bn)
 
-  private def s2OracleSql: String =
-    s"""WITH $commonCtes,
-       |$cellsOracleCtes,
-       |probes AS (
-       |  SELECT q_id, q_emb, q_nrm, cell FROM (
-       |    SELECT qn.q_id, qn.q_emb, qn.q_nrm, c.c_id AS cell,
-       |           row_number() OVER (PARTITION BY qn.q_id
-       |             ORDER BY ${cosSql("qn.q_emb", "qn.q_nrm", "c.c_emb", "c.c_nrm")} DESC,
-       |                      c.c_id ASC) AS rn
-       |    FROM qn CROSS JOIN cent c
-       |  ) WHERE rn <= $ProbeCells
-       |),
-       |approx AS (
+  /** s2's search: each query's top-[[K]] rows of `cells` among its
+    * `probes` cells, by rounded cosine desc, then `vec_id` asc. Used by
+    * s2 and by s17 over its refined `rcells`. */
+  private def probedApproxCte(cells: String): String =
+    s"""approx AS (
        |  SELECT q_id, neighbor_id FROM (
        |    SELECT p.q_id, a.vec_id AS neighbor_id,
        |           row_number() OVER (PARTITION BY p.q_id
        |             ORDER BY ${cosSql("p.q_emb", "p.q_nrm", "a.embedding", "a.nrm")} DESC,
        |                      a.vec_id ASC) AS rank
-       |    FROM probes p JOIN cells a ON a.cell = p.cell AND a.vec_id <> p.q_id
+       |    FROM probes p JOIN $cells a ON a.cell = p.cell AND a.vec_id <> p.q_id
        |  ) WHERE rank <= $K
-       |)
+       |)""".stripMargin
+
+  private def s2OracleSql: String =
+    s"""WITH $commonCtes,
+       |$cellsOracleCtes,
+       |${rankedCellsCte("probes", "qn", "cent c", QnRow, s"<= $ProbeCells")},
+       |${probedApproxCte("cells")}
        |${recallSql(s"CAST($ProbeCells AS INTEGER) AS probed_cells")}""".stripMargin
 
   /** The engine's table-bucket rule as oracle SQL: for table t, bucket =
@@ -2240,37 +2276,12 @@ object Similarity {
        |),
        |rcn AS (
        |  SELECT c_id, c_emb,
-       |         sqrt(list_sum(list_transform(c_emb,
-       |              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS c_nrm
+       |         ${normSql("c_emb")} AS c_nrm
        |  FROM rcent
        |),
-       |rcells AS (
-       |  SELECT vec_id, embedding, nrm, cell FROM (
-       |    SELECT en.vec_id, en.embedding, en.nrm, c.c_id AS cell,
-       |           row_number() OVER (PARTITION BY en.vec_id
-       |             ORDER BY ${cosSql("en.embedding", "en.nrm", "c.c_emb", "c.c_nrm")} DESC,
-       |                      c.c_id ASC) AS rn
-       |    FROM en CROSS JOIN rcn c
-       |  ) WHERE rn = 1
-       |),
-       |probes AS (
-       |  SELECT q_id, q_emb, q_nrm, cell FROM (
-       |    SELECT qn.q_id, qn.q_emb, qn.q_nrm, c.c_id AS cell,
-       |           row_number() OVER (PARTITION BY qn.q_id
-       |             ORDER BY ${cosSql("qn.q_emb", "qn.q_nrm", "c.c_emb", "c.c_nrm")} DESC,
-       |                      c.c_id ASC) AS rn
-       |    FROM qn CROSS JOIN rcn c
-       |  ) WHERE rn <= $ProbeCells
-       |),
-       |approx AS (
-       |  SELECT q_id, neighbor_id FROM (
-       |    SELECT p.q_id, a.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY p.q_id
-       |             ORDER BY ${cosSql("p.q_emb", "p.q_nrm", "a.embedding", "a.nrm")} DESC,
-       |                      a.vec_id ASC) AS rank
-       |    FROM probes p JOIN rcells a ON a.cell = p.cell AND a.vec_id <> p.q_id
-       |  ) WHERE rank <= $K
-       |)
+       |${rankedCellsCte("rcells", "en", "rcn c", EnRow, "= 1")},
+       |${rankedCellsCte("probes", "qn", "rcn c", QnRow, s"<= $ProbeCells")},
+       |${probedApproxCte("rcells")}
        |${recallSql(s"CAST($ProbeCells AS INTEGER) AS probed_cells")}""".stripMargin
 
   private def s3OracleSql: String = {
@@ -2291,32 +2302,14 @@ object Similarity {
        |  SELECT DISTINCT qb.q_id, eb.vec_id
        |  FROM qb JOIN eb ON eb.bucket = qb.bucket AND eb.vec_id <> qb.q_id
        |),
-       |approx AS (
-       |  SELECT q_id, neighbor_id FROM (
-       |    SELECT c.q_id, c.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY c.q_id
-       |             ORDER BY ${cosSql("qn.q_emb", "qn.q_nrm", "en.embedding", "en.nrm")} DESC,
-       |                      c.vec_id ASC) AS rank
-       |    FROM cand c
-       |    JOIN qn ON qn.q_id = c.q_id
-       |    JOIN en ON en.vec_id = c.vec_id
-       |  ) WHERE rank <= $K
-       |)
+       |${rerankCte("cand c")}
        |${recallSql(s"CAST($NumTables AS INTEGER) AS probed_tables")}""".stripMargin
   }
 
   private def s10OracleSql: String =
     s"""WITH $commonCtes,
        |$cellsOracleCtes,
-       |pr AS (
-       |  SELECT q_id, q_emb, q_nrm, cell, crank FROM (
-       |    SELECT qn.q_id, qn.q_emb, qn.q_nrm, c.c_id AS cell,
-       |           row_number() OVER (PARTITION BY qn.q_id
-       |             ORDER BY ${cosSql("qn.q_emb", "qn.q_nrm", "c.c_emb", "c.c_nrm")} DESC,
-       |                      c.c_id ASC) AS crank
-       |    FROM qn CROSS JOIN cent c
-       |  ) WHERE crank <= $ProbeCells
-       |),
+       |${rankedCellsCte("pr", "qn", "cent c", QnRow, s"<= $ProbeCells", rank = "crank")},
        |cand AS (
        |  SELECT p.q_id, p.crank, a.vec_id,
        |         ${cosSql("p.q_emb", "p.q_nrm", "a.embedding", "a.nrm")} AS cosine
@@ -2355,6 +2348,46 @@ object Similarity {
        |LEFT JOIN hit h ON h.q_id = g.q_id AND h.p = g.p
        |ORDER BY g.q_id, g.p""".stripMargin
 
+  /** The per-bucket centroid cap: each bucket of `cb` keeps its first
+    * `cap` centroids in idMix order of `xor(c_id, bucket · P)`, then
+    * `c_id` (the engine's [[cappedCodebook]]). Used by s13 and s14. */
+  private def bucketCapCte(cap: Int): String =
+    s"""cbcap AS (
+       |  SELECT bucket, c_id FROM (
+       |    SELECT bucket, c_id,
+       |           row_number() OVER (PARTITION BY bucket
+       |             ORDER BY ${mixSql(s"xor(c_id, bucket * $CapRankMixP)")},
+       |                      c_id) AS rn
+       |    FROM cb
+       |  ) WHERE rn <= $cap
+       |)""".stripMargin
+
+  /** The LSH pick over a bucketed codebook: each vector of `vb` meets the
+    * distinct centroids of `cands(bucket, c_id)` it shares a bucket with,
+    * and keeps the best by rounded cosine desc, then `c_id` asc, with its
+    * candidate count (the engine's [[lshPick]]). `cent` is the codebook
+    * table with an optional alias. Used by s13 (both picks) and s14. */
+  private def lshPickCte(name: String, cands: String, cent: String): String = {
+    val c = cent.split(' ').last
+    s"""$name AS (
+       |  SELECT vec_id, c_id, n_cand FROM (
+       |    SELECT vec_id, c_id,
+       |           row_number() OVER (PARTITION BY vec_id
+       |             ORDER BY c_cos DESC, c_id ASC) AS rn,
+       |           count(*) OVER (PARTITION BY vec_id) AS n_cand
+       |    FROM (
+       |      SELECT c.vec_id, c.c_id,
+       |             ${cosSql("en.embedding", "en.nrm", s"$c.c_emb", s"$c.c_nrm")}
+       |               AS c_cos
+       |      FROM (SELECT DISTINCT vb.vec_id, $cands.c_id
+       |            FROM vb JOIN $cands USING (bucket)) c
+       |      JOIN en ON en.vec_id = c.vec_id
+       |      JOIN $cent ON $c.c_id = c.c_id
+       |    )
+       |  ) WHERE rn = 1
+       |)""".stripMargin
+  }
+
   /** s13's oracle: the s9 replay plus the per-bucket idMix rank cap
     * (`cbcap`) and a second pick over the capped candidate set. */
   private def s13OracleSql: String = {
@@ -2364,52 +2397,18 @@ object Similarity {
     val vb = (0 until NumTables).map { t =>
       s"SELECT vec_id, ${bucketsSql("embedding", t)} AS bucket FROM en"
     }.mkString("\nUNION ALL\n")
-    def pick(candSrc: String, name: String): String =
-      s"""$name AS (
-         |  SELECT vec_id, c_id, n_cand FROM (
-         |    SELECT vec_id, c_id,
-         |           row_number() OVER (PARTITION BY vec_id
-         |             ORDER BY c_cos DESC, c_id ASC) AS rn,
-         |           count(*) OVER (PARTITION BY vec_id) AS n_cand
-         |    FROM (
-         |      SELECT c.vec_id, c.c_id,
-         |             ${cosSql("en.embedding", "en.nrm", "cent.c_emb", "cent.c_nrm")}
-         |               AS c_cos
-         |      FROM (SELECT DISTINCT vb.vec_id, $candSrc.c_id
-         |            FROM vb JOIN $candSrc USING (bucket)) c
-         |      JOIN en ON en.vec_id = c.vec_id
-         |      JOIN cent ON cent.c_id = c.c_id
-         |    )
-         |  ) WHERE rn = 1
-         |)""".stripMargin
     s"""WITH $commonCtes,
        |$centOracleCte,
        |cb AS (
        |$cb
        |),
-       |cbcap AS (
-       |  SELECT bucket, c_id FROM (
-       |    SELECT bucket, c_id,
-       |           row_number() OVER (PARTITION BY bucket
-       |             ORDER BY ${mixSql(s"xor(c_id, bucket * $CapRankMixP)")},
-       |                      c_id) AS rn
-       |    FROM cb
-       |  ) WHERE rn <= $S13Cap
-       |),
+       |${bucketCapCte(S13Cap)},
        |vb AS (
        |$vb
        |),
-       |${pick("cbcap", "pick_cap")},
-       |${pick("cb", "pick_lsh")},
-       |cells AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT en.vec_id, c.c_id AS cell,
-       |           row_number() OVER (PARTITION BY en.vec_id
-       |             ORDER BY ${cosSql("en.embedding", "en.nrm", "c.c_emb", "c.c_nrm")} DESC,
-       |                      c.c_id ASC) AS rn
-       |    FROM en CROSS JOIN cent c
-       |  ) WHERE rn = 1
-       |)
+       |${lshPickCte("pick_cap", "cbcap", "cent")},
+       |${lshPickCte("pick_lsh", "cb", "cent")},
+       |${rankedCellsCte("cells", "en", "cent c", EnRow, "= 1", carry = false)}
        |SELECT x.vec_id,
        |       coalesce(pc.c_id, -1) AS cell_cap,
        |       coalesce(pl.c_id, -1) AS cell_lsh,
@@ -2446,15 +2445,7 @@ object Similarity {
        |  SELECT s.cell, ${mixSql("s.vec_id")} % cc.k_scan AS sub, s.vec_id
        |  FROM cells s JOIN counts cc USING (cell)
        |),
-       |probes AS (
-       |  SELECT q_id, cell FROM (
-       |    SELECT qn.q_id, c.c_id AS cell,
-       |           row_number() OVER (PARTITION BY qn.q_id
-       |             ORDER BY ${cosSql("qn.q_emb", "qn.q_nrm", "c.c_emb", "c.c_nrm")} DESC,
-       |                      c.c_id ASC) AS rn
-       |    FROM qn CROSS JOIN cent c
-       |  ) WHERE rn <= $ProbeCells
-       |),
+       |${rankedCellsCte("probes", "qn", "cent c", QnRow, s"<= $ProbeCells", carry = false)},
        |psub AS (
        |  SELECT p.q_id, p.cell, cc.c_n, cc.k_scan,
        |         ${mixSql(s"xor(${mixSql("p.q_id")}, ${mixSql("p.cell")})")}
@@ -2519,44 +2510,12 @@ object Similarity {
        |cb AS (
        |$cb
        |),
-       |cbcap AS (
-       |  SELECT bucket, c_id FROM (
-       |    SELECT bucket, c_id,
-       |           row_number() OVER (PARTITION BY bucket
-       |             ORDER BY ${mixSql(s"xor(c_id, bucket * $CapRankMixP)")},
-       |                      c_id) AS rn
-       |    FROM cb
-       |  ) WHERE rn <= $S14Cap
-       |),
+       |${bucketCapCte(S14Cap)},
        |vb AS (
        |$vb
        |),
-       |pick AS (
-       |  SELECT vec_id, c_id, n_cand FROM (
-       |    SELECT vec_id, c_id,
-       |           row_number() OVER (PARTITION BY vec_id
-       |             ORDER BY c_cos DESC, c_id ASC) AS rn,
-       |           count(*) OVER (PARTITION BY vec_id) AS n_cand
-       |    FROM (
-       |      SELECT c.vec_id, c.c_id,
-       |             ${cosSql("en.embedding", "en.nrm", "fc.c_emb", "fc.c_nrm")}
-       |               AS c_cos
-       |      FROM (SELECT DISTINCT vb.vec_id, cbcap.c_id
-       |            FROM vb JOIN cbcap USING (bucket)) c
-       |      JOIN en ON en.vec_id = c.vec_id
-       |      JOIN flatcent fc ON fc.c_id = c.c_id
-       |    )
-       |  ) WHERE rn = 1
-       |),
-       |cells AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT en.vec_id, fc.c_id AS cell,
-       |           row_number() OVER (PARTITION BY en.vec_id
-       |             ORDER BY ${cosSql("en.embedding", "en.nrm", "fc.c_emb", "fc.c_nrm")} DESC,
-       |                      fc.c_id ASC) AS rn
-       |    FROM en CROSS JOIN flatcent fc
-       |  ) WHERE rn = 1
-       |)
+       |${lshPickCte("pick", "cbcap", "flatcent fc")},
+       |${rankedCellsCte("cells", "en", "flatcent fc", EnRow, "= 1", carry = false)}
        |SELECT x.vec_id,
        |       coalesce(p.c_id, -1) AS cell_flat,
        |       x.cell AS cell_exact,
@@ -2605,15 +2564,7 @@ object Similarity {
        |    FROM scored
        |  ) WHERE rn = 1
        |),
-       |cells AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT en.vec_id, c.c_id AS cell,
-       |           row_number() OVER (PARTITION BY en.vec_id
-       |             ORDER BY ${cosSql("en.embedding", "en.nrm", "c.c_emb", "c.c_nrm")} DESC,
-       |                      c.c_id ASC) AS rn
-       |    FROM en CROSS JOIN cent c
-       |  ) WHERE rn = 1
-       |)
+       |${rankedCellsCte("cells", "en", "cent c", EnRow, "= 1", carry = false)}
        |SELECT c.vec_id,
        |       coalesce(p.c_id, -1) AS cell_lsh,
        |       c.cell AS cell_exact,
@@ -2631,39 +2582,56 @@ object Similarity {
     s"list_sum(list_transform(generate_series($lo, $hi), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
   }
 
-  private def s4OracleSql: String = {
+  /** The exact re-rank: each query's top-[[K]] of the candidate pairs
+    * `from(q_id, vec_id)` (a table and its alias) by rounded cosine desc,
+    * then `vec_id` asc. Used by s3, s4, s5 and s7. */
+  private def rerankCte(from: String): String = {
+    val a = from.split(' ').last
+    s"""approx AS (
+       |  SELECT q_id, neighbor_id FROM (
+       |    SELECT $a.q_id, $a.vec_id AS neighbor_id,
+       |           row_number() OVER (PARTITION BY $a.q_id
+       |             ORDER BY ${cosSql("qn.q_emb", "qn.q_nrm", "en.embedding", "en.nrm")} DESC,
+       |                      $a.vec_id ASC) AS rank
+       |    FROM $from
+       |    JOIN qn ON qn.q_id = $a.q_id
+       |    JOIN en ON en.vec_id = $a.vec_id
+       |  ) WHERE rank <= $K
+       |)""".stripMargin
+  }
+
+  /** The PQ tail shared by s4 and s7: per-subspace codes `cm0..` against
+    * the codebook `cent` (a table and its alias), ADC scores for the query
+    * rows that `from` (the FROM clause, binding `q` and `c0`) pairs with
+    * coded vectors, the top-[[PqShortlist]] shortlist, and its exact
+    * [[rerankCte]]. */
+  private def pqAdcCtes(cent: String, from: String): String = {
+    val (tbl, c) = (cent.split(' ').head, cent.split(' ').last)
     val cms = (0 until PqM).map { m =>
-      val csq = pqSubDotSql("s.c_emb", "s.c_emb", m)
-      val dot = pqSubDotSql("e.embedding", "s.c_emb", m)
+      val csq = pqSubDotSql(s"$c.c_emb", s"$c.c_emb", m)
+      val dot = pqSubDotSql("e.embedding", s"$c.c_emb", m)
       s"""cm$m AS (
          |  SELECT vec_id, c_id, csq FROM (
-         |    SELECT e.vec_id, s.c_id, $csq AS csq,
+         |    SELECT e.vec_id, $c.c_id, $csq AS csq,
          |           row_number() OVER (PARTITION BY e.vec_id
-         |             ORDER BY round($csq - 2.0 * $dot, 6), s.c_id) AS rn
-         |    FROM en e CROSS JOIN seeds s
+         |             ORDER BY round($csq - 2.0 * $dot, 6), $c.c_id) AS rn
+         |    FROM en e CROSS JOIN $cent
          |  ) WHERE rn = 1
          |)""".stripMargin
     }.mkString(",\n")
-    val seedJoins = (1 until PqM).map(m =>
+    val joins = (1 until PqM).map(m =>
       s"JOIN cm$m c$m ON c$m.vec_id = c0.vec_id").mkString("\n  ") + "\n  " +
       (0 until PqM).map(m =>
-        s"JOIN seeds s$m ON s$m.c_id = c$m.c_id").mkString("\n  ")
+        s"JOIN $tbl s$m ON s$m.c_id = c$m.c_id").mkString("\n  ")
     val dpSum = (0 until PqM).map(m => pqSubDotSql("q.q_emb", s"s$m.c_emb", m))
       .mkString(" + ")
     val csqSum = (0 until PqM).map(m => s"c$m.csq").mkString(" + ")
-    s"""WITH $commonCtes,
-       |seeds AS (
-       |  SELECT vec_id AS c_id, embedding AS c_emb
-       |  FROM en
-       |  ORDER BY (vec_id * $MixA + $MixB) % $MixM, vec_id
-       |  LIMIT $NumCentroids
-       |),
-       |$cms,
+    s"""$cms,
        |adc AS (
        |  SELECT q.q_id, c0.vec_id,
        |         round(($dpSum) / (q.q_nrm * sqrt($csqSum)), 4) AS adc
-       |  FROM qn q CROSS JOIN cm0 c0
-       |  $seedJoins
+       |  $from
+       |  $joins
        |  WHERE c0.vec_id <> q.q_id
        |),
        |shortlist AS (
@@ -2674,27 +2642,26 @@ object Similarity {
        |    FROM adc
        |  ) WHERE rn <= $PqShortlist
        |),
-       |approx AS (
-       |  SELECT q_id, neighbor_id FROM (
-       |    SELECT sl.q_id, sl.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY sl.q_id
-       |             ORDER BY ${cosSql("qn.q_emb", "qn.q_nrm", "en.embedding", "en.nrm")} DESC,
-       |                      sl.vec_id ASC) AS rank
-       |    FROM shortlist sl
-       |    JOIN qn ON qn.q_id = sl.q_id
-       |    JOIN en ON en.vec_id = sl.vec_id
-       |  ) WHERE rank <= $K
-       |)
-       |${recallSql(s"CAST($PqM AS INTEGER) AS m_subspaces")}""".stripMargin
+       |${rerankCte("shortlist sl")}""".stripMargin
   }
+
+  private def s4OracleSql: String =
+    s"""WITH $commonCtes,
+       |seeds AS (
+       |  SELECT vec_id AS c_id, embedding AS c_emb
+       |  FROM en
+       |  ORDER BY (vec_id * $MixA + $MixB) % $MixM, vec_id
+       |  LIMIT $NumCentroids
+       |),
+       |${pqAdcCtes("seeds s", "FROM qn q CROSS JOIN cm0 c0")}
+       |${recallSql(s"CAST($PqM AS INTEGER) AS m_subspaces")}""".stripMargin
 
   private def s5OracleSql: String = {
     val pref = s"list_slice(embedding, 1, $S5PrefixDims)"
     s"""WITH $commonCtes,
        |pre AS (
        |  SELECT vec_id, embedding, nrm, $pref AS emb_p,
-       |         sqrt(list_sum(list_transform($pref,
-       |              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS pnrm
+       |         ${normSql(pref)} AS pnrm
        |  FROM en
        |),
        |qp AS (
@@ -2711,17 +2678,7 @@ object Similarity {
        |    FROM qp JOIN pre p ON p.vec_id <> qp.q_id
        |  ) WHERE rn <= $S5Shortlist
        |),
-       |approx AS (
-       |  SELECT q_id, neighbor_id FROM (
-       |    SELECT sl.q_id, sl.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY sl.q_id
-       |             ORDER BY ${cosSql("qn.q_emb", "qn.q_nrm", "en.embedding", "en.nrm")} DESC,
-       |                      sl.vec_id ASC) AS rank
-       |    FROM short sl
-       |    JOIN qn ON qn.q_id = sl.q_id
-       |    JOIN en ON en.vec_id = sl.vec_id
-       |  ) WHERE rank <= $K
-       |)
+       |${rerankCte("short sl")}
        |${recallSql(s"CAST($S5PrefixDims AS INTEGER) AS prefix_dims")}""".stripMargin
   }
 
@@ -2729,25 +2686,11 @@ object Similarity {
     * candidate set is the probed-cells join, the scoring is ADC, the
     * shortlist re-ranks exactly. */
   private def s7OracleSql: String = {
-    val cms = (0 until PqM).map { m =>
-      val csq = pqSubDotSql("c.c_emb", "c.c_emb", m)
-      val dot = pqSubDotSql("e.embedding", "c.c_emb", m)
-      s"""cm$m AS (
-         |  SELECT vec_id, c_id, csq FROM (
-         |    SELECT e.vec_id, c.c_id, $csq AS csq,
-         |           row_number() OVER (PARTITION BY e.vec_id
-         |             ORDER BY round($csq - 2.0 * $dot, 6), c.c_id) AS rn
-         |    FROM en e CROSS JOIN cent c
-         |  ) WHERE rn = 1
-         |)""".stripMargin
-    }.mkString(",\n")
-    val cmJoins = (1 until PqM).map(m =>
-      s"JOIN cm$m c$m ON c$m.vec_id = c0.vec_id").mkString("\n  ") + "\n  " +
-      (0 until PqM).map(m =>
-        s"JOIN cent s$m ON s$m.c_id = c$m.c_id").mkString("\n  ")
-    val dpSum = (0 until PqM).map(m => pqSubDotSql("q.q_emb", s"s$m.c_emb", m))
-      .mkString(" + ")
-    val csqSum = (0 until PqM).map(m => s"c$m.csq").mkString(" + ")
+    val probed =
+      """FROM qn q
+        |  JOIN probes p ON p.q_id = q.q_id
+        |  JOIN cells cl ON cl.cell = p.cell
+        |  JOIN cm0 c0 ON c0.vec_id = cl.vec_id""".stripMargin
     s"""WITH $commonCtes,
        |cent AS (
        |  SELECT vec_id AS c_id, embedding AS c_emb, nrm AS c_nrm
@@ -2755,55 +2698,116 @@ object Similarity {
        |  ORDER BY (vec_id * $MixA + $MixB) % $MixM, vec_id
        |  LIMIT $NumCentroids
        |),
-       |cells AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT en.vec_id, c.c_id AS cell,
-       |           row_number() OVER (PARTITION BY en.vec_id
-       |             ORDER BY ${cosSql("en.embedding", "en.nrm", "c.c_emb", "c.c_nrm")} DESC,
-       |                      c.c_id ASC) AS rn
-       |    FROM en CROSS JOIN cent c
-       |  ) WHERE rn = 1
-       |),
-       |probes AS (
-       |  SELECT q_id, cell FROM (
-       |    SELECT qn.q_id, c.c_id AS cell,
-       |           row_number() OVER (PARTITION BY qn.q_id
-       |             ORDER BY ${cosSql("qn.q_emb", "qn.q_nrm", "c.c_emb", "c.c_nrm")} DESC,
-       |                      c.c_id ASC) AS rn
-       |    FROM qn CROSS JOIN cent c
-       |  ) WHERE rn <= $ProbeCells
-       |),
-       |$cms,
-       |adc AS (
-       |  SELECT q.q_id, c0.vec_id,
-       |         round(($dpSum) / (q.q_nrm * sqrt($csqSum)), 4) AS adc
-       |  FROM qn q
-       |  JOIN probes p ON p.q_id = q.q_id
-       |  JOIN cells cl ON cl.cell = p.cell
-       |  JOIN cm0 c0 ON c0.vec_id = cl.vec_id
-       |  $cmJoins
-       |  WHERE c0.vec_id <> q.q_id
-       |),
-       |shortlist AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id,
-       |           row_number() OVER (PARTITION BY q_id
-       |             ORDER BY adc DESC, vec_id ASC) AS rn
-       |    FROM adc
-       |  ) WHERE rn <= $PqShortlist
-       |),
-       |approx AS (
-       |  SELECT q_id, neighbor_id FROM (
-       |    SELECT sl.q_id, sl.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY sl.q_id
-       |             ORDER BY ${cosSql("qn.q_emb", "qn.q_nrm", "en.embedding", "en.nrm")} DESC,
-       |                      sl.vec_id ASC) AS rank
-       |    FROM shortlist sl
-       |    JOIN qn ON qn.q_id = sl.q_id
-       |    JOIN en ON en.vec_id = sl.vec_id
-       |  ) WHERE rank <= $K
-       |)
+       |${rankedCellsCte("cells", "en", "cent c", EnRow, "= 1", carry = false)},
+       |${rankedCellsCte("probes", "qn", "cent c", QnRow, s"<= $ProbeCells", carry = false)},
+       |${pqAdcCtes("cent c", probed)}
        |${recallSql(s"CAST($ProbeCells AS INTEGER) AS probed_cells, CAST($PqM AS INTEGER) AS m_subspaces")}""".stripMargin
+  }
+
+  /** The ten-thousandth integer cosine `c4` of two normed list columns:
+    * the RAW cosine ×10⁴ rounded once to a BIGINT (the engine's s11
+    * rule, not round(cos, 4)·10⁴, which re-rounds). Used by the exact
+    * pairs and the blocked candidates of s11, s11b and s16. */
+  private def c4Sql(a: String, an: String, b: String, bn: String): String =
+    s"""CAST(round(${dotSql(a, b)}
+       |                    / ($an * $bn) * 10000, 0) AS BIGINT)""".stripMargin
+
+  /** The s11 sides and exact pairs: `src`/`tgt` split the normed corpus
+    * by [[S11SrcLang]]/[[S11TgtLang]], and `pairs` holds every cross
+    * pair's [[c4Sql]]. Used by s11, s11b and s16. */
+  private def s11ExactCtes(pairs: String): String =
+    s"""src AS (
+       |  SELECT e.vec_id AS s_id, e.embedding AS s_emb, e.nrm AS s_nrm
+       |  FROM en e JOIN documents d ON d.doc_id = e.vec_id
+       |  WHERE d.lang = '$S11SrcLang'
+       |),
+       |tgt AS (
+       |  SELECT e.vec_id AS t_id, e.embedding AS t_emb, e.nrm AS t_nrm
+       |  FROM en e JOIN documents d ON d.doc_id = e.vec_id
+       |  WHERE d.lang = '$S11TgtLang'
+       |),
+       |$pairs AS (
+       |  SELECT s_id, t_id,
+       |         ${c4Sql("s_emb", "s_nrm", "t_emb", "t_nrm")} AS c4
+       |  FROM src JOIN tgt ON s_id <> t_id
+       |)""".stripMargin
+
+  /** The s11 blocked tier over [[s11ExactCtes]]' sides: a `tgt`-slice
+    * codebook by the balanced sqrt rule, each target's argmax cell, each
+    * source's top-[[S11bProbe]] probes, and the per-(source, cell)
+    * top-[[S11ShortlistK]] shortlist `short(s_id, t_id, c4)`. Used by
+    * s11b and s16. */
+  private def s11BlockedCtes: String =
+    s"""cent AS (
+       |  SELECT c_id, c_emb, c_nrm FROM (
+       |    SELECT t_id AS c_id, t_emb AS c_emb, t_nrm AS c_nrm,
+       |           row_number() OVER (
+       |             ORDER BY (t_id * $MixA + $MixB) % $MixM, t_id) AS crn
+       |    FROM tgt
+       |  ) WHERE crn <= greatest($NumCentroids,
+       |      CAST(ceil(sqrt(CAST((SELECT count(*) FROM tgt) AS DOUBLE)
+       |                     / $CentroidDivisor)) AS BIGINT))
+       |),
+       |${rankedCellsCte("cells", "tgt t", "cent c", Seq("t_id", "t_emb", "t_nrm"), "= 1")},
+       |${rankedCellsCte("probes", "src s", "cent c", Seq("s_id", "s_emb", "s_nrm"), s"<= $S11bProbe")},
+       |cand AS (
+       |  SELECT p.s_id, a.cell, a.t_id,
+       |         ${c4Sql("p.s_emb", "p.s_nrm", "a.t_emb", "a.t_nrm")} AS c4
+       |  FROM probes p JOIN cells a USING (cell)
+       |),
+       |short AS (
+       |  SELECT s_id, t_id, c4 FROM (
+       |    SELECT s_id, t_id, c4,
+       |           row_number() OVER (PARTITION BY s_id, cell
+       |             ORDER BY c4 DESC, t_id ASC) AS sr
+       |    FROM cand
+       |  ) WHERE sr <= $S11ShortlistK
+       |)""".stripMargin
+
+  /** The s11 margin chain over the pairs `pairs(s_id, t_id, c4)`: each
+    * side's [[S11MarginK]] nearest by `c4` desc with the other id asc as
+    * tie-break (`<p>rk`), their BIGINT sums (`<p>a`, `<p>b`), each
+    * source's best (`<p>best`), and `out(s_id, match, cosine, margin)`
+    * with the ratio margin as the one final double division. `p`
+    * prefixes the CTE names and `cols` names the output columns, so one
+    * query can hold two chains (s16). `nCand` adds each source's pair
+    * count as `n_cand` (s11b). Used by s11, s11b and s16. */
+  private def marginCtes(p: String, pairs: String, out: String,
+      cols: (String, String, String) = ("match_id", "cosine", "margin"),
+      nCand: Boolean = false): String = {
+    val (matchCol, cosCol, marginCol) = cols
+    val nc = if (nCand) s"nc AS (\n  SELECT s_id, count(*) AS n_cand FROM $pairs GROUP BY 1\n),\n" else ""
+    val ncCol = if (nCand) ",\n         nc.n_cand" else ""
+    val ncJoin = if (nCand) s"\n  JOIN nc ON nc.s_id = ${p}best.s_id" else ""
+    s"""${p}rk AS (
+       |  SELECT s_id, t_id, c4,
+       |         row_number() OVER (PARTITION BY s_id
+       |           ORDER BY c4 DESC, t_id ASC) AS rs,
+       |         row_number() OVER (PARTITION BY t_id
+       |           ORDER BY c4 DESC, s_id ASC) AS rt
+       |  FROM $pairs
+       |),
+       |${p}a AS (
+       |  SELECT s_id, CAST(sum(c4) AS BIGINT) AS sa4, count(*) AS na
+       |  FROM ${p}rk WHERE rs <= $S11MarginK GROUP BY 1
+       |),
+       |${p}b AS (
+       |  SELECT t_id, CAST(sum(c4) AS BIGINT) AS sb4, count(*) AS nb
+       |  FROM ${p}rk WHERE rt <= $S11MarginK GROUP BY 1
+       |),
+       |$nc${p}best AS (
+       |  SELECT s_id, t_id, c4 FROM ${p}rk WHERE rs = 1
+       |),
+       |$out AS (
+       |  SELECT ${p}best.s_id, ${p}best.t_id AS $matchCol,
+       |         round(CAST(c4 AS DOUBLE) / 10000, 4) AS $cosCol,
+       |         CASE WHEN sa4 * nb + sb4 * na > 0 THEN
+       |           round(CAST(2 * c4 * na * nb AS DOUBLE)
+       |                 / (sa4 * nb + sb4 * na), 4) END AS $marginCol$ncCol
+       |  FROM ${p}best
+       |  JOIN ${p}a USING (s_id)
+       |  JOIN ${p}b ON ${p}b.t_id = ${p}best.t_id$ncJoin
+       |)""".stripMargin
   }
 
   val oracleSql: Map[String, String] = Map(
@@ -2833,8 +2837,7 @@ object Similarity {
     "s6_filtered_knn" ->
       s"""WITH enl AS (
          |  SELECT vec_id, embedding, label,
-         |         sqrt(list_sum(list_transform(embedding,
-         |              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+         |         ${normSql("embedding")} AS nrm
          |  FROM embeddings
          |),
          |qnl AS (
@@ -2867,51 +2870,8 @@ object Similarity {
     // sums are BIGINT; the margin is the one final double division.
     "s11_bitext_margin" ->
       s"""WITH $commonCtes,
-         |src AS (
-         |  SELECT e.vec_id AS s_id, e.embedding AS s_emb, e.nrm AS s_nrm
-         |  FROM en e JOIN documents d ON d.doc_id = e.vec_id
-         |  WHERE d.lang = '$S11SrcLang'
-         |),
-         |tgt AS (
-         |  SELECT e.vec_id AS t_id, e.embedding AS t_emb, e.nrm AS t_nrm
-         |  FROM en e JOIN documents d ON d.doc_id = e.vec_id
-         |  WHERE d.lang = '$S11TgtLang'
-         |),
-         |pairs AS (
-         |  SELECT s_id, t_id,
-         |         CAST(round(${dotSql("s_emb", "t_emb")}
-         |                    / (s_nrm * t_nrm) * 10000, 0) AS BIGINT) AS c4
-         |  FROM src JOIN tgt ON s_id <> t_id
-         |),
-         |rk AS (
-         |  SELECT s_id, t_id, c4,
-         |         row_number() OVER (PARTITION BY s_id
-         |           ORDER BY c4 DESC, t_id ASC) AS rs,
-         |         row_number() OVER (PARTITION BY t_id
-         |           ORDER BY c4 DESC, s_id ASC) AS rt
-         |  FROM pairs
-         |),
-         |a AS (
-         |  SELECT s_id, CAST(sum(c4) AS BIGINT) AS sa4, count(*) AS na
-         |  FROM rk WHERE rs <= $S11MarginK GROUP BY 1
-         |),
-         |b AS (
-         |  SELECT t_id, CAST(sum(c4) AS BIGINT) AS sb4, count(*) AS nb
-         |  FROM rk WHERE rt <= $S11MarginK GROUP BY 1
-         |),
-         |best AS (
-         |  SELECT s_id, t_id, c4 FROM rk WHERE rs = 1
-         |),
-         |scored AS (
-         |  SELECT best.s_id, best.t_id AS match_id,
-         |         round(CAST(c4 AS DOUBLE) / 10000, 4) AS cosine,
-         |         CASE WHEN sa4 * nb + sb4 * na > 0 THEN
-         |           round(CAST(2 * c4 * na * nb AS DOUBLE)
-         |                 / (sa4 * nb + sb4 * na), 4) END AS margin
-         |  FROM best
-         |  JOIN a USING (s_id)
-         |  JOIN b ON b.t_id = best.t_id
-         |)
+         |${s11ExactCtes("pairs")},
+         |${marginCtes("", "pairs", "scored")}
          |SELECT s_id, match_id, cosine, margin,
          |       coalesce(margin >= $S11Threshold, false) AS accepted
          |FROM scored ORDER BY s_id""".stripMargin,
@@ -2925,22 +2885,7 @@ object Similarity {
     // tier's 1.05 under-accepts here by design, not by measurement.
     "s11b_bitext_blocked" ->
       s"""WITH $commonCtes,
-         |src AS (
-         |  SELECT e.vec_id AS s_id, e.embedding AS s_emb, e.nrm AS s_nrm
-         |  FROM en e JOIN documents d ON d.doc_id = e.vec_id
-         |  WHERE d.lang = '$S11SrcLang'
-         |),
-         |tgt AS (
-         |  SELECT e.vec_id AS t_id, e.embedding AS t_emb, e.nrm AS t_nrm
-         |  FROM en e JOIN documents d ON d.doc_id = e.vec_id
-         |  WHERE d.lang = '$S11TgtLang'
-         |),
-         |epairs AS (
-         |  SELECT s_id, t_id,
-         |         CAST(round(${dotSql("s_emb", "t_emb")}
-         |                    / (s_nrm * t_nrm) * 10000, 0) AS BIGINT) AS c4
-         |  FROM src JOIN tgt ON s_id <> t_id
-         |),
+         |${s11ExactCtes("epairs")},
          |ebest AS (
          |  SELECT s_id, t_id AS exact_match FROM (
          |    SELECT s_id, t_id, row_number() OVER (PARTITION BY s_id
@@ -2948,82 +2893,8 @@ object Similarity {
          |    FROM epairs
          |  ) WHERE rs = 1
          |),
-         |cent AS (
-         |  SELECT c_id, c_emb, c_nrm FROM (
-         |    SELECT t_id AS c_id, t_emb AS c_emb, t_nrm AS c_nrm,
-         |           row_number() OVER (
-         |             ORDER BY (t_id * $MixA + $MixB) % $MixM, t_id) AS crn
-         |    FROM tgt
-         |  ) WHERE crn <= greatest($NumCentroids,
-         |      CAST(ceil(sqrt(CAST((SELECT count(*) FROM tgt) AS DOUBLE)
-         |                     / $CentroidDivisor)) AS BIGINT))
-         |),
-         |cells AS (
-         |  SELECT t_id, t_emb, t_nrm, cell FROM (
-         |    SELECT t.t_id, t.t_emb, t.t_nrm, c.c_id AS cell,
-         |           row_number() OVER (PARTITION BY t.t_id
-         |             ORDER BY ${cosSql("t.t_emb", "t.t_nrm", "c.c_emb", "c.c_nrm")} DESC,
-         |                      c.c_id ASC) AS rn
-         |    FROM tgt t CROSS JOIN cent c
-         |  ) WHERE rn = 1
-         |),
-         |probes AS (
-         |  SELECT s_id, s_emb, s_nrm, cell FROM (
-         |    SELECT s.s_id, s.s_emb, s.s_nrm, c.c_id AS cell,
-         |           row_number() OVER (PARTITION BY s.s_id
-         |             ORDER BY ${cosSql("s.s_emb", "s.s_nrm", "c.c_emb", "c.c_nrm")} DESC,
-         |                      c.c_id ASC) AS rn
-         |    FROM src s CROSS JOIN cent c
-         |  ) WHERE rn <= $S11bProbe
-         |),
-         |cand AS (
-         |  SELECT p.s_id, a.cell, a.t_id,
-         |         CAST(round(${dotSql("p.s_emb", "a.t_emb")}
-         |                    / (p.s_nrm * a.t_nrm) * 10000, 0) AS BIGINT) AS c4
-         |  FROM probes p JOIN cells a USING (cell)
-         |),
-         |short AS (
-         |  SELECT s_id, t_id, c4 FROM (
-         |    SELECT s_id, t_id, c4,
-         |           row_number() OVER (PARTITION BY s_id, cell
-         |             ORDER BY c4 DESC, t_id ASC) AS sr
-         |    FROM cand
-         |  ) WHERE sr <= $S11ShortlistK
-         |),
-         |rk AS (
-         |  SELECT s_id, t_id, c4,
-         |         row_number() OVER (PARTITION BY s_id
-         |           ORDER BY c4 DESC, t_id ASC) AS rs,
-         |         row_number() OVER (PARTITION BY t_id
-         |           ORDER BY c4 DESC, s_id ASC) AS rt
-         |  FROM short
-         |),
-         |a AS (
-         |  SELECT s_id, CAST(sum(c4) AS BIGINT) AS sa4, count(*) AS na
-         |  FROM rk WHERE rs <= $S11MarginK GROUP BY 1
-         |),
-         |b AS (
-         |  SELECT t_id, CAST(sum(c4) AS BIGINT) AS sb4, count(*) AS nb
-         |  FROM rk WHERE rt <= $S11MarginK GROUP BY 1
-         |),
-         |nc AS (
-         |  SELECT s_id, count(*) AS n_cand FROM short GROUP BY 1
-         |),
-         |best AS (
-         |  SELECT s_id, t_id, c4 FROM rk WHERE rs = 1
-         |),
-         |blocked AS (
-         |  SELECT best.s_id, best.t_id AS match_id,
-         |         round(CAST(c4 AS DOUBLE) / 10000, 4) AS cosine,
-         |         CASE WHEN sa4 * nb + sb4 * na > 0 THEN
-         |           round(CAST(2 * c4 * na * nb AS DOUBLE)
-         |                 / (sa4 * nb + sb4 * na), 4) END AS margin,
-         |         nc.n_cand
-         |  FROM best
-         |  JOIN a USING (s_id)
-         |  JOIN b ON b.t_id = best.t_id
-         |  JOIN nc ON nc.s_id = best.s_id
-         |)
+         |$s11BlockedCtes,
+         |${marginCtes("", "short", "blocked", nCand = true)}
          |SELECT e.s_id,
          |       coalesce(bl.match_id, -1) AS match_id,
          |       bl.cosine, bl.margin,
@@ -3036,126 +2907,16 @@ object Similarity {
     // s16: the threshold sweep replayed whole — the s11 exact chain WITH
     // margins (not just the best match), the s11b blocked ivf chain, one
     // unnest over the threshold grid, and the integer-regret aggregation.
-    // Both margin pipelines are the proven s11/s11b CTE texts verbatim;
-    // the sweep itself is pure arithmetic over their join.
+    // Both margin pipelines are [[marginCtes]] (the exact one under the
+    // `e` prefix) over [[s11ExactCtes]] and [[s11BlockedCtes]]; the sweep
+    // itself is pure arithmetic over their join.
     "s16_margin_sweep" ->
       s"""WITH $commonCtes,
-         |src AS (
-         |  SELECT e.vec_id AS s_id, e.embedding AS s_emb, e.nrm AS s_nrm
-         |  FROM en e JOIN documents d ON d.doc_id = e.vec_id
-         |  WHERE d.lang = '$S11SrcLang'
-         |),
-         |tgt AS (
-         |  SELECT e.vec_id AS t_id, e.embedding AS t_emb, e.nrm AS t_nrm
-         |  FROM en e JOIN documents d ON d.doc_id = e.vec_id
-         |  WHERE d.lang = '$S11TgtLang'
-         |),
-         |epairs AS (
-         |  SELECT s_id, t_id,
-         |         CAST(round(${dotSql("s_emb", "t_emb")}
-         |                    / (s_nrm * t_nrm) * 10000, 0) AS BIGINT) AS c4
-         |  FROM src JOIN tgt ON s_id <> t_id
-         |),
-         |erk AS (
-         |  SELECT s_id, t_id, c4,
-         |         row_number() OVER (PARTITION BY s_id
-         |           ORDER BY c4 DESC, t_id ASC) AS rs,
-         |         row_number() OVER (PARTITION BY t_id
-         |           ORDER BY c4 DESC, s_id ASC) AS rt
-         |  FROM epairs
-         |),
-         |ea AS (
-         |  SELECT s_id, CAST(sum(c4) AS BIGINT) AS sa4, count(*) AS na
-         |  FROM erk WHERE rs <= $S11MarginK GROUP BY 1
-         |),
-         |eb AS (
-         |  SELECT t_id, CAST(sum(c4) AS BIGINT) AS sb4, count(*) AS nb
-         |  FROM erk WHERE rt <= $S11MarginK GROUP BY 1
-         |),
-         |ebest AS (
-         |  SELECT s_id, t_id, c4 FROM erk WHERE rs = 1
-         |),
-         |escored AS (
-         |  SELECT ebest.s_id, ebest.t_id AS exact_match,
-         |         round(CAST(c4 AS DOUBLE) / 10000, 4) AS exact_cosine,
-         |         CASE WHEN sa4 * nb + sb4 * na > 0 THEN
-         |           round(CAST(2 * c4 * na * nb AS DOUBLE)
-         |                 / (sa4 * nb + sb4 * na), 4) END AS exact_margin
-         |  FROM ebest
-         |  JOIN ea USING (s_id)
-         |  JOIN eb ON eb.t_id = ebest.t_id
-         |),
-         |cent AS (
-         |  SELECT c_id, c_emb, c_nrm FROM (
-         |    SELECT t_id AS c_id, t_emb AS c_emb, t_nrm AS c_nrm,
-         |           row_number() OVER (
-         |             ORDER BY (t_id * $MixA + $MixB) % $MixM, t_id) AS crn
-         |    FROM tgt
-         |  ) WHERE crn <= greatest($NumCentroids,
-         |      CAST(ceil(sqrt(CAST((SELECT count(*) FROM tgt) AS DOUBLE)
-         |                     / $CentroidDivisor)) AS BIGINT))
-         |),
-         |cells AS (
-         |  SELECT t_id, t_emb, t_nrm, cell FROM (
-         |    SELECT t.t_id, t.t_emb, t.t_nrm, c.c_id AS cell,
-         |           row_number() OVER (PARTITION BY t.t_id
-         |             ORDER BY ${cosSql("t.t_emb", "t.t_nrm", "c.c_emb", "c.c_nrm")} DESC,
-         |                      c.c_id ASC) AS rn
-         |    FROM tgt t CROSS JOIN cent c
-         |  ) WHERE rn = 1
-         |),
-         |probes AS (
-         |  SELECT s_id, s_emb, s_nrm, cell FROM (
-         |    SELECT s.s_id, s.s_emb, s.s_nrm, c.c_id AS cell,
-         |           row_number() OVER (PARTITION BY s.s_id
-         |             ORDER BY ${cosSql("s.s_emb", "s.s_nrm", "c.c_emb", "c.c_nrm")} DESC,
-         |                      c.c_id ASC) AS rn
-         |    FROM src s CROSS JOIN cent c
-         |  ) WHERE rn <= $S11bProbe
-         |),
-         |cand AS (
-         |  SELECT p.s_id, a.cell, a.t_id,
-         |         CAST(round(${dotSql("p.s_emb", "a.t_emb")}
-         |                    / (p.s_nrm * a.t_nrm) * 10000, 0) AS BIGINT) AS c4
-         |  FROM probes p JOIN cells a USING (cell)
-         |),
-         |short AS (
-         |  SELECT s_id, t_id, c4 FROM (
-         |    SELECT s_id, t_id, c4,
-         |           row_number() OVER (PARTITION BY s_id, cell
-         |             ORDER BY c4 DESC, t_id ASC) AS sr
-         |    FROM cand
-         |  ) WHERE sr <= $S11ShortlistK
-         |),
-         |rk AS (
-         |  SELECT s_id, t_id, c4,
-         |         row_number() OVER (PARTITION BY s_id
-         |           ORDER BY c4 DESC, t_id ASC) AS rs,
-         |         row_number() OVER (PARTITION BY t_id
-         |           ORDER BY c4 DESC, s_id ASC) AS rt
-         |  FROM short
-         |),
-         |a AS (
-         |  SELECT s_id, CAST(sum(c4) AS BIGINT) AS sa4, count(*) AS na
-         |  FROM rk WHERE rs <= $S11MarginK GROUP BY 1
-         |),
-         |b AS (
-         |  SELECT t_id, CAST(sum(c4) AS BIGINT) AS sb4, count(*) AS nb
-         |  FROM rk WHERE rt <= $S11MarginK GROUP BY 1
-         |),
-         |best AS (
-         |  SELECT s_id, t_id, c4 FROM rk WHERE rs = 1
-         |),
-         |blocked AS (
-         |  SELECT best.s_id, best.t_id AS match_id,
-         |         round(CAST(c4 AS DOUBLE) / 10000, 4) AS cosine,
-         |         CASE WHEN sa4 * nb + sb4 * na > 0 THEN
-         |           round(CAST(2 * c4 * na * nb AS DOUBLE)
-         |                 / (sa4 * nb + sb4 * na), 4) END AS margin
-         |  FROM best
-         |  JOIN a USING (s_id)
-         |  JOIN b ON b.t_id = best.t_id
-         |),
+         |${s11ExactCtes("epairs")},
+         |${marginCtes("e", "epairs", "escored",
+                  ("exact_match", "exact_cosine", "exact_margin"))},
+         |$s11BlockedCtes,
+         |${marginCtes("", "short", "blocked")},
          |j AS (
          |  SELECT e.s_id, e.exact_match, e.exact_cosine, e.exact_margin,
          |         bl.match_id, bl.cosine, bl.margin

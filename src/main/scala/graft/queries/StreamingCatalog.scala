@@ -321,19 +321,13 @@ object StreamingCatalog {
          |),
          |qual AS (
          |  SELECT b.vec_id, b.cell, a.vec_id AS kept_by,
-         |         ${Similarity.cosineSql("a.embedding", "a.nrm",
-                      "b.embedding", "b.nrm")} AS cosine
+         |         ${Dedup.pairCosineSql} AS cosine
          |  FROM ranked a JOIN ranked b
          |    ON a.cell = b.cell AND a.rnk < b.rnk
          |  WHERE a.rnk <= $St10MaxCell AND b.rnk <= $St10MaxCell
-         |    AND ${Similarity.cosineSql("a.embedding", "a.nrm",
-                      "b.embedding", "b.nrm")} >= ${Dedup.D13Threshold}
+         |    AND ${Dedup.pairCosineSql} >= ${Dedup.D13Threshold}
          |)
-         |SELECT vec_id, cell, kept_by, cosine FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY vec_id
-         |             ORDER BY kept_by ASC) AS rn
-         |  FROM qual
-         |) WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+         |${Dedup.keeperSelectSql}""".stripMargin,
     // keep-earliest-arrival per md5(text); arrival order == doc_id order
     // (timestamp_micros is strictly increasing in doc_id)
     "st1_dedup_first_seen" ->
@@ -352,20 +346,12 @@ object StreamingCatalog {
     // the Bloom bounds are ground truth, stated as literals
     "st3_contamination_bounds" -> {
       val n = 5
-      val joins = (0 until n)
-        .map(k => s"string_split(text, ' ')[i+$k]").mkString(" || ' ' || ")
       s"""WITH sh AS (
          |  SELECT doc_id,
          |         substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cd' AS is_train,
          |         unnest(shs) AS sh
          |  FROM (
-         |    SELECT doc_id,
-         |      CASE WHEN len(string_split(text, ' ')) >= $n THEN
-         |        list_distinct(list_transform(
-         |          generate_series(1, len(string_split(text, ' ')) - ${n - 1}),
-         |          i -> $joins))
-         |      ELSE CAST([] AS VARCHAR[]) END AS shs
-         |    FROM documents)
+         |    ${TextAnalysis.ngramShinglesSql(n, "documents")}
          |),
          |tr AS (SELECT DISTINCT sh FROM sh WHERE is_train)
          |SELECT s.doc_id, count(*) AS n_sh, count(t.sh) AS n_exact,
@@ -388,24 +374,11 @@ object StreamingCatalog {
         |       CAST(sum(cents) AS DOUBLE) / 100.0 AS value_sum
         |FROM e GROUP BY win_start_us, event_type
         |ORDER BY win_start_us, event_type""".stripMargin,
-    // e3's session derivation verbatim, QUALIFY-dropping each user's
-    // final (still-open) session — the sessionizer's holdback contract
+    // e3's session derivation (EventQueries.sessionCtes), QUALIFY-
+    // dropping each user's final (still-open) session — the
+    // sessionizer's holdback contract
     "st5_sessions_closed" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |         CASE WHEN lag(epoch_us(ts)) OVER w IS NULL THEN 1
-        |              WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w
-        |                   > 30 * 60 * 1000000 THEN 1
-        |              ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-        |), s AS (
-        |  SELECT user_id, ts_us,
-        |         sum(is_new) OVER (PARTITION BY user_id
-        |           ORDER BY ts_us, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-        |  FROM e
-        |), sess AS (
+      s"""WITH ${EventQueries.sessionCtes}, sess AS (
         |  SELECT user_id, session_idx, count(*) AS n_events,
         |         min(ts_us) AS start_us, max(ts_us) AS end_us
         |  FROM s GROUP BY user_id, session_idx
@@ -414,37 +387,12 @@ object StreamingCatalog {
         |FROM sess
         |QUALIFY session_idx < max(session_idx) OVER (PARTITION BY user_id)
         |ORDER BY user_id, start_us""".stripMargin,
-    // e8's independent 3-chained-min-join formulation, cut at the
-    // snapshot instant — cross-validates the streaming fold the same way
+    // e8's independent 3-chained-min-join formulation
+    // (EventQueries.funnelOracleSql), cut at the snapshot instant —
+    // cross-validates the streaming fold the same way
     // e8's oracle cross-validates the batch state machine
     "st6_funnel_snapshot" ->
-      s"""WITH e AS (
-         |  SELECT user_id, event_type,
-         |         lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-         |           || lpad(CAST(event_id AS VARCHAR), 10, '0') AS k
-         |  FROM events WHERE epoch_us(ts) < $St6CutoffUs
-         |), u AS (
-         |  SELECT DISTINCT user_id FROM e
-         |), v AS (
-         |  SELECT user_id, min(k) AS kv FROM e
-         |  WHERE event_type = 'view' GROUP BY 1
-         |), c AS (
-         |  SELECT e.user_id, min(k) AS kc FROM e JOIN v USING (user_id)
-         |  WHERE event_type = 'click' AND k > kv GROUP BY e.user_id
-         |), p AS (
-         |  SELECT e.user_id, min(k) AS kp FROM e JOIN c USING (user_id)
-         |  WHERE event_type = 'purchase' AND k > kc GROUP BY e.user_id
-         |)
-         |SELECT u.user_id,
-         |       CASE WHEN p.user_id IS NOT NULL THEN 3
-         |            WHEN c.user_id IS NOT NULL THEN 2
-         |            WHEN v.user_id IS NOT NULL THEN 1
-         |            ELSE 0 END AS reached
-         |FROM u
-         |LEFT JOIN v USING (user_id)
-         |LEFT JOIN c USING (user_id)
-         |LEFT JOIN p USING (user_id)
-         |ORDER BY u.user_id""".stripMargin,
+      EventQueries.funnelOracleSql(s"events WHERE epoch_us(ts) < $St6CutoffUs"),
     // admit-by-arrival replayed as a row_number over the synthesized
     // strictly-increasing arrival order
     "st7_quota_admitted" ->
@@ -477,8 +425,7 @@ object StreamingCatalog {
     // Bloom bounds are ground truth, stated as literals (st3's gate)
     "st9_ingest_admission" -> {
       val n = 5
-      val joins = (0 until n)
-        .map(k => s"string_split(text, ' ')[i+$k]").mkString(" || ' ' || ")
+      val joins = TextAnalysis.ngramJoinSql(n)
       s"""WITH tokd AS (
          |  SELECT doc_id, source, text,
          |         CAST(len(string_split(text, ' ')) AS BIGINT) AS tok,
@@ -504,13 +451,7 @@ object StreamingCatalog {
          |  WHERE rn <= $St9Quota AND prev < $St9Budget
          |), shv AS (
          |  SELECT doc_id, unnest(shs) AS sh FROM (
-         |    SELECT doc_id,
-         |      CASE WHEN len(string_split(text, ' ')) >= $n THEN
-         |        list_distinct(list_transform(
-         |          generate_series(1, len(string_split(text, ' ')) - ${n - 1}),
-         |          i -> $joins))
-         |      ELSE CAST([] AS VARCHAR[]) END AS shs
-         |    FROM adm)
+         |    ${TextAnalysis.ngramShinglesSql(n, "adm")}
          |), tr AS (
          |  SELECT DISTINCT sh FROM (
          |    SELECT unnest(list_distinct(list_transform(

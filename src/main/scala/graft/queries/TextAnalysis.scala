@@ -1702,6 +1702,96 @@ object TextAnalysis {
        |),
        |$rounds""".stripMargin
 
+  /** t2's quality score over the columns n_words, stop_hits and
+    * punct_ratio (DOUBLE), as oracle SQL with the engine's IEEE
+    * operation order. Used by t2 (rounded), d9 (rounded) and the p1/p2
+    * funnel's `q_pass` (unrounded, as [[Pipeline]]'s staged flags
+    * compare it). */
+  private[queries] val qualitySql: String =
+    """0.5 * least(n_words / 50.0, 1.0)
+      |           + 0.3 * (1.0 - punct_ratio)
+      |           + 0.2 * least((stop_hits / n_words) * 5.0, 1.0)""".stripMargin
+
+  /** The quality inputs of [[qualitySql]] per document, one column a
+    * line (t2 writes the same three columns with `AS stop_hits` on the
+    * stop-word line). Used by d9 and the p1/p2 funnel. */
+  private[queries] val qualityInputsSql: String =
+    """CAST(len(string_split(text, ' ')) AS DOUBLE) AS n_words,
+      |         CAST(len(list_filter(string_split(text, ' '),
+      |              w -> w IN ('the','a','of','to','in','and'))) AS DOUBLE)
+      |           AS stop_hits,
+      |         CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
+      |           / CAST(n_chars AS DOUBLE) AS punct_ratio""".stripMargin
+
+  /** t3's stop-word hit counts he/hd/hf/hs (en/de/fr/es) and CJK
+    * character count per document. Used by t3 and the p1/p2 funnel. */
+  private[queries] val langHitsSql: String =
+    """len(list_filter(string_split(text, ' '),
+      |             w -> w IN ('the','a','of','to','in','and'))) AS he,
+      |         len(list_filter(string_split(text, ' '),
+      |             w -> w IN ('der','die','und','das','ein','von'))) AS hd,
+      |         len(list_filter(string_split(text, ' '),
+      |             w -> w IN ('le','la','les','et','un','des'))) AS hf,
+      |         len(list_filter(string_split(text, ' '),
+      |             w -> w IN ('el','los','las','una','que','es'))) AS hs,
+      |         len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS cjk""".stripMargin
+
+  /** t3's language decision over [[langHitsSql]]'s columns: any CJK is
+    * zh, no hits is und, else the most-hit language with ties to the
+    * earlier of en, de, fr, es. Used by t3 and the p1/p2 funnel. */
+  private[queries] val langPredictSql: String =
+    """CASE WHEN cjk > 0 THEN 'zh'
+      |              WHEN greatest(he, hd, hf, hs) = 0 THEN 'und'
+      |              WHEN he >= greatest(hd, hf, hs) THEN 'en'
+      |              WHEN hd >= greatest(hf, hs) THEN 'de'
+      |              WHEN hf >= hs THEN 'fr'
+      |              ELSE 'es' END AS predicted""".stripMargin
+
+  /** t12's surprisal replay: per-doc token counts, corpus frequencies,
+    * and each token's integer bits ⌊log2(total / freq)⌋. The Zipf split
+    * (t12_surprisal_zipf) is a pure plan-topology variant with the same
+    * result set, so both entries share this text — a differential check
+    * that the head/tail decomposition loses and double-counts nothing. */
+  private val t12OracleSql: String =
+    """WITH dt AS (
+      |  SELECT doc_id, tok, count(*) AS n_dt
+      |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+      |        FROM documents)
+      |  GROUP BY doc_id, tok
+      |), vocab AS (
+      |  SELECT tok, CAST(sum(n_dt) AS BIGINT) AS freq FROM dt GROUP BY tok
+      |), scored AS (
+      |  SELECT tok,
+      |         CAST(length(bin((SELECT sum(freq) FROM vocab) // freq)) - 1
+      |              AS BIGINT) AS bits
+      |  FROM vocab
+      |)
+      |SELECT dt.doc_id,
+      |       CAST(sum(dt.n_dt) AS BIGINT) AS n_tok,
+      |       CAST(sum(dt.n_dt * s.bits) AS BIGINT) AS bits_sum,
+      |       round(CAST(sum(dt.n_dt * s.bits) AS DOUBLE)
+      |             / sum(dt.n_dt), 4) AS mean_bits
+      |FROM dt JOIN scored s USING (tok)
+      |GROUP BY dt.doc_id ORDER BY dt.doc_id""".stripMargin
+
+  /** Word `n`-gram `i` of a document's space split, as SQL joining words
+    * `i` .. `i + n − 1` with single spaces. Used by [[ngramShinglesSql]]
+    * and st9's training-side shingle set. */
+  private[queries] def ngramJoinSql(n: Int): String =
+    (0 until n).map(k => s"string_split(text, ' ')[i+$k]").mkString(" || ' ' || ")
+
+  /** The distinct word `n`-gram list `shs` of each document of `from`
+    * (empty under `n` words), as the parenthesised subquery body that
+    * t8 and t17 (n = [[ContamN]]) and st3 and st9 (n = 5) unnest. */
+  private[queries] def ngramShinglesSql(n: Int, from: String): String =
+    s"""SELECT doc_id,
+       |      CASE WHEN len(string_split(text, ' ')) >= $n THEN
+       |        list_distinct(list_transform(
+       |          generate_series(1, len(string_split(text, ' ')) - ${n - 1}),
+       |          i -> ${ngramJoinSql(n)}))
+       |      ELSE CAST([] AS VARCHAR[]) END AS shs
+       |    FROM $from)""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
     "t1_token_count" ->
       """SELECT doc_id,
@@ -1711,7 +1801,7 @@ object TextAnalysis {
         |       n_chars
         |FROM documents ORDER BY doc_id""".stripMargin,
     "t2_quality_score" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT doc_id,
         |         CAST(len(string_split(text, ' ')) AS DOUBLE) AS n_words,
         |         CAST(len(list_filter(string_split(text, ' '),
@@ -1724,31 +1814,16 @@ object TextAnalysis {
         |       CAST(n_words AS INT) AS n_words,
         |       round(stop_hits / n_words, 4) AS stop_ratio,
         |       round(punct_ratio, 4) AS punct_ratio,
-        |       round(0.5 * least(n_words / 50.0, 1.0)
-        |           + 0.3 * (1.0 - punct_ratio)
-        |           + 0.2 * least((stop_hits / n_words) * 5.0, 1.0), 4) AS quality
+        |       round($qualitySql, 4) AS quality
         |FROM f ORDER BY doc_id""".stripMargin,
     "t3_langid" ->
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT lang,
-        |         len(list_filter(string_split(text, ' '),
-        |             w -> w IN ('the','a','of','to','in','and'))) AS he,
-        |         len(list_filter(string_split(text, ' '),
-        |             w -> w IN ('der','die','und','das','ein','von'))) AS hd,
-        |         len(list_filter(string_split(text, ' '),
-        |             w -> w IN ('le','la','les','et','un','des'))) AS hf,
-        |         len(list_filter(string_split(text, ' '),
-        |             w -> w IN ('el','los','las','una','que','es'))) AS hs,
-        |         len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS cjk
+        |         $langHitsSql
         |  FROM documents
         |), p AS (
         |  SELECT lang,
-        |         CASE WHEN cjk > 0 THEN 'zh'
-        |              WHEN greatest(he, hd, hf, hs) = 0 THEN 'und'
-        |              WHEN he >= greatest(hd, hf, hs) THEN 'en'
-        |              WHEN hd >= greatest(hf, hs) THEN 'de'
-        |              WHEN hf >= hs THEN 'fr'
-        |              ELSE 'es' END AS predicted
+        |         $langPredictSql
         |  FROM h
         |)
         |SELECT lang, predicted, count(*) AS n_docs
@@ -1818,21 +1893,13 @@ object TextAnalysis {
          |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < $thCase
          |ORDER BY doc_id""".stripMargin
     },
-    "t8_contamination" -> {
-      val joins = (0 until ContamN)
-        .map(k => s"string_split(text, ' ')[i+$k]").mkString(" || ' ' || ")
+    "t8_contamination" ->
       s"""WITH sh AS (
          |  SELECT doc_id,
          |         substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cd' AS is_train,
          |         unnest(shs) AS sh
          |  FROM (
-         |    SELECT doc_id,
-         |      CASE WHEN len(string_split(text, ' ')) >= $ContamN THEN
-         |        list_distinct(list_transform(
-         |          generate_series(1, len(string_split(text, ' ')) - ${ContamN - 1}),
-         |          i -> $joins))
-         |      ELSE CAST([] AS VARCHAR[]) END AS shs
-         |    FROM documents)
+         |    ${ngramShinglesSql(ContamN, "documents")}
          |),
          |tr AS (SELECT DISTINCT sh FROM sh WHERE is_train)
          |SELECT s.doc_id, count(*) AS n_sh, count(t.sh) AS n_hit,
@@ -1840,8 +1907,7 @@ object TextAnalysis {
          |FROM sh s LEFT JOIN tr t ON s.sh = t.sh
          |WHERE NOT s.is_train
          |GROUP BY s.doc_id
-         |ORDER BY contam_frac DESC, doc_id LIMIT 20""".stripMargin
-    },
+         |ORDER BY contam_frac DESC, doc_id LIMIT 20""".stripMargin,
     "t9_rare_tokens" ->
       s"""WITH tok AS (
          |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
@@ -1886,51 +1952,8 @@ object TextAnalysis {
         |             / sum(n), 4) AS rep_ratio,
         |       round(CAST(max(n) AS DOUBLE) / sum(n), 4) AS top_share
         |FROM cnt GROUP BY doc_id, source ORDER BY doc_id""".stripMargin,
-    "t12_surprisal" ->
-      """WITH dt AS (
-        |  SELECT doc_id, tok, count(*) AS n_dt
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |        FROM documents)
-        |  GROUP BY doc_id, tok
-        |), vocab AS (
-        |  SELECT tok, CAST(sum(n_dt) AS BIGINT) AS freq FROM dt GROUP BY tok
-        |), scored AS (
-        |  SELECT tok,
-        |         CAST(length(bin((SELECT sum(freq) FROM vocab) // freq)) - 1
-        |              AS BIGINT) AS bits
-        |  FROM vocab
-        |)
-        |SELECT dt.doc_id,
-        |       CAST(sum(dt.n_dt) AS BIGINT) AS n_tok,
-        |       CAST(sum(dt.n_dt * s.bits) AS BIGINT) AS bits_sum,
-        |       round(CAST(sum(dt.n_dt * s.bits) AS DOUBLE)
-        |             / sum(dt.n_dt), 4) AS mean_bits
-        |FROM dt JOIN scored s USING (tok)
-        |GROUP BY dt.doc_id ORDER BY dt.doc_id""".stripMargin,
-    // the Zipf split is a pure plan-topology variant: same result set,
-    // same oracle text — a differential check that the head/tail
-    // decomposition loses and double-counts nothing
-    "t12_surprisal_zipf" ->
-      """WITH dt AS (
-        |  SELECT doc_id, tok, count(*) AS n_dt
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |        FROM documents)
-        |  GROUP BY doc_id, tok
-        |), vocab AS (
-        |  SELECT tok, CAST(sum(n_dt) AS BIGINT) AS freq FROM dt GROUP BY tok
-        |), scored AS (
-        |  SELECT tok,
-        |         CAST(length(bin((SELECT sum(freq) FROM vocab) // freq)) - 1
-        |              AS BIGINT) AS bits
-        |  FROM vocab
-        |)
-        |SELECT dt.doc_id,
-        |       CAST(sum(dt.n_dt) AS BIGINT) AS n_tok,
-        |       CAST(sum(dt.n_dt * s.bits) AS BIGINT) AS bits_sum,
-        |       round(CAST(sum(dt.n_dt * s.bits) AS DOUBLE)
-        |             / sum(dt.n_dt), 4) AS mean_bits
-        |FROM dt JOIN scored s USING (tok)
-        |GROUP BY dt.doc_id ORDER BY dt.doc_id""".stripMargin,
+    "t12_surprisal" -> t12OracleSql,
+    "t12_surprisal_zipf" -> t12OracleSql,
     "t13_source_quota" ->
       """WITH ranked AS (
         |  SELECT source, doc_id, n_chars,
@@ -2020,19 +2043,11 @@ object TextAnalysis {
          |  AND substr(md5(CAST(t AS VARCHAR)), 1, 2) < 'cd'
          |GROUP BY v
          |ORDER BY val_doc""".stripMargin,
-    "t17_novelty_score" -> {
-      val joins = (0 until ContamN)
-        .map(k => s"string_split(text, ' ')[i+$k]").mkString(" || ' ' || ")
+    "t17_novelty_score" ->
       s"""WITH sh AS (
          |  SELECT doc_id, unnest(shs) AS sh
          |  FROM (
-         |    SELECT doc_id,
-         |      CASE WHEN len(string_split(text, ' ')) >= $ContamN THEN
-         |        list_distinct(list_transform(
-         |          generate_series(1, len(string_split(text, ' ')) - ${ContamN - 1}),
-         |          i -> $joins))
-         |      ELSE CAST([] AS VARCHAR[]) END AS shs
-         |    FROM documents)
+         |    ${ngramShinglesSql(ContamN, "documents")}
          |),
          |owner AS (SELECT sh, min(doc_id) AS owner FROM sh GROUP BY 1)
          |SELECT s.doc_id, count(*) AS n_sh,
@@ -2043,8 +2058,7 @@ object TextAnalysis {
          |             / count(*), 4) AS novelty
          |FROM sh s JOIN owner o ON s.sh = o.sh
          |GROUP BY s.doc_id
-         |ORDER BY s.doc_id""".stripMargin
-    },
+         |ORDER BY s.doc_id""".stripMargin,
     // t18: same planted augmentation, same RE2-safe patterns, same
     // chained replacement — DuckDB needs the 'g' flag (its
     // regexp_replace is first-match by default; Spark's is global)

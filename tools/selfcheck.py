@@ -11,7 +11,12 @@ values after sorting columns by name and rows by all columns.
 With --against, it then also compares every query's rows, in the same
 canonical form, with another Verify output directory (for example the
 parent commit's), prints "N identical, M differ", and fails on any
-difference or on a query missing from either side.
+difference or on a query missing from either side. It also compares the
+two oracle_sql.json files key by key and prints "K oracle texts
+identical, W whitespace-only, D differ", naming every key that is not
+identical; "whitespace-only" means the texts are equal once each
+whitespace run outside single-quoted literals is one space. The oracle
+comparison is a report and does not change the exit status.
 """
 import argparse, sys, json, glob, os
 import duckdb
@@ -68,6 +73,41 @@ def compare_against(out_dir, other_dir):
     return n_diff == 0
 
 
+def collapse_ws(sql):
+    """`sql` with each whitespace run outside single-quoted literals made
+    one space (a doubled quote inside a literal toggles out and back in)."""
+    out, quoted, in_ws = [], False, False
+    for ch in sql:
+        if ch == "'":
+            quoted = not quoted
+        if not quoted and ch.isspace():
+            if not in_ws:
+                out.append(" ")
+            in_ws = True
+            continue
+        out.append(ch)
+        in_ws = False
+    return "".join(out)
+
+
+def compare_oracle_texts(out_dir, other_dir):
+    """Key-by-key comparison of two oracle_sql.json files (a report only)."""
+    ours = json.load(open(f"{out_dir}/oracle_sql.json"))
+    theirs = json.load(open(f"{other_dir}/oracle_sql.json"))
+    n_same = n_ws = n_diff = 0
+    for key in sorted(set(ours) | set(theirs)):
+        a, b = ours.get(key), theirs.get(key)
+        if a is not None and a == b:
+            n_same += 1
+        elif a is not None and b is not None and collapse_ws(a) == collapse_ws(b):
+            print(f"ORACLE WHITESPACE-ONLY {key}"); n_ws += 1
+        else:
+            why = "missing in " + (out_dir if a is None else other_dir) \
+                if a is None or b is None else "text differs"
+            print(f"ORACLE DIFF {key}: {why}"); n_diff += 1
+    print(f"{n_same} oracle texts identical, {n_ws} whitespace-only, {n_diff} differ")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("sf_dir")
@@ -119,6 +159,8 @@ def main():
             print(f"PASS {qname} ({len(got)} rows)"); n_pass += 1
     print(f"\n{n_pass} passed, {n_fail} failed")
     same = compare_against(out_dir, args.against) if args.against else True
+    if args.against:
+        compare_oracle_texts(out_dir, args.against)
     sys.exit(1 if n_fail or not same else 0)
 
 
