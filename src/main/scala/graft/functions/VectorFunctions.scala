@@ -61,18 +61,9 @@ case class CosineSim(left: Expression, right: Expression)
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
     val n = a.numElements()
-    if (b.numElements() != n) return null
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = a.getFloat(i).toDouble
-      val y = b.getFloat(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    val d = math.sqrt(na) * math.sqrt(nb)
-    if (d == 0.0) 0.0 else dot / d
+    if (b.numElements() != n ||
+        (0 until n).exists(i => a.isNullAt(i) || b.isNullAt(i))) null
+    else CosineSim.cosine(a.toFloatArray(), b.toFloatArray())
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -120,6 +111,60 @@ case class CosineSim(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** The [[CosineSim]] arithmetic outside Catalyst, for the expression's
+  * interpreted path and the two callers that score embeddings in a Scala
+  * loop: d13's keep-first scan (`Dedup.d13Core`, which also runs d13b's
+  * and p5/p6's pair stage) and the stream's admission
+  * (`StreamingOps.semanticAdmit`). Both must score bit-identically to
+  * `round(cosine_sim(a, b), 4)`, the composition the DuckDB oracles
+  * replay. */
+object CosineSim {
+
+  /** The unrounded cosine of two equal-length vectors: the expression's
+    * left-to-right double accumulation and sqrt-product denominator. */
+  def cosine(a: Array[Float], b: Array[Float]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < a.length) {
+      val x = a(i).toDouble
+      val y = b(i).toDouble
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    val d = math.sqrt(na) * math.sqrt(nb)
+    if (d == 0.0) 0.0 else dot / d
+  }
+
+  /** Spark's `round(c, 4)` on a double: HALF_UP over the double's decimal
+    * string, NaN and infinities unchanged. */
+  def round4(c: Double): Double =
+    if (c.isNaN || c.isInfinite) c
+    else BigDecimal(c).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The first `(id, rounded cosine)` of `buffer`, in its order, whose
+    * `round(cosine_sim(e, emb), 4)` is ≥ `threshold` (a 4-place value).
+    * A length mismatch is SQL NULL and never qualifies; a NaN cosine
+    * does, as Spark orders NaN above every double. Only a raw cosine
+    * at or above `threshold − 0.0001` pays for the decimal rounding:
+    * anything below it rounds to at most `threshold − 0.0001`. */
+  def firstKeeper(buffer: IterableOnce[(Long, Array[Float])],
+      emb: Array[Float], threshold: Double): Option[(Long, Double)] = {
+    val cut = threshold - 1e-4
+    val it = buffer.iterator
+    while (it.hasNext) {
+      val (id, e) = it.next()
+      if (e.length == emb.length) {
+        val c = cosine(e, emb)
+        if (!(c < cut)) {
+          val q = round4(c)
+          if (q >= threshold || q.isNaN) return Some((id, q))
+        }
+      }
+    }
+    None
+  }
 }
 
 /** Raw dot product of two float vectors — the [[CosineSim]] kernel minus

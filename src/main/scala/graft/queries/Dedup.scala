@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Materialize, SharedStage}
+import graft.functions.CosineSim
 import graft.functions.SketchFunctions.{minhash_sig, simhash64}
 import graft.functions.TextHashFunctions.word_shingle_hashes
 import graft.functions.VectorFunctions.cosine_sim
@@ -1109,16 +1110,19 @@ object Dedup {
     * of N², and at 100 TB the cell id is the partition key (each cell
     * compares co-located, exactly how reference SemDeDup shards by
     * k-means cluster). The centroid count grows like sqrt(N) at scale
-    * (s2's documented rule), keeping cells bounded. The keeper argmin
-    * is one row_number window over qualifying pairs only. Everything
+    * (s2's documented rule), keeping cells bounded. Everything
     * rides the rounded-cosine determinism contract, so the DuckDB
     * oracle replays assignment, threshold, and keeper choice
     * bit-for-bit. */
-  def d13SemanticDedup(s: SparkSession, dir: String): DataFrame = {
-    val via = resolveAssignVia(s, dir)
-    d13Core(Similarity.d13CellAssigned(via, Similarity.embeddingsFor(s, dir)),
-      subCapFor(via)).orderBy(col("vec_id"))
-  }
+  def d13SemanticDedup(s: SparkSession, dir: String): DataFrame =
+    d13Core(d13Cells(s, dir), s.sparkContext.defaultParallelism,
+      subCapFor(resolveAssignVia(s, dir))).orderBy(col("vec_id"))
+
+  /** d13's assigned-cells frame through the resolved assignment tier
+    * (exposed for DedupSpec's pair-stage pin). */
+  private[graft] def d13Cells(s: SparkSession, dir: String): DataFrame =
+    Similarity.d13CellAssigned(resolveAssignVia(s, dir),
+      Similarity.embeddingsFor(s, dir))
 
   /** The flat tier's ABSOLUTE sub-cell cap (r16): under `lshflat` the
     * cell population is CONSTRUCTED to be ~[[Similarity.FlatCellTarget]]
@@ -1194,59 +1198,62 @@ object Dedup {
       case v      => v
     }
 
+  /** One row of d13's pair-stage input and one row of its output. */
+  case class D13Member(vec_id: Long, cell: Long, sub: Long,
+      embedding: Array[Float])
+  case class D13Drop(vec_id: Long, cell: Long, kept_by: Long, cosine: Double)
+
   /** The d13 pair stage, the one copy: over an assigned
-    * `cells(vec_id, embedding, cell)` frame, the bounded sub-cells
-    * ([[boundedSubCells]]) repartitioned on (cell, sub) at the session's
-    * shuffle width, the self-join on `kept_by < vec_id` within a
-    * (cell, sub), the rounded cosine ≥ [[D13Threshold]], and the
-    * smallest-keeper argmin: one unordered row per dropped vector
-    * (vec_id, cell, kept_by, cosine). d13, the d13b skew companion and
-    * p5/p6's semantic stage (`Pipeline.semanticDrops`, the vec_ids only)
-    * all run it. The d13 oracles replay it as their `qual` CTE over
-    * [[Similarity.boundedSubCtes]] plus the `rn = 1` keeper pick. */
-  private[queries] def d13Core(cells0: DataFrame,
+    * `cells(vec_id, embedding, cell)` frame keyed by vec_id, one unordered
+    * row per dropped vector (vec_id, cell, kept_by, cosine), where
+    * `kept_by` is the smallest lower id in the vector's (cell, sub) at
+    * rounded cosine ≥ [[D13Threshold]]. The bounded sub-cells
+    * ([[boundedSubCells]]) are repartitioned on (cell, sub) into `width`
+    * tasks (an explicit count, which AQE does not coalesce: the stage's
+    * work is quadratic in a (cell, sub)'s rows, which its bytes do not
+    * show), sorted by (cell, sub, vec_id) within each task, and scanned
+    * once ([[keepFirst]]). A vector lives in one (cell, sub), so the
+    * scan's first qualifying id is the keeper, and the pair mass never
+    * leaves the task. A vector with a null embedding or a null element
+    * scores NULL against every other one, so it is neither a keeper nor
+    * dropped and is filtered before the shuffle. d13, the d13b skew
+    * companion and p5/p6's semantic stage (`Pipeline.semanticDrops`, the
+    * vec_ids only) all run it. The d13 oracles replay it as their `qual`
+    * CTE over [[Similarity.boundedSubCtes]] plus the `rn = 1` keeper
+    * pick. */
+  private[graft] def d13Core(cells0: DataFrame, width: Int,
       subCap: Option[Long] = None): DataFrame = {
-    // The pair join is DELIBERATELY pinned to the documented (cell, sub)
-    // distribution at the session's configured shuffle width (r21, guide
-    // §2.5): the planner's own plan was a sort-merge join whose reduce
-    // exchange AQE byte-coalesced to ONE partition — the pair stage's
-    // input is ~600 KiB at sf0.1 but its work is QUADRATIC in rows per
-    // (cell, sub), a compute density no byte-based coalescing (or
-    // byte-gated skew split — the 256 MB threshold) can see. Profiled:
-    // one single task burning 1.7 s of the operator's 3.3 s wall
-    // (ProfileQuery, r21). An explicit repartition(n, cell, sub) on the
-    // shared pair input restores the contract this file documents ("the
-    // pair stage shuffles on that key — the bound IS the task
-    // granularity"): user-specified counts are exempt from AQE
-    // coalescing, both self-join sides reuse the ONE exchange, and the
-    // sort-merge join adds no further shuffle because the distribution
-    // already matches its keys. n tracks spark.sql.shuffle.partitions —
-    // the session's scale knob — so a 100 TB run spreads the same way
-    // its other exchanges do, with no local-mode constant baked in.
-    val n = cells0.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val cells = boundedSubCells(cells0, subCap)
-      .repartition(n, col("cell"), col("sub"))
-    val a = cells.select(col("cell"), col("sub"), col("vec_id").as("kept_by"),
-      col("embedding").as("emb_a"))
-    val b = cells.select(col("cell").as("b_cell"), col("sub").as("b_sub"),
-      col("vec_id"), col("embedding").as("emb_b"))
-    // keeper argmin as a map-side-combinable min_by aggregation (r13):
-    // the former row_number window shipped the ENTIRE qualifying pair
-    // mass through one vec_id exchange + sort — on a dup-dense corpus
-    // (d13b: ~2M qualifying plant-plant pairs at sf0.1) that exchange
-    // was ~90% of the operator's cost. min_by collapses to one row per
-    // vec_id inside each map task; ties are impossible (one pair row
-    // per (vec_id, kept_by)). Same rows as the oracle's row_number
-    // formulation — deliberately a different composition.
-    a.join(b, col("cell") === col("b_cell") && col("sub") === col("b_sub")
-        && col("kept_by") < col("vec_id"))
-      .withColumn("cosine", round(cosine_sim(col("emb_a"), col("emb_b")), 4))
-      .filter(col("cosine") >= D13Threshold)
-      .groupBy(col("vec_id"))
-      .agg(min_by(struct(col("cell"), col("kept_by"), col("cosine")),
-        col("kept_by")).as("k"))
-      .select(col("vec_id"), col("k.cell").as("cell"),
-        col("k.kept_by").as("kept_by"), col("k.cosine").as("cosine"))
+    import cells0.sparkSession.implicits._
+    // a SQL lambda keeps its own variable name; the DSL's forall(col, f)
+    // would draw one from the JVM-wide counter and rename the lambdas of
+    // every plan built after it
+    boundedSubCells(cells0, subCap)
+      .filter(expr("forall(embedding, e -> e IS NOT NULL)"))
+      .repartition(width, col("cell"), col("sub"))
+      .sortWithinPartitions(col("cell"), col("sub"), col("vec_id"))
+      .select(col("vec_id"), col("cell"), col("sub"), col("embedding"))
+      .as[D13Member]
+      .mapPartitions(keepFirst)
+      .toDF()
+  }
+
+  /** d13's keep-first rule over one task's rows, sorted by
+    * (cell, sub, vec_id): each row is scored against the lower ids of its
+    * (cell, sub), lowest first, up to the first keeper
+    * ([[graft.functions.CosineSim.firstKeeper]]), then joins them. */
+  private def keepFirst(rows: Iterator[D13Member]): Iterator[D13Drop] = {
+    val group = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, Array[Float])]
+    var cell = 0L
+    var sub = 0L
+    rows.flatMap { m =>
+      if (group.isEmpty || m.cell != cell || m.sub != sub) {
+        group.clear(); cell = m.cell; sub = m.sub
+      }
+      val hit = CosineSim.firstKeeper(group, m.embedding, D13Threshold)
+      group += ((m.vec_id, m.embedding))
+      hit.map { case (k, c) => D13Drop(m.vec_id, m.cell, k, c) }
+    }
   }
 
   /** The bounded sub-cell split for the within-cell PAIR stages (see
@@ -1319,7 +1326,8 @@ object Dedup {
     * cannot perturb an organic keeper), and every plant drops with an
     * in-cell keeper below the shift. */
   def d13bSemanticDedupSkew(s: SparkSession, dir: String): DataFrame =
-    d13Core(d13bCells(s, dir)).orderBy(col("vec_id"))
+    d13Core(d13bCells(s, dir), s.sparkContext.defaultParallelism)
+      .orderBy(col("vec_id"))
 
   /** The d13b assigned-cells frame (exposed for DedupSpec's dominance
     * pin). */

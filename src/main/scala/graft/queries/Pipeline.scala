@@ -311,7 +311,7 @@ object Pipeline {
     * marginal semantic stage, the d7/p2 convention. */
   def p5SemanticCuration(s: SparkSession, dir: String): DataFrame = {
     val staged = sharedStagedFlags(s, dir)
-    staged.join(semanticDrops(s, dir, staged), Seq("doc_id"), "left")
+    staged.join(semanticDrops(s, dir), Seq("doc_id"), "left")
       .withColumn("f_pass", col("d_pass") && col("sd").isNull)
       .agg(
         count(lit(1)).as("n0"), sum(col("tok")).as("t0"),
@@ -334,15 +334,20 @@ object Pipeline {
   }
 
   /** The semantic-drop set among stage-d survivors — d13's pair stage
-    * ([[Dedup.d13Core]]) over the shared s2 cell artifact restricted to
-    * survivors, with the tier's sub-cell cap, as a (doc_id, sd=1) marker
-    * frame: the dropped vec_ids, one row each. Shared by p5 and p6. */
-  private def semanticDrops(s: SparkSession, dir: String,
-      staged: DataFrame): DataFrame = {
-    val surv = staged.filter(col("d_pass")).select(col("doc_id").as("vec_id"))
-    Dedup.d13Core(Similarity.sharedCells(s, dir).join(surv, "vec_id"),
+    * ([[Dedup.d13Core]]) over [[semanticCells]], with the tier's sub-cell
+    * cap, as a (doc_id, sd=1) marker frame: the dropped vec_ids, one row
+    * each. Shared by p5 and p6. */
+  private def semanticDrops(s: SparkSession, dir: String): DataFrame =
+    Dedup.d13Core(semanticCells(s, dir), s.sparkContext.defaultParallelism,
         Dedup.subCapFor(Dedup.resolveAssignVia(s, dir)))
       .select(col("vec_id").as("doc_id"), lit(1).as("sd"))
+
+  /** The shared s2 cell artifact restricted to the stage-d survivors:
+    * the `cells` frame p5/p6's semantic stage runs d13's rule over. */
+  private[graft] def semanticCells(s: SparkSession, dir: String): DataFrame = {
+    val surv = sharedStagedFlags(s, dir).filter(col("d_pass"))
+      .select(col("doc_id").as("vec_id"))
+    Similarity.sharedCells(s, dir).join(surv, "vec_id")
   }
 
   /** p6 — the FULL pretraining-data pipeline as one query, the capstone
@@ -374,7 +379,7 @@ object Pipeline {
       .select(col("doc_id"), col("words_removed"))
     val src = Tables.documents(s, dir).select(col("doc_id"), col("source"))
     val base = staged
-      .join(semanticDrops(s, dir, staged), Seq("doc_id"), "left")
+      .join(semanticDrops(s, dir), Seq("doc_id"), "left")
       .withColumn("f_pass", col("d_pass") && col("sd").isNull)
       .join(exc, Seq("doc_id"), "left")
       .withColumn("tok2", col("tok") - coalesce(col("words_removed"), lit(0L)))

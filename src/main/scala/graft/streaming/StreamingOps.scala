@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.CosineSim
+
 /** Structured Streaming surface. The reference is batch-only (SURVEY.md
   * §2.7), so this module is a forward extension: the same event-stream
   * semantics as [[graft.queries.EventQueries]], expressed over unbounded
@@ -678,21 +680,6 @@ object StreamingOps {
     * threshold against this vector. */
   case class SemDrop(vec_id: Long, cell: Long, kept_by: Long, cosine: Double)
 
-  /** CosineSim's exact arithmetic (left-to-right double accumulation,
-    * sqrt-product denominator) + Spark `round(_, 4)` HALF_UP — the state
-    * handler must score bit-identically to the batch expression or the
-    * stream/batch symmetry pin would chase float dust. */
-  private[graft] def roundedCos(a: Array[Float], b: Array[Float]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    val d = math.sqrt(na) * math.sqrt(nb)
-    val c = if (d == 0.0) 0.0 else dot / d
-    BigDecimal(c).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-  }
-
   /** Streaming SEMANTIC-dedup admission — the d13 rule at ingest time,
     * completing the ladder st1 (exact) and st2 (MinHash near-dup) start:
     * an arriving embedding is checked against the vectors already
@@ -764,12 +751,10 @@ object StreamingOps {
             }
             val out = Seq.newBuilder[SemDrop]
             best.foreach { case ((t, id), emb) =>
-              // one cosine per stored candidate (ADVICE r13: a guard +
-              // body collectFirst evaluated it twice per match, doubling
-              // the dominant per-arrival cost in dup-dense cells)
-              stored.iterator
-                .map { case (_, kid, e) => (kid, roundedCos(e, emb)) }
-                .find(_._2 >= threshold)
+              // d13's keep-first rule, scored as batch d13 scores it
+              CosineSim.firstKeeper(
+                  stored.iterator.map { case (_, kid, e) => (kid, e) },
+                  emb, threshold)
                 .foreach { case (kid, cos) => out += SemDrop(id, cell, kid, cos) }
               stored = stored :+ ((t, id, emb))
             }

@@ -638,6 +638,107 @@ class DedupSpec extends SparkSpec {
       "augmentation perturbed the organic drop set")
   }
 
+  /** d13's pair stage as a self-join + `round(cosine_sim, 4)` filter +
+    * `min_by` keeper pick — the composition `Dedup.d13Core` replaced,
+    * kept here as its reference. */
+  private def d13PairJoin(cells0: org.apache.spark.sql.DataFrame,
+      subCap: Option[Long] = None): Set[(Long, Long, Long, Double)] = {
+    val cells = Dedup.boundedSubCells(cells0, subCap)
+    val a = cells.select(col("cell"), col("sub"), col("vec_id").as("kept_by"),
+      col("embedding").as("emb_a"))
+    val b = cells.select(col("cell").as("b_cell"), col("sub").as("b_sub"),
+      col("vec_id"), col("embedding").as("emb_b"))
+    a.join(b, col("cell") === col("b_cell") && col("sub") === col("b_sub")
+        && col("kept_by") < col("vec_id"))
+      .withColumn("cosine", round(cosine_sim(col("emb_a"), col("emb_b")), 4))
+      .filter(col("cosine") >= Dedup.D13Threshold)
+      .groupBy(col("vec_id"))
+      .agg(min_by(struct(col("cell"), col("kept_by"), col("cosine")),
+        col("kept_by")).as("k"))
+      .select(col("vec_id"), col("k.cell"), col("k.kept_by"), col("k.cosine"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSet
+  }
+
+  private def d13Scan(cells: org.apache.spark.sql.DataFrame, width: Int,
+      subCap: Option[Long] = None): Set[(Long, Long, Long, Double)] =
+    Dedup.d13Core(cells, width, subCap).collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"),
+        r.getAs[Long]("kept_by"), r.getAs[Double]("cosine")))
+      .toSet
+
+  test("d13 pair stage: the keep-first scan equals the self-join + " +
+       "round + min_by composition on planted edge cases — the HALF_UP " +
+       "0.35 band edge, zero, length-mismatched and null-element " +
+       "embeddings, (cell, sub) groups sharing one task, higher-id-only " +
+       "neighbours and keeper chains") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.functions.CosineSim
+    // (x, 1) has cosine x/sqrt(x²+1) with (1, 0): a float x for a target
+    def at(c: Double): Array[Float] =
+      Array((c / math.sqrt(1 - c * c)).toFloat, 1f)
+    val e1 = Array(1f, 0f)
+    val up = at(0.349952)   // raw in [0.34995, 0.35): rounds to 0.35
+    val down = at(0.34994)  // raw above 0.3499, rounds to 0.3499
+    assert(CosineSim.cosine(e1, up) >= 0.34995 &&
+      CosineSim.cosine(e1, up) < 0.35, "fixture: up left its band")
+    assert(CosineSim.round4(CosineSim.cosine(e1, down)) == 0.3499,
+      "fixture: down left its band")
+    def v(xs: java.lang.Float*): Seq[java.lang.Float] = xs
+    val e1v = v(1f, 0f)
+    val e2v = v(0f, 1f)
+    val rows: Seq[(Long, Seq[java.lang.Float], Long)] = Seq(
+      // cell 0: 2 drops at exactly 0.35 against 1
+      (1L, e1v, 0L), (2L, v(up(0), up(1)), 0L),
+      // cell 5: 51 sits at 0.3499 against 50 and stays
+      (50L, e1v, 5L), (51L, v(down(0), down(1)), 5L),
+      // cell 1: zero vectors never qualify, against anything
+      (10L, v(0f, 0f), 1L), (11L, v(0f, 0f), 1L), (12L, e2v, 1L),
+      // cell 2: 20 (length 3) and 21 (a null element) would keep 22 and
+      // 23 if compared as a prefix or with the null read as 0, and 24
+      // would drop the same way. Only 23 drops, kept by 22
+      (20L, v(0f, 1f, 0f), 2L), (21L, v(null, 1f), 2L),
+      (22L, e2v, 2L), (23L, e2v, 2L), (24L, v(null, 1f), 2L),
+      // cell 3 holds a copy of cell 0's vector 1: blocked, never a pair
+      (30L, e1v, 3L),
+      // cell 4: 40's only qualifying neighbour is 41 (higher id), so 40
+      // is kept; 42 is orthogonal to 40 and keeps 41, itself dropped
+      (40L, v(1f, 0f), 4L), (41L, v(1f, 1f), 4L), (42L, v(0f, 1f), 4L)
+    )
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType, containsNull = true)),
+      StructField("cell", LongType, nullable = false)))
+    val cells = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (id, e, c) =>
+        Row(id, e, c) }, 3), schema)
+    val want = d13PairJoin(cells)
+    assert(want == Set((2L, 0L, 1L, 0.35), (23L, 2L, 22L, 1.0),
+      (41L, 4L, 40L, 0.7071), (42L, 4L, 41L, 0.7071)),
+      s"fixture: the reference drop set moved: $want")
+    Seq(1, 3).foreach(w => assert(d13Scan(cells, w) == want, s"width $w"))
+    // an absolute cap of 2 splits cell 2 (5 rows) into 3 hash sub-cells
+    // and cell 4 into 2: pairs across subs must vanish on both paths
+    val split = d13PairJoin(cells, Some(2L))
+    assert(split != want, "fixture: the sub-cell cap split nothing")
+    assert(d13Scan(cells, 1, Some(2L)) == split)
+  }
+
+  test("d13 pair stage: the keep-first scan equals the self-join " +
+       "composition on the harness corpus for d13, d13b and p5's " +
+       "survivor cells") {
+    Seq("d13" -> Dedup.d13Cells(spark, sfDir),
+        "d13b" -> Dedup.d13bCells(spark, sfDir),
+        "p5" -> graft.queries.Pipeline.semanticCells(spark, sfDir))
+      .foreach { case (name, cells) =>
+        val want = d13PairJoin(cells)
+        assert(want.nonEmpty, s"$name: fixture has no drops")
+        assert(d13Scan(cells, 4) == want, s"$name: scan != join")
+      }
+  }
+
   test("r14 d13 assignVia seam: default is exact (property unset), the " +
        "lsh path keeps the drop-rule invariants, and no sentinel cell " +
        "ever produces a pair") {

@@ -183,6 +183,35 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  test("CosineSim.round4(CosineSim.cosine(a, b)) is bit-identical to " +
+       "round(cosine_sim(a, b), 4), on random vectors and across the " +
+       "0.35 rounding band") {
+    import spark.implicits._
+    import graft.functions.CosineSim
+    val gen = Gen.listOfN(64, Gen.chooseNum(-1f, 1f))
+    val random = (1 to 400).flatMap(_ => gen.sample).map(_.toArray)
+      .grouped(2).collect { case Seq(a, b) => (a, b) }.toSeq
+    // (x, 1) against (1, 0): cosine x/sqrt(x²+1), stepped through
+    // [0.3498, 0.3501] so raw values land on both sides of each HALF_UP
+    // edge (0.34985, 0.34995, 0.35005)
+    val band = (0 to 300).map { k =>
+      val c = 0.3498 + k * 1e-6
+      (Array((c / math.sqrt(1 - c * c)).toFloat, 1f), Array(1f, 0f))
+    }
+    val pairs = random ++ band
+    val rows = pairs.toDF("a", "b")
+      .select(round(cosine_sim(col("a"), col("b")), 4)).collect()
+    rows.zip(pairs).foreach { case (r, (a, b)) =>
+      val got = CosineSim.round4(CosineSim.cosine(a, b))
+      assert(java.lang.Double.doubleToRawLongBits(got) ==
+        java.lang.Double.doubleToRawLongBits(r.getDouble(0)),
+        s"$got != ${r.getDouble(0)} for ${a.toSeq} / ${b.toSeq}")
+    }
+    assert(band.map { case (a, b) => CosineSim.round4(CosineSim.cosine(a, b)) }
+      .toSet == Set(0.3498, 0.3499, 0.35, 0.3501),
+      "fixture: the band no longer straddles the 0.35 edges")
+  }
+
   test("property: dot_product bit-exact vs the aggregate(zip_with) " +
        "composition it fuses; nulls and length mismatch poison to NULL") {
     import spark.implicits._

@@ -263,13 +263,23 @@ class PlanSpec extends SparkSpec {
       s"payload text crossed an exchange in:\n$p")
   }
 
-  test("d13: the keeper argmin is a partial-aggregable HashAggregate, " +
-       "not a window over the qualifying pair mass") {
+  test("d13: the pair stage is one (cell, sub) exchange and a keep-first " +
+       "scan — no join, and no window over the qualifying pair mass") {
     val p = plan(Dedup.d13SemanticDedup(spark, sfDir))
-    assert(p.contains("min_by"), s"expected min_by argmin in:\n$p")
-    // the only Window nodes belong to the cell ASSIGNMENT (argmax over
+    val lines = p.linesIterator.toSeq
+    val pairExchanges = lines.filter(l => l.contains("Exchange hashpartitioning(")
+      && l.matches(".*hashpartitioning\\(cell#\\d+L?, sub#\\d+L?, .*"))
+    assert(pairExchanges.length == 1,
+      s"expected one hashpartitioning(cell, sub) exchange in:\n$p")
+    // the pair stage is every node printed above that exchange
+    val pairStage = lines.takeWhile(_ != pairExchanges.head)
+    assert(pairStage.exists(_.contains("MapPartitions")),
+      s"no keep-first scan above the (cell, sub) exchange in:\n$p")
+    assert(!pairStage.exists(_.contains("Join")),
+      s"a join is back in the pair stage:\n$p")
+    // the only Window node belongs to the cell ASSIGNMENT (argmax over
     // C centroid candidates per vector); the pair stage must not add one
-    val windows = p.linesIterator.count(_.trim.startsWith("Window"))
+    val windows = lines.count(_.trim.startsWith("Window"))
     assert(windows <= 1, s"unexpected extra Window ($windows) in:\n$p")
   }
 
