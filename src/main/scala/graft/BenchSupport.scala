@@ -39,12 +39,27 @@ object BenchSupport {
 
   /** One timed noop-sink run (noop computes every output column; count()
     * would let Catalyst prune the compute away). Returns -1 on failure —
-    * a failing query must not kill the whole run. Caches are cleared
-    * AFTER the timed region: queries that cache multi-branch
-    * intermediates (d3/d4) pay that cost inside their own measurement,
-    * and nothing they materialized survives to pressure — or subsidize —
-    * any later run (the r4 bench's ±6x per-query noise on unchanged code
-    * traced in part to caches accumulating across the run). */
+    * a failing query must not kill the whole run. What the run
+    * materialized is released AFTER the timed region, so queries that pin
+    * multi-branch intermediates (d3/d4) pay that cost inside their own
+    * measurement, and nothing survives to pressure — or subsidize — any
+    * later run (the r4 bench's ±6x per-query noise on unchanged code
+    * traced in part to caches accumulating across the run):
+    *
+    * | pinned by                              | released here by          |
+    * |----------------------------------------|---------------------------|
+    * | `reuse`, mode `cache`                  | `clearCache`              |
+    * | `reuse`, mode `localCheckpoint`        | [[Materialize.release]]   |
+    * | `truncate`, local, no checkpoint dir   | [[Materialize.release]]   |
+    * | `truncate`, checkpoint dir set         | nothing: files, no blocks |
+    * | [[SharedStage]] pins                   | kept: cross-query stages  |
+    *
+    * clearCache alone would leave the block-manager blocks until their
+    * plan is garbage-collected, and the cross-run isolation would silently
+    * break. The release BLOCKS: the r8/r9 per-query drift on unchanged
+    * code implicated a non-blocking release racing the next timed region
+    * (block-manager removal still in flight while the next query was
+    * being measured). */
   def once(spark: SparkSession, name: String, dir: String): Double = {
     val t0 = System.nanoTime()
     val elapsed =
@@ -57,20 +72,8 @@ object BenchSupport {
         -1.0
       }
     spark.catalog.clearCache()
-    // clearCache only drops CacheManager entries; blocks persisted by
-    // localCheckpoint (connectedComponents' per-round truncation, or
-    // SPARK_GRAFT_MATERIALIZE=localCheckpoint) live in the block manager
-    // until the plan is GC'd — release them too, or the cross-run memory
-    // isolation this cleanup exists for silently breaks. BLOCKING
-    // unpersist: the r8/r9 per-query drift on unchanged code implicated
-    // non-blocking release racing the next timed region (block-manager
-    // removal still in flight while the next query is being measured).
-    // [[SharedStage]]-pinned artifacts are the one deliberate exception:
-    // they are cross-query pipeline-stage intermediates (see there).
     val pinned = SharedStage.pinnedIds
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinned.contains(id)) rdd.unpersist(blocking = true)
-    }
+    Materialize.release(spark, id => !pinned(id), blocking = true)
     elapsed
   }
 

@@ -2,9 +2,7 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 
 /** Session-scoped registry of eagerly-materialized PIPELINE-STAGE
   * artifacts shared by downstream catalog queries — e.g. the converged
@@ -14,88 +12,63 @@ import org.apache.spark.sql.execution.LogicalRDD
   * full d3 + connected-components re-run. This is exactly how a
   * production run shares a materialized intermediate between stages (at
   * 100 TB the intermediate would be a parquet/Delta table; in-session it
-  * is a pinned localCheckpoint).
+  * is a truncated frame).
   *
-  * Mechanics: the first consumer computes the artifact, re-materializes
-  * it as an EAGER `localCheckpoint`, and records the checkpoint's block
-  * ids. [[BenchSupport.once]]'s cross-run cleanup releases every
-  * persisted RDD EXCEPT these pinned ids, so the bench measures
-  * downstream stages (d7) at their marginal cost while upstream queries
-  * (d6) — which deliberately do NOT read the shared copy — still pay,
-  * and are measured at, their full pipeline cost. Verify needs no
-  * special handling: first use computes, so every catalog entry stays
-  * self-contained.
+  * The artifact is pinned by an EAGER [[Materialize.truncate]], so the
+  * verb follows [[Materialize]]'s table:
   *
-  * Only the FINAL artifact is pinned: whatever the build persisted along
-  * the way (Materialize caches, per-round CC checkpoints) is registered
-  * normally and released by the bench cleanup as usual — the diff window
-  * around the eager checkpoint below is what keeps upstream queries
-  * measured cold.
+  * | master          | checkpoint dir | pin               | live while        |
+  * |-----------------|----------------|-------------------|-------------------|
+  * | local, local[…] | unset          | `localCheckpoint` | its RDD persisted |
+  * | any             | set            | `checkpoint`      | always (files)    |
+  * | other           | unset          | throws            | —                 |
+  *
+  * The checkpoint's RDD ids are recorded as pinned: [[BenchSupport.once]]'s
+  * cross-run cleanup releases every persisted RDD EXCEPT these, so the
+  * bench measures downstream stages (d7) at their marginal cost while
+  * upstream queries (d6) — which deliberately do NOT read the shared
+  * copy — still pay, and are measured at, their full pipeline cost.
+  * Verify needs no special handling: first use computes, so every catalog
+  * entry stays self-contained. Only the FINAL artifact is pinned: whatever
+  * the build persisted along the way (reuse pins, per-round CC
+  * checkpoints) is released by the bench cleanup as usual.
   */
 object SharedStage {
-  private val memo =
-    TrieMap.empty[(SparkSession, String, String), (DataFrame, Set[Int])]
+  private val memo = TrieMap.empty[(SparkSession, String, String), DataFrame]
   private val ids = TrieMap.empty[Int, Unit]
 
   /** Block-manager RDD ids the bench cleanup must NOT release. */
   def pinnedIds: Set[Int] = ids.keySet.toSet
 
   /** The artifact `name` for (`s`, `dir`), computing and pinning it on
-    * first use. `build` runs at most once per (session, dir, name) —
-    * unless something outside this registry unpersisted the checkpoint
-    * blocks (a test's scorched-earth cleanup, an operator error):
-    * serving the stale memo would throw CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-    * at collect time, so the entry self-heals by recomputing when any of
-    * its recorded blocks is no longer persistent. */
+    * first use. `build` runs at most once per (session, dir, name) while
+    * the pin is [[Materialize.isLive]]. Something outside this registry
+    * can unpersist a local checkpoint's blocks (a test's scorched-earth
+    * cleanup, an operator error); serving that memo would throw
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND at collect time, so the entry
+    * recomputes instead. Liveness is read off the pin's own checkpoint
+    * RDD only: what the build persisted on the way dies at the next bench
+    * cleanup, and reading that would re-prime the artifact on every run
+    * (observed: t16 benched at full-ladder cost, not marginal). */
   def getOrCompute(s: SparkSession, dir: String, name: String)
       (build: => DataFrame): DataFrame = {
     val key = (s, dir, name)
     memo.get(key) match {
-      case Some((df, blockIds))
-          if blockIds.subsetOf(s.sparkContext.getPersistentRDDs.keySet) =>
-        df
+      case Some(df) if Materialize.isLive(df) => df
       case stale =>
-        stale.foreach { case (_, blockIds) =>
-          blockIds.foreach(ids.remove)
-          memo.remove(key)
-        }
-        val df = build
-        val before = s.sparkContext.getPersistentRDDs.keySet
-        val pinned = df.localCheckpoint(eager = true)
-        // Pin and validate on the CHECKPOINT rdd only — the eager
-        // checkpoint EXECUTES the build here, so the raw before/after
-        // diff also captures any Materialize caches the build's plan
-        // registers on first run. Those die at the next bench cleanup
-        // (clearCache), and validating on them would read every memo
-        // entry as stale — the artifact would silently re-prime on every
-        // run (observed: t16 benched at full-ladder cost, not marginal).
-        // The served plan reads nothing but the checkpoint, so the
-        // checkpoint id is the correct liveness proxy; fall back to the
-        // diff if the plan isn't the expected LogicalRDD shape.
-        val ckptIds: Set[Int] = checkpointRdds(pinned).map(_.id).toSet match {
-          case s0 if s0.nonEmpty => s0
-          case _ =>
-            (s.sparkContext.getPersistentRDDs.keySet -- before).toSet
-        }
-        ckptIds.foreach(ids.put(_, ()))
-        memo.put(key, (pinned, ckptIds))
+        stale.foreach(Materialize.checkpointRdds(_).foreach(r => ids.remove(r.id)))
+        val pinned = Materialize.truncate(build, eager = true)
+        Materialize.checkpointRdds(pinned).foreach(r => ids.put(r.id, ()))
+        memo.put(key, pinned)
         pinned
     }
   }
-
-  /** The RDDs behind a checkpointed DataFrame's `LogicalRDD` leaves —
-    * what holds its blocks. `Dataset.unpersist` does not release a
-    * `localCheckpoint`: the blocks belong to this RDD, not to the cache
-    * manager. */
-  private[graft] def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
-    df.queryExecution.logical.collect { case lr: LogicalRDD => lr.rdd }
 
   /** Release every pinned artifact of session `s` (end of a bench phase;
     * a long-lived session calls this when a pipeline's stages are done). */
   def release(s: SparkSession): Unit = {
     memo.keys.filter(_._1 eq s).foreach(memo.remove)
-    s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (ids.contains(id)) { rdd.unpersist(blocking = true); ids.remove(id) }
-    }
+    Materialize.release(s, ids.contains, blocking = true)
+    ids.clear()
   }
 }

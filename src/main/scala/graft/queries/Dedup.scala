@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Materialize, SharedStage}
+import graft.Materialize
 import graft.functions.CosineSim
 import graft.functions.SketchFunctions.{minhash_sig, simhash64}
 import graft.functions.TextHashFunctions.word_shingle_hashes
@@ -230,10 +230,10 @@ object Dedup {
     * ([[graft.Materialize]]): it feeds THREE branches (signatures + both
     * sides of the verification join); unmaterialized, the shingle kernel
     * is recomputed per branch (cost per mode measured in MATBENCH.md).
-    * Per-doc shingle arrays are O(corpus tokens) — cache by default,
-    * localCheckpoint via the knob. */
+    * Per-doc shingle arrays are O(corpus tokens); the mode is
+    * [[graft.Materialize.reuse]]'s. */
   private[graft] def d3ShingledDocs(s: SparkSession, dir: String): DataFrame =
-    Materialize(Tables.documents(s, dir)
+    Materialize.reuse(Tables.documents(s, dir)
       .select(col("doc_id"),
         md5(col("text").cast("binary")).as("tfp"),
         word_shingle_hashes(col("text"), 3).as("shs")))
@@ -258,7 +258,7 @@ object Dedup {
       .select(col("tfp"), col("doc_id"), minhash_sig(col("shs")).as("sig"))
     val grouped = perDoc.groupBy(col("tfp"))
       .agg(collect_set(col("doc_id")).as("members"), first(col("sig")).as("sig"))
-    Materialize(grouped.select(
+    Materialize.reuse(grouped.select(
       (col("members") +:
         (0 until NumHashes).map(i => element_at(col("sig"), i + 1).as(s"m$i")) :+
         array_min(col("members")).as("rep_id")): _*))
@@ -336,7 +336,7 @@ object Dedup {
     * any member's (group bit-sums are member sums scaled by a positive
     * count — a sign cannot change). */
   private[graft] def d4Signatures(docs: DataFrame): DataFrame =
-    Materialize(docs
+    Materialize.reuse(docs
       .select(md5(col("text").cast("binary")).as("tfp"), col("doc_id"),
         simhash64(col("text")).as("fp"))
       .groupBy(col("tfp"))
@@ -519,23 +519,23 @@ object Dedup {
     * aggregate-then-join shape already co-located in one sort-merge-join
     * task, while paying ~6 exchanges per round to this one's 4).
     *
-    * Every SECOND iteration `localCheckpoint`s the output and releases
-    * the previous checkpoint's RDD: without lineage truncation the plan
-    * tree doubles per round and analysis cost grows exponentially (the
+    * Every SECOND iteration truncates the output
+    * ([[graft.Materialize.truncate]]) and releases the previous
+    * checkpoint's blocks: without lineage truncation the plan tree
+    * doubles per round and analysis cost grows exponentially (the
     * standard failure mode of iterative DataFrame algorithms; GraphX's
     * Pregel does the same). Convergence = edge multiset unchanged across the
     * two-round batch, checked by a single-row (count, bit_xor of
     * row-hash) aggregate — no row data ever reaching the driver, and
     * half the actions of a per-round check (r22, guide §2's stage-ladder
     * cost; the batch-safety argument is at the loop). The checkpoints
-    * are LAZY (`localCheckpoint(false)`): the signature aggregate is the
-    * action that materializes them, so each batch launches one job
-    * instead of an eager checkpoint job plus a signature job. */
+    * are LAZY (`eager = false`): the signature aggregate is the action
+    * that materializes them, so each batch launches one job instead of an
+    * eager checkpoint job plus a signature job. */
   private[graft] def connectedComponents(edges0: DataFrame): DataFrame = {
-    var edges = edges0
+    var edges = Materialize.truncate(edges0
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(false)
+      .filter(col("u") =!= col("v")).distinct(), eager = false)
     def signature(df: DataFrame): (Long, Long) = {
       val r = df.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
@@ -622,11 +622,11 @@ object Dedup {
         // fixpoint was reached inside the batch, and extra rounds at the
         // fixpoint are identity. The star forest returned is the same one
         // the per-round check produced.
-        val next = round(round(edges)).localCheckpoint(false)
+        val next = Materialize.truncate(round(round(edges)), eager = false)
         val nextSig = signature(next)
-        // the signature materialized `next`; the superseded batch's blocks
-        // belong to its checkpoint RDD, which Dataset.unpersist never sees
-        SharedStage.checkpointRdds(edges).foreach(_.unpersist(blocking = false))
+        // the signature materialized `next`; the superseded batch's
+        // blocks can go
+        Materialize.release(edges, blocking = false)
         edges = next
         converged = nextSig == sig
         sig = nextSig
@@ -891,9 +891,9 @@ object Dedup {
     // representatives' shingle sets for verification, and the exact
     // text-fingerprint set ----
     // one binding, not a def: the three index artifacts below all build
-    // off this frame, and under SPARK_GRAFT_MATERIALIZE=localCheckpoint
-    // Materialize has no plan-dedup — a fresh call per artifact would
-    // shingle and checkpoint the corpus three times during priming
+    // off this frame, and a localCheckpoint reuse has no plan-dedup — a
+    // fresh call per artifact would shingle and checkpoint the corpus
+    // three times during priming
     val existingDocs = d3ShingledDocs(s, dir).filter(!isDeltaCol)
     val exSig = graft.SharedStage.getOrCompute(s, dir, "d12_existing_sigs") {
       d3Signatures(existingDocs)
@@ -914,7 +914,7 @@ object Dedup {
       existingDocs.select(col("tfp")).distinct()
     }
     // ---- per-shard work: every scan below touches ONLY delta rows ----
-    val deltaDocs = Materialize(Tables.documents(s, dir)
+    val deltaDocs = Materialize.reuse(Tables.documents(s, dir)
       .filter(isDeltaCol)
       .select(col("doc_id"),
         md5(col("text").cast("binary")).as("tfp"),
@@ -1115,8 +1115,10 @@ object Dedup {
     * oracle replays assignment, threshold, and keeper choice
     * bit-for-bit. */
   def d13SemanticDedup(s: SparkSession, dir: String): DataFrame =
-    d13Core(d13Cells(s, dir), s.sparkContext.defaultParallelism,
-      subCapFor(resolveAssignVia(s, dir))).orderBy(col("vec_id"))
+    // the range sort samples its input in a job of its own before the
+    // shuffle: the pin runs the scan once, not once per job
+    Materialize.reuse(d13Core(d13Cells(s, dir), s.sparkContext.defaultParallelism,
+      subCapFor(resolveAssignVia(s, dir)))).orderBy(col("vec_id"))
 
   /** d13's assigned-cells frame through the resolved assignment tier
     * (exposed for DedupSpec's pair-stage pin). */
@@ -1263,9 +1265,13 @@ object Dedup {
     * affine id-mix the centroid seeds use — integer arithmetic end to
     * end, so every oracle replays the split exactly. Cells under the
     * bound get k_sub = 1 → sub = 0 for every member: a no-op, which is
-    * why no driver-SF output changes. */
-  private[graft] def boundedSubCells(cells: DataFrame,
+    * why no output at the Verify scale factors changes. `cells` feeds
+    * both the counts and the join, so it is pinned
+    * ([[graft.Materialize.reuse]]): an unmaterialized assignment would
+    * otherwise run its centroid join once per branch. */
+  private[graft] def boundedSubCells(cells0: DataFrame,
       absCap: Option[Long] = None): DataFrame = {
+    val cells = Materialize.reuse(cells0)
     // bnd derives from an unpartitioned window over the ≤C-row counts
     // frame (same integers as a separate total/count agg, two fewer
     // jobs; the "No Partition Defined" warning on this tiny frame is
@@ -1326,7 +1332,7 @@ object Dedup {
     * cannot perturb an organic keeper), and every plant drops with an
     * in-cell keeper below the shift. */
   def d13bSemanticDedupSkew(s: SparkSession, dir: String): DataFrame =
-    d13Core(d13bCells(s, dir), s.sparkContext.defaultParallelism)
+    Materialize.reuse(d13Core(d13bCells(s, dir), s.sparkContext.defaultParallelism))
       .orderBy(col("vec_id"))
 
   /** The d13b assigned-cells frame (exposed for DedupSpec's dominance

@@ -182,7 +182,7 @@ object Pipeline {
     val docTok = Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tk"))
       .groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as("n_dt"))
-    val vocab = graft.Materialize(
+    val vocab = graft.Materialize.reuse(
       docTok.groupBy(col("tk")).agg(sum(col("n_dt")).as("freq")))
     val total = vocab.agg(sum(col("freq")).as("total"))
     val bits = vocab.crossJoin(broadcast(total))
@@ -200,7 +200,7 @@ object Pipeline {
     val wPrev = Window.partitionBy(col("source"))
       .orderBy(col("h"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val quotaed = graft.Materialize(flagged.withColumn("u_pass",
+    val quotaed = graft.Materialize.reuse(flagged.withColumn("u_pass",
       col("s_pass") && coalesce(
         sum(when(col("s_pass"), 1L).otherwise(0L)).over(wPrev),
         lit(0L)) < P3Quota))

@@ -463,7 +463,7 @@ object Similarity {
     // subtree appeared 4× in the plan, and s17 measured driver-planning
     // bound (r21 profile: wall 2.2 s ≫ Σjob 0.9 ≫ Σtask 0.4, rules
     // 0.26 s). The refined table is ≤C rows.
-    s2CoreWith(e, graft.Materialize(refineCentroids(centroids(e), e)))
+    s2CoreWith(e, graft.Materialize.reuse(refineCentroids(centroids(e), e)))
   }
 
   /** s10 — the IVF probe-budget TUNING CURVE: recall@10 at EVERY probe
@@ -702,7 +702,7 @@ object Similarity {
     * accepted, n_cand). */
   private def s11MarginCore(pairs0: DataFrame,
       threshold: Double = S11Threshold): DataFrame = {
-    val pairs = graft.Materialize(pairs0)
+    val pairs = graft.Materialize.reuse(pairs0)
     val wS = Window.partitionBy(col("s_id"))
       .orderBy(col("c4").desc, col("t_id").asc)
     val wT = Window.partitionBy(col("t_id"))

@@ -494,11 +494,11 @@ object TextAnalysis {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("n_dt"))
-    val docTok = if (materializePairs) graft.Materialize(pairs) else pairs
+    val docTok = if (materializePairs) graft.Materialize.reuse(pairs) else pairs
     // vocab feeds BOTH the per-type bits and the grand total: without the
     // materialization the plan recomputes the (doc,tok) agg a third time
     // just to sum the frequencies (graft.Explain, sf0.1)
-    val vocab = graft.Materialize(
+    val vocab = graft.Materialize.reuse(
       docTok.groupBy(col("tok")).agg(sum(col("n_dt")).as("freq")))
     val total = vocab.agg(sum(col("freq")).as("total"))
     // 1-row grand total: Spark broadcasts it (BroadcastNestedLoopJoin of
@@ -1038,7 +1038,7 @@ object TextAnalysis {
     val tot = feat.agg(sum(col("n_r")).cast("long").as("t_r"),
       sum(col("n_t")).cast("long").as("t_t"))
     def bits(c: Column): Column = length(bin(c)) - lit(1)
-    val scored = graft.Materialize(occ
+    val scored = graft.Materialize.reuse(occ
       .join(broadcast(feat), Seq("bucket"))
       .groupBy(col("doc_id"), col("lang"))
       .agg(count(lit(1)).as("n_bigrams"),
@@ -1177,7 +1177,7 @@ object TextAnalysis {
     // — a plan-only caller (explain tooling) pays the training loop
     // before any action. Accepted: the alternative (deciding at first
     // action) would need a custom plan node, and the training loop is
-    // already eager through its per-round localCheckpoints —
+    // already eager through its per-round truncation —
     // construction cost is the loop, not the count
     val useBroadcast = trained.count() <= broadcastMaxRows
     val dict = if (useBroadcast) broadcast(trained)
@@ -1310,11 +1310,11 @@ object TextAnalysis {
     *     replays it as a recursive CTE carrying the selected set as a
     *     LIST accumulator, so the gate stays armed.
     *
-    * Per-round LAZY localCheckpoint, not Materialize (r19, VERDICT r18
-    * #4): round r's word table references round r-1 TWICE — through the
-    * pair count AND through the merge — so without lineage truncation
-    * the logical tree doubles per round and analysis cost grows
-    * exponentially in the round count (the d6 connected-components
+    * Per-round LAZY [[graft.Materialize.truncate]], not `reuse` (r19,
+    * VERDICT r18 #4): round r's word table references round r-1 TWICE —
+    * through the pair count AND through the merge — so without lineage
+    * truncation the logical tree doubles per round and analysis cost
+    * grows exponentially in the round count (the d6 connected-components
     * scaladoc names this failure mode; measured: rounds=16 under
     * cache-based materialization never finished planning, while
     * checkpointed rounds time linearly — SCALING.md r19). Checkpoints
@@ -1342,7 +1342,7 @@ object TextAnalysis {
       case "antijoin" => p => slice(filter(p, (c, i) =>
         !exists(slice(p, lit(1), i), h => conflict(h, c))), 1, width)
     }
-    var syms = bpeWords0(s, dir).localCheckpoint(false)
+    var syms = graft.Materialize.truncate(bpeWords0(s, dir), eager = false)
     val rows = (1 to rounds).map { r =>
       val batch = syms.filter(size(col("syms")) >= 2)
         .select(col("freq"), explode(expr(
@@ -1363,14 +1363,13 @@ object TextAnalysis {
       // pair is left — so the crossJoin can never silently empty the
       // word table (ADVICE r18); an empty batch raises at first
       // execution instead, the repo's loud-miss convention
-      syms = syms.crossJoin(broadcast(batch))
+      syms = graft.Materialize.truncate(syms.crossJoin(broadcast(batch))
         .select(col("word"), col("freq"),
           when(size(col("batch")) === 0, raise_error(lit(
             s"BPE round $r found no adjacent pairs — corpus fully " +
               "merged before the last requested round")))
             .otherwise(bpeBatchFold(col("syms"), col("merges")))
-            .as("syms"))
-        .localCheckpoint(false)
+            .as("syms")), eager = false)
       val vocab = syms.select(explode(col("syms")).as("sym"))
         .agg(countDistinct(col("sym")).as("vocab_size"))
       batch.select(posexplode(col("batch")))
@@ -1442,7 +1441,7 @@ object TextAnalysis {
     * expanded the corpus-scan subtree ~3^R-fold and the elevated-rounds
     * oracle replay hit the exact exponential failure t26's oracle
     * documents (the engine-side twin is [[bpeTrain]]'s per-round
-    * localCheckpoint). With the materialization replay cost is linear
+    * truncation). With the materialization replay cost is linear
     * in R (measured at R=16 in the r20 self-check, where the plain
     * form did not finish). */
   private def bpeRoundCte(r: Int): String = {
@@ -1537,7 +1536,7 @@ object TextAnalysis {
     * references its predecessor ~3 ways (scan, occurrence, keep-chain)
     * — the un-materialized expansion re-opened the documents parquet
     * ~3^(rounds·batch) times ("too many open files" at 2×4 steps),
-    * the oracle-side twin of the engine's per-round localCheckpoint. */
+    * the oracle-side twin of the engine's per-round truncation. */
   private def t26RoundCte(r: Int, select: String): String = {
     val prev = if (r == 1) "syms0" else s"b${r - 1}_$T26Batch"
     // the selection sub-CTE follows the engine's selection rule: the

@@ -334,7 +334,7 @@ class DedupSpec extends SparkSpec {
     val long = Dedup.connectedComponents((1L to 299L).map(i => (i, i + 1)).toDF("u", "v"))
     assert(long.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       (2L to 300L).map((1L, _)).toSet)
-    val held = SharedStage.checkpointRdds(long).map(_.id).toSet
+    val held = Materialize.checkpointRdds(long).map(_.id).toSet
     assert(held.size == 1)
     assert(sc.getPersistentRDDs.keySet.toSet -- persisted == held)
   }

@@ -265,7 +265,11 @@ class PlanSpec extends SparkSpec {
 
   test("d13: the pair stage is one (cell, sub) exchange and a keep-first " +
        "scan — no join, and no window over the qualifying pair mass") {
-    val p = plan(Dedup.d13SemanticDedup(spark, sfDir))
+    // mode `none`: d13 pins the scan's output for its trailing sort, and
+    // a localCheckpoint leaf would hide the pair stage from explain()
+    System.setProperty(Materialize.Prop, "none")
+    val p = try plan(Dedup.d13SemanticDedup(spark, sfDir))
+      finally System.clearProperty(Materialize.Prop)
     val lines = p.linesIterator.toSeq
     val pairExchanges = lines.filter(l => l.contains("Exchange hashpartitioning(")
       && l.matches(".*hashpartitioning\\(cell#\\d+L?, sub#\\d+L?, .*"))
